@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev utility: print the formatted physical plan of named SparkEntry
   * queries (all queries when none named) — the `.explain` audit loop
   * behind PLANS.md. Usage:
@@ -17,13 +15,8 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val names = if (args.length > 1) args.drop(1).toSeq else SparkEntry.queries.keys.toSeq
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // the shipping session, so the printed plans are the plans that run
+    val spark = GraftSession.local(4)
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { name =>
       println(s"\n===== $name =====")

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
   * factor, matching the driver generator's schemas and distributions
   * (measured off /root/testdata: sequential keys, uniform dims,
   * Poisson(4) lineitem fanout, uniform value ranges) — the true-scale
-  * alternative to [[ScaleData]]'s union-of-replicas.
+  * alternative to a union of sf0.1 replicas.
   *
   * Why it exists (round-6 verdict item 7): a replica keeps every
   * join's key space partitioned into disjoint blocks — o_custkey from
@@ -32,8 +32,8 @@ import org.apache.spark.sql.functions._
   * embeddings = 64-dim unit-normalized Gaussians (Box–Muller over
   * hash uniforms) with a uniform label 0..9 — measured independent
   * of the vector (the driver corpus has no planted vector near-dups:
-  * max off-diagonal cosine 0.60 at sf0.1). Unlike [[ScaleData]]'s
-  * per-replica vocab suffixing, the generated corpus keeps ONE
+  * max off-diagonal cosine 0.60 at sf0.1). Unlike a replica corpus
+  * with per-replica vocab suffixing, the generated corpus keeps ONE
   * shared shingle space, so document frequencies, LSH bucket
   * occupancies and near-dup pair counts grow the way a real corpus
   * grows — the property the dedup-family scale claims need.
@@ -45,15 +45,8 @@ import org.apache.spark.sql.functions._
   */
 object GenData {
 
-  /** The 30-word document vocabulary, shared with every harness that
-    * plants synthetic docs into a generated corpus
-    * ([[ProfileStratRecall]]): planted text must blend into the
-    * corpus's measured background similarity, so the vocabulary lives
-    * in ONE place — a private copy that drifted would silently turn
-    * planted docs into an easy-to-find private vocabulary and make
-    * measured recall optimistic.
-    */
-  val DocVocab: IndexedSeq[String] = IndexedSeq(
+  /** The driver generator's 30-word document vocabulary. */
+  private val DocVocab: IndexedSeq[String] = IndexedSeq(
     "a", "agg", "batch", "big", "column", "customer",
     "data", "fast", "filter", "group", "hash", "join", "key", "line",
     "merge", "order", "part", "query", "row", "scan", "slow", "small",

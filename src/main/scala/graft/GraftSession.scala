@@ -71,8 +71,9 @@ object GraftSession {
         // (dd_containment_lsh/auto, dd_jaccard_lsh 2–4× at sf0.1:
         // their banded/prefix candidate subtrees are persisted, so
         // their shuffles ran 1024-wide on kilobytes; causally isolated
-        // by ProfileAqe — initial=1024 alone 4.5/4.7/2.5 s, with this
-        // conf 1.2/1.3/1.0 s, matching the initial=32 arm). graft
+        // by a three-arm A/B — initial=1024 alone 4.5/4.7/2.5 s, with
+        // this conf 1.2/1.3/1.0 s, matching the initial=32 arm; SCALING.md
+        // "Round 9: cached-plan pinning vs AQE coalescing"). graft
         // never relies on a cached frame's physical partitioning (all
         // consumers re-shuffle on their own keys), so the trade is
         // pure win: cached subtrees get the same start-wide,
@@ -85,10 +86,10 @@ object GraftSession {
   /** Single-JVM session: `local[cpus]` with shuffle partitions = cpus
     * and the UI off — the shape every graft main and spec runs.
     */
-  def local(cpus: Int, quietUi: Boolean = true): SparkSession = {
-    val b = builder(cpus)
+  def local(cpus: Int): SparkSession = {
+    val session = builder(cpus)
       .master(s"local[$cpus]")
-    val session = (if (quietUi) b.config("spark.ui.enabled", "false") else b)
+      .config("spark.ui.enabled", "false")
       .getOrCreate()
     session.sparkContext.setLogLevel("WARN")
     session

@@ -85,15 +85,16 @@ object StratBandEmit {
   private def occupied(mask: Long, c: Int): Boolean =
     c >= 0 && c < 64 && ((mask >>> c) & 1L) == 1L
 
-  /** Does this (arm, role) emit for a document of class `cls`? The
-    * document's own class is occupied by construction (it IS corpus);
-    * what gates emission is the PARTNER class — zero-partner roles
-    * emitted tens of GB for empty joins before this filter (measured,
-    * round 10; carried over from the union's eligibility sets).
+  /** Does this (arm, role) emit for a document of class `cls`? What
+    * gates emission is the PARTNER class — zero-partner roles emitted
+    * tens of GB for empty joins before this filter (measured, round
+    * 10; carried over from the union's eligibility sets). A gap-0
+    * arm's partner is the document's own class, so its large-role
+    * rows (the small-role rows routed to the large side) are gated
+    * on `cls` itself, as the union's `cls isin occupied` filter did.
     */
   private def emits(cls: Int, g: Int, mask: Long, asSmall: Boolean): Boolean =
     if (asSmall) occupied(mask, cls + g)
-    else if (g == 0) true // gap-0 small-role rows route to the large side
     else occupied(mask, cls - g)
 
   /** Shared by eval and generated code — one definition of the emit. */
@@ -118,11 +119,10 @@ object StratBandEmit {
         // the ONE band-hash fold definition — bit-identical per arm to
         // posexplode(BandHashes(mh, r, b)) in the union it replaces
         val hashes = BandHashes.compute(mh, r, b)
-          .asInstanceOf[GenericArrayData].array
         var i = 0
         while (i < b) {
-          out(o) = new GenericInternalRow(
-            Array[Any](ci, cj, i, hashes(i)))
+          out(o) = new GenericInternalRow(Array[Any](ci, cj, i,
+            if (hashes.isNullAt(i)) null else hashes.getLong(i)))
           o += 1
           i += 1
         }

@@ -142,7 +142,8 @@ object Dedup {
     // (measured: the 128 MB local-map threshold arm did not flip it)
     // ever picks the hash join on its own — yet hashing one side
     // beats sorting BOTH sides wherever the build partition fits
-    // memory (ProfileOpt cjA 2.06 s vs cjB 1.12 s at sf0.1). At the
+    // memory (SMJ 2.06 s vs SHJ 1.12 s at sf0.1; OPTIMIZATION_r13.md
+    // "Count-join family"). At the
     // count-join's contract scale (sparse/moderate corpora — the
     // dispatchers send dense corpora to the LSH paths) the per-
     // partition build side is the fingerprint table over wide AQE
@@ -210,19 +211,18 @@ object Dedup {
     * shingle appears in exactly ONE document. df=1 shingles produce
     * zero join pairs but still flow through the count-join's
     * self-join shuffle; the prefix filter prunes them (and everything
-    * rare) before any join. ProfileJaccard measured the crossover on
-    * this corpus: a dense ~30-word vocabulary has almost no df=1
-    * shingles and the prefix variant LOSES (extra global df aggregate
-    * + array hauling, ~3.4 s vs ~3.0 s at sf0.1); a realistic
+    * rare) before any join. The measured crossover on this corpus
+    * (PLANS.md, round-1 final additions): a dense ~30-word vocabulary
+    * has almost no df=1 shingles and the prefix variant LOSES (extra
+    * global df aggregate + array hauling, ~3.4 s vs ~3.0 s at
+    * sf0.1); a realistic
     * long-tail vocabulary is majority-singleton and the prune wins.
     * One cheap keyed aggregate over the fused fingerprint table —
     * a fraction of either join's cost.
     */
   def jaccardStrategy(documents: DataFrame,
-      singletonMassCutover: Double = 0.5,
-      probeSampleFraction: Double = 0.1): String =
-    jaccardStrategyOnFps(shingleFps(documents), singletonMassCutover,
-      probeSampleFraction = probeSampleFraction)
+      singletonMassCutover: Double = 0.5): String =
+    jaccardStrategyOnFps(shingleFps(documents), singletonMassCutover)
 
   /** Sampled occurrences below which the strategy probe re-runs on
     * the FULL fingerprint table: at a 10% rate this re-probes corpora
@@ -267,11 +267,7 @@ object Dedup {
     */
   private def jaccardStrategyOnFps(tri: DataFrame,
       singletonMassCutover: Double,
-      candsPerOccCutover: Double = DenseCandsPerOccCutover,
-      probeSampleFraction: Double = 0.1): String = {
-    require(probeSampleFraction > 0 && probeSampleFraction <= 1.0,
-      s"probe sample fraction must be in (0, 1], got $probeSampleFraction")
-    val sampleDenom = math.round(1.0 / probeSampleFraction)
+      candsPerOccCutover: Double = DenseCandsPerOccCutover): String = {
     def stats(t: DataFrame): (Long, Long, Double) = {
       val r = t
         .groupBy(col("h")).agg(count(lit(1)).as("df"))
@@ -285,12 +281,8 @@ object Dedup {
         if (r.isNullAt(2)) 0.0 else r.getDouble(2))
     }
     val (occ, singles, candMass) = {
-      val (occS, singlesS, candS) =
-        stats(if (sampleDenom > 1)
-          tri.filter(pmod(xxhash64(col("h")), lit(sampleDenom)) === 0)
-        else tri)
-      if (sampleDenom > 1 && occS < MinProbeSampledOcc) stats(tri)
-      else (occS, singlesS, candS)
+      val sampled = stats(tri.filter(pmod(xxhash64(col("h")), lit(10)) === 0))
+      if (sampled._1 < MinProbeSampledOcc) stats(tri) else sampled
     }
     if (occ > 0 && singles.toDouble / occ >= singletonMassCutover) "prefix"
     else if (occ > 0 && candMass / occ > candsPerOccCutover) "lsh"
@@ -303,11 +295,12 @@ object Dedup {
     * aggregating Σ df·(df−1)/2 candidate increments; the LSH path's
     * is ~128 signature multiplies per occurrence plus verification of
     * candidates ≈ true pairs. Crossover measured on the generated
-    * corpus family (ProfileJaccard): sf0.01 sits at ~0.5 increments
-    * per occurrence (count-join wins, and the exact contract holds by
-    * construction), sf0.1 at ~10, true sf1 at ~46 and growing
-    * linearly with corpus size at fixed vocabulary — the count-join
-    * is quadratic there while LSH+verify stays near-linear.
+    * corpus family (PLANS.md round-2 `dd_jaccard_adaptive`): sf0.01
+    * sits at ~0.5 increments per occurrence (count-join wins, and the
+    * exact contract holds by construction), sf0.1 at ~10, true sf1
+    * at ~46 and growing linearly with corpus size at fixed vocabulary
+    * — the count-join is quadratic there while LSH+verify stays
+    * near-linear.
     */
   private[graft] val DenseCandsPerOccCutover = 6.0
 
@@ -411,7 +404,7 @@ object Dedup {
     // against the full doc universe; oversized pairs re-enter via the
     // fallback union), so joining cands back would be an identity
     // join shuffling the candidate set once more for nothing
-    bandedVerifiedOnDocs(documents, rows, bands) { (inter, sizes) =>
+    candVerifiedOnDocs(documents, bandedCandidatesOnDocs(_, rows, bands)) { (inter, sizes) =>
       inter
         .join(sizes.select(col("doc_id").as("doc1"), col("s").as("s1")), Seq("doc1"))
         .join(sizes.select(col("doc_id").as("doc2"), col("s").as("s2")), Seq("doc2"))
@@ -419,17 +412,6 @@ object Dedup {
         .select(col("doc1"), col("doc2"), col("inter"), col("s1"), col("s2"))
         .orderBy(col("doc1"), col("doc2"))
     }
-
-  /** The shared skeleton of the banded-MinHash verified paths: one
-    * place owns the cache protocol (candidate generation, exact
-    * sorted-merge intersection counts, release of every cache on
-    * success OR on a construction-time failure). `verify` turns
-    * (inter, sizes) into the final pair frame — the only part the
-    * Jaccard and containment twins differ in.
-    */
-  private def bandedVerifiedOnDocs(docs: DataFrame, rows: Int, bands: Int)(
-      verify: (DataFrame, DataFrame) => DataFrame): DataFrame =
-    candVerifiedOnDocs(docs, bandedCandidatesOnDocs(_, rows, bands))(verify)
 
   /** The generator-agnostic body of the verified paths: `candGen`
     * yields (candidates, per-doc table) — both persisted, ownership
@@ -698,42 +680,12 @@ object Dedup {
       containmentVerify(inter, sizes, tauNum, tauDenom), docSets, interCache)
   }
 
-  /** Containment pairs over banded-MinHash candidates — the
-    * DENSE-corpus regime of the containment family. The lossless
-    * generators ([[containmentPairs]]'s count-join,
-    * [[containmentPairsLsh]]'s rarest-prefix probes) both shuffle
-    * Ω(probe × df) candidate rows, which grows quadratically when
-    * document frequency grows with the corpus — and a UNIFORMLY dense
-    * vocabulary (this corpus at scale: every shingle df ≈ n/27000)
-    * is the worst case for any frequency-ordered filter, because
-    * there are no rare shingles to order by. Banded candidates keep
-    * the generator linear; the containment cut and scores are then
-    * EXACT on every candidate (shared [[containmentVerify]]).
-    *
-    * The honest trade, written down: banding keys on symmetric
-    * MinHash, whose collision rate is Jaccard — so recall follows
-    * the pair's JACCARD, not its containment
-    * (1 − (1 − J^rows)^bands; at (6, 21): J=0.7 → 93%, 0.8 → 99.8%,
-    * 0.89 → 99.99996%). A high-containment / low-Jaccard pair (tiny
-    * quote inside a huge page) under-recalls — exactly the pair class
-    * the asymmetric measure exists for — so this regime is right only
-    * where near-dup structure is size-bounded (boilerplate wraps,
-    * re-posts; this corpus: every true containment pair also has
-    * J ≥ 0.89, DedupSpec pins result equality), and a corpus with
-    * genuinely asymmetric duplication must pay the prefix generator's
-    * density cost knowingly. [[containmentAuto]] makes that choice
-    * from the corpus statistics.
-    */
-  def containmentBandedVerified(documents: DataFrame, tauNum: Int = 80,
-      tauDenom: Int = 100, rows: Int = 6, bands: Int = 21): DataFrame =
-    bandedVerifiedOnDocs(documents, rows, bands)(
-      containmentVerify(_, _, tauNum, tauDenom))
-
   /** DEFAULT per-doc candidate budget for the stratified generator
     * (callers override via [[containmentStratified]]'s
     * `candBudgetPerDoc` — the knob that buys dropped gap arms back at
-    * density: ProfileStratRecall's measured curve in SCALING.md
-    * prices recall against verification cost per budget step): the
+    * density: the measured curve in SCALING.md, round 12 "The
+    * stratified budget knob, priced", prices recall against
+    * verification cost per budget step): the
     * budget bounds expected BACKGROUND collisions (random-pair band
     * matches) to a linear-in-corpus total. An arm whose background
     * cost cannot be pushed under this budget at any geometry is
@@ -826,13 +778,10 @@ object Dedup {
     */
   private[graft] val MinArmRecall = 0.5
 
-  /** The stratified generator's corpus probe, shared verbatim with
-    * ProfileStratBudget (round-13 ADVICE: the tool advertised "the
-    * guard's real decision boundary" while carrying a COPY of this
-    * logic — one definition keeps that claim true if the jBg formula
-    * or class binning ever changes). Two bounded driver-side reads of
-    * the caller-persisted fingerprint table: the ≤64-row size-class
-    * histogram and one (count, approx vocab) aggregate.
+  /** The stratified generator's corpus probe: two bounded
+    * driver-side reads of the caller-persisted fingerprint table —
+    * the ≤64-row size-class histogram and one (count, approx vocab)
+    * aggregate.
     */
   private[graft] final case class CorpusProbe(hist: Map[Int, Long],
       nDocs: Long, sBar: Double, occ: Long, vocab: Long, jBg: Double) {
@@ -861,9 +810,9 @@ object Dedup {
     CorpusProbe(hist, nDocs, sBar, occ, vocab, jBg)
   }
 
-  /** [[corpusProbe]] from a raw fingerprint table (doc_id, h) — the
-    * ProfileStratBudget entry point; derives the per-doc size/class
-    * frame exactly as the operator's signature aggregate does.
+  /** [[corpusProbe]] from a raw fingerprint table (doc_id, h);
+    * derives the per-doc size/class frame exactly as the operator's
+    * signature aggregate does.
     */
   private[graft] def corpusProbeOnFps(tri: DataFrame): CorpusProbe =
     corpusProbe(
@@ -940,13 +889,12 @@ object Dedup {
       .withColumn("cls", floor(log2(col("s"))).cast("int"))
       .persist()
     try {
-      // bounded probes ([[corpusProbe]] — shared with
-      // ProfileStratBudget): the ≤64-row class histogram (which also
-      // materializes the signature cache all 2(G+1) emission branches
-      // re-read) and the corpus background-similarity estimate — the
-      // occurrence/vocabulary aggregate reads a per-row re-shingling
-      // scan (one pass, no shuffle, no cache) instead of an exploded
-      // fingerprint table
+      // bounded probes ([[corpusProbe]]): the ≤64-row class histogram
+      // (which also materializes the signature cache all 2(G+1)
+      // emission branches re-read) and the corpus background-similarity
+      // estimate — the occurrence/vocabulary aggregate reads a per-row
+      // re-shingling scan (one pass, no shuffle, no cache) instead of
+      // an exploded fingerprint table
       val probe = corpusProbe(sigs, docs.select(
         explode(column(graft.expressions.ShingleFingerprints(
           expression(col("text"))))).as("h")))
@@ -1653,34 +1601,16 @@ object Dedup {
     * via one doc_id equi-join, then BOTH window functions (size,
     * rank) share the single component-keyed exchange.
     */
-  def canonicalize(documents: DataFrame, pairs: DataFrame): DataFrame =
-    canonicalizeOnComps(documents,
-      connectedComponents(documents, pairs)
-        .select(col("doc_id"), col("component")),
-      repartitionFirst = false)
-
-  /** The window stage over already-attached component labels — split
-    * out so ProfileCanon can A/B its plan shape against precomputed
-    * components (the pair source dominates the full operator; the
-    * window question needs the surgical cut). `repartitionFirst`
-    * mirrors [[graft.operators.TextOps]]' `topKByScore` arms: force
-    * the component exchange + sort before the windows instead of
-    * letting EnsureRequirements place them (VERDICT r12 #3 — measured
-    * in SCALING.md round 13; the BARE shape ships: with no rank
-    * FILTER over the window there is no InferWindowGroupLimit partial
-    * pass here, so both arms plan one exchange + one sort and the A/B
-    * confirms parity).
-    */
-  private[graft] def canonicalizeOnComps(documents: DataFrame,
-      comps: DataFrame, repartitionFirst: Boolean): DataFrame = {
+  def canonicalize(documents: DataFrame, pairs: DataFrame): DataFrame = {
+    // no forced repartition + sort before the windows: with no rank
+    // FILTER above them there is no InferWindowGroupLimit partial
+    // pass, so forcing one only renames the same plan (measured at
+    // sf10 and sf100: SCALING.md round 13, "The canonicalize-family
+    // window shape")
     val wc = org.apache.spark.sql.expressions.Window.partitionBy(col("component"))
-    val joined = documents.select(col("doc_id"), col("n_chars"))
-      .join(comps, Seq("doc_id"))
-    val arranged =
-      if (repartitionFirst) joined.repartition(col("component"))
-        .sortWithinPartitions(col("component"), col("n_chars").desc, col("doc_id"))
-      else joined
-    arranged
+    documents.select(col("doc_id"), col("n_chars"))
+      .join(connectedComponents(documents, pairs)
+        .select(col("doc_id"), col("component")), Seq("doc_id"))
       .withColumn("n_members", count(lit(1)).over(wc))
       .withColumn("rnk", row_number().over(
         wc.orderBy(col("n_chars").desc, col("doc_id"))))
@@ -1699,27 +1629,11 @@ object Dedup {
     * canonicalize: labels attach by one doc_id equi-join, the member
     * count is one component-keyed window.
     */
-  def softDedupWeights(documents: DataFrame, pairs: DataFrame): DataFrame =
-    softDedupOnComps(documents,
-      connectedComponents(documents, pairs)
-        .select(col("doc_id"), col("component")),
-      repartitionFirst = false)
-
-  /** Window stage of [[softDedupWeights]] over precomputed labels —
-    * the ProfileCanon A/B cut. Here the only window is the UNORDERED
-    * member count, so the bare shape needs no sort at all and
-    * `repartitionFirst` can only ADD one; the arm exists to measure
-    * that expectation rather than assume it.
-    */
-  private[graft] def softDedupOnComps(documents: DataFrame,
-      comps: DataFrame, repartitionFirst: Boolean): DataFrame = {
+  def softDedupWeights(documents: DataFrame, pairs: DataFrame): DataFrame = {
     val wc = org.apache.spark.sql.expressions.Window.partitionBy(col("component"))
-    val joined = documents.select(col("doc_id")).join(comps, Seq("doc_id"))
-    val arranged =
-      if (repartitionFirst) joined.repartition(col("component"))
-        .sortWithinPartitions(col("component"))
-      else joined
-    arranged
+    documents.select(col("doc_id"))
+      .join(connectedComponents(documents, pairs)
+        .select(col("doc_id"), col("component")), Seq("doc_id"))
       .withColumn("n_members", count(lit(1)).over(wc))
       .select(col("doc_id"), col("component"), col("n_members"),
         round(lit(1.0) / col("n_members").cast("double"), 6).as("weight"))
@@ -1849,37 +1763,26 @@ object Dedup {
     * grow with log₂(n) to hold expected occupancy ~3 and tables
     * double to 16 to hold recall (recall@0.95 = 1−(1−0.8976^bits)^T:
     * 8×12 → 0.92, 16×17 → 0.94, 16×18 → 0.92 — derivation in the
-    * docstring of [[graft.functions.VectorOps.lshTableKeys]]).
-    * Explicit nTables/bitsPerTable arguments override (specs, the
-    * streaming twin's frozen geometry). The corpus count comes from
-    * one construction-time `count()` — the q24 eager-detection
-    * precedent, documented there.
+    * docstring of [[graft.functions.VectorOps.lshTableKeys]]). The
+    * corpus count comes from one construction-time `count()` — the
+    * q24 eager-detection precedent, documented there.
     */
-  def embedNearDup(embeddings: DataFrame, tau: Double = 0.95,
-      nTables: Int = -1, bitsPerTable: Int = -1): DataFrame = {
-    // the override is all-or-nothing: half-specified geometry would
-    // silently auto-pick BOTH values, which is exactly the surprise a
-    // caller pinning the documented 8×12 would not expect — fail loud
-    require((nTables > 0) == (bitsPerTable > 0),
-      s"pass both nTables and bitsPerTable or neither (got $nTables, $bitsPerTable)")
-    // the auto geometry count runs on the INPUT frame, not the
-    // persisted vector frame: on a file-backed corpus Catalyst prunes
-    // every column out of a count() (footer row counts — metadata
-    // cost), where counting through the persisted double-array frame
-    // was measured forcing an eager full decode + cache-write pass
-    // that serialized ~1 s ahead of the main job at sf1. The trade:
-    // an EXPENSIVE computed lineage (an embedding model, a decode)
-    // does run twice on the auto path — a caller holding one of those
-    // should persist upstream or pass the geometry explicitly (the
-    // nTables/bitsPerTable override exists for exactly that).
-    val (autoT, autoB) =
-      if (nTables > 0 && bitsPerTable > 0) (nTables, bitsPerTable)
-      else embedLshParams(embeddings.count())
+  def embedNearDup(embeddings: DataFrame, tau: Double = 0.95): DataFrame = {
+    // the geometry count runs on the INPUT frame, not the persisted
+    // vector frame: on a file-backed corpus Catalyst prunes every
+    // column out of a count() (footer row counts — metadata cost),
+    // where counting through the persisted double-array frame was
+    // measured forcing an eager full decode + cache-write pass that
+    // serialized ~1 s ahead of the main job at sf1. The trade: an
+    // EXPENSIVE computed lineage (an embedding model, a decode) does
+    // run twice — a caller holding one of those should persist
+    // upstream.
+    val (nTables, bitsPerTable) = embedLshParams(embeddings.count())
     embedNearDupOnSig(
       embeddings
         .select(col("vec_id"), VectorOps.toDoubleArray(col("embedding")).as("vd"))
         .persist(),
-      tau, autoT, autoB)
+      tau, nTables, bitsPerTable)
   }
 
   /** Corpus-scaled LSH geometry: (tables, bitsPerTable). ≤ 48 k
@@ -1925,8 +1828,8 @@ object Dedup {
 
   /** First plane index owned by the verification sign sketch: bucket
     * geometries must fit strictly below it ([[embedLshParams]] caps
-    * its search here; [[embedNearDupOnSig]] rejects explicit
-    * geometries that cross it), so sketch bits can never correlate
+    * its search here; [[embedNearDupOnSig]] rejects any geometry
+    * that crosses it), so sketch bits can never correlate
     * with bucket selection.
     */
   private[graft] val SketchPlaneOffset = 896
@@ -1941,8 +1844,8 @@ object Dedup {
   private def embedNearDupOnSig(sig: DataFrame, tau: Double,
       nTables: Int, bitsPerTable: Int): DataFrame = {
     // the sketch's independence from the buckets is an invariant, not
-    // an observation: explicit geometries must stay below the sketch's
-    // reserved plane range just like the auto search does
+    // an observation: the geometry must stay below the sketch's
+    // reserved plane range
     require(nTables * bitsPerTable <= SketchPlaneOffset,
       s"bucket geometry $nTables×$bitsPerTable crosses into the " +
         s"verification-sketch plane range [$SketchPlaneOffset, 1024)")

@@ -933,25 +933,7 @@ object Multimodal {
     * first qualifying block, on the single ball variant that matches
     * — no aggregate ever sees candidates.
     */
-  def phashPairsMih(hashes: DataFrame, maxDist: Int = 3): DataFrame =
-    phashPairsMihArm(hashes, maxDist, shjHint = false)
-
-  /** [[phashPairsMih]] with the bucket join's physical strategy
-    * exposed for ProfileMih's A/B (round 12, the r11 #2 profiling
-    * ask). `shjHint = false` — the default sort-merge join — is what
-    * ships, and the reason is measured, not guessed: a SHUFFLE_HASH
-    * hint on the 2-rows/doc index side avoids sorting the
-    * 66-rows/doc radius-1 probe stream and WINS at sf10 (5.3 vs
-    * 7.4 s min-of-2) — but at generated sf100 it LOSES in both
-    * passes (353 vs 204 s): past the memory cliff the SMJ's
-    * sequential spill-sort-merge beats the hash join's random-access
-    * probe of partition-wide tables. The scale-grade default keeps
-    * the arm that survives the third decade; single-node sub-sf10
-    * users can hint the join themselves. SCALING.md round 12 has the
-    * full table (and the identical-output checksums).
-    */
-  private[graft] def phashPairsMihArm(hashes: DataFrame, maxDist: Int,
-      shjHint: Boolean): DataFrame = {
+  def phashPairsMih(hashes: DataFrame, maxDist: Int = 3): DataFrame = {
     require(maxDist >= 0 && maxDist <= 3,
       s"2x32-bit multi-index + radius-1 ball guarantees recall only for maxDist <= 3, got $maxDist")
     val idx = hashes.select(col("doc_id").as("doc_b"), col("phash").as("pb"),
@@ -971,7 +953,13 @@ object Multimodal {
       .withColumn("v", expr("shiftright(pa, blk * 32) & 4294967295"))
       .select(col("doc_a"), col("pa"), col("blk"), explode(expr(
         "concat(array(v), transform(sequence(0, 31), i -> v ^ shiftleft(1L, i)))")).as("key"))
-    probes.join(if (shjHint) idx.hint("shuffle_hash") else idx, Seq("blk", "key"))
+    // sort-merge bucket join, not SHUFFLE_HASH on the 2-rows/doc
+    // index side: the hash join wins at sf10 (5.3 vs 7.4 s) but loses
+    // at generated sf100 (353 vs 204 s) — past the memory cliff the
+    // SMJ's sequential spill-sort-merge beats random-access probes of
+    // partition-wide tables (SCALING.md round 12, "mm_phash_pairs_auto's
+    // MIH exchange at sf100")
+    probes.join(idx, Seq("blk", "key"))
       .filter(col("doc_a") < col("doc_b"))
       .filter(expr(s"bit_count(pa ^ pb) <= $maxDist"))
       // first qualifying block (guaranteed to exist by pigeonhole):
@@ -1016,11 +1004,9 @@ object Multimodal {
     * sample defaults to banding (the tiny-corpus best arm).
     */
   def phashStrategy(hashes: DataFrame,
-      candPerDocCutover: Double = MihCandPerDocCutover,
-      probeSampleFraction: Double = 0.1): String = {
-    require(probeSampleFraction > 0 && probeSampleFraction <= 1.0,
-      s"probe sample fraction must be in (0, 1], got $probeSampleFraction")
-    val r = hashes.sample(withReplacement = false, probeSampleFraction, seed = 7L)
+      candPerDocCutover: Double = MihCandPerDocCutover): String = {
+    val f = 0.1
+    val r = hashes.sample(withReplacement = false, f, seed = 7L)
       .select(explode(sequence(lit(0), lit(3))).as("band"), col("phash"))
       .select(col("band"), expr("shiftright(phash, band * 16) & 65535").as("key"))
       .groupBy(col("band"), col("key")).agg(count(lit(1)).as("n"))
@@ -1029,7 +1015,7 @@ object Multimodal {
     val cand = if (r.isNullAt(0)) 0L else r.getLong(0)
     val docs = (if (r.isNullAt(1)) 0L else r.getLong(1)) / 4
     if (docs > 0 &&
-        cand.toDouble / (probeSampleFraction * docs) > candPerDocCutover) "mih"
+        cand.toDouble / (f * docs) > candPerDocCutover) "mih"
     else "banded"
   }
 

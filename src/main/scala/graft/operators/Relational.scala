@@ -406,8 +406,9 @@ object Relational {
     // GK summary is built from the data alone (the queried quantiles
     // only index the finished sketch), so two scalar aggregates build
     // two IDENTICAL sketches and the array form returns the same two
-    // values for half the insertion work (round 13, ProfileOpt:
-    // sketch branch 0.59 s of q20's 2.37 s at sf0.1).
+    // values for half the insertion work (round 13: sketch branch
+    // 0.59 s of q20's 2.37 s at sf0.1; OPTIMIZATION_r13.md
+    // "q20_approx_percentile").
     val sketches = lineitem.groupBy(col("l_returnflag"))
       .agg(expr("approx_percentile(l_extendedprice, array(0.5, 0.95), 1000)").as("pa"))
       .select(col("l_returnflag"), col("pa").getItem(0).as("p50_approx"),
@@ -602,28 +603,8 @@ object Relational {
     }
   }
 
-  /** The unconditionally-salted variant (every key spread, dimension
-    * replicated `salts`× across the board) — kept as the comparison
-    * arm for the skew bench: what targeted salting saves on uniform
-    * data, and the ceiling it matches under total skew.
-    */
-  private[graft] def q24SaltedJoinAll(lineitem: DataFrame, orders: DataFrame,
-      salts: Int = 8): DataFrame = {
-    val l = lineitem
-      .withColumn("salt",
-        pmod(hash(col("l_orderkey"), col("l_linenumber"),
-          col("l_partkey"), col("l_suppkey")), lit(salts)))
-    val o = orders
-      .withColumn("salt", explode(array((0 until salts).map(lit): _*)))
-    l.join(o, l("l_orderkey") === o("o_orderkey") && l("salt") === o("salt"))
-      .groupBy(col("o_orderstatus"))
-      .agg(count(lit(1)).as("n"),
-        sum(dec2(col("l_extendedprice"))).cast("double").as("revenue"))
-      .orderBy(col("o_orderstatus"))
-  }
-
-  /** The plain (unsalted) join with the same rollup — the skew bench's
-    * baseline arm: what a hot key does to an unprotected shuffle join.
+  /** The plain (unsalted) join with the same rollup — what
+    * [[q24SaltedJoin]] returns when the sample finds no hot key.
     */
   private[graft] def q24PlainJoin(lineitem: DataFrame, orders: DataFrame): DataFrame =
     lineitem.join(orders, col("l_orderkey") === col("o_orderkey"))

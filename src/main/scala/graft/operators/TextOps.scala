@@ -198,20 +198,15 @@ object TextOps {
     * frame with the group-universe size as `n_groups`.
     */
   private[operators] def tfidfTopK(terms: DataFrame, groupCol: String,
-      nGroups: DataFrame, k: Int, corpusSizedGroups: Boolean): DataFrame =
-    topKByScore(tfidfScored(terms, groupCol, nGroups), groupCol, k,
-      corpusSizedGroups)
-
-  /** The shared (group, w, score) table both top-k arms rank. */
-  private def tfidfScored(terms: DataFrame, groupCol: String,
-      nGroups: DataFrame): DataFrame = {
+      nGroups: DataFrame, k: Int, corpusSizedGroups: Boolean): DataFrame = {
     val tf = terms.groupBy(col(groupCol), col("w")).agg(count(lit(1)).as("tf"))
     val dfreq = tf.groupBy(col("w")).agg(count(lit(1)).as("df"))
-    tf.join(dfreq, Seq("w"))
+    val scored = tf.join(dfreq, Seq("w"))
       .crossJoin(broadcast(nGroups))
       .withColumn("score", round(col("tf").cast("double") *
         log((col("n_groups") + 1).cast("double")
           / (col("df") + 1).cast("double")), 6))
+    topKByScore(scored, groupCol, k, corpusSizedGroups)
   }
 
   /** Grouped top-k of a (group, w, score) table: rank = score
@@ -228,10 +223,10 @@ object TextOps {
     *    (repartition on the group key, then sortWithinPartitions)
     *    halves the sort work: the one post-exchange sort both
     *    satisfies the window and lets WindowGroupLimit run as a
-    *    streaming filter. Measured (ProfileTfidf, min of 2
-    *    interleaved passes, identical-output checksums): sf10
-    *    bare 21.1 s / repart 6.9 s / TermTopKAggregator 8.3 s;
-    *    sf100 bare 86.4 / repart 55.0 / agg 70.4 — the bounded
+    *    streaming filter. Measured (min of 2 interleaved passes,
+    *    identical-output checksums): sf10 bare 21.1 s / repart
+    *    6.9 s / bounded top-k aggregator 8.3 s; sf100 bare 86.4 /
+    *    repart 55.0 / agg 70.4 — the bounded
     *    aggregator (O(k) heap per group, no sort) LOSES at both
     *    scales: its ObjectHashAggregate falls back to sort-based
     *    past 128 distinct keys, and raising the threshold was
@@ -255,44 +250,6 @@ object TextOps {
     arranged.withColumn("rnk", row_number().over(w).cast("long"))
       .filter(col("rnk") <= k)
       .select(col(groupCol), col("rnk"), col("w").as("term"), col("score"))
-  }
-
-  /** The round-12 A/B alternative to [[topKByScore]]'s window: the
-    * bounded [[graft.functions.TopK.TermTopKAggregator]] (map-side
-    * O(k) heap per group — no sort anywhere). Kept for ProfileTfidf's
-    * committed measurement; the window arm ships (see
-    * [[topKByScore]]'s verdict).
-    */
-  private[graft] def topKByScoreAgg(scored: DataFrame, groupCol: String,
-      k: Int): DataFrame = {
-    import graft.functions.TopK
-    val tk = udaf(new TopK.TermTopKAggregator(k),
-      org.apache.spark.sql.Encoders.product[TopK.ScoredTerm])
-    scored.groupBy(col(groupCol))
-      .agg(tk(col("w"), col("score")).as("top"))
-      .select(col(groupCol), posexplode(col("top")))
-      .select(col(groupCol), (col("pos") + 1).cast("long").as("rnk"),
-        col("col.term").as("term"), col("col.score").as("score"))
-  }
-
-  /** ProfileTfidf's window-arm handles (A = the pre-round-12 bare
-    * window, B = the shipping repartition-first shape).
-    */
-  private[graft] def tfidfTopTermsArm(documents: DataFrame, k: Int,
-      arm: String): DataFrame = {
-    val terms = documents.select(col("doc_id"),
-      explode(split(col("text"), " ")).as("w"))
-    val nGroups = documents.agg(count(lit(1)).as("n_groups"))
-    val scored = tfidfScored(terms, "doc_id", nGroups)
-    val ranked = arm match {
-      case "window_bare" => // the pre-round-12 shape
-        topKByScore(scored, "doc_id", k, corpusSizedGroups = false)
-      case "window_repart" => // what tfidfTopTerms ships
-        topKByScore(scored, "doc_id", k, corpusSizedGroups = true)
-      case "agg" => topKByScoreAgg(scored, "doc_id", k)
-      case other => throw new IllegalArgumentException(s"unknown arm $other")
-    }
-    ranked.orderBy(col("doc_id"), col("rnk"))
   }
 
   /** First-merge BPE statistics: corpus-weighted adjacent character

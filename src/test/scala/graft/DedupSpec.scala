@@ -433,18 +433,13 @@ class DedupSpec extends AnyFunSuite {
       rows(Dedup.ngramJaccard(corpus, tauNum = 30)))
   }
 
-  test("banded containment misses the embedded doc the prefix generator finds — and auto picks right") {
-    // the documented recall trade: banding keys on symmetric MinHash,
-    // so a high-containment / low-Jaccard pair (small doc verbatim
-    // inside a big one) under-recalls exactly like minhashLsh does
+  test("containment auto finds the embedded doc on a long-tail corpus") {
+    // a high-containment / low-Jaccard pair: small doc verbatim inside
+    // a big one
     val small = distinct1
     val big = base + " " + distinct1 + " " + distinct2 + " " + nearDup
     val corpus = docs(1L -> small, 2L -> big,
       3L -> "entirely unrelated prose about gardening tips and seasonal vegetable rotation schedules")
-    val banded = Dedup.containmentBandedVerified(corpus).collect()
-      .map(r => (r.getLong(0), r.getLong(1)))
-    assert(!banded.contains((1L, 2L)),
-      "fixture broken: symmetric banding was supposed to miss this pair")
     // this corpus is long-tail (every shingle rare), so the dispatcher
     // picks the lossless prefix generator and finds the pair
     val auto = Dedup.containmentAuto(corpus).collect()
@@ -452,14 +447,13 @@ class DedupSpec extends AnyFunSuite {
     assert(auto.toSeq == Seq((1L, 2L)))
   }
 
-  test("banded containment equals the exact count-join where duplication is size-bounded") {
+  test("containment auto equals the exact count-join where duplication is size-bounded") {
     // dense 5-word rotation: every pair J = 1.0 (bounded size ratio) —
     // the regime containmentAuto dispatches to banding in
     val dense = (1L to 12L).map(i =>
       (i, (0 until 8).map(j => s"v${(i + j) % 5}").mkString(" "))).toDF("doc_id", "text")
     def rows(df: DataFrame) = df.collect().map(_.toSeq).toSeq
     val exact = rows(Dedup.containmentPairs(dense))
-    assert(rows(Dedup.containmentBandedVerified(dense)) == exact)
     assert(rows(Dedup.containmentAuto(dense)) == exact)
   }
 
@@ -806,8 +800,9 @@ class DedupSpec extends AnyFunSuite {
     val occupied = sigs.select(col("cls")).distinct().collect().map(_.getInt(0)).toSet
     assert(occupied.size >= 3, s"fixture broken: classes $occupied")
     val arms = Seq((0, 2, 23), (1, 1, 61), (2, 1, 61), (5, 1, 64))
-    // ---- reference: the union shape, verbatim from round 13 ----
-    def unionRef(asSmall: Boolean): Seq[DataFrame] = arms.flatMap { case (g, r, b) =>
+    // ---- reference: the union shape of round 13, one branch per (arm, role) ----
+    def emit(arm: (Int, Int, Int), asSmall: Boolean): Option[DataFrame] = {
+      val (g, r, b) = arm
       val eligible =
         (if (asSmall) occupied.filter(c => occupied.contains(c + g))
          else occupied.filter(c => occupied.contains(c - g))).toSeq
@@ -816,19 +811,15 @@ class DedupSpec extends AnyFunSuite {
           .select(col("doc_id"), col("cls").as("ci"), (col("cls") + g).as("cj"), col("mh"))
         else sigs.filter(col("cls").isin(eligible: _*))
           .select(col("doc_id"), (col("cls") - g).as("ci"), col("cls").as("cj"), col("mh"))
-      if (eligible.isEmpty || (g == 0 && !asSmall)) None
+      if (eligible.isEmpty) None
       else Some(base.select(col("doc_id"), col("ci"), col("cj"),
         posexplode(column(graft.expressions.BandHashes(expression(col("mh")), r, b))))
         .toDF("doc_id", "ci", "cj", "band_idx", "band_hash"))
     }
-    val refSmall = unionRef(asSmall = true).reduceLeft(_ unionByName _)
-    val refLarge = (unionRef(asSmall = false) ++
-      arms.filter(_._1 == 0).flatMap { case (g, r, b) =>
-        unionRef(asSmall = true).headOption.map(_ => // gap-0 small rows verbatim
-          sigs.select(col("doc_id"), col("cls").as("ci"), (col("cls") + g).as("cj"),
-            posexplode(column(graft.expressions.BandHashes(expression(col("mh")), r, b))))
-            .toDF("doc_id", "ci", "cj", "band_idx", "band_hash"))
-      }).reduceLeft(_ unionByName _)
+    val refSmall = arms.flatMap(emit(_, asSmall = true)).reduceLeft(_ unionByName _)
+    // gap 0 joins small vs small: its small-role rows route to the large side
+    val refLarge = arms.flatMap(a => emit(a, asSmall = a._1 == 0))
+      .reduceLeft(_ unionByName _)
     // ---- the emitter ----
     val mask = occupied.filter(c => c >= 0 && c < 64).foldLeft(0L)((m, c) => m | (1L << c))
     def emitted(asSmall: Boolean): DataFrame =
@@ -856,10 +847,15 @@ class DedupSpec extends AnyFunSuite {
     val first = out.getStruct(0, 4)
     val last = out.getStruct(22, 4)
     assert(!first.isNullAt(3) && last.isNullAt(3))
+    // a gap-0 arm's partner is the document's own class: a mask
+    // without that class emits no gap-0 rows in either role
+    for (asSmall <- Seq(true, false))
+      assert(graft.expressions.StratBandEmit
+        .compute(shortMh, 3, Array(0, 2, 23), 1L << 4, asSmall).numElements() == 0)
     sigs.unpersist()
   }
 
-  test("stratified containment finds the embedded doc symmetric banding misses on a DENSE corpus") {
+  test("stratified containment finds the embedded doc on a DENSE corpus") {
     // the round-8 carried gap, now structural: a dense-vocabulary
     // corpus (the banded regime) with a planted high-containment /
     // low-Jaccard pair — a 40-word doc embedded verbatim in an
@@ -874,15 +870,11 @@ class DedupSpec extends AnyFunSuite {
     assert(Dedup.jaccardStrategy(corpus) == "lsh") // dense: the regime under test
     val exact = Dedup.containmentPairs(corpus).collect().map(_.toSeq).toSeq
     assert(exact.map(r => (r(0), r(1))).contains((1L, 2L)))
-    // the motivation, pinned: fixed symmetric (6, 21) banding misses
-    // the pair — its per-band collision rate is J^6 ≈ 4·10⁻⁷
-    val banded = Dedup.containmentBandedVerified(corpus).collect()
-      .map(r => (r.getLong(0), r.getLong(1)))
-    assert(!banded.contains((1L, 2L)),
-      "fixture broken: symmetric banding was supposed to miss this pair")
-    // the stratified generator provisions the gap-3 arm (r=1, b=61 at
-    // J* ≈ 0.049) and finds it; exact verification keeps every
-    // surfaced row identical to the exact contract
+    // fixed symmetric (6, 21) banding would miss the pair — its
+    // per-band collision rate is J^6 ≈ 4·10⁻⁷ — but the stratified
+    // generator provisions the gap-3 arm (r=1, b=61 at J* ≈ 0.049)
+    // and finds it; exact verification keeps every surfaced row
+    // identical to the exact contract
     val strat = Dedup.containmentStratified(corpus).collect().map(_.toSeq).toSeq
     assert(strat == exact)
     // and the dispatcher's dense arm IS the stratified generator now

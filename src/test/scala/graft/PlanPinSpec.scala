@@ -92,7 +92,7 @@ class PlanPinSpec extends AnyFunSuite {
   }
 
   test("txt_tfidf_terms keeps the repartition-first top-k (one sort, above the group exchange)") {
-    // the round-12 win (ProfileTfidf: 3.1× at sf10, 1.6× at sf100)
+    // the round-12 win (3.1× at sf10, 1.6× at sf100; SCALING.md round 12)
     // depends on Spark reusing the forced exchange+sort for the
     // window — one sort total, and WindowGroupLimit running as a
     // streaming filter over it. Nothing else pins that: a version

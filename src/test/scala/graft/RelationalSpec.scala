@@ -84,7 +84,9 @@ class RelationalSpec extends AnyFunSuite {
     val plain = rows(R.q24PlainJoin(fact, dim))
     assert(rows(R.q24SaltedJoin(fact, dim, salts = 8, sampleMod = 4,
       minSampleRows = 100)) == plain)
-    assert(rows(R.q24SaltedJoinAll(fact, dim, salts = 8)) == plain)
+    // the salt count only redistributes rows: a different one agrees too
+    assert(rows(R.q24SaltedJoin(fact, dim, salts = 3, sampleMod = 4,
+      minSampleRows = 100)) == plain)
     // and the hot group really is in the result (the salted copies joined)
     assert(plain.exists { case (s, n, _) => s == "H" && n == 4000L })
   }

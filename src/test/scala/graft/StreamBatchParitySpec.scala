@@ -209,7 +209,7 @@ class StreamBatchParitySpec extends AnyFunSuite {
   test("embedding gate twin: live flags over the driver's vectors equal the batch pairs") {
     // the driver's embeddings are mutually far apart at this SF (no
     // pair reaches tau — verified), so arrivals are PERTURBED copies
-    // of real corpus vectors (the ScaleData replica trick): near-dups
+    // of real corpus vectors (the perturbed-replica trick): near-dups
     // that must flag, on real vector shapes, against the real index.
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext

@@ -240,52 +240,39 @@ class TextOpsSpec extends AnyFunSuite {
     assert(out.filter(_._3 == "common").forall(_._4 == 0.0))
   }
 
-  test("grouped top-k arms agree: bare window, repartition-first window, bounded aggregator") {
-    // the round-12 plan change (VERDICT r11 #1): tfidfTopTerms ships
-    // the repartition-first window; this pins all three ProfileTfidf
-    // arms to identical rows INCLUDING tie and rank order, on a
-    // fixture with score ties (same tf, same df ⇒ equal scores that
-    // must break on the term) and uneven group sizes
+  test("tfidf top terms equal a driver-side tf-idf reference, ties broken on the term") {
+    // the shipping repartition-first window against a plain Scala
+    // tf-idf on a fixture with score ties (same tf, same df ⇒ equal
+    // scores that must break on the term) and uneven group sizes:
+    // rank order and tie order are both pinned
     import graft.operators.TextOps
     val rnd = new scala.util.Random(42)
     val vocab = Vector("alpha", "beta", "gamma", "delta", "eps", "zeta", "eta")
-    val d = (1L to 60L).map { i =>
+    val texts = (1L to 60L).map { i =>
       i -> (0 until (3 + rnd.nextInt(12)))
         .map(_ => vocab(rnd.nextInt(vocab.size))).mkString(" ")
-    }.toDF("doc_id", "text")
-    def rows(arm: String) = TextOps.tfidfTopTermsArm(d, 3, arm).collect()
+    }
+    val k = 3
+    val tf = texts.map { case (id, t) =>
+      id -> t.split(" ").groupBy(identity).view.mapValues(_.length).toMap }
+    val df = tf.flatMap(_._2.keys).groupBy(identity).view.mapValues(_.size).toMap
+    val n = texts.size
+    // Spark's round(x, 6) is HALF_UP on the decimal value, log is StrictMath.log
+    def score(tfv: Int, dfv: Int) = BigDecimal(tfv * StrictMath.log((n + 1.0) / (dfv + 1.0)))
+      .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+    val reference = tf.flatMap { case (id, terms) =>
+      terms.toSeq.map { case (w, c) => (w, score(c, df(w))) }
+        .sortBy { case (w, sc) => (-sc, w) }.take(k).zipWithIndex
+        .map { case ((w, sc), i) => (id, i + 1L, w, sc) }
+    }
+    // the fixture really exercises the tie-break inside the top-k
+    assert(reference.sliding(2).exists {
+      case Seq(a, b) => a._1 == b._1 && a._4 == b._4
+      case _ => false
+    }, "fixture broken: no tied scores inside any document's top-k")
+    val shipped = TextOps.tfidfTopTerms(texts.toDF("doc_id", "text"), k).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getString(2), r.getDouble(3))).toSeq
-    val bare = rows("window_bare")
-    assert(rows("window_repart") == bare)
-    assert(rows("agg") == bare)
-    // and the shipping entry point equals the bare-window contract
-    val shipped = TextOps.tfidfTopTerms(d, 3).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getString(2), r.getDouble(3))).toSeq
-    assert(shipped == bare)
-  }
-
-  test("term top-k aggregator: NaN ranks last, ties break on the term ascending") {
-    import graft.functions.TopK
-    val agg = new TopK.TermTopKAggregator(3)
-    val items = Seq(
-      TopK.ScoredTerm("m", Double.NaN), TopK.ScoredTerm("b", 2.0),
-      TopK.ScoredTerm("z", 5.0), TopK.ScoredTerm("a", 2.0),
-      TopK.ScoredTerm("q", Double.NaN))
-    // fold in two different orders through reduce/merge — same result
-    val left = items.foldLeft(agg.zero)(agg.reduce)
-    val right = items.reverse.foldLeft(agg.zero)(agg.reduce)
-    val merged = agg.merge(
-      items.take(2).foldLeft(agg.zero)(agg.reduce),
-      items.drop(2).foldLeft(agg.zero)(agg.reduce))
-    val expect = Seq(TopK.ScoredTerm("z", 5.0),
-      TopK.ScoredTerm("a", 2.0), TopK.ScoredTerm("b", 2.0))
-    assert(agg.finish(left) == expect)
-    assert(agg.finish(right) == expect)
-    assert(agg.finish(merged) == expect)
-    // all-NaN input: keeps k, ordered by term
-    val nans = Seq("c", "a", "b").map(t => TopK.ScoredTerm(t, Double.NaN))
-    val fin = agg.finish(nans.foldLeft(agg.zero)(agg.reduce))
-    assert(fin.map(_.term) == Seq("a", "b", "c"))
+    assert(shipped == reference)
   }
 
   test("bpe pair stats weight adjacent char pairs by word frequency") {
