@@ -30,10 +30,6 @@ object Dedup {
 
   private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
-  /** See [[Caching.materializeAndRelease]] — shared with TextOps. */
-  private def materializeAndRelease(result: DataFrame, cached: DataFrame*): DataFrame =
-    Caching.materializeAndRelease(result, cached: _*)
-
   /** Distinct 3-word shingles per document (docs shorter than 3 words
     * drop out, mirroring the SQL oracle's generate_series emptiness).
     */
@@ -137,32 +133,33 @@ object Dedup {
     */
   private def ngramJaccardOnFps(tri: DataFrame, tauNum: Int, tauDenom: Int): DataFrame = {
     val sizes = tri.groupBy(col("doc_id")).agg(count(lit(1)).as("s"))
-    // SHUFFLE_HASH on the self-join (round 13): equal-sized sides, so
-    // neither the planner (muchSmaller fails by construction) nor AQE
-    // (measured: the 128 MB local-map threshold arm did not flip it)
-    // ever picks the hash join on its own — yet hashing one side
-    // beats sorting BOTH sides wherever the build partition fits
-    // memory (SMJ 2.06 s vs SHJ 1.12 s at sf0.1; OPTIMIZATION_r13.md
-    // "Count-join family"). At the
-    // count-join's contract scale (sparse/moderate corpora — the
-    // dispatchers send dense corpora to the LSH paths) the per-
-    // partition build side is the fingerprint table over wide AQE
-    // partitions, well inside executor memory; SMJ's spill grace is
-    // only needed past the regime where this operator is the wrong
-    // choice anyway (Θ(Σ df²), SCALING.md).
-    val pairs = tri.select(col("doc_id").as("doc1"), col("h")).hint("shuffle_hash")
+    Caching.materializeAndRelease(
+      jaccardVerify(shingleCountJoin(tri), sizes, tauNum, tauDenom), tri)
+  }
+
+  /** The count-join's candidate body over a fingerprint table
+    * (doc_id, h): the shingle self-join counted per (doc1, doc2),
+    * doc1 < doc2 — exact |A ∩ B| for every pair sharing a shingle.
+    *
+    * SHUFFLE_HASH on the self-join (round 13): equal-sized sides, so
+    * neither the planner (muchSmaller fails by construction) nor AQE
+    * (measured: the 128 MB local-map threshold arm did not flip it)
+    * ever picks the hash join on its own — yet hashing one side
+    * beats sorting BOTH sides wherever the build partition fits
+    * memory (SMJ 2.06 s vs SHJ 1.12 s at sf0.1; OPTIMIZATION_r13.md
+    * "Count-join family"). At the count-join's contract scale
+    * (sparse/moderate corpora — the dispatchers send dense corpora to
+    * the LSH paths) the per-partition build side is the fingerprint
+    * table over wide AQE partitions, well inside executor memory;
+    * SMJ's spill grace is only needed past the regime where this
+    * operator is the wrong choice anyway (Θ(Σ df²), SCALING.md).
+    */
+  private def shingleCountJoin(tri: DataFrame): DataFrame =
+    tri.select(col("doc_id").as("doc1"), col("h")).hint("shuffle_hash")
       .join(tri.select(col("doc_id").as("doc2"), col("h")), Seq("h"))
       .filter(col("doc1") < col("doc2"))
       .groupBy(col("doc1"), col("doc2"))
       .agg(count(lit(1)).as("inter"))
-    materializeAndRelease(pairs
-      .join(sizes.select(col("doc_id").as("doc1"), col("s").as("s1")), Seq("doc1"))
-      .join(sizes.select(col("doc_id").as("doc2"), col("s").as("s2")), Seq("doc2"))
-      .filter(col("inter") * tauDenom >= (col("s1") + col("s2") - col("inter")) * tauNum)
-      .select(col("doc1"), col("doc2"), col("inter"), col("s1"), col("s2"))
-      .orderBy(col("doc1"), col("doc2")),
-      tri)
-  }
 
   /** PPJoin-style exact Jaccard: rarest-first canonical order, only the
     * `s − ⌈τ·s⌉ + 1` prefix shingles join, full intersections
@@ -194,7 +191,7 @@ object Dedup {
       .filter(col("doc1") < col("doc2"))
       .select(col("doc1"), col("doc2"))
       .distinct()
-    materializeAndRelease(cand
+    Caching.materializeAndRelease(cand
       .join(docSets.select(col("doc_id").as("doc1"),
         col("garr").as("garr1"), col("s").as("s1")), Seq("doc1"))
       .join(docSets.select(col("doc_id").as("doc2"),
@@ -220,9 +217,8 @@ object Dedup {
     * One cheap keyed aggregate over the fused fingerprint table —
     * a fraction of either join's cost.
     */
-  def jaccardStrategy(documents: DataFrame,
-      singletonMassCutover: Double = 0.5): String =
-    jaccardStrategyOnFps(shingleFps(documents), singletonMassCutover)
+  def jaccardStrategy(documents: DataFrame): String =
+    jaccardStrategyOnFps(shingleFps(documents))
 
   /** Sampled occurrences below which the strategy probe re-runs on
     * the FULL fingerprint table: at a 10% rate this re-probes corpora
@@ -265,9 +261,7 @@ object Dedup {
     * feeds a threshold, so double's 2⁵³ precision loss is harmless;
     * its sign-correctness is not.
     */
-  private def jaccardStrategyOnFps(tri: DataFrame,
-      singletonMassCutover: Double,
-      candsPerOccCutover: Double = DenseCandsPerOccCutover): String = {
+  private def jaccardStrategyOnFps(tri: DataFrame): String = {
     def stats(t: DataFrame): (Long, Long, Double) = {
       val r = t
         .groupBy(col("h")).agg(count(lit(1)).as("df"))
@@ -284,8 +278,8 @@ object Dedup {
       val sampled = stats(tri.filter(pmod(xxhash64(col("h")), lit(10)) === 0))
       if (sampled._1 < MinProbeSampledOcc) stats(tri) else sampled
     }
-    if (occ > 0 && singles.toDouble / occ >= singletonMassCutover) "prefix"
-    else if (occ > 0 && candMass / occ > candsPerOccCutover) "lsh"
+    if (occ > 0 && singles.toDouble / occ >= SingletonMassCutover) "prefix"
+    else if (occ > 0 && candMass / occ > DenseCandsPerOccCutover) "lsh"
     else "count"
   }
 
@@ -303,6 +297,13 @@ object Dedup {
     * near-linear.
     */
   private[graft] val DenseCandsPerOccCutover = 6.0
+
+  /** Singleton mass (share of shingle occurrences whose shingle sits in
+    * exactly one document) at or above which [[jaccardStrategy]] picks
+    * the PPJoin prefix path: a majority of occurrences that the prefix
+    * filter prunes before any join.
+    */
+  private[graft] val SingletonMassCutover = 0.5
 
   /** Adaptive Jaccard: measure the vocabulary with [[jaccardStrategy]],
     * then dispatch — long-tail vocabulary → [[ngramJaccardPrefix]],
@@ -328,17 +329,16 @@ object Dedup {
     * corpus whose true pairs sit near τ (where banding's recall curve
     * is weak — J=0.5 → 28%, 0.6 → 52% at (6, 21)) a caller reading
     * "adaptive" as "exact, just faster" would lose pairs with no
-    * signal. So the LSH arm (a) logs a warning naming the regime, the
-    * recall curve and the exact alternatives, and (b) can be vetoed
-    * outright with `allowProbabilistic = false`, which falls back to
-    * the exact count-join — quadratic on dense corpora, but that cost
-    * is then the caller's informed choice. Downstream dedup DECISIONS
-    * ([[canonicalize]], [[softDedupWeights]], `dd_cluster_cc`) built
-    * on this operator inherit whichever contract was picked here.
+    * signal. So the LSH arm logs a warning naming the regime, the
+    * recall curve and the exact alternatives: a caller who needs the
+    * exact contract calls [[ngramJaccard]] (quadratic on dense
+    * corpora, but that cost is then the caller's informed choice).
+    * Downstream dedup DECISIONS ([[canonicalize]],
+    * [[softDedupWeights]], `dd_cluster_cc`) built on this operator
+    * inherit the contract picked here.
     */
   def ngramJaccardAdaptive(documents: DataFrame, tauNum: Int = 50,
-      tauDenom: Int = 100, singletonMassCutover: Double = 0.5,
-      allowProbabilistic: Boolean = true): DataFrame = {
+      tauDenom: Int = 100): DataFrame = {
     // the probe aggregates the (sampled) shingling scan directly — no
     // persist: the LSH regime no longer reads the exploded table at
     // all (round 13 — the whole verified path runs off per-row
@@ -348,22 +348,17 @@ object Dedup {
     // back by not writing the cache on the arm that never reads it).
     // Same sampled statistics either way — the probe's filter and
     // aggregate are deterministic in h.
-    jaccardStrategyOnFps(shingleFps(documents), singletonMassCutover) match {
+    jaccardStrategyOnFps(shingleFps(documents)) match {
       case "prefix" =>
         ngramJaccardPrefix(documents, tauNum, tauDenom)
-      case "lsh" if allowProbabilistic =>
+      case "lsh" =>
         log.warn("ngramJaccardAdaptive: dense-vocabulary corpus — dispatching to " +
           "banded-MinHash candidates with EXACT verification (jaccardLshVerified). " +
           "Candidate recall follows 1-(1-J^6)^21 (J=0.5 -> 28%, 0.6 -> 52%, " +
           "0.7 -> 93%, 0.8 -> 99.8%): pairs sitting near a low threshold can be " +
-          "missed. Pass allowProbabilistic=false (or call ngramJaccard / " +
-          "ngramJaccardPrefix) for the exact contract and its quadratic dense-corpus cost.")
+          "missed. Call ngramJaccard or ngramJaccardPrefix for the exact contract " +
+          "and its quadratic dense-corpus cost.")
         jaccardLshVerified(documents, tauNum, tauDenom)
-      case "lsh" =>
-        log.warn("ngramJaccardAdaptive: dense-vocabulary corpus but " +
-          "allowProbabilistic=false — taking the exact count-join, whose candidate " +
-          "shuffle is Θ(Σ df²) (quadratic in corpus size at fixed vocabulary).")
-        ngramJaccard(documents, tauNum, tauDenom)
       case _ => ngramJaccard(documents, tauNum, tauDenom)
     }
   }
@@ -404,14 +399,8 @@ object Dedup {
     // against the full doc universe; oversized pairs re-enter via the
     // fallback union), so joining cands back would be an identity
     // join shuffling the candidate set once more for nothing
-    candVerifiedOnDocs(documents, bandedCandidatesOnDocs(_, rows, bands)) { (inter, sizes) =>
-      inter
-        .join(sizes.select(col("doc_id").as("doc1"), col("s").as("s1")), Seq("doc1"))
-        .join(sizes.select(col("doc_id").as("doc2"), col("s").as("s2")), Seq("doc2"))
-        .filter(col("inter") * tauDenom >= (col("s1") + col("s2") - col("inter")) * tauNum)
-        .select(col("doc1"), col("doc2"), col("inter"), col("s1"), col("s2"))
-        .orderBy(col("doc1"), col("doc2"))
-    }
+    candVerifiedOnDocs(documents, bandedCandidatesOnDocs(_, rows, bands))(
+      jaccardVerify(_, _, tauNum, tauDenom))
 
   /** The generator-agnostic body of the verified paths: `candGen`
     * yields (candidates, per-doc table) — both persisted, ownership
@@ -455,7 +444,7 @@ object Dedup {
         Seq(sigs, cands).foreach(_.unpersist(blocking = false))
         throw t
       }
-    materializeAndRelease(verify(inter, sizes), sigs, cands, interCache)
+    Caching.materializeAndRelease(verify(inter, sizes), sigs, cands, interCache)
   }
 
   /** Banded-MinHash candidate pairs — the shared candidate generator
@@ -533,15 +522,23 @@ object Dedup {
       tauDenom: Int = 100): DataFrame = {
     val tri = shingleFps(documents).persist()
     val sizes = tri.groupBy(col("doc_id")).agg(count(lit(1)).as("s"))
-    // same SHUFFLE_HASH reasoning as [[ngramJaccardOnFps]] (round 13)
-    val pairs = tri.select(col("doc_id").as("doc1"), col("h")).hint("shuffle_hash")
-      .join(tri.select(col("doc_id").as("doc2"), col("h")), Seq("h"))
-      .filter(col("doc1") < col("doc2"))
-      .groupBy(col("doc1"), col("doc2"))
-      .agg(count(lit(1)).as("inter"))
-    materializeAndRelease(
-      containmentVerify(pairs, sizes, tauNum, tauDenom), tri)
+    Caching.materializeAndRelease(
+      containmentVerify(shingleCountJoin(tri), sizes, tauNum, tauDenom), tri)
   }
+
+  /** The exact Jaccard verifier the count-join and the banded-LSH
+    * paths feed: takes (doc1, doc2, inter) pair counts, joins sizes,
+    * applies the integer-arithmetic threshold and emits the
+    * (doc1, doc2, inter, s1, s2) contract.
+    */
+  private def jaccardVerify(pairs: DataFrame, sizes: DataFrame,
+      tauNum: Int, tauDenom: Int): DataFrame =
+    pairs
+      .join(sizes.select(col("doc_id").as("doc1"), col("s").as("s1")), Seq("doc1"))
+      .join(sizes.select(col("doc_id").as("doc2"), col("s").as("s2")), Seq("doc2"))
+      .filter(col("inter") * tauDenom >= (col("s1") + col("s2") - col("inter")) * tauNum)
+      .select(col("doc1"), col("doc2"), col("inter"), col("s1"), col("s2"))
+      .orderBy(col("doc1"), col("doc2"))
 
   /** The exact containment verifier both candidate generators feed:
     * takes (doc1, doc2, inter) pair counts, joins sizes, applies the
@@ -676,7 +673,7 @@ object Dedup {
     val (inter, interCache) =
       try pairIntersectionsOnArrays(cands, docArr)
       catch { case t: Throwable => docSets.unpersist(blocking = false); throw t }
-    materializeAndRelease(
+    Caching.materializeAndRelease(
       containmentVerify(inter, sizes, tauNum, tauDenom), docSets, interCache)
   }
 
@@ -1008,22 +1005,20 @@ object Dedup {
     * now covered up to its `maxGap` (64× size ratio by default) —
     * but pairs beyond that gap, and gap arms the measured background
     * similarity forces it to drop (each drop logged with the
-    * geometry), remain probabilistic holes. The warning names them,
-    * and `allowProbabilistic = false` still vetoes the whole regime
-    * in favor of the lossless rarest-prefix generator — Θ(Σ df²) on
-    * a dense vocabulary (19.6× wall for 10× data measured at sf1),
-    * but every embedded-doc pair is then guaranteed found.
+    * geometry), remain probabilistic holes. The warning names them
+    * and the lossless alternative: a caller who needs every
+    * embedded-doc pair calls [[containmentPairsLsh]] directly —
+    * Θ(Σ df²) on a dense vocabulary (19.6× wall for 10× data
+    * measured at sf1).
     */
   def containmentAuto(documents: DataFrame, tauNum: Int = 80,
-      tauDenom: Int = 100, allowProbabilistic: Boolean = true): DataFrame = {
+      tauDenom: Int = 100): DataFrame = {
     // persist-free probe over the (sampled) shingling scan — neither
     // downstream regime reads an exploded fingerprint table any more
     // (round 13: the stratified path runs off per-row expressions,
     // the prefix path re-shingles through its own window design), so
     // the cache the probe used to pre-fill had no second reader
-    val dense =
-      jaccardStrategyOnFps(shingleFps(documents), singletonMassCutover = 0.5) == "lsh"
-    if (dense && allowProbabilistic) {
+    if (jaccardStrategyOnFps(shingleFps(documents)) == "lsh") {
       log.warn("containmentAuto: dense-vocabulary corpus — dispatching to " +
         "size-stratified banded candidates with EXACT verification " +
         "(containmentStratified). Per size-class-gap arms band for the " +
@@ -1033,17 +1028,10 @@ object Dedup {
         "background guard drops (logged), can be missed — on corpus-scale " +
         "density only the gap-0 arm survives, i.e. embedded documents in " +
         "≥2× larger hosts are NOT provisioned (SURVEY §2.3, 'Dense-" +
-        "containment posture'). Pass allowProbabilistic=false (or call " +
-        "containmentPairsLsh directly) for the lossless rarest-prefix " +
-        "generator and its quadratic dense-corpus cost.")
+        "containment posture'). Call containmentPairsLsh for the lossless " +
+        "rarest-prefix generator and its quadratic dense-corpus cost.")
       containmentStratified(documents, tauNum, tauDenom)
-    } else {
-      if (dense)
-        log.warn("containmentAuto: dense-vocabulary corpus but " +
-          "allowProbabilistic=false — taking the lossless rarest-prefix " +
-          "generator, whose probe-side shuffle is Θ(Σ df²) on a dense vocabulary.")
-      containmentPairsLsh(documents, tauNum, tauDenom)
-    }
+    } else containmentPairsLsh(documents, tauNum, tauDenom)
   }
 
   /** Shingle count of each doc's fingerprint ARRAY above which a pair
@@ -1079,10 +1067,9 @@ object Dedup {
     * exactly (property-spec-pinned).
     *
     * Returns (result, cachedIntermediate): the caller hands the cache
-    * to [[materializeAndRelease]] so nothing outlives the operator.
+    * to [[Caching.materializeAndRelease]] so nothing outlives the operator.
     */
   private def pairIntersectionsOnArrays(cands: DataFrame, docArr: DataFrame,
-      cap: Int = MaxMergeArrayLen,
       mayHaveOversized: Boolean = true): (DataFrame, DataFrame) = {
     import org.apache.spark.sql.graftinternal.ColumnBridge.{column, expression}
     // Fast path (round 13): when the caller has already proved from
@@ -1107,7 +1094,7 @@ object Dedup {
       return (inter, inter)
     }
     val capped = docArr.select(col("doc_id"),
-      when(size(col("hs")) <= cap, col("hs")).as("hs"))
+      when(size(col("hs")) <= MaxMergeArrayLen, col("hs")).as("hs"))
     val inter0 = cands.select(col("doc1"), col("doc2"))
       .join(capped.select(col("doc_id").as("doc1"), col("hs").as("hs1")), Seq("doc1"))
       .join(capped.select(col("doc_id").as("doc2"), col("hs").as("hs2")), Seq("doc2"))
@@ -1281,7 +1268,7 @@ object Dedup {
       .filter(col("doc1") < col("doc2"))
       .select(col("doc1"), col("doc2"))
       .distinct()
-    materializeAndRelease(pairs
+    Caching.materializeAndRelease(pairs
       .join(sigs.select(col("doc_id").as("doc1"), col("mh").as("mh1")), Seq("doc1"))
       .join(sigs.select(col("doc_id").as("doc2"), col("mh").as("mh2")), Seq("doc2"))
       .withColumn("est_jaccard", {
@@ -1335,7 +1322,7 @@ object Dedup {
         pairIntersectionsOnArrays(cands, perDoc.select(col("doc_id"), col("hs")),
           mayHaveOversized = mayBig)
       } catch { case t: Throwable => perDoc.unpersist(blocking = false); throw t }
-    materializeAndRelease(cands
+    Caching.materializeAndRelease(cands
       .join(inter, Seq("doc1", "doc2"), "left")
       .join(sizes.select(col("doc_id").as("doc1"), col("s").as("s1")), Seq("doc1"))
       .join(sizes.select(col("doc_id").as("doc2"), col("s").as("s2")), Seq("doc2"))
@@ -1883,7 +1870,7 @@ object Dedup {
       .join(sk.select(col("vec_id").as("id2"), col("sk").as("sk2")), Seq("id2"))
       .filter(mismatch <= lit(sketchMismatchCut(tau)))
       .select(col("id1"), col("id2"))
-    materializeAndRelease(sketched
+    Caching.materializeAndRelease(sketched
       .join(sig.select(col("vec_id").as("id1"), col("vd").as("v1")), Seq("id1"))
       .join(sig.select(col("vec_id").as("id2"), col("vd").as("v2")), Seq("id2"))
       .withColumn("cos", VectorOps.cosine(col("v1"), col("v2")))
@@ -1922,7 +1909,7 @@ object Dedup {
     */
   def dupSpans(documents: DataFrame, minDocs: Int = 2): DataFrame = {
     val (result, grams) = dupSpansPlan(documents, minDocs)
-    materializeAndRelease(result, grams)
+    Caching.materializeAndRelease(result, grams)
   }
 
   /** The un-materialized plan behind [[dupSpans]] plus the persisted

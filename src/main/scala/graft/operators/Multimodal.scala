@@ -1003,8 +1003,7 @@ object Multimodal {
     * which is exactly the MIH regime. An empty or sub-singleton
     * sample defaults to banding (the tiny-corpus best arm).
     */
-  def phashStrategy(hashes: DataFrame,
-      candPerDocCutover: Double = MihCandPerDocCutover): String = {
+  def phashStrategy(hashes: DataFrame): String = {
     val f = 0.1
     val r = hashes.sample(withReplacement = false, f, seed = 7L)
       .select(explode(sequence(lit(0), lit(3))).as("band"), col("phash"))
@@ -1015,7 +1014,7 @@ object Multimodal {
     val cand = if (r.isNullAt(0)) 0L else r.getLong(0)
     val docs = (if (r.isNullAt(1)) 0L else r.getLong(1)) / 4
     if (docs > 0 &&
-        cand.toDouble / (f * docs) > candPerDocCutover) "mih"
+        cand.toDouble / (f * docs) > MihCandPerDocCutover) "mih"
     else "banded"
   }
 
@@ -1042,13 +1041,12 @@ object Multimodal {
     * than its own best arm wherever the front-end costs more than
     * one 16-byte-row materialization (measured: see SCALING.md).
     */
-  def phashPairsAuto(hashes: DataFrame, maxDist: Int = 3,
-      candPerDocCutover: Double = MihCandPerDocCutover): DataFrame = {
+  def phashPairsAuto(hashes: DataFrame, maxDist: Int = 3): DataFrame = {
     // validate BEFORE the checkpoint job, which runs at construction
     require(maxDist >= 0 && maxDist <= 3,
       s"pigeonhole pairing guarantees recall only for 0 <= maxDist <= 3, got $maxDist")
     val h = graft.operators.Caching.materialize(hashes)
-    if (phashStrategy(h, candPerDocCutover) == "mih") phashPairsMih(h, maxDist)
+    if (phashStrategy(h) == "mih") phashPairsMih(h, maxDist)
     else phashPairs(h, maxDist)
   }
 

@@ -152,28 +152,6 @@ object DocPipelineJobs {
   def dsirScoreStream(stream: DataFrame, stats: DataFrame): DataFrame =
     graft.operators.Sampling.dsirScoreOn(stream, stats)
 
-  /** Live Bloom-filter membership per shard: the streaming twin of
-    * `Dedup.bloomShingleFilter`'s verdict side. State per `source`
-    * shard is ONE fixed mBits-bit array (O(m), never grows with the
-    * stream — the point of a Bloom filter vs `dropDuplicates`'
-    * per-key state store). Verdicts match the batch operator
-    * shingle-for-shingle: each doc's distinct 3-word-shingle
-    * fingerprints (the fused [[graft.expressions.ShingleFingerprints]]
-    * scan, same 31-bit top-half position hash, same permutation
-    * family) are ALL tested against the bits set by PRIOR docs, then
-    * set — a doc's own shingles never count as "seen", exactly like
-    * the batch filter built from earlier docs only. Emits
-    * (source, doc_id, n_shingles, n_maybe_seen) — the batch output
-    * shape (false positives at the usual Bloom rate, never false
-    * negatives).
-    *
-    * With `ttl = Some((tsCol, ttlMs))` each shard's bit array expires
-    * `ttlMs` of event time past the watermark — re-seen content
-    * separated by more than the TTL reads as fresh, but a
-    * high-cardinality `source` cannot grow the state store without
-    * bound. With None, state is one bit array per distinct source
-    * forever (only safe when the shard universe is bounded).
-    */
   /** Live perceptual-hash gate: the streaming twin of
     * `Multimodal.imagePhash` + `phashPairs`, for the "is this upload
     * a near-copy of something we already hold?" check. Arriving image
@@ -418,8 +396,24 @@ object DocPipelineJobs {
       .toDF("shard", "doc_id", "n_words", "shard_tokens_used", "keep")
   }
 
-  def bloomStream(stream: DataFrame, mBits: Int = 131072, k: Int = 4,
-      ttl: Option[(String, Long)] = None): DataFrame = {
+  /** Live Bloom-filter membership per shard: the streaming twin of
+    * `Dedup.bloomShingleFilter`'s verdict side. State per `source`
+    * shard is ONE fixed mBits-bit array (O(m), never grows with the
+    * stream — the point of a Bloom filter vs `dropDuplicates`'
+    * per-key state store). Verdicts match the batch operator
+    * shingle-for-shingle: each doc's distinct 3-word-shingle
+    * fingerprints (the fused [[graft.expressions.ShingleFingerprints]]
+    * scan, same 31-bit top-half position hash, same permutation
+    * family) are ALL tested against the bits set by PRIOR docs, then
+    * set — a doc's own shingles never count as "seen", exactly like
+    * the batch filter built from earlier docs only. Emits
+    * (source, doc_id, n_shingles, n_maybe_seen) — the batch output
+    * shape (false positives at the usual Bloom rate, never false
+    * negatives). State is one bit array per distinct source, kept
+    * forever — only safe while the shard universe is bounded; nothing
+    * evicts it yet (ROADMAP D3 adds eviction).
+    */
+  def bloomStream(stream: DataFrame, mBits: Int = 131072, k: Int = 4): DataFrame = {
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     require(Integer.bitCount(mBits) == 1 && mBits >= 64,
       "mBits must be a power of two >= 64")
@@ -427,63 +421,44 @@ object DocPipelineJobs {
     val perms = graft.expressions.MinhashSignature.permA
       .zip(graft.expressions.MinhashSignature.permB).take(k)
     val prime = graft.expressions.MinhashSignature.Prime
-    val ttlMs = ttl.map(_._2)
     val spark = stream.sparkSession
     import spark.implicits._
-    val withTs = ttl match {
-      case Some((tsCol, ms)) => stream
-        .withColumn("__graft_ts", col(tsCol).cast("timestamp"))
-        .withWatermark("__graft_ts", s"$ms milliseconds")
-      case None => stream.withColumn("__graft_ts",
-        lit(null).cast("timestamp"))
-    }
-    val timeoutConf =
-      if (ttl.isDefined) GroupStateTimeout.EventTimeTimeout()
-      else GroupStateTimeout.NoTimeout()
-    withTs
+    stream
       .select(col("source").cast("string").as("source"),
         col("doc_id").cast("long").as("doc_id"),
-        col("text").cast("string").as("text"),
-        col("__graft_ts"))
-      .as[(String, Long, String, java.sql.Timestamp)]
+        col("text").cast("string").as("text"))
+      .as[(String, Long, String)]
       .groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append(), timeoutConf)(
-        (source: String, rows: Iterator[(String, Long, String, java.sql.Timestamp)],
+      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout())(
+        (source: String, rows: Iterator[(String, Long, String)],
             state: GroupState[Array[Long]]) => {
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val bits = state.getOption.getOrElse(new Array[Long](mBits / 64))
-            val out = rows.map { case (_, docId, text, _) =>
-              val fps = graft.expressions.ShingleFingerprints
-                .compute(if (text == null) "" else text).toLongArray()
-              // pass 1: every shingle probes the PRIOR state only...
-              var nMaybe = 0L
-              fps.foreach { fp =>
-                val h = fp >>> 32 // 31-bit top half, = batch shiftright(h, 32)
-                var allSet = true
-                perms.foreach { case (a, b) =>
-                  val pos = (Math.floorMod(a * h + b, prime) % mBits).toInt
-                  if ((bits(pos >> 6) & (1L << (pos & 63))) == 0L) allSet = false
-                }
-                if (allSet) nMaybe += 1
+          val bits = state.getOption.getOrElse(new Array[Long](mBits / 64))
+          val out = rows.map { case (_, docId, text) =>
+            val fps = graft.expressions.ShingleFingerprints
+              .compute(if (text == null) "" else text).toLongArray()
+            // pass 1: every shingle probes the PRIOR state only...
+            var nMaybe = 0L
+            fps.foreach { fp =>
+              val h = fp >>> 32 // 31-bit top half, = batch shiftright(h, 32)
+              var allSet = true
+              perms.foreach { case (a, b) =>
+                val pos = (Math.floorMod(a * h + b, prime) % mBits).toInt
+                if ((bits(pos >> 6) & (1L << (pos & 63))) == 0L) allSet = false
               }
-              // ...pass 2: then the doc's shingles enter the filter
-              fps.foreach { fp =>
-                val h = fp >>> 32
-                perms.foreach { case (a, b) =>
-                  val pos = (Math.floorMod(a * h + b, prime) % mBits).toInt
-                  bits(pos >> 6) |= 1L << (pos & 63)
-                }
+              if (allSet) nMaybe += 1
+            }
+            // ...pass 2: then the doc's shingles enter the filter
+            fps.foreach { fp =>
+              val h = fp >>> 32
+              perms.foreach { case (a, b) =>
+                val pos = (Math.floorMod(a * h + b, prime) % mBits).toInt
+                bits(pos >> 6) |= 1L << (pos & 63)
               }
-              (source, docId, fps.length.toLong, nMaybe)
-            }.toVector // drain before the state write below
-            state.update(bits)
-            ttlMs.foreach(ms =>
-              state.setTimeoutTimestamp(state.getCurrentWatermarkMs() + ms))
-            out.iterator
-          }
+            }
+            (source, docId, fps.length.toLong, nMaybe)
+          }.toVector // drain before the state write below
+          state.update(bits)
+          out.iterator
         })
       .toDF("source", "doc_id", "n_shingles", "n_maybe_seen")
   }

@@ -30,8 +30,18 @@ final case class TrimState(kept: Seq[(Long, Long)])
   */
 final case class Evicted(user_id: Long, event_id: Long, ts_us: Long)
 
-/** Per-delivery-identity counter state for the live dead-letter check. */
-final case class DeliveryState(n: Long, dead: Boolean)
+/** Per-delivery-identity counter state shared by the live dead-letter
+  * and requeue views.
+  */
+final case class DeliveryState(n: Long)
+
+/** One delivery of a message: its identity (user, event type,
+  * integral payload), the event and the identity's running delivery
+  * count including this one.
+  */
+private[streaming] final case class Delivery(
+    user_id: Long, event_type: String, value_key: Long,
+    event_id: Long, n: Long)
 
 /** A message routed to the dead-letter destination on its Kth delivery. */
 final case class DeadLettered(
@@ -78,8 +88,8 @@ private[graft] object TsUs {
   * Scale notes: routing is a stateless map (broadcast registry);
   * windowed counts shuffle on (window, event_type) with watermark-
   * bounded state; sessionization keys state by user_id — state size is
-  * O(active users), eviction via processing-time timeout. All three
-  * run identically on a 1000-executor cluster — state is partitioned
+  * O(active users) and nothing evicts it yet (ROADMAP D3 adds
+  * eviction). All three run identically on a 1000-executor cluster — state is partitioned
   * by the grouping key and checkpointed incrementally.
   */
 object EventStreamJobs {
@@ -176,100 +186,82 @@ object EventStreamJobs {
 
   /** Stateful gap sessionization (30 min), the streaming twin of
     * `EventOps.sessionGap`: per-user state advanced event-by-event,
-    * sessions emitted when the gap is exceeded (or, with
-    * `useTimeout = true`, evicted by a processing-time timeout — the
-    * production setting; kept off by default so micro-batch tests
-    * stay deterministic and `processAllAvailable` terminates).
+    * sessions emitted when the gap is exceeded. Each user's open
+    * session stays in state until that user's next event; nothing
+    * evicts it yet (ROADMAP D3 adds eviction).
     */
-  def sessionize(events: Dataset[LiveEvent], gapUs: Long = 1800000000L,
-                 useTimeout: Boolean = false)
+  def sessionize(events: Dataset[LiveEvent], gapUs: Long = 1800000000L)
       (implicit spark: SparkSession): Dataset[SessionOut] = {
     import spark.implicits._
-    val timeoutConf =
-      if (useTimeout) GroupStateTimeout.ProcessingTimeTimeout
-      else GroupStateTimeout.NoTimeout
     events
       .groupByKey(_.user_id)
       .flatMapGroupsWithState[SessionState, SessionOut](
-        OutputMode.Append, timeoutConf) {
+        OutputMode.Append, GroupStateTimeout.NoTimeout) {
         (userId: Long, rows: Iterator[LiveEvent], state: GroupState[SessionState]) =>
-          if (state.hasTimedOut) {
-            val s = state.get
-            state.remove()
-            Iterator(SessionOut(userId, s.start_us, s.last_us, s.n))
-          } else {
-            val sorted = rows.toSeq.sortBy(e => (TsUs(e.ts), e.event_id))
-            var cur = state.getOption
-            val closed = Seq.newBuilder[SessionOut]
-            sorted.foreach { e =>
-              val us = TsUs(e.ts)
-              cur match {
-                case Some(s) if us - s.last_us <= gapUs =>
-                  // late events may arrive out of order across batches:
-                  // widen the session bounds, never regress them
-                  cur = Some(SessionState(math.min(s.start_us, us),
-                    math.max(s.last_us, us), s.n + 1))
-                case Some(s) =>
-                  closed += SessionOut(userId, s.start_us, s.last_us, s.n)
-                  cur = Some(SessionState(us, us, 1))
-                case None =>
-                  cur = Some(SessionState(us, us, 1))
-              }
+          val sorted = rows.toSeq.sortBy(e => (TsUs(e.ts), e.event_id))
+          var cur = state.getOption
+          val closed = Seq.newBuilder[SessionOut]
+          sorted.foreach { e =>
+            val us = TsUs(e.ts)
+            cur match {
+              case Some(s) if us - s.last_us <= gapUs =>
+                // late events may arrive out of order across batches:
+                // widen the session bounds, never regress them
+                cur = Some(SessionState(math.min(s.start_us, us),
+                  math.max(s.last_us, us), s.n + 1))
+              case Some(s) =>
+                closed += SessionOut(userId, s.start_us, s.last_us, s.n)
+                cur = Some(SessionState(us, us, 1))
+              case None =>
+                cur = Some(SessionState(us, us, 1))
             }
-            cur.foreach { s =>
-              state.update(s)
-              // evict after the session gap itself (in processing time)
-              if (useTimeout) state.setTimeoutDuration(gapUs / 1000L)
-            }
-            closed.result().iterator
           }
+          cur.foreach(state.update)
+          closed.result().iterator
+      }
+  }
+
+  /** The delivery counter both bookkeeping views read: per delivery
+    * identity (user, event type, integral payload) a one-long state
+    * counts deliveries in (ts, event_id) order, and every delivery is
+    * emitted with its running count. The count only ever rises, so
+    * each count value occurs on exactly one delivery of an identity.
+    * Identity count is unbounded on a live bus and nothing evicts
+    * this state yet (ROADMAP D3 adds eviction).
+    */
+  private def deliveries(events: Dataset[LiveEvent])
+      (implicit spark: SparkSession): Dataset[Delivery] = {
+    import spark.implicits._
+    events
+      .groupByKey(e => (e.user_id, e.event_type, math.floor(e.value).toLong))
+      .flatMapGroupsWithState[DeliveryState, Delivery](
+        OutputMode.Append, GroupStateTimeout.NoTimeout) {
+        (key: (Long, String, Long), rows: Iterator[LiveEvent],
+            state: GroupState[DeliveryState]) =>
+          var n = state.getOption.fold(0L)(_.n)
+          val out = rows.toSeq.sortBy(e => (TsUs(e.ts), e.event_id)).map { e =>
+            n += 1
+            Delivery(key._1, key._2, key._3, e.event_id, n)
+          }
+          state.update(DeliveryState(n))
+          out.iterator
       }
   }
 
   /** Live dead-letter routing (reference
     * `utilities/communication.py:810` get_dead_messages as a standing
-    * query): per delivery identity (user, event, integral payload) a
-    * small state counts deliveries; the message dead-letters exactly
-    * once, on the delivery that reaches the threshold — the streaming
-    * twin of `EventOps.deadLetter`. Identity count is unbounded on a
-    * live bus, so the production setting (`ttlMs > 0`) evicts idle
-    * counter state via processing-time timeout (a redelivery after
-    * the TTL restarts its count — redeliveries that far apart are a
-    * new failure episode anyway). TTL defaults off so micro-batch
-    * tests stay deterministic.
+    * query): the message dead-letters exactly once, on the delivery
+    * whose running count reaches the threshold (the first delivery
+    * when `maxDeliveries <= 1`) — the streaming twin of
+    * `EventOps.deadLetter`, over the same [[deliveries]] counter as
+    * [[requeueStream]].
     */
-  def deadLetterStream(events: Dataset[LiveEvent], maxDeliveries: Int = 3,
-      ttlMs: Long = 0L)
+  def deadLetterStream(events: Dataset[LiveEvent], maxDeliveries: Int = 3)
       (implicit spark: SparkSession): Dataset[DeadLettered] = {
     import spark.implicits._
-    val timeoutConf =
-      if (ttlMs > 0) GroupStateTimeout.ProcessingTimeTimeout
-      else GroupStateTimeout.NoTimeout
-    events
-      .groupByKey(e => (e.user_id, e.event_type, math.floor(e.value).toLong))
-      .flatMapGroupsWithState[DeliveryState, DeadLettered](
-        OutputMode.Append, timeoutConf) {
-        (key: (Long, String, Long), rows: Iterator[LiveEvent],
-            state: GroupState[DeliveryState]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val sorted = rows.toSeq.sortBy(e => (TsUs(e.ts), e.event_id))
-            var s = state.getOption.getOrElse(DeliveryState(0L, dead = false))
-            val out = Seq.newBuilder[DeadLettered]
-            sorted.foreach { e =>
-              s = s.copy(n = s.n + 1)
-              if (!s.dead && s.n >= maxDeliveries) {
-                s = s.copy(dead = true)
-                out += DeadLettered(key._1, key._2, key._3, e.event_id, s.n)
-              }
-            }
-            state.update(s)
-            if (ttlMs > 0) state.setTimeoutDuration(ttlMs)
-            out.result().iterator
-          }
-      }
+    val threshold = math.max(maxDeliveries, 1).toLong
+    deliveries(events).filter(_.n == threshold).map(d =>
+      DeadLettered(d.user_id, d.event_type, d.value_key, d.event_id, d.n))
   }
 
   /** Live sliding-window rate limiting — the streaming twin of
@@ -286,50 +278,40 @@ object EventStreamJobs {
     * State is O(events-per-user-per-window) — exact, which is what
     * the parity harness pins; a production limiter with huge windows
     * would coarsen to per-bucket counts (O(window/bucket), ±bucket
-    * accuracy) — same state machinery, smaller rows. Idle producers
-    * evict via processing-time timeout when `ttlMs > 0`: a user
-    * silent for the whole window has an empty frame anyway, so
-    * eviction never changes a future score. TTL defaults off so
-    * micro-batch tests stay deterministic.
+    * accuracy) — same state machinery, smaller rows. A producer's
+    * state goes once its frame empties on its own next arrival; an
+    * idle producer's state is not evicted yet (ROADMAP D3 adds
+    * eviction).
     */
   def rateLimitStream(events: Dataset[LiveEvent], windowSec: Long = 604800L,
-      maxPerWindow: Int = 15, ttlMs: Long = 0L)
+      maxPerWindow: Int = 15)
       (implicit spark: SparkSession): Dataset[RateLimited] = {
     import spark.implicits._
     val winUs = windowSec * 1000000L
-    val timeoutConf =
-      if (ttlMs > 0) GroupStateTimeout.ProcessingTimeTimeout
-      else GroupStateTimeout.NoTimeout
     events
       .groupByKey(_.user_id)
       .flatMapGroupsWithState[RateState, RateLimited](
-        OutputMode.Append, timeoutConf) {
+        OutputMode.Append, GroupStateTimeout.NoTimeout) {
         (userId: Long, rows: Iterator[LiveEvent], state: GroupState[RateState]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val sorted = rows.toSeq.sortBy(e => (TsUs(e.ts), e.event_id))
-            var kept = state.getOption.map(_.ts).getOrElse(Seq.empty)
-            val out = Seq.newBuilder[RateLimited]
-            // consecutive same-instant runs share one frame
-            var i = 0
-            while (i < sorted.length) {
-              val ts = TsUs(sorted(i).ts)
-              var j = i
-              while (j < sorted.length && TsUs(sorted(j).ts) == ts) j += 1
-              kept = kept.dropWhile(_ < ts - winUs) ++ Seq.fill(j - i)(ts)
-              val n = kept.size.toLong
-              val flood = if (n > maxPerWindow) 1L else 0L
-              (i until j).foreach { k =>
-                out += RateLimited(userId, sorted(k).event_id, ts, n, flood)
-              }
-              i = j
+          val sorted = rows.toSeq.sortBy(e => (TsUs(e.ts), e.event_id))
+          var kept = state.getOption.map(_.ts).getOrElse(Seq.empty)
+          val out = Seq.newBuilder[RateLimited]
+          // consecutive same-instant runs share one frame
+          var i = 0
+          while (i < sorted.length) {
+            val ts = TsUs(sorted(i).ts)
+            var j = i
+            while (j < sorted.length && TsUs(sorted(j).ts) == ts) j += 1
+            kept = kept.dropWhile(_ < ts - winUs) ++ Seq.fill(j - i)(ts)
+            val n = kept.size.toLong
+            val flood = if (n > maxPerWindow) 1L else 0L
+            (i until j).foreach { k =>
+              out += RateLimited(userId, sorted(k).event_id, ts, n, flood)
             }
-            if (kept.nonEmpty) state.update(RateState(kept)) else state.remove()
-            if (ttlMs > 0) state.setTimeoutDuration(ttlMs)
-            out.result().iterator
+            i = j
           }
+          if (kept.nonEmpty) state.update(RateState(kept)) else state.remove()
+          out.result().iterator
       }
   }
 
@@ -356,44 +338,20 @@ object EventStreamJobs {
     * return_message_to_inbox as a standing query): each delivery of an
     * identity returns to the inbox with the incremented running count,
     * flipping to the dead-letter destination once the count reaches
-    * the cap — the streaming twin of `EventOps.requeue`, sharing
-    * [[DeliveryState]] and the delivery-identity key with
-    * [[deadLetterStream]] so the two bookkeeping views can never
-    * disagree on what a "delivery" is. The LAST emission per identity
-    * carries the full count — the batch operator's value once the
-    * feed drains. Same TTL story as [[deadLetterStream]].
+    * the cap — the streaming twin of `EventOps.requeue`, reading the
+    * same [[deliveries]] counter as [[deadLetterStream]] so the two
+    * bookkeeping views can never disagree on what a "delivery" is.
+    * The LAST emission per identity carries the full count — the
+    * batch operator's value once the feed drains.
     */
-  def requeueStream(events: Dataset[LiveEvent], maxDeliveries: Int = 3,
-      ttlMs: Long = 0L)
+  def requeueStream(events: Dataset[LiveEvent], maxDeliveries: Int = 3)
       (implicit spark: SparkSession): Dataset[Requeued] = {
     import spark.implicits._
-    val timeoutConf =
-      if (ttlMs > 0) GroupStateTimeout.ProcessingTimeTimeout
-      else GroupStateTimeout.NoTimeout
-    events
-      .groupByKey(e => (e.user_id, e.event_type, math.floor(e.value).toLong))
-      .flatMapGroupsWithState[DeliveryState, Requeued](
-        OutputMode.Append, timeoutConf) {
-        (key: (Long, String, Long), rows: Iterator[LiveEvent],
-            state: GroupState[DeliveryState]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val sorted = rows.toSeq.sortBy(e => (TsUs(e.ts), e.event_id))
-            var s = state.getOption.getOrElse(DeliveryState(0L, dead = false))
-            val out = Seq.newBuilder[Requeued]
-            sorted.foreach { e =>
-              s = s.copy(n = s.n + 1)
-              val requeued = s.n + 1 // the redelivery increment, as in batch
-              out += Requeued(key._1, key._2, key._3, e.event_id, requeued,
-                if (requeued >= maxDeliveries) "dead_letter" else "inbox")
-            }
-            state.update(s)
-            if (ttlMs > 0) state.setTimeoutDuration(ttlMs)
-            out.result().iterator
-          }
-      }
+    deliveries(events).map { d =>
+      val requeued = d.n + 1 // the redelivery increment, as in batch
+      Requeued(d.user_id, d.event_type, d.value_key, d.event_id, requeued,
+        if (requeued >= maxDeliveries) "dead_letter" else "inbox")
+    }
   }
 
   /** Live keep-last-N trim (reference `handlers/master.py:27`

@@ -296,12 +296,13 @@ class StreamingSpec extends AnyFunSuite {
     val in = MemoryStream[LiveEvent]
     val q = EventStreamJobs.requeueStream(in.toDS(), maxDeliveries = 3)
       .writeStream.format("memory").queryName("rq_x").outputMode("append").start()
+    def identity(r: org.apache.spark.sql.Row) =
+      (r.getAs[Long]("user_id"), r.getAs[String]("event_type"), r.getAs[Long]("value_key"))
     try {
       evs.grouped(7).foreach { batch => in.addData(batch); q.processAllAvailable() }
+      val requeued = spark.table("rq_x").collect()
       // the LAST emission per identity carries the full running count
-      val live = spark.table("rq_x").collect()
-        .map(r => ((r.getAs[Long]("user_id"), r.getAs[String]("event_type"),
-          r.getAs[Long]("value_key")), r.getAs[Long]("delivery_count")))
+      val live = requeued.map(r => (identity(r), r.getAs[Long]("delivery_count")))
         .groupBy(_._1).view.mapValues(_.map(_._2).max).toMap
       // batch requeue with an unbounded pending window sees every
       // delivery; its per-identity count must equal the stream's final
@@ -315,6 +316,27 @@ class StreamingSpec extends AnyFunSuite {
           r.getLong(3)))
         .groupBy(_._1).view.mapValues(_.map(_._2).max).toMap
       assert(live == batch)
+      // the dead-letter view reads the same delivery counter: each
+      // identity dead-letters at most once, on exactly the event whose
+      // requeue row carries delivery_count == maxDeliveries + 1
+      Seq(1, 3).foreach { maxDeliveries =>
+        val dlIn = MemoryStream[LiveEvent]
+        val name = s"dl_x_$maxDeliveries"
+        val dq = EventStreamJobs.deadLetterStream(dlIn.toDS(), maxDeliveries)
+          .writeStream.format("memory").queryName(name).outputMode("append").start()
+        try {
+          evs.grouped(7).foreach { batch => dlIn.addData(batch); dq.processAllAvailable() }
+          val dead = spark.table(name).collect()
+          assert(dead.map(_.getAs[Long]("delivery_count")).toSet.subsetOf(
+            Set(maxDeliveries.toLong)))
+          assert(dead.map(identity).distinct.length == dead.length)
+          val expected = requeued
+            .filter(_.getAs[Long]("delivery_count") == maxDeliveries + 1)
+            .map(r => (identity(r), r.getAs[Long]("event_id"))).toSet
+          assert(expected.nonEmpty)
+          assert(dead.map(r => (identity(r), r.getAs[Long]("event_id"))).toSet == expected)
+        } finally dq.stop()
+      }
     } finally q.stop()
   }
 
