@@ -90,8 +90,8 @@ object GenData {
         println(s"[gen] wrote $name")
       }
     // fixed dims: TPC-H's own rule — region/nation do not scale
-    write(spark.read.parquet(s"$srcDir/region.parquet"), "region")
-    write(spark.read.parquet(s"$srcDir/nation.parquet"), "nation")
+    write(graft.sources.Tables(spark, srcDir).region, "region")
+    write(graft.sources.Tables(spark, srcDir).nation, "nation")
 
     val segs = "array('AUTOMOBILE','BUILDING','FURNITURE','HOUSEHOLD','MACHINERY')"
     write(spark.range(nCust).select(

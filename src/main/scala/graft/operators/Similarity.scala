@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.VectorOps
+import graft.sources.Tables
 
 /** Similarity search over the embeddings table (SURVEY.md §2.3).
   *
@@ -445,7 +446,7 @@ object Similarity {
     */
   def appendToIvfIndex(newVecs: DataFrame, dir: String): Unit = {
     val spark = newVecs.sparkSession
-    val cDF = broadcast(spark.read.parquet(s"$dir/centroids"))
+    val cDF = broadcast(Tables.parquet(spark, s"$dir/centroids"))
     assignClusters(newVecs.select(col("vec_id"), col("cv")), cDF)
       .write.mode("append").partitionBy("cluster_id").parquet(s"$dir/lists")
   }
@@ -459,11 +460,11 @@ object Similarity {
   def searchIvfIndex(embeddings: DataFrame, dir: String, nProbes: Int = 10,
       k: Int = 5, nProbeClusters: Int = 4): DataFrame = {
     val spark = embeddings.sparkSession
-    val cDF = broadcast(spark.read.parquet(s"$dir/centroids"))
+    val cDF = broadcast(Tables.parquet(spark, s"$dir/centroids"))
     val pc = probeClusters(probes(embeddings, nProbes), cDF, nProbeClusters)
     val probedIds = pc.select(col("cluster_id")).distinct()
       .collect().map(_.getInt(0)).toSeq
-    val lists = spark.read.parquet(s"$dir/lists")
+    val lists = Tables.parquet(spark, s"$dir/lists")
       .filter(col("cluster_id").isin(probedIds: _*)) // partition pruning
     rankTopK(
       lists.join(broadcast(pc), Seq("cluster_id"))
@@ -503,7 +504,7 @@ object Similarity {
     */
   def ivfDriftStats(newVecs: DataFrame, dir: String): DataFrame = {
     val spark = newVecs.sparkSession
-    val cDF = broadcast(spark.read.parquet(s"$dir/centroids"))
+    val cDF = broadcast(Tables.parquet(spark, s"$dir/centroids"))
     def quality(assigned: DataFrame): DataFrame =
       assigned.join(cDF, Seq("cluster_id"))
         .withColumn("cos", VectorOps.dot(col("cv"), col("centroid")) /
@@ -512,7 +513,7 @@ object Similarity {
         .agg(count(lit(1)).as("n"),
           (sum(col("cos").cast("decimal(38,15)")) / count(lit(1)))
             .cast("double").as("mean_cos"))
-    val stored = quality(spark.read.parquet(s"$dir/lists"))
+    val stored = quality(Tables.parquet(spark, s"$dir/lists"))
       .select(col("cluster_id"), col("n").as("n_stored"),
         col("mean_cos").as("stored_cos"))
     val fresh = quality(
@@ -538,7 +539,7 @@ object Similarity {
     */
   def appendToPqIndex(newVecs: DataFrame, dir: String, nSub: Int = 8): Unit = {
     val spark = newVecs.sparkSession
-    val cb = broadcast(spark.read.parquet(s"$dir/codebook"))
+    val cb = broadcast(Tables.parquet(spark, s"$dir/codebook"))
     assignCodes(subVectors(newVecs.select(col("vec_id"), col("cv")), nSub), cb)
       .select(col("vec_id"), col("s"), col("c"))
       .write.mode("append").parquet(s"$dir/codes")
@@ -552,8 +553,8 @@ object Similarity {
   def searchPqIndex(embeddings: DataFrame, dir: String, nProbes: Int = 10,
       k: Int = 5, nSub: Int = 8, rerank: Int = 20): DataFrame = {
     val spark = embeddings.sparkSession
-    val cb = broadcast(spark.read.parquet(s"$dir/codebook"))
-    val codes = spark.read.parquet(s"$dir/codes")
+    val cb = broadcast(Tables.parquet(spark, s"$dir/codebook"))
+    val codes = Tables.parquet(spark, s"$dir/codes")
     adcRerankTopK(embeddings, codes, cb, nProbes, nSub, k, rerank)
   }
 

@@ -1,18 +1,25 @@
 package graft.sources
 
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver-generated parquet tables.
   *
-  * Plain `spark.read.parquet` so Catalyst keeps full pushdown freedom:
-  * filters and projections applied by downstream operators reach the
-  * scan (verify via `PushedFilters` / `ReadSchema` in explain output).
-  * At cluster scale the same loaders work over a directory of many
-  * files; nothing here assumes a single file.
+  * Every read goes through [[Tables.parquet]]: the first read of a
+  * table infers its schema like `spark.read.parquet`, later reads of
+  * the same unchanged table pass the remembered schema and skip the
+  * inference job. Either way the scan is a plain file scan, so
+  * Catalyst keeps full pushdown freedom: filters and projections
+  * applied by downstream operators reach the scan (verify via
+  * `PushedFilters` / `ReadSchema` in explain output). At cluster scale
+  * the same loaders work over a directory of many files; nothing here
+  * assumes a single file.
   */
 final case class Tables(spark: SparkSession, dir: String) {
-  private def t(name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  private def t(name: String): DataFrame = Tables.parquet(spark, s"$dir/$name.parquet")
 
   /** events.ts arrives in one of two physical shapes depending on the
     * generator version: parquet TIMESTAMP(NANOS) — which Spark 4
@@ -64,4 +71,73 @@ final case class Tables(spark: SparkSession, dir: String) {
   def lineitem: DataFrame   = t("lineitem")
   def documents: DataFrame  = t("documents")
   def embeddings: DataFrame = t("embeddings")
+}
+
+object Tables {
+  /** Session confs that change what parquet schema inference returns. */
+  private val InferenceConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.sources.partitionColumnTypeInference.enabled",
+    "spark.sql.caseSensitive")
+
+  /** What a remembered schema was inferred from: every file under the
+    * path as (name, length, modification time), and the values of
+    * [[InferenceConfs]].
+    */
+  private type Fingerprint = (Seq[(String, Long, Long)], Seq[Option[String]])
+
+  /** Per session (held weakly, so a stopped session is not retained):
+    * qualified table path → the fingerprint and the schema inferred
+    * from it. One entry per path; a miss replaces it.
+    */
+  private val memo =
+    new java.util.WeakHashMap[SparkSession, ConcurrentHashMap[String, (Fingerprint, StructType)]]
+
+  /** The one parquet read path. Spark's parquet schema inference
+    * submits a Spark job on every `spark.read.parquet`, even with
+    * `mergeSchema` off; for the small tables of a long-lived session
+    * that job's scheduling is most of the read's cost. So the schema
+    * of each table is inferred once per session and later reads pass
+    * it with `spark.read.schema(...)`, which launches no job. File
+    * listing, partition discovery, column pruning and filter pushdown
+    * are the same as for an inferred read.
+    *
+    * A remembered schema is used only when the table is provably
+    * unchanged: a recursive driver-side listing of the path (every
+    * file's name, length and modification time, partition
+    * subdirectories included) and the inference confs must equal
+    * those it was inferred from. Anything else — an overwrite (new
+    * part-file names), an append, a file added under a partition
+    * directory, a flipped conf — infers again. The listing is a plain
+    * Hadoop `listFiles` on the driver and never launches a job; it
+    * repeats the listing Spark's file index then does, a cost that
+    * grows with the table's file count, not its size.
+    */
+  def parquet(spark: SparkSession, path: String): DataFrame = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    val files = {
+      val it = fs.listFiles(p, true)
+      val b = Vector.newBuilder[(String, Long, Long)]
+      while (it.hasNext) {
+        val f = it.next()
+        b += ((f.getPath.toString, f.getLen, f.getModificationTime))
+      }
+      b.result().sorted
+    }
+    val fp: Fingerprint = (files, InferenceConfs.map(spark.conf.getOption))
+    val key = fs.makeQualified(p).toString
+    val schemas = memo.synchronized(memo.computeIfAbsent(spark, _ => new ConcurrentHashMap))
+    schemas.get(key) match {
+      case (`fp`, schema) => spark.read.schema(schema).parquet(path)
+      case _ =>
+        val df = spark.read.parquet(path)
+        schemas.put(key, (fp, df.schema))
+        df
+    }
+  }
 }

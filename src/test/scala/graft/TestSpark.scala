@@ -1,5 +1,11 @@
 package graft
 
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.TestListenerBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 
 /** One shared local session for all suites (cheap to reuse, slow to boot). */
@@ -21,4 +27,31 @@ object TestSpark {
   }
 
   val sfDir = "/root/testdata/sf0.001"
+
+  /** Runs `body` and returns its result with one entry per Spark job it
+    * started: the call-site details of the job's stages, as a
+    * `SparkListener` saw them. Only jobs submitted from this thread
+    * while `body` runs are counted (a local-property tag), so other
+    * work in the shared session cannot leak in.
+    */
+  def jobsDuring[T](body: => T): (T, Seq[String]) = {
+    val sc = spark.sparkContext
+    val tag = java.util.UUID.randomUUID.toString
+    val jobs = new ConcurrentLinkedQueue[String]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("graft.test.jobs") == tag))
+          jobs.add(e.stageInfos.map(_.details).mkString("\n"))
+    }
+    sc.addSparkListener(listener)
+    sc.setLocalProperty("graft.test.jobs", tag)
+    try {
+      val out = body
+      TestListenerBus.drain(sc)
+      (out, jobs.asScala.toSeq)
+    } finally {
+      sc.setLocalProperty("graft.test.jobs", null)
+      sc.removeSparkListener(listener)
+    }
+  }
 }
