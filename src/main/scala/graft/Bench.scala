@@ -40,13 +40,6 @@ object Bench {
     val suite = SparkEntry.queries.filter { case (n, _) => only.forall(_.contains(n)) }
     val spark = GraftSession.local(cpus)
 
-    // Unpersisting a consumed localCheckpoint RDD is exactly the
-    // intent here, but Spark logs each one as a WARN ("cannot be
-    // recomputed after unpersisting") — hundreds of lines that would
-    // drown the one JSON line the driver's output tail must keep.
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.rdd.MapPartitionsRDD", org.apache.logging.log4j.Level.ERROR)
-
     // GC cadence + quiesce — the round-10 lesson, both halves:
     // shuffle files are deleted only after their ShuffleDependency is
     // GC'd, and a bench loop allocates little on the driver heap, so
@@ -122,9 +115,7 @@ object Bench {
       * the timed region by design.
       */
     def releaseBlocks(endOfPass: Boolean): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
+      graft.operators.Caching.releaseAll(spark)
       sinceGc += 1
       if (endOfPass || sinceGc >= gcEvery) {
         gcAndQuiesce()

@@ -84,7 +84,9 @@ object GraftSession {
   }
 
   /** Single-JVM session: `local[cpus]` with shuffle partitions = cpus
-    * and the UI off — the shape every graft main and spec runs.
+    * and the UI off — the shape every graft main and the benchmark run.
+    * The ScalaTest specs build their own `local[4]` session instead
+    * (`TestSpark`), with its own confs.
     */
   def local(cpus: Int): SparkSession = {
     val session = builder(cpus)

@@ -10,10 +10,6 @@ object Verify {
     val only = args.drop(2).headOption.map(_.split(',').toSet)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     val spark = GraftSession.local(cpus)
-    // the per-query block release below deliberately unpersists
-    // consumed localCheckpoints; silence Spark's per-RDD WARN for it
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.rdd.MapPartitionsRDD", org.apache.logging.log4j.Level.ERROR)
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
@@ -25,9 +21,7 @@ object Verify {
       }
       // free dead localCheckpoint blocks between queries (same
       // block-store hygiene as Bench — see its scaladoc)
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
+      graft.operators.Caching.releaseAll(spark)
     }
     // strict JSON escape (see JsonUtil) — a tab or CR in
     // builder-authored SQL would otherwise make the driver's

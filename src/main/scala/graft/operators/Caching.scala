@@ -1,16 +1,46 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import scala.collection.mutable.ArrayBuffer
 
-/** Shared cache-lifecycle helper for operators that persist an
-  * intermediate across plural plan subtrees (signature tables,
-  * exploded n-gram frames, pair intermediates).
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
+/** The one owner of operator caches. An operator that reads an
+  * intermediate from several plan subtrees (signature tables, exploded
+  * n-gram frames, pair intermediates) builds inside [[materialized]]
+  * and persists that intermediate through the [[Held]] it is given;
+  * `materialized` checkpoints the result eagerly and then unpersists
+  * every held frame in one `finally` — after the checkpoint, or on any
+  * throw, including one from a construction-time probe while the
+  * builder is still running. No cached state outlives the operator
+  * call, and no operator writes its own release path.
   */
 private[graft] object Caching {
 
-  /** Eagerly materializes `result` (checkpointing truncates lineage,
-    * so the returned frame no longer references the cached
-    * intermediates), then unpersists the intermediates. Keeps the
+  /** The frames one operator build persists. `held(df)` persists `df`,
+    * records it and returns it; [[release]] unpersists every recorded
+    * frame. A `Held` is also a plain `DataFrame => DataFrame`, so a
+    * plan builder can take `identity` instead where it should cache
+    * nothing (the small-input side of [[SmallDocCorpusRows]]).
+    */
+  final class Held private[graft] () extends (DataFrame => DataFrame) {
+    private val held = ArrayBuffer.empty[DataFrame]
+
+    def apply(df: DataFrame): DataFrame = {
+      held += df.persist()
+      df
+    }
+
+    /** The held frames, in the order they were held. */
+    def frames: Seq[DataFrame] = held.toSeq
+
+    /** Unpersists every held frame without waiting for its blocks. */
+    def release(): Unit = held.foreach(_.unpersist(blocking = false))
+  }
+
+  /** Builds a result through a fresh [[Held]], eagerly materializes it
+    * (checkpointing truncates lineage, so the returned frame no longer
+    * references the held frames), then releases the held frames —
+    * also when the builder or the materializing job throws. Keeps the
     * multi-subtree operators leak-free in long-lived sessions.
     *
     * Durability is config-gated: when a reliable checkpoint dir is
@@ -22,9 +52,30 @@ private[graft] object Caching {
     * storage only, so an executor loss fails the job instead of
     * recomputing — the right (cheaper) trade for single-node runs.
     */
-  def materializeAndRelease(result: DataFrame, cached: DataFrame*): DataFrame =
-    try materialize(result)
-    finally cached.foreach(_.unpersist(blocking = false)) // even if the job fails
+  def materialized(build: Held => DataFrame): DataFrame = {
+    val held = new Held
+    try materialize(build(held))
+    finally held.release()
+  }
+
+  /** Frees every cached frame and persistent RDD of the session — the
+    * between-query block release of the `Bench` and `Verify` mains:
+    * operator results are checkpointed frames whose blocks the
+    * ContextCleaner frees only once the frame is GC'd, so a long query
+    * loop releases them explicitly. Unpersisting a consumed
+    * localCheckpoint is exactly the intent, so Spark's per-RDD
+    * "cannot be recomputed after unpersisting" WARN is silenced.
+    */
+  def releaseAll(spark: SparkSession): Unit = {
+    quietCheckpointUnpersist
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values
+      .foreach(_.unpersist(blocking = false))
+  }
+
+  private lazy val quietCheckpointUnpersist: Unit =
+    org.apache.logging.log4j.core.config.Configurator.setLevel(
+      "org.apache.spark.rdd.MapPartitionsRDD", org.apache.logging.log4j.Level.ERROR)
 
   /** The shared small-input floor (round 8): several operators buy
     * their at-scale shuffle shape with a flat probe/persist/checkpoint
@@ -53,7 +104,7 @@ private[graft] object Caching {
     * persist()/unpersist() lifecycle to manage: unlike persist, a
     * checkpointed frame registers nothing in the CacheManager — its
     * blocks are freed by the ContextCleaner once the caller drops the
-    * frame. Same durability gate as [[materializeAndRelease]].
+    * frame. Same durability gate as [[materialized]].
     */
   def materialize(result: DataFrame): DataFrame = {
     val sc = result.sparkSession.sparkContext

@@ -17,10 +17,11 @@ import graft.functions.VectorOps
   * shingle self-join — is the *verification oracle*, not the scale
   * path; at 100 TB you run `minhashLsh` and verify candidates only.
   *
-  * Caching contract: the near-dup operators `persist()` their
-  * signature tables (several plan branches read them), eagerly
-  * materialize the (small) pair result, and unpersist the signature
-  * tables before returning — no cached state outlives the call. The
+  * Caching contract: the near-dup operators build inside
+  * [[Caching.materialized]], which persists their signature tables
+  * (several plan branches read them), eagerly materializes the
+  * (small) pair result, and unpersists the signature tables before
+  * returning or throwing — no cached state outlives the call. The
   * returned frame holds the materialized result (lineage truncated);
   * its blocks are freed by the ContextCleaner once the caller drops
   * the reference. At 100 TB the equivalent move is materializing the
@@ -124,18 +125,11 @@ object Dedup {
     // tri feeds three plan branches (sizes + both join sides) —
     // persisted so the scan + fused shingling run once, not three
     // times, then released after the small result materializes
-    ngramJaccardOnFps(shingleFps(documents).persist(), tauNum, tauDenom)
-
-  /** The count-join body over an ALREADY-PERSISTED fingerprint table —
-    * split out so [[ngramJaccardAdaptive]]'s vocabulary probe and the
-    * join can share one shingling pass instead of two. Takes ownership
-    * of `tri`: releases it once the result materializes.
-    */
-  private def ngramJaccardOnFps(tri: DataFrame, tauNum: Int, tauDenom: Int): DataFrame = {
-    val sizes = tri.groupBy(col("doc_id")).agg(count(lit(1)).as("s"))
-    Caching.materializeAndRelease(
-      jaccardVerify(shingleCountJoin(tri), sizes, tauNum, tauDenom), tri)
-  }
+    Caching.materialized { held =>
+      val tri = held(shingleFps(documents))
+      val sizes = tri.groupBy(col("doc_id")).agg(count(lit(1)).as("s"))
+      jaccardVerify(shingleCountJoin(tri), sizes, tauNum, tauDenom)
+    }
 
   /** The count-join's candidate body over a fingerprint table
     * (doc_id, h): the shingle self-join counted per (doc1, doc2),
@@ -169,20 +163,20 @@ object Dedup {
     * vocabularies where hauling the per-doc shingle arrays through the
     * candidate join costs more than the count-join saves.
     */
-  def ngramJaccardPrefix(documents: DataFrame, tauNum: Int = 50, tauDenom: Int = 100): DataFrame = {
+  def ngramJaccardPrefix(documents: DataFrame, tauNum: Int = 50,
+      tauDenom: Int = 100): DataFrame = Caching.materialized { held =>
     val tri = shingles(documents)
     // canonical order = global document frequency ascending (tie: text):
     // prefixes then hold each doc's *rarest* shingles, so prefix-join
     // collisions only happen between docs sharing rare features — this
     // ordering is what keeps PPJoin candidates small
     val dfreq = tri.groupBy(col("g")).agg(count(lit(1)).as("df"))
-    val docSets = tri.join(dfreq, Seq("g"))
+    val docSets = held(tri.join(dfreq, Seq("g"))
       .groupBy(col("doc_id"))
       .agg(expr("transform(sort_array(collect_list(struct(df, g))), x -> x.g)").as("garr"),
         count(lit(1)).as("s"))
       .withColumn("prefix_len",
-        col("s") - expr(s"(s * $tauNum + $tauDenom - 1) div $tauDenom") + 1)
-      .persist()
+        col("s") - expr(s"(s * $tauNum + $tauDenom - 1) div $tauDenom") + 1))
     val prefixes = docSets
       .select(col("doc_id"),
         explode(slice(col("garr"), lit(1), col("prefix_len").cast("int"))).as("g"))
@@ -191,7 +185,7 @@ object Dedup {
       .filter(col("doc1") < col("doc2"))
       .select(col("doc1"), col("doc2"))
       .distinct()
-    Caching.materializeAndRelease(cand
+    cand
       .join(docSets.select(col("doc_id").as("doc1"),
         col("garr").as("garr1"), col("s").as("s1")), Seq("doc1"))
       .join(docSets.select(col("doc_id").as("doc2"),
@@ -199,9 +193,16 @@ object Dedup {
       .withColumn("inter", size(array_intersect(col("garr1"), col("garr2"))).cast("long"))
       .filter(col("inter") * tauDenom >= (col("s1") + col("s2") - col("inter")) * tauNum)
       .select(col("doc1"), col("doc2"), col("inter"), col("s1"), col("s2"))
-      .orderBy(col("doc1"), col("doc2")),
-      docSets)
+      .orderBy(col("doc1"), col("doc2"))
   }
+
+  /** Sampled occurrences below which the strategy probe re-runs on
+    * the FULL fingerprint table: at a 10% rate this re-probes corpora
+    * under ~20 k shingle occurrences (a few hundred documents), where
+    * the full aggregate costs nothing and the tiny-fixture regime
+    * pins must stay exact. Above it the sampled estimators carry.
+    */
+  private[graft] val MinProbeSampledOcc = 2000L
 
   /** The statistic that decides count-join vs PPJoin prefix filter:
     * singleton mass — the fraction of shingle OCCURRENCES whose
@@ -216,19 +217,8 @@ object Dedup {
     * long-tail vocabulary is majority-singleton and the prune wins.
     * One cheap keyed aggregate over the fused fingerprint table —
     * a fraction of either join's cost.
-    */
-  def jaccardStrategy(documents: DataFrame): String =
-    jaccardStrategyOnFps(shingleFps(documents))
-
-  /** Sampled occurrences below which the strategy probe re-runs on
-    * the FULL fingerprint table: at a 10% rate this re-probes corpora
-    * under ~20 k shingle occurrences (a few hundred documents), where
-    * the full aggregate costs nothing and the tiny-fixture regime
-    * pins must stay exact. Above it the sampled estimators carry.
-    */
-  private[graft] val MinProbeSampledOcc = 2000L
-
-  /** The strategy statistics over a SAMPLE of the shingle VOCABULARY
+    *
+    * The statistics come from a SAMPLE of the shingle VOCABULARY
     * (round-8: the [[Multimodal.phashStrategy]] sampling idea ported
     * to the text side, where the probe table — one row per shingle
     * OCCURRENCE — is far larger than the 4-rows-per-doc band table
@@ -261,7 +251,8 @@ object Dedup {
     * feeds a threshold, so double's 2⁵³ precision loss is harmless;
     * its sign-correctness is not.
     */
-  private def jaccardStrategyOnFps(tri: DataFrame): String = {
+  def jaccardStrategy(documents: DataFrame): String = {
+    val tri = shingleFps(documents)
     def stats(t: DataFrame): (Long, Long, Double) = {
       val r = t
         .groupBy(col("h")).agg(count(lit(1)).as("df"))
@@ -318,11 +309,8 @@ object Dedup {
     * [[jaccardLshVerified]] and result equality on this corpus family
     * is spec-pinned at the driver scale. The corpus tells the planner
     * which plan it wants instead of a hardcoded default guessing. The
-    * probe and the count-join/LSH paths SHARE one persisted shingling
-    * pass — the probe must not cost a second corpus scan; on the
-    * prefix path the persisted fingerprints release immediately (that
-    * path re-shingles as strings for the document-frequency sort
-    * order it needs).
+    * probe reads its own un-persisted shingling scan; each regime then
+    * shingles the corpus the way its own plan needs.
     *
     * The dense→LSH dispatch trades exact recall for scalability, and
     * a dispatcher must never make that trade SILENTLY: on a dense
@@ -348,7 +336,7 @@ object Dedup {
     // back by not writing the cache on the arm that never reads it).
     // Same sampled statistics either way — the probe's filter and
     // aggregate are deterministic in h.
-    jaccardStrategyOnFps(shingleFps(documents)) match {
+    jaccardStrategy(documents) match {
       case "prefix" =>
         ngramJaccardPrefix(documents, tauNum, tauDenom)
       case "lsh" =>
@@ -399,105 +387,97 @@ object Dedup {
     // against the full doc universe; oversized pairs re-enter via the
     // fallback union), so joining cands back would be an identity
     // join shuffling the candidate set once more for nothing
-    candVerifiedOnDocs(documents, bandedCandidatesOnDocs(_, rows, bands))(
+    candVerifiedOnDocs(docSignatures(documents), bandedCandidatesOnDocs(_, rows, bands))(
       jaccardVerify(_, _, tauNum, tauDenom))
 
-  /** The generator-agnostic body of the verified paths: `candGen`
-    * yields (candidates, per-doc table) — both persisted, ownership
-    * transferring here — where the per-doc table MUST carry
-    * (doc_id, s, hs): the distinct-shingle count and the
-    * ascending-sorted fingerprint array (the contract both the banded
-    * and stratified generators satisfy from the per-row
-    * ShingleFingerprints pass). Threshold sizes, verification arrays
-    * and the oversize probe all read that one columnar cache — the
-    * round-13 shape with zero corpus-sized exchanges outside the
-    * candidate join itself.
+  /** The generator-agnostic body of the verified paths: holds the
+    * per-doc table `perDoc`, which MUST carry (doc_id, s, hs) — the
+    * distinct-shingle count and the ascending-sorted fingerprint array
+    * ([[docSignatures]]) — and the candidate pairs `candGen` builds
+    * from it. Threshold sizes, verification arrays and the oversize
+    * probe all read that one columnar cache — the round-13 shape with
+    * zero corpus-sized exchanges outside the candidate join itself.
     */
-  private def candVerifiedOnDocs(docs: DataFrame,
-      candGen: DataFrame => (DataFrame, DataFrame))(
-      verify: (DataFrame, DataFrame) => DataFrame): DataFrame = {
-    val (cands, sigs) = candGen(docs)
-    val sizes = sigs.select(col("doc_id"), col("s"))
-    // oversize probe on the per-doc cache (first materialization of a
-    // cache every later stage reads anyway): with no doc above the
-    // cap, pairIntersectionsOnArrays skips its guard apparatus. ONE
-    // aggregate job, not filter(...).isEmpty — an (almost always)
-    // empty-result limit probe runs CollectLimit's incremental
-    // partition batches, and with AQE inside a not-yet-materialized
-    // cache each batch re-ran the upstream work (measured +47 s at
-    // sf1 on the prefix generator's window). Construction-time job,
-    // so clean up the generator's caches on failure.
-    val mayBig =
-      try {
-        val mx = sigs.agg(max(col("s"))).head()
-        !mx.isNullAt(0) && mx.getLong(0) > MaxMergeArrayLen
-      } catch { case t: Throwable =>
-        Seq(sigs, cands).foreach(_.unpersist(blocking = false))
-        throw t
-      }
-    val docArr = sigs.select(col("doc_id"), col("hs"))
-    // exact verification via the shared sorted-merge counter — same
-    // construction-time-probe caveat as containmentPairsLsh
-    val (inter, interCache) =
-      try pairIntersectionsOnArrays(cands, docArr, mayHaveOversized = mayBig)
-      catch { case t: Throwable =>
-        Seq(sigs, cands).foreach(_.unpersist(blocking = false))
-        throw t
-      }
-    Caching.materializeAndRelease(verify(inter, sizes), sigs, cands, interCache)
+  private def candVerifiedOnDocs(perDoc: DataFrame, candGen: DataFrame => DataFrame)(
+      verify: (DataFrame, DataFrame) => DataFrame): DataFrame =
+    Caching.materialized { held =>
+      val sigs = held(perDoc)
+      val cands = held(candGen(sigs))
+      val sizes = sigs.select(col("doc_id"), col("s"))
+      // oversize probe on the per-doc cache (first materialization of
+      // a cache every later stage reads anyway): with no doc above the
+      // cap, pairIntersectionsOnArrays skips its guard apparatus
+      val mayBig = anyOversized(sigs)
+      val docArr = sigs.select(col("doc_id"), col("hs"))
+      // exact verification via the shared sorted-merge counter
+      verify(pairIntersectionsOnArrays(held, cands, docArr, mayHaveOversized = mayBig),
+        sizes)
+    }
+
+  /** Whether any document's distinct-shingle count `s` exceeds
+    * [[MaxMergeArrayLen]] — the oversize probe of the per-row-cache
+    * verified paths. ONE aggregate job, not filter(...).isEmpty: an
+    * (almost always) empty-result limit probe runs CollectLimit's
+    * incremental partition batches, and with AQE inside a
+    * not-yet-materialized cache each batch re-ran the upstream work
+    * (measured +47 s at sf1 on the prefix generator's window).
+    */
+  private def anyOversized(perDoc: DataFrame): Boolean = {
+    val mx = perDoc.agg(max(col("s"))).head()
+    !mx.isNullAt(0) && mx.getLong(0) > MaxMergeArrayLen
   }
 
-  /** Banded-MinHash candidate pairs — the shared candidate generator
-    * of the dense-regime Jaccard and containment paths. Returns
-    * (candidates, per-doc table), BOTH persisted; the caller owns
-    * their release.
-    *
-    * Round 13: the per-doc table is built by the SHUFFLE-FREE per-row
-    * expressions straight off the document scan — signature
+  /** The per-doc table of the verified paths, (doc_id, mh, hs, s),
+    * built by the SHUFFLE-FREE per-row expressions straight off the
+    * document scan (round 13): signature
     * ([[graft.expressions.MinhashTextSignature]], spec-pinned
     * bit-identical to the MinhashSignature aggregate over
-    * shiftright(h, 32)), distinct-shingle count and the sorted
-    * fingerprint array ([[graft.expressions.ShingleFingerprints]]
-    * emits ascending distinct fps — exactly
-    * sort_array(collect_list(h)) of the exploded table) — where the
-    * previous shape ran a corpus-sized doc_id exchange for the
-    * signature aggregate and TWO more for the sizes and
-    * verification-array aggregates downstream. One columnar cache
-    * (readers prune columns) now serves all four consumers: band
-    * bucketing (mh), threshold sizes (s), the sorted-merge
-    * verification arrays (hs) and the oversize probe (s). This is
-    * [[minhashSignatures]]' round-11 per-row move extended to the
-    * whole verified family — at 100 TB the three removed exchanges
-    * were the corpus-sized terms.
+    * shiftright(h, 32)), the sorted fingerprint array
+    * ([[graft.expressions.ShingleFingerprints]] emits ascending
+    * distinct fps — exactly sort_array(collect_list(h)) of the
+    * exploded table) and the distinct-shingle count. The previous
+    * shape ran a corpus-sized doc_id exchange for the signature
+    * aggregate and TWO more for the sizes and verification-array
+    * aggregates downstream; one columnar cache (readers prune
+    * columns) now serves band bucketing (mh), threshold sizes (s), the
+    * sorted-merge verification arrays (hs) and the oversize probe (s).
+    * This is [[minhashSignatures]]' round-11 per-row move extended to
+    * the whole verified family — at 100 TB the three removed
+    * exchanges were the corpus-sized terms (measured cost-neutral at
+    * sf0.1 on the stratified path: 0.37 s aggregate vs 0.375 s
+    * per-row). Short docs (< 3 words) yield NULL signatures and are
+    * filtered, reproducing the aggregate's row set exactly.
     */
-  private def bandedCandidatesOnDocs(docs: DataFrame, rows: Int,
-      bands: Int): (DataFrame, DataFrame) = {
+  private def docSignatures(docs: DataFrame): DataFrame = {
+    import org.apache.spark.sql.graftinternal.ColumnBridge.{column, expression}
+    docs.select(col("doc_id"),
+        column(graft.expressions.MinhashTextSignature(
+          expression(col("text")))).as("mh"),
+        column(graft.expressions.ShingleFingerprints(
+          expression(col("text")))).as("hs"))
+      .filter(col("mh").isNotNull)
+      .withColumn("s", size(col("hs")).cast("long"))
+  }
+
+  /** Banded-MinHash candidate pairs over the per-doc table `sigs`
+    * ([[docSignatures]]) — the candidate generator of the dense-regime
+    * Jaccard path.
+    */
+  private def bandedCandidatesOnDocs(sigs: DataFrame, rows: Int,
+      bands: Int): DataFrame = {
     require(rows * bands <= 128, s"rows*bands=${rows * bands} exceeds the 128 signatures")
-    val sigs = {
-      import org.apache.spark.sql.graftinternal.ColumnBridge.{column, expression}
-      docs.select(col("doc_id"),
-          column(graft.expressions.MinhashTextSignature(
-            expression(col("text")))).as("mh"),
-          column(graft.expressions.ShingleFingerprints(
-            expression(col("text")))).as("hs"))
-        .filter(col("mh").isNotNull)
-        .withColumn("s", size(col("hs")).cast("long"))
-        .persist()
-    }
     val bucketed = {
       import org.apache.spark.sql.graftinternal.ColumnBridge.{column, expression}
       sigs.select(col("doc_id"), posexplode(column(
         graft.expressions.BandHashes(expression(col("mh")), rows, bands))))
         .toDF("doc_id", "band_idx", "band_hash")
     }
-    val cands = bucketed.select(col("doc_id").as("doc1"), col("band_idx"), col("band_hash"))
+    bucketed.select(col("doc_id").as("doc1"), col("band_idx"), col("band_hash"))
       .join(bucketed.select(col("doc_id").as("doc2"), col("band_idx"), col("band_hash")),
         Seq("band_idx", "band_hash"))
       .filter(col("doc1") < col("doc2"))
       .select(col("doc1"), col("doc2"))
       .distinct()
-      .persist()
-    (cands, sigs)
   }
 
   /** Near-superset detection: pairs where one document's shingle set
@@ -519,11 +499,10 @@ object Dedup {
     * candidate generator gets verified against.
     */
   def containmentPairs(documents: DataFrame, tauNum: Int = 80,
-      tauDenom: Int = 100): DataFrame = {
-    val tri = shingleFps(documents).persist()
+      tauDenom: Int = 100): DataFrame = Caching.materialized { held =>
+    val tri = held(shingleFps(documents))
     val sizes = tri.groupBy(col("doc_id")).agg(count(lit(1)).as("s"))
-    Caching.materializeAndRelease(
-      containmentVerify(shingleCountJoin(tri), sizes, tauNum, tauDenom), tri)
+    containmentVerify(shingleCountJoin(tri), sizes, tauNum, tauDenom)
   }
 
   /** The exact Jaccard verifier the count-join and the banded-LSH
@@ -602,7 +581,7 @@ object Dedup {
     * recall is unacceptable).
     */
   def containmentPairsLsh(documents: DataFrame, tauNum: Int = 80,
-      tauDenom: Int = 100): DataFrame = {
+      tauDenom: Int = 100): DataFrame = Caching.materialized { held =>
     val tri = shingleFps(documents)
     // document frequency attached by a WINDOW over the shingle key —
     // not groupBy(h) + self-join: the window makes tri single-consumer
@@ -620,13 +599,12 @@ object Dedup {
     // its separate sizes aggregate — the ranking folds into the same
     // doc_id-keyed aggregation the verification arrays come from, so
     // the exchange count drops and the ranking is computed once.
-    val docSets = triDf
+    val docSets = held(triDf
       .groupBy(col("doc_id"))
       .agg(expr("transform(sort_array(collect_list(struct(df, h))), x -> x.h)").as("harr"),
         count(lit(1)).as("s"))
       .withColumn("prefix_len",
-        (col("s") - expr(s"(s * $tauNum + ${tauDenom - 1}) div $tauDenom") + 1).cast("int"))
-      .persist()
+        (col("s") - expr(s"(s * $tauNum + ${tauDenom - 1}) div $tauDenom") + 1).cast("int")))
     // probes: each doc bets it is the smaller side and emits only its
     // prefix_len rarest shingles; index: the full shingle table,
     // re-exploded narrowly from the same persisted doc sets (no second
@@ -667,14 +645,8 @@ object Dedup {
     // isNull probe) stays — its cost measured nil here (9.9 s with vs
     // 10.5 s without), unlike the per-row-cache paths where the
     // probed fast path ships (candVerifiedOnDocs).
-    // pairIntersectionsOnArrays runs a construction-time probe job; if
-    // it throws, release docSets here (materializeAndRelease's finally
-    // is never reached)
-    val (inter, interCache) =
-      try pairIntersectionsOnArrays(cands, docArr)
-      catch { case t: Throwable => docSets.unpersist(blocking = false); throw t }
-    Caching.materializeAndRelease(
-      containmentVerify(inter, sizes, tauNum, tauDenom), docSets, interCache)
+    containmentVerify(pairIntersectionsOnArrays(held, cands, docArr),
+      sizes, tauNum, tauDenom)
   }
 
   /** DEFAULT per-doc candidate budget for the stratified generator
@@ -819,8 +791,8 @@ object Dedup {
 
   /** Size-stratified banded candidates for CONTAINMENT — the dense-
     * regime generator whose recall is containment-shaped, not
-    * Jaccard-shaped. Returns (candidates, signatures), both
-    * persisted; caller owns their release (the
+    * Jaccard-shaped, over the held per-doc table `sigs`
+    * ([[docSignatures]] plus its size class `cls`; the
     * [[candVerifiedOnDocs]] protocol).
     *
     * The fixed symmetric banding ((6, 21) at τ_J ≈ 0.8) provably
@@ -854,117 +826,88 @@ object Dedup {
     * background guard drops or degrades says so with its provisioned
     * recall.
     */
-  private def stratifiedCandidatesOnDocs(docs: DataFrame,
-      tauNum: Int, tauDenom: Int, maxGap: Int, bandBudget: Int,
-      candBudgetPerDoc: Long): (DataFrame, DataFrame) = {
+  private def stratifiedCandidatesOnDocs(sigs: DataFrame,
+      docs: DataFrame, tauNum: Int, tauDenom: Int, maxGap: Int, bandBudget: Int,
+      candBudgetPerDoc: Long): DataFrame = {
     import org.apache.spark.sql.graftinternal.ColumnBridge.{column, expression}
     require(maxGap >= 0 && bandBudget >= 1 && bandBudget <= 128,
       s"maxGap=$maxGap, bandBudget=$bandBudget out of range")
     require(candBudgetPerDoc >= 1,
       s"candBudgetPerDoc must be >= 1, got $candBudgetPerDoc")
-    // per-doc table from the SHUFFLE-FREE per-row expression twins,
-    // not aggregates over an exploded fingerprint table (round 13):
-    // signature, distinct-shingle count, size class and the sorted
-    // verification array are all per-document values —
-    // MinhashTextSignature is spec-pinned bit-identical to the
-    // MinhashSignature aggregate over shiftright(h, 32), and
-    // ShingleFingerprints emits exactly the rows shingleFps would
-    // explode, ascending — so the whole operator now runs with zero
-    // corpus-sized exchanges outside the bucket join (measured
-    // cost-neutral at sf0.1 — strat_sigs_agg 0.37 s incremental vs
-    // strat_sigs_perrow 0.375 s standalone — and corpus-exchange-
-    // count cheaper at every larger scale); short docs (< 3 words)
-    // yield NULL signatures and are filtered, reproducing the
-    // aggregate's row set exactly.
-    val sigs = docs.select(col("doc_id"),
-        column(graft.expressions.MinhashTextSignature(
-          expression(col("text")))).as("mh"),
-        column(graft.expressions.ShingleFingerprints(
-          expression(col("text")))).as("hs"))
-      .filter(col("mh").isNotNull)
-      .withColumn("s", size(col("hs")).cast("long"))
-      .withColumn("cls", floor(log2(col("s"))).cast("int"))
-      .persist()
-    try {
-      // bounded probes ([[corpusProbe]]): the ≤64-row class histogram
-      // (which also materializes the signature cache all 2(G+1)
-      // emission branches re-read) and the corpus background-similarity
-      // estimate — the occurrence/vocabulary aggregate reads a per-row
-      // re-shingling scan (one pass, no shuffle, no cache) instead of
-      // an exploded fingerprint table
-      val probe = corpusProbe(sigs, docs.select(
-        explode(column(graft.expressions.ShingleFingerprints(
-          expression(col("text"))))).as("h")))
-      import probe.{hist, jBg, nDocs, pairsAtGap}
-      val tau = tauNum.toDouble / tauDenom
-      val picked = stratifiedArms(tau, maxGap, bandBudget, jBg, pairsAtGap,
-        candBudgetPerDoc.toDouble * math.max(nDocs, 1L))
-      val dropped = picked.collect { case Left(g) => g }
-        .filter(g => pairsAtGap(g) > 0) // a gap with no class pair is a non-event
-      // likewise skip kept arms whose gap has NO occupied class pair:
-      // they would emit nothing (the eligibility filter below) but
-      // still log confusing geometry warnings
-      val arms = picked.collect { case Right(a) => a }
-        .filter(a => pairsAtGap(a.g) > 0)
-      if (dropped.nonEmpty)
-        log.warn(s"containmentStratified: background similarity ≈ $jBg makes " +
-          s"τ-containment pairs at size-class gaps {${dropped.mkString(",")}} " +
-          "indistinguishable from noise within the candidate budget — those " +
-          "arms are DROPPED. containmentPairsLsh remains the lossless path.")
-      arms.filter(_.recall < 0.9).foreach(a =>
-        log.warn(f"containmentStratified: gap-${a.g} arm degraded to " +
-          f"(r=${a.r}, b=${a.b}) by the background guard — provisioned " +
-          f"worst-case candidate recall ${a.recall}%.3f at J* = ${a.jStar}%.4f."))
-      log.info(arms.map(a =>
-        f"g=${a.g}:(r=${a.r},b=${a.b},recall=${a.recall}%.3f)")
-        .mkString("containmentStratified arms: ", " ", ""))
-      val occupied = hist.keySet
-      // single-scan multi-arm band emitter (round 14): ONE expression
-      // emits every kept arm's (ci, cj, band_idx, band_hash) keys for
-      // a role — the previous shape unioned one
-      // filter+posexplode(BandHashes) branch per (arm, role), i.e. up
-      // to 2·(G+1) re-scans of the signature cache; the partner-class
-      // eligibility filters (a gap-g small-role row from class c joins
-      // nothing unless class c+g is occupied — zero-partner roles
-      // emitted tens of GB for empty joins before that filter,
-      // measured round 10) fold into the expression's occupied-mask
-      // test, and the emitted rows are bit-identical per arm
-      // (StratBandEmit delegates to BandHashes.compute, spec-pinned
-      // against the union reference)
-      val occupiedMask = occupied.filter(c => c >= 0 && c < 64)
-        .foldLeft(0L)((m, c) => m | (1L << c))
-      val armSpec = arms.map(a => (a.g, a.r, a.b))
-      def roleSide(asSmall: Boolean): DataFrame =
-        sigs.select(col("doc_id"),
-            explode(column(graft.expressions.StratBandEmit(
-              expression(col("mh")), expression(col("cls")),
-              armSpec, occupiedMask, asSmall))).as("e"))
-          .select(col("doc_id"), col("e.ci").as("ci"), col("e.cj").as("cj"),
-            col("e.band_idx").as("band_idx"), col("e.band_hash").as("band_hash"))
-      val cands = if (arms.isEmpty) {
-        // every arm dropped (a corpus whose background similarity
-        // swamps even gap 0): no sub-quadratic candidates exist —
-        // surface an empty candidate set, never a silent n² join
-        log.warn("containmentStratified: ALL arms dropped — emitting no " +
-          "candidates. Use containmentPairsLsh (lossless) or raise the budget.")
-        sigs.select(col("doc_id").as("doc1"), col("doc_id").as("doc2"))
-          .filter(lit(false)).persist()
-      } else {
-        // gap-0 rows join small-role against small-role (both
-        // orientations collapse below); gap>0 arms join small vs large
-        roleSide(asSmall = true).toDF("doc_a", "ci", "cj", "band_idx", "band_hash")
-          .join(roleSide(asSmall = false)
-              .toDF("doc_b", "ci", "cj", "band_idx", "band_hash"),
-            Seq("ci", "cj", "band_idx", "band_hash"))
-          .filter(col("doc_a") =!= col("doc_b"))
-          .select(least(col("doc_a"), col("doc_b")).as("doc1"),
-            greatest(col("doc_a"), col("doc_b")).as("doc2"))
-          .distinct()
-          .persist()
-      }
-      (cands, sigs)
-    } catch {
-      case t: Throwable => sigs.unpersist(blocking = false); throw t
+    // bounded probes ([[corpusProbe]]): the ≤64-row class histogram
+    // (which also materializes the signature cache every emission
+    // branch re-reads) and the corpus background-similarity estimate
+    // — the occurrence/vocabulary aggregate reads a per-row
+    // re-shingling scan (one pass, no shuffle, no cache) instead of
+    // an exploded fingerprint table
+    val probe = corpusProbe(sigs, docs.select(
+      explode(column(graft.expressions.ShingleFingerprints(
+        expression(col("text"))))).as("h")))
+    import probe.{hist, jBg, nDocs, pairsAtGap}
+    val tau = tauNum.toDouble / tauDenom
+    val picked = stratifiedArms(tau, maxGap, bandBudget, jBg, pairsAtGap,
+      candBudgetPerDoc.toDouble * math.max(nDocs, 1L))
+    val dropped = picked.collect { case Left(g) => g }
+      .filter(g => pairsAtGap(g) > 0) // a gap with no class pair is a non-event
+    // likewise skip kept arms whose gap has NO occupied class pair:
+    // they would emit nothing (the eligibility filter below) but
+    // still log confusing geometry warnings
+    val arms = picked.collect { case Right(a) => a }
+      .filter(a => pairsAtGap(a.g) > 0)
+    if (dropped.nonEmpty)
+      log.warn(s"containmentStratified: background similarity ≈ $jBg makes " +
+        s"τ-containment pairs at size-class gaps {${dropped.mkString(",")}} " +
+        "indistinguishable from noise within the candidate budget — those " +
+        "arms are DROPPED. containmentPairsLsh remains the lossless path.")
+    arms.filter(_.recall < 0.9).foreach(a =>
+      log.warn(f"containmentStratified: gap-${a.g} arm degraded to " +
+        f"(r=${a.r}, b=${a.b}) by the background guard — provisioned " +
+        f"worst-case candidate recall ${a.recall}%.3f at J* = ${a.jStar}%.4f."))
+    log.info(arms.map(a =>
+      f"g=${a.g}:(r=${a.r},b=${a.b},recall=${a.recall}%.3f)")
+      .mkString("containmentStratified arms: ", " ", ""))
+    val occupied = hist.keySet
+    // single-scan multi-arm band emitter (round 14): ONE expression
+    // emits every kept arm's (ci, cj, band_idx, band_hash) keys for
+    // a role — the previous shape unioned one
+    // filter+posexplode(BandHashes) branch per (arm, role), i.e. up
+    // to 2·(G+1) re-scans of the signature cache; the partner-class
+    // eligibility filters (a gap-g small-role row from class c joins
+    // nothing unless class c+g is occupied — zero-partner roles
+    // emitted tens of GB for empty joins before that filter,
+    // measured round 10) fold into the expression's occupied-mask
+    // test, and the emitted rows are bit-identical per arm
+    // (StratBandEmit delegates to BandHashes.compute, spec-pinned
+    // against the union reference)
+    val occupiedMask = occupied.filter(c => c >= 0 && c < 64)
+      .foldLeft(0L)((m, c) => m | (1L << c))
+    val armSpec = arms.map(a => (a.g, a.r, a.b))
+    def roleSide(asSmall: Boolean): DataFrame =
+      sigs.select(col("doc_id"),
+          explode(column(graft.expressions.StratBandEmit(
+            expression(col("mh")), expression(col("cls")),
+            armSpec, occupiedMask, asSmall))).as("e"))
+        .select(col("doc_id"), col("e.ci").as("ci"), col("e.cj").as("cj"),
+          col("e.band_idx").as("band_idx"), col("e.band_hash").as("band_hash"))
+    if (arms.isEmpty) {
+      // every arm dropped (a corpus whose background similarity
+      // swamps even gap 0): no sub-quadratic candidates exist —
+      // surface an empty candidate set, never a silent n² join
+      log.warn("containmentStratified: ALL arms dropped — emitting no " +
+        "candidates. Use containmentPairsLsh (lossless) or raise the budget.")
+      sigs.select(col("doc_id").as("doc1"), col("doc_id").as("doc2"))
+        .filter(lit(false))
+    } else {
+      // gap-0 rows join small-role against small-role (both
+      // orientations collapse below); gap>0 arms join small vs large
+      roleSide(asSmall = true).toDF("doc_a", "ci", "cj", "band_idx", "band_hash")
+        .join(roleSide(asSmall = false)
+            .toDF("doc_b", "ci", "cj", "band_idx", "band_hash"),
+          Seq("ci", "cj", "band_idx", "band_hash"))
+        .filter(col("doc_a") =!= col("doc_b"))
+        .select(least(col("doc_a"), col("doc_b")).as("doc1"),
+          greatest(col("doc_a"), col("doc_b")).as("doc2"))
+        .distinct()
     }
   }
 
@@ -982,9 +925,10 @@ object Dedup {
   def containmentStratified(documents: DataFrame, tauNum: Int = 80,
       tauDenom: Int = 100, maxGap: Int = 5, bandBudget: Int = 64,
       candBudgetPerDoc: Long = StratifiedCandBudgetPerDoc): DataFrame =
-    candVerifiedOnDocs(documents,
-      stratifiedCandidatesOnDocs(_, tauNum, tauDenom, maxGap, bandBudget,
-        candBudgetPerDoc))(
+    candVerifiedOnDocs(
+      docSignatures(documents).withColumn("cls", floor(log2(col("s"))).cast("int")),
+      stratifiedCandidatesOnDocs(_, documents, tauNum, tauDenom, maxGap,
+        bandBudget, candBudgetPerDoc))(
       containmentVerify(_, _, tauNum, tauDenom))
 
   /** Adaptive containment: the [[jaccardStrategy]] probe dispatches —
@@ -1018,7 +962,7 @@ object Dedup {
     // (round 13: the stratified path runs off per-row expressions,
     // the prefix path re-shingles through its own window design), so
     // the cache the probe used to pre-fill had no second reader
-    if (jaccardStrategyOnFps(shingleFps(documents)) == "lsh") {
+    if (jaccardStrategy(documents) == "lsh") {
       log.warn("containmentAuto: dense-vocabulary corpus — dispatching to " +
         "size-stratified banded candidates with EXACT verification " +
         "(containmentStratified). Per size-class-gap arms band for the " +
@@ -1064,13 +1008,11 @@ object Dedup {
     * overwhelmingly common case pays zero extra stages — the same
     * small-side adaptivity as a broadcast threshold or clusterCc's
     * collect probe. Outputs are identical — both paths count |A ∩ B|
-    * exactly (property-spec-pinned).
-    *
-    * Returns (result, cachedIntermediate): the caller hands the cache
-    * to [[Caching.materializeAndRelease]] so nothing outlives the operator.
+    * exactly (property-spec-pinned). The intermediate is held through
+    * the caller's `held`.
     */
-  private def pairIntersectionsOnArrays(cands: DataFrame, docArr: DataFrame,
-      mayHaveOversized: Boolean = true): (DataFrame, DataFrame) = {
+  private def pairIntersectionsOnArrays(held: Caching.Held, cands: DataFrame,
+      docArr: DataFrame, mayHaveOversized: Boolean = true): DataFrame = {
     import org.apache.spark.sql.graftinternal.ColumnBridge.{column, expression}
     // Fast path (round 13): when the caller has already proved from
     // its per-doc sizes that NO document exceeds the cap (the
@@ -1081,53 +1023,40 @@ object Dedup {
     // join runs exactly once, lazily, inside the final plan. Output
     // identical by construction: with no oversized doc the capped
     // array IS the array and the fallback branch was provably empty.
-    if (!mayHaveOversized) {
-      val inter = cands.select(col("doc1"), col("doc2"))
+    if (!mayHaveOversized)
+      return cands.select(col("doc1"), col("doc2"))
         .join(docArr.select(col("doc_id").as("doc1"), col("hs").as("hs1")), Seq("doc1"))
         .join(docArr.select(col("doc_id").as("doc2"), col("hs").as("hs2")), Seq("doc2"))
         .select(col("doc1"), col("doc2"),
           column(graft.expressions.SortedIntersectCount(
             expression(col("hs1")), expression(col("hs2")))).as("inter"))
-      // nothing persisted on this path — the second slot is handed to
-      // materializeAndRelease, where unpersist on an unpersisted
-      // frame is a no-op
-      return (inter, inter)
-    }
     val capped = docArr.select(col("doc_id"),
       when(size(col("hs")) <= MaxMergeArrayLen, col("hs")).as("hs"))
-    val inter0 = cands.select(col("doc1"), col("doc2"))
+    val inter0 = held(cands.select(col("doc1"), col("doc2"))
       .join(capped.select(col("doc_id").as("doc1"), col("hs").as("hs1")), Seq("doc1"))
       .join(capped.select(col("doc_id").as("doc2"), col("hs").as("hs2")), Seq("doc2"))
       .select(col("doc1"), col("doc2"),
         column(graft.expressions.SortedIntersectCount(
-          expression(col("hs1")), expression(col("hs2")))).as("inter"))
-      .persist()
-    // NOTE: the `oversized.isEmpty` probe below runs a Spark job at
-    // operator-CONSTRUCTION time (the driver-side small-side check).
-    // If that job throws, unpersist inter0 here — the caller's
-    // materializeAndRelease finally-block is never reached.
-    try {
-      val merged = inter0.filter(col("inter").isNotNull)
-      val oversized = inter0.filter(col("inter").isNull)
-        .select(col("doc1"), col("doc2"))
-      val result = if (oversized.isEmpty) merged else {
-        // fallback: explode only the docs that appear in an oversized
-        // pair (semi-join bound), then the classic count-join — exact,
-        // narrow
-        val bigDocs = oversized.select(col("doc1").as("doc_id"))
-          .union(oversized.select(col("doc2").as("doc_id"))).distinct()
-        val ex = docArr.join(bigDocs, Seq("doc_id"), "left_semi")
-          .select(col("doc_id"), explode(col("hs")).as("h"))
-        val exploded = oversized
-          .join(ex.select(col("doc_id").as("doc1"), col("h")), Seq("doc1"))
-          .join(ex.select(col("doc_id").as("doc2"), col("h")), Seq("doc2", "h"))
-          .groupBy(col("doc1"), col("doc2"))
-          .agg(count(lit(1)).as("inter"))
-        merged.unionByName(exploded)
-      }
-      (result, inter0)
-    } catch {
-      case t: Throwable => inter0.unpersist(blocking = false); throw t
+          expression(col("hs1")), expression(col("hs2")))).as("inter")))
+    val merged = inter0.filter(col("inter").isNotNull)
+    val oversized = inter0.filter(col("inter").isNull)
+      .select(col("doc1"), col("doc2"))
+    // the `oversized.isEmpty` probe runs a Spark job at operator-
+    // CONSTRUCTION time (the driver-side small-side check)
+    if (oversized.isEmpty) merged else {
+      // fallback: explode only the docs that appear in an oversized
+      // pair (semi-join bound), then the classic count-join — exact,
+      // narrow
+      val bigDocs = oversized.select(col("doc1").as("doc_id"))
+        .union(oversized.select(col("doc2").as("doc_id"))).distinct()
+      val ex = docArr.join(bigDocs, Seq("doc_id"), "left_semi")
+        .select(col("doc_id"), explode(col("hs")).as("h"))
+      val exploded = oversized
+        .join(ex.select(col("doc_id").as("doc1"), col("h")), Seq("doc1"))
+        .join(ex.select(col("doc_id").as("doc2"), col("h")), Seq("doc2", "h"))
+        .groupBy(col("doc1"), col("doc2"))
+        .agg(count(lit(1)).as("inter"))
+      merged.unionByName(exploded)
     }
   }
 
@@ -1246,11 +1175,12 @@ object Dedup {
     * signature lookups — candidate pairs ≪ n². Estimated Jaccard =
     * matching signature fraction.
     */
-  def minhashLsh(documents: DataFrame, minEst: Double = 0.2): DataFrame = {
+  def minhashLsh(documents: DataFrame,
+      minEst: Double = 0.2): DataFrame = Caching.materialized { held =>
     // signatures feed three plan branches (bucketing + both pair-join
     // sides); persist = the batch analog of materializing a signature
     // table, which is what a 100 TB run would do on storage
-    val sigs = minhashSignatures(documents).persist()
+    val sigs = held(minhashSignatures(documents))
     // band hash = the same 31-bit-prime polynomial fold the shingle
     // hash uses, over the band's 8 signature values — SQL-replicable,
     // unlike hash(slice(...)); codegen'd ([[BandHashes]] — the
@@ -1268,7 +1198,7 @@ object Dedup {
       .filter(col("doc1") < col("doc2"))
       .select(col("doc1"), col("doc2"))
       .distinct()
-    Caching.materializeAndRelease(pairs
+    pairs
       .join(sigs.select(col("doc_id").as("doc1"), col("mh").as("mh1")), Seq("doc1"))
       .join(sigs.select(col("doc_id").as("doc2"), col("mh").as("mh2")), Seq("doc2"))
       .withColumn("est_jaccard", {
@@ -1281,8 +1211,7 @@ object Dedup {
       })
       .filter(col("est_jaccard") >= minEst)
       .select(col("doc1"), col("doc2"), col("est_jaccard"))
-      .orderBy(col("doc1"), col("doc2")),
-      sigs)
+      .orderBy(col("doc1"), col("doc2"))
   }
 
   /** MinHash accuracy harness: for every LSH candidate pair, the
@@ -1297,44 +1226,36 @@ object Dedup {
   def minhashEstEval(documents: DataFrame, minEst: Double = 0.2): DataFrame = {
     import org.apache.spark.sql.graftinternal.ColumnBridge.{column, expression}
     val cands = minhashLsh(documents, minEst)
-    // per-doc sorted fingerprint arrays from the per-row expression —
-    // ONE narrow columnar cache serves sizes, both verification join
-    // sides and the oversize probe, where the previous shape exploded
-    // a corpus-sized (doc_id, h) cache and re-aggregated it per
-    // consumer (round 13; ShingleFingerprints emits ascending
-    // distinct fps = sort_array(collect_list(h)) of that table by
-    // construction)
-    val perDoc = documents.select(col("doc_id"),
-        column(graft.expressions.ShingleFingerprints(
-          expression(col("text")))).as("hs"))
-      .withColumn("s", size(col("hs")).cast("long"))
-      .persist()
-    val sizes = perDoc.select(col("doc_id"), col("s"))
-    // exact intersections via the shared sorted-merge verifier — one
-    // row per candidate pair, no pair×shingle explosion
-    // same construction-time-probe caveat as containmentPairsLsh
-    val (inter, interCache) =
-      try {
-        // one-job max() probe, not an incremental limit — see
-        // candVerifiedOnDocs
-        val mx = perDoc.agg(max(col("s"))).head()
-        val mayBig = !mx.isNullAt(0) && mx.getLong(0) > MaxMergeArrayLen
-        pairIntersectionsOnArrays(cands, perDoc.select(col("doc_id"), col("hs")),
-          mayHaveOversized = mayBig)
-      } catch { case t: Throwable => perDoc.unpersist(blocking = false); throw t }
-    Caching.materializeAndRelease(cands
-      .join(inter, Seq("doc1", "doc2"), "left")
-      .join(sizes.select(col("doc_id").as("doc1"), col("s").as("s1")), Seq("doc1"))
-      .join(sizes.select(col("doc_id").as("doc2"), col("s").as("s2")), Seq("doc2"))
-      .withColumn("inter", coalesce(col("inter"), lit(0L)))
-      .withColumn("est_jaccard", round(col("est_jaccard"), 6))
-      .withColumn("exact_jaccard", round(col("inter").cast("double")
-        / (col("s1") + col("s2") - col("inter")), 6))
-      .select(col("doc1"), col("doc2"), col("est_jaccard"),
-        col("exact_jaccard"),
-        round(abs(col("est_jaccard") - col("exact_jaccard")), 6).as("abs_err"))
-      .orderBy(col("doc1"), col("doc2")),
-      perDoc, interCache)
+    Caching.materialized { held =>
+      // per-doc sorted fingerprint arrays from the per-row expression —
+      // ONE narrow columnar cache serves sizes, both verification join
+      // sides and the oversize probe, where the previous shape exploded
+      // a corpus-sized (doc_id, h) cache and re-aggregated it per
+      // consumer (round 13; ShingleFingerprints emits ascending
+      // distinct fps = sort_array(collect_list(h)) of that table by
+      // construction)
+      val perDoc = held(documents.select(col("doc_id"),
+          column(graft.expressions.ShingleFingerprints(
+            expression(col("text")))).as("hs"))
+        .withColumn("s", size(col("hs")).cast("long")))
+      val sizes = perDoc.select(col("doc_id"), col("s"))
+      // exact intersections via the shared sorted-merge verifier — one
+      // row per candidate pair, no pair×shingle explosion
+      val inter = pairIntersectionsOnArrays(held, cands,
+        perDoc.select(col("doc_id"), col("hs")), mayHaveOversized = anyOversized(perDoc))
+      cands
+        .join(inter, Seq("doc1", "doc2"), "left")
+        .join(sizes.select(col("doc_id").as("doc1"), col("s").as("s1")), Seq("doc1"))
+        .join(sizes.select(col("doc_id").as("doc2"), col("s").as("s2")), Seq("doc2"))
+        .withColumn("inter", coalesce(col("inter"), lit(0L)))
+        .withColumn("est_jaccard", round(col("est_jaccard"), 6))
+        .withColumn("exact_jaccard", round(col("inter").cast("double")
+          / (col("s1") + col("s2") - col("inter")), 6))
+        .select(col("doc1"), col("doc2"), col("est_jaccard"),
+          col("exact_jaccard"),
+          round(abs(col("est_jaccard") - col("exact_jaccard")), 6).as("abs_err"))
+        .orderBy(col("doc1"), col("doc2"))
+    }
   }
 
   /** URL-canonicalization dedup: normalize each document's (synthetic,
@@ -1767,8 +1688,7 @@ object Dedup {
     val (nTables, bitsPerTable) = embedLshParams(embeddings.count())
     embedNearDupOnSig(
       embeddings
-        .select(col("vec_id"), VectorOps.toDoubleArray(col("embedding")).as("vd"))
-        .persist(),
+        .select(col("vec_id"), VectorOps.toDoubleArray(col("embedding")).as("vd")),
       tau, nTables, bitsPerTable)
   }
 
@@ -1821,25 +1741,25 @@ object Dedup {
     */
   private[graft] val SketchPlaneOffset = 896
 
-  /** The body over an ALREADY-PERSISTED `(vec_id, vd)` frame —
-    * ownership transfers: released once the result materializes.
-    * The minhashLsh shape: vectors cached once, bucket keys computed
-    * once, only (id, bucket) hauled through the self-join, vectors
-    * joined back per deduplicated candidate pair — neither nTables
-    * vector copies in cache nor per-side signature recompute.
+  /** The body over a `(vec_id, vd)` frame, which it holds along with
+    * the bucket table. The minhashLsh shape: vectors cached once,
+    * bucket keys computed once, only (id, bucket) hauled through the
+    * self-join, vectors joined back per deduplicated candidate pair —
+    * neither nTables vector copies in cache nor per-side signature
+    * recompute.
     */
-  private def embedNearDupOnSig(sig: DataFrame, tau: Double,
-      nTables: Int, bitsPerTable: Int): DataFrame = {
+  private def embedNearDupOnSig(vectors: DataFrame, tau: Double,
+      nTables: Int, bitsPerTable: Int): DataFrame = Caching.materialized { held =>
+    val sig = held(vectors)
     // the sketch's independence from the buckets is an invariant, not
     // an observation: the geometry must stay below the sketch's
     // reserved plane range
     require(nTables * bitsPerTable <= SketchPlaneOffset,
       s"bucket geometry $nTables×$bitsPerTable crosses into the " +
         s"verification-sketch plane range [$SketchPlaneOffset, 1024)")
-    val bucketed = sig
+    val bucketed = held(sig
       .select(col("vec_id"), explode(
-        VectorOps.lshTableKeys(col("vd"), nTables, bitsPerTable)).as("bucket"))
-      .persist()
+        VectorOps.lshTableKeys(col("vd"), nTables, bitsPerTable)).as("bucket")))
     val pairs = bucketed.select(col("vec_id").as("id1"), col("bucket"))
       .join(bucketed.select(col("vec_id").as("id2"), col("bucket")), Seq("bucket"))
       .filter(col("id1") < col("id2"))
@@ -1870,14 +1790,13 @@ object Dedup {
       .join(sk.select(col("vec_id").as("id2"), col("sk").as("sk2")), Seq("id2"))
       .filter(mismatch <= lit(sketchMismatchCut(tau)))
       .select(col("id1"), col("id2"))
-    Caching.materializeAndRelease(sketched
+    sketched
       .join(sig.select(col("vec_id").as("id1"), col("vd").as("v1")), Seq("id1"))
       .join(sig.select(col("vec_id").as("id2"), col("vd").as("v2")), Seq("id2"))
       .withColumn("cos", VectorOps.cosine(col("v1"), col("v2")))
       .filter(col("cos") >= tau)
       .select(col("id1"), col("id2"), round(col("cos"), 6).as("cos"))
-      .orderBy(col("id1"), col("id2")),
-      sig, bucketed)
+      .orderBy(col("id1"), col("id2"))
   }
 
   /** Max Hamming mismatches (of 128 sketch bits) a candidate pair may
@@ -1907,19 +1826,17 @@ object Dedup {
     * keys shuffle, and the oracle reproduces the fold exactly in SQL
     * (a cross-doc collision would need ~2³¹ distinct grams).
     */
-  def dupSpans(documents: DataFrame, minDocs: Int = 2): DataFrame = {
-    val (result, grams) = dupSpansPlan(documents, minDocs)
-    Caching.materializeAndRelease(result, grams)
-  }
+  def dupSpans(documents: DataFrame, minDocs: Int = 2): DataFrame =
+    Caching.materialized(dupSpansPlan(_, documents, minDocs))
 
-  /** The un-materialized plan behind [[dupSpans]] plus the persisted
-    * gram frame the caller must release — exists so PlanPinSpec can
-    * assert the exchange budget on the REAL plan (the public
-    * operator's checkpoint collapses it to a LogicalRDD scan, where
-    * any shuffle count is vacuously zero).
+  /** The un-materialized plan behind [[dupSpans]], holding its gram
+    * frame through `held` — exists so PlanPinSpec can assert the
+    * exchange budget on the REAL plan (the public operator's
+    * checkpoint collapses it to a LogicalRDD scan, where any shuffle
+    * count is vacuously zero).
     */
-  private[graft] def dupSpansPlan(documents: DataFrame,
-      minDocs: Int = 2): (DataFrame, DataFrame) = {
+  private[graft] def dupSpansPlan(held: Caching.Held, documents: DataFrame,
+      minDocs: Int = 2): DataFrame = {
     val base = documents.select(col("doc_id"), split(col("text"), " ").as("w"))
       .withColumn("n", size(col("w")).cast("long"))
     // pos is 1-based; Spark arrays index 0-based, so gram i spans
@@ -1927,12 +1844,11 @@ object Dedup {
     // persisted: the scan + positional-gram explode feeds BOTH the
     // duplicated-gram aggregate and the coverage join below (the
     // module's multi-branch contract — see ngramJaccard's shingles)
-    val grams = base.filter(col("n") >= 3)
+    val grams = held(base.filter(col("n") >= 3)
       .select(col("doc_id"), explode(expr(
         "transform(sequence(1, int(n) - 2), i -> " +
           "struct(i as pos, concat_ws(' ', w[i-1], w[i], w[i+1]) as g))")).as("e"))
-      .select(col("doc_id"), col("e.pos").as("pos"), tokenHash62(col("e.g")).as("g"))
-      .persist()
+      .select(col("doc_id"), col("e.pos").as("pos"), tokenHash62(col("e.g")).as("g")))
     // "appears in ≥2 docs" = min(doc_id) ≠ max(doc_id): one plain
     // min/max aggregate instead of an expand-based count_distinct.
     // ONLY valid at exactly 2 — any other threshold (incl. the
@@ -1976,11 +1892,10 @@ object Dedup {
           "zip_with(slice(ps, 1, size(ps) - 1), slice(ps, 2, size(ps) - 1)," +
           " (a, b) -> least(3, b - a))," +
           " CAST(0 AS BIGINT), (acc, x) -> acc + x)").as("n_dup_tokens"))
-    (base.select(col("doc_id"), col("n").as("n_tokens"))
+    base.select(col("doc_id"), col("n").as("n_tokens"))
       .join(covered, Seq("doc_id"), "left")
       .withColumn("n_dup_tokens", coalesce(col("n_dup_tokens"), lit(0L)))
       .withColumn("dup_pct", expr("n_dup_tokens * 100 div n_tokens"))
-      .orderBy(col("doc_id")),
-      grams)
+      .orderBy(col("doc_id"))
   }
 }

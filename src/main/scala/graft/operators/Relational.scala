@@ -372,10 +372,7 @@ object Relational {
     // identical by construction (bucket offset + within-bucket prefix
     // = the global prefix), same oracle either side.
     if (Caching.smallInput(lineitem, 1L << 20)) q20SingleLevel(lineitem)
-    else {
-      val (result, hist) = q20ApproxPercentilePlan(lineitem, buckets)
-      Caching.materializeAndRelease(result, hist)
-    }
+    else Caching.materialized(q20ApproxPercentilePlan(_, lineitem, buckets))
 
   /** The small-input shape: one flag-partitioned window directly over
     * the raw rows — row_number stands in for the cumulative count
@@ -420,12 +417,13 @@ object Relational {
       .orderBy(col("l_returnflag"))
   }
 
-  /** The un-materialized plan plus its histogram cache — split out
-    * (package-private) so PlanPinSpec can assert the two-level window
-    * shape before the checkpoint truncates the lineage.
+  /** The un-materialized plan, holding its histogram cache through
+    * `held` — split out (package-private) so PlanPinSpec can assert
+    * the two-level window shape before the checkpoint truncates the
+    * lineage.
     */
-  private[graft] def q20ApproxPercentilePlan(lineitem: DataFrame,
-      buckets: Int = 4096): (DataFrame, DataFrame) = {
+  private[graft] def q20ApproxPercentilePlan(held: Caching.Held,
+      lineitem: DataFrame, buckets: Int = 4096): DataFrame = {
     // Exact discrete percentiles from a VALUE HISTOGRAM, not Spark's
     // percentile_disc aggregate (which buffers every group member —
     // a non-starter at scale, and 4× slower here): one map-side-
@@ -448,9 +446,9 @@ object Relational {
     // partitioned by (flag, bucket) — thousands of parallel
     // value-cardinality/B-sized sorts instead of three corpus-sized
     // ones. cum = bucket offset + within-bucket prefix, exactly.
-    val hist = lineitem.groupBy(col("l_returnflag"), col("l_extendedprice"))
-      .agg(count(lit(1)).as("c"))
-      .persist() // feeds the range probe, bucket totals and the final cut
+    // feeds the range probe, bucket totals and the final cut
+    val hist = held(lineitem.groupBy(col("l_returnflag"), col("l_extendedprice"))
+      .agg(count(lit(1)).as("c")))
     // per-flag value range + total: a tiny broadcast aggregate
     val rng = broadcast(hist.groupBy(col("l_returnflag"))
       .agg(min(col("l_extendedprice")).as("mn"),
@@ -481,12 +479,11 @@ object Relational {
       .agg(expr("approx_percentile(l_extendedprice, array(0.5, 0.95), 1000)").as("pa"))
       .select(col("l_returnflag"), col("pa").getItem(0).as("p50_approx"),
         col("pa").getItem(1).as("p95_approx"))
-    (exact.join(sketches, Seq("l_returnflag"))
+    exact.join(sketches, Seq("l_returnflag"))
       .select(col("l_returnflag"), col("p50"), col("p95"),
         (abs(col("p50_approx") - col("p50")) <= col("p50") * lit(0.05)).as("p50_ok"),
         (abs(col("p95_approx") - col("p95")) <= col("p95") * lit(0.05)).as("p95_ok"))
-      .orderBy(col("l_returnflag")),
-      hist)
+      .orderBy(col("l_returnflag"))
   }
 
   /** Skew-resilient two-phase aggregation: explicit salting splits any

@@ -716,30 +716,25 @@ object TextOps {
     // epilogue costs more than the ≤3 corpus re-explodes it avoids
     // (~0.45 s flat at sf0.1, measured) — take the direct un-cached
     // plan there; identical results either side (same oracle)
-    if (Caching.smallInput(documents)) {
-      val (scored, _, _) = bigramSurprisalPlan(documents, cache = false)
-      scored
-    } else {
-      val (scored, bg, stats) = bigramSurprisalPlan(documents)
-      Caching.materializeAndRelease(scored, bg, stats)
-    }
+    if (Caching.smallInput(documents)) bigramSurprisalPlan(identity, documents)
+    else Caching.materialized(bigramSurprisalPlan(_, documents))
 
-  /** The un-materialized scoring plan plus its two caches — split out
-    * (package-private) so PlanPinSpec can assert the one-corpus-
-    * explode shape before the checkpoint truncates the lineage.
-    * `cache = false` skips both persists (the small-corpus path —
-    * the returned cache slots are then just the un-persisted frames).
+  /** The un-materialized scoring plan — split out (package-private) so
+    * PlanPinSpec can assert the one-corpus-explode shape before the
+    * checkpoint truncates the lineage. `hold` caches the bigram frame
+    * and then the stats table: a [[Caching.Held]] at scale, `identity`
+    * on the small-corpus path.
     */
-  private[graft] def bigramSurprisalPlan(
-      documents: DataFrame, cache: Boolean = true): (DataFrame, DataFrame, DataFrame) = {
-    val bg = if (cache) bigrams(documents).persist() else bigrams(documents)
-    val stats = if (cache) bigramStats(bg).persist() else bigramStats(bg)
+  private[graft] def bigramSurprisalPlan(hold: DataFrame => DataFrame,
+      documents: DataFrame): DataFrame = {
+    val bg = hold(bigrams(documents))
+    val stats = hold(bigramStats(bg))
     val model = stats.join(
       stats.groupBy(col("w1")).agg(sum(col("c12")).as("c1")), Seq("w1"))
     val vocab = stats.select(col("w1").as("w"))
       .union(stats.select(col("w2").as("w")))
       .agg(countDistinct(col("w")).as("v"))
-    val scored = bg.join(model, Seq("w1", "w2"))
+    bg.join(model, Seq("w1", "w2"))
       .crossJoin(broadcast(vocab))
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_bigrams"),
@@ -750,7 +745,6 @@ object TextOps {
         round(col("sb").cast("double") / col("n_bigrams").cast("double"), 6)
           .as("avg_bigram_bits"))
       .orderBy(col("doc_id"))
-    (scored, bg, stats)
   }
 
   /** Per-doc adjacent token pairs — a narrow map, no shuffle until

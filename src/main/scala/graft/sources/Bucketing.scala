@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** Bucketed-table support: pre-shuffle fact tables once at write time
   * so every later equi-join/aggregation on the bucket key runs
@@ -21,6 +21,4 @@ object Bucketing {
       .sortBy(bucketCol)
       .format("parquet")
       .saveAsTable(table)
-
-  def table(spark: SparkSession, name: String): DataFrame = spark.table(name)
 }

@@ -19,8 +19,8 @@ class BucketingSpec extends AnyFunSuite {
     // force a sort-merge join so the exchange question is real; the
     // join-only plan must contain zero shuffle exchanges (the later
     // groupBy on a non-bucket key legitimately shuffles once)
-    val joinOnly = Bucketing.table(spark, "lineitem_b").hint("merge")
-      .join(Bucketing.table(spark, "orders_b").hint("merge"),
+    val joinOnly = spark.table("lineitem_b").hint("merge")
+      .join(spark.table("orders_b").hint("merge"),
         col("l_orderkey") === col("o_orderkey"))
     val plan = joinOnly.queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange hashpartitioning"),
@@ -43,7 +43,7 @@ class BucketingSpec extends AnyFunSuite {
     val t = Tables(spark, TestSpark.sfDir)
     Bucketing.writeBucketed(t.events, "events_b", "user_id", 4)
     val sessions = graft.operators.EventOps.sessionGap(
-      Bucketing.table(spark, "events_b"))
+      spark.table("events_b"))
     // the user-keyed window AND the (user, session) groupBy both ride
     // the bucket partitioning — the only exchange left is the final
     // presentation orderBy (rangepartitioning), never a hash shuffle
@@ -59,7 +59,7 @@ class BucketingSpec extends AnyFunSuite {
     import graft.operators.{EventOps, Temporal}
     val t = Tables(spark, TestSpark.sfDir)
     Bucketing.writeBucketed(t.events, "events_asof_b", "user_id", 4)
-    val e = EventOps.withTsUs(Bucketing.table(spark, "events_asof_b"))
+    val e = EventOps.withTsUs(spark.table("events_asof_b"))
     val views = e.filter(col("event_type") === "view")
       .groupBy(col("user_id"), col("ts_us").as("v_us"))
       .agg(max(col("event_id")).as("v_event_id"))

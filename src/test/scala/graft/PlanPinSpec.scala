@@ -156,10 +156,11 @@ class PlanPinSpec extends AnyFunSuite {
       case a: AdaptiveSparkPlanExec => windows(a.executedPlan)
       case w: WindowExec => Seq(w)
     }.flatten
-    val (df, hist) = graft.operators.Relational.q20ApproxPercentilePlan(
-      graft.sources.Tables(spark, TestSpark.sfDir).lineitem)
-    val ws = windows(df.queryExecution.executedPlan)
-    hist.unpersist(blocking = false)
+    val held = new graft.operators.Caching.Held
+    val ws =
+      try windows(graft.operators.Relational.q20ApproxPercentilePlan(held,
+        graft.sources.Tables(spark, TestSpark.sfDir).lineitem).queryExecution.executedPlan)
+      finally held.release()
     assert(ws.nonEmpty, "expected window nodes in the q20 plan")
     // the value-ordered cumulation must carry ≥2 partition keys
     // (flag + bucket); the only window allowed a single partition key
@@ -188,8 +189,10 @@ class PlanPinSpec extends AnyFunSuite {
         case n if pf.isDefinedAt(n) => Seq(pf(n))
       }.flatten
     val docs = graft.sources.Tables(spark, TestSpark.sfDir).documents
-    val (scored, bg, stats) = graft.operators.TextOps.bigramSurprisalPlan(docs)
+    val held = new graft.operators.Caching.Held
     try {
+      val scored = graft.operators.TextOps.bigramSurprisalPlan(held, docs)
+      val bg = held.frames.head
       // bg reads its own cache; the single corpus explode lives in the
       // cached plan INSIDE the InMemoryRelation
       val bgCached = collectAll(bg.queryExecution.executedPlan) {
@@ -203,9 +206,7 @@ class PlanPinSpec extends AnyFunSuite {
       assert(collectAll(scoredPlan) { case s: InMemoryTableScanExec => s }.nonEmpty,
         s"scoring plan must read the cached frames:\n$scoredPlan")
       assert(scored.limit(1).count() >= 0) // and the pinned plan runs
-    } finally {
-      bg.unpersist(blocking = false); stats.unpersist(blocking = false)
-    }
+    } finally held.release()
   }
 
   test("dup-spans coverage never re-shuffles gram instances") {
@@ -220,13 +221,14 @@ class PlanPinSpec extends AnyFunSuite {
     // a post-checkpoint plan is a LogicalRDD scan whose shuffle count
     // is vacuously zero — the pin must read the real plan
     val docs = graft.sources.Tables(spark, TestSpark.sfDir).documents
-    val (df, grams) = graft.operators.Dedup.dupSpansPlan(docs)
+    val held = new graft.operators.Caching.Held
     try {
+      val df = graft.operators.Dedup.dupSpansPlan(held, docs)
       val n = shuffleCount(df)
       assert(n > 0 && n <= 3,
         s"dup_spans: expected 1..3 shuffle exchanges, got $n:\n" +
           df.queryExecution.sparkPlan.toString)
-    } finally grams.unpersist(blocking = false)
+    } finally held.release()
   }
 
   test("the extension's strategy and pushdown rule are registered in the session") {

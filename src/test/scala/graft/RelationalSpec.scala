@@ -149,10 +149,11 @@ class RelationalSpec extends AnyFunSuite {
     val li = graft.sources.Tables(spark, TestSpark.sfDir).lineitem
     val small = graft.operators.Relational.q20ApproxPercentile(li).collect()
       .map(_.toSeq.map(String.valueOf).mkString("|")).toSeq
-    val (twoLevel, hist) = graft.operators.Relational.q20ApproxPercentilePlan(li)
+    val held = new graft.operators.Caching.Held
     val big =
-      try twoLevel.collect().map(_.toSeq.map(String.valueOf).mkString("|")).toSeq
-      finally hist.unpersist(blocking = false)
+      try graft.operators.Relational.q20ApproxPercentilePlan(held, li).collect()
+        .map(_.toSeq.map(String.valueOf).mkString("|")).toSeq
+      finally held.release()
     assert(small == big, "single-level and two-level q20 shapes disagree")
   }
 
