@@ -336,12 +336,12 @@ object SparkEntry {
 
   /** The MinHash permutation family as a DuckDB VALUES body —
     * interpolating the exact (i, aᵢ, bᵢ) constants keeps ONE
-    * definition of the family ([[graft.expressions.MinhashSignature]])
+    * definition of the family ([[graft.expressions.MinhashTextSignature]])
     * shared by the operator, its declarative twin, and the oracle.
     */
-  private def minhashPermValues(n: Int = graft.expressions.MinhashSignature.NumPerms): String =
-    graft.expressions.MinhashSignature.permA
-      .zip(graft.expressions.MinhashSignature.permB).zipWithIndex.take(n)
+  private def minhashPermValues(n: Int = graft.expressions.MinhashTextSignature.NumPerms): String =
+    graft.expressions.MinhashTextSignature.permA
+      .zip(graft.expressions.MinhashTextSignature.permB).zipWithIndex.take(n)
       .map { case ((a, b), i) => s"($i, $a, $b)" }
       .mkString(", ")
 

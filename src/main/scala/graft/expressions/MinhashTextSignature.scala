@@ -11,25 +11,24 @@ import org.apache.spark.unsafe.types.UTF8String
   * raw text in ONE per-row codegen'd pass — the shuffle-free
   * formulation of `Dedup.minhashSignatures`.
   *
-  * The explode + aggregate formulation ([[ShingleFingerprints]] →
-  * `shiftright(h, 32)` → [[MinhashSignature]] keyed on doc_id)
-  * materializes every (doc, shingle) row through codegen and pays an
-  * ObjectHashAggregate (per-partition group table + one exchange of
-  * the partial signatures). But a MinHash signature is a PER-DOCUMENT
-  * value: `min` is insensitive to duplicate inputs, so the
-  * distinct-shingle step is unnecessary, and nothing about the
+  * The declarative reference (`Dedup.minhashSignaturesDeclarative`:
+  * shingle explode → `shiftright(h, 32)` → 128 `min(pmod(a·h + b, p))`
+  * columns keyed on doc_id) materializes every (doc, shingle) row and
+  * pays an aggregate plus one exchange. But a MinHash signature is a
+  * PER-DOCUMENT value: `min` is insensitive to duplicate inputs, so
+  * the distinct-shingle step is unnecessary, and nothing about the
   * computation needs to leave the row. This expression runs the same
   * text scan as [[ShingleFingerprints]] (split-on-' ' word
   * boundaries, 3-gram code-point folds), keeps only the P1 half of
-  * the dual-prime fingerprint (exactly the `shiftright(h, 32)` the
-  * aggregate consumes), and folds each shingle hash through all 128
-  * universal-hash permutations into a local `long[128]` min buffer.
+  * the dual-prime fingerprint (exactly `shiftright(h, 32)`), and
+  * folds each shingle hash through all 128 universal-hash
+  * permutations into a local `long[128]` min buffer.
   *
-  * Exactness contract: bit-identical to the explode + aggregate
-  * formulation for every document with ≥ 3 words (spec-checked
-  * against it); documents too short to shingle yield NULL — their
-  * absence from the aggregated signature table — so callers filter
-  * `IS NOT NULL` to reproduce the aggregate's row set exactly.
+  * Exactness contract: bit-identical to the declarative reference for
+  * every document with ≥ 3 words (spec-checked against it); documents
+  * too short to shingle, and NULL text, yield NULL — their absence
+  * from the reference's grouped table — so callers filter
+  * `IS NOT NULL` to reproduce its row set exactly.
   */
 case class MinhashTextSignature(child: Expression) extends UnaryExpression {
 
@@ -39,7 +38,7 @@ case class MinhashTextSignature(child: Expression) extends UnaryExpression {
       s"$prettyName expects string, got ${other.simpleString}")
   }
 
-  // element type matches the aggregate twin's declared output
+  // element type matches the declarative reference's array of min columns
   override def dataType: DataType = ArrayType(LongType, containsNull = true)
 
   override def nullable: Boolean = true
@@ -60,13 +59,32 @@ case class MinhashTextSignature(child: Expression) extends UnaryExpression {
 }
 
 object MinhashTextSignature {
+  val NumPerms = 128
+  val Prime = 2147483647L // 2^31 - 1 — the permutation modulus
+
+  /** The (aᵢ, bᵢ) universal-hash permutation constants, generated once
+    * from a fixed seed (java.util.Random's LCG is specified, so every
+    * JVM derives the same family). Shared with the declarative
+    * reference in [[graft.operators.Dedup]], the live gate and the SQL
+    * surface — ONE definition of the family.
+    */
+  val (permA, permB): (IndexedSeq[Long], IndexedSeq[Long]) = {
+    val rnd = new scala.util.Random(42)
+    val pairs = IndexedSeq.fill(NumPerms)(
+      (rnd.nextInt(Int.MaxValue - 1).toLong + 1, rnd.nextInt(Int.MaxValue).toLong))
+    (pairs.map(_._1), pairs.map(_._2))
+  }
+  // array views for the per-row fold below
+  private val permAArr: Array[Long] = permA.toArray
+  private val permBArr: Array[Long] = permB.toArray
+
   private final val Mul = 1000003L
   private final val P1 = 2147483647L // 2^31 - 1 — the shingle hash prime
   private final val Space = ' '.toInt
 
   /** Shared by eval and generated code — one definition of the scan.
     * Returns null for texts with fewer than three words (no shingle —
-    * the document is absent from the aggregated signature table).
+    * the document is absent from the declarative reference's table).
     */
   def compute(s: String): ArrayData = {
     val n = s.length
@@ -84,10 +102,10 @@ object MinhashTextSignature {
       i += 1
     }
     ends(w) = n
-    val permA = MinhashSignature.permAArr
-    val permB = MinhashSignature.permBArr
-    val prime = MinhashSignature.Prime
-    val mins = new Array[Long](MinhashSignature.NumPerms)
+    val pa = permAArr
+    val pb = permBArr
+    val prime = Prime
+    val mins = new Array[Long](NumPerms)
     java.util.Arrays.fill(mins, prime)
     var g = 0
     while (g < words - 2) {
@@ -110,7 +128,7 @@ object MinhashTextSignature {
       // h < 2^31 and a < 2^31, so a*h + b < 2^63 — exact, no overflow
       var k = 0
       while (k < mins.length) {
-        val x = Math.floorMod(permA(k) * h + permB(k), prime)
+        val x = Math.floorMod(pa(k) * h + pb(k), prime)
         if (x < mins(k)) mins(k) = x
         k += 1
       }

@@ -12,14 +12,15 @@ import org.apache.spark.sql.types.{DataType, LongType, StringType}
   * sum over the document's own words, so nothing about the
   * computation needs to leave the row: no word explode, no aggregate,
   * NO SHUFFLE — the signature table computes inside the parquet scan
-  * stage, which is the 100 TB shape (round 8; the explode +
-  * [[SimhashSignature]] aggregate stays as the spec's parity twin).
+  * stage, which is the 100 TB shape (round 8).
   *
-  * Exactness contract, bit-for-bit with the aggregate path
-  * (spec-checked): tokens are the elements of `split(text, ' ')` with
-  * Spark's limit −1 semantics — consecutive separators yield empty
-  * tokens, a trailing separator yields a trailing empty token, and
-  * the empty string yields one empty token — and each token hashes as
+  * Exactness contract, bit-for-bit with the declarative reference
+  * `Dedup.simhashSignaturesDeclarative` (word explode + 64
+  * conditional sums; spec-checked): tokens are the elements of
+  * `split(text, ' ')` with Spark's limit −1 semantics — consecutive
+  * separators yield empty tokens, a trailing separator yields a
+  * trailing empty token, and the empty string yields one empty
+  * token — and each token hashes as
   * [[RollingFingerprint]] of the salted `"xq" + token` (the salt fold
   * is precomputed; segment code points fold on top of it without
   * materializing per-token strings). Votes are

@@ -431,8 +431,8 @@ object Dedup {
     * built by the SHUFFLE-FREE per-row expressions straight off the
     * document scan (round 13): signature
     * ([[graft.expressions.MinhashTextSignature]], spec-pinned
-    * bit-identical to the MinhashSignature aggregate over
-    * shiftright(h, 32)), the sorted fingerprint array
+    * bit-identical to the declarative reference
+    * [[minhashSignaturesDeclarative]]), the sorted fingerprint array
     * ([[graft.expressions.ShingleFingerprints]] emits ascending
     * distinct fps — exactly sort_array(collect_list(h)) of the
     * exploded table) and the distinct-shingle count. The previous
@@ -446,7 +446,7 @@ object Dedup {
     * exchanges were the corpus-sized terms (measured cost-neutral at
     * sf0.1 on the stratified path: 0.37 s aggregate vs 0.375 s
     * per-row). Short docs (< 3 words) yield NULL signatures and are
-    * filtered, reproducing the aggregate's row set exactly.
+    * filtered, reproducing the reference's row set exactly.
     */
   private def docSignatures(docs: DataFrame): DataFrame = {
     import org.apache.spark.sql.graftinternal.ColumnBridge.{column, expression}
@@ -1091,7 +1091,7 @@ object Dedup {
       .orderBy(col("eval_id"), col("train_id"))
   }
 
-  private val MinhashPrime = graft.expressions.MinhashSignature.Prime
+  private val MinhashPrime = graft.expressions.MinhashTextSignature.Prime
 
   /** The 31-bit shingle/token base hash feeding MinHash: the h1
     * component of [[graft.expressions.RollingFingerprint]] (fp =
@@ -1121,13 +1121,12 @@ object Dedup {
     * signature with no explode, no aggregate and NO SHUFFLE — a
     * signature is a per-document value and `min` is
     * duplicate-insensitive, so nothing about the computation needs to
-    * leave the row. Bit-identical to the previous explode + fused
-    * MinhashSignature aggregate ([[minhashSignaturesAgg]], kept as
-    * the spec's parity twin along with the declarative 128-min-column
-    * [[minhashSignaturesDeclarative]]); short docs yield NULL from
-    * the expression and are filtered to reproduce the aggregate's
-    * row set. This is the 100 TB shape — the signature table
-    * computes inside the parquet scan stage.
+    * leave the row. Bit-identical to the declarative 128-min-column
+    * reference [[minhashSignaturesDeclarative]] (spec-checked); short
+    * docs and NULL text yield NULL from the expression and are
+    * filtered to reproduce the reference's row set. This is the
+    * 100 TB shape — the signature table computes inside the parquet
+    * scan stage.
     */
   def minhashSignatures(documents: DataFrame): DataFrame = {
     import org.apache.spark.sql.graftinternal.ColumnBridge.{column, expression}
@@ -1138,28 +1137,13 @@ object Dedup {
       .filter(col("mh").isNotNull)
   }
 
-  /** The explode + fused-aggregate twin of [[minhashSignatures]] —
-    * bit-identical results (spec-checked); kept as a parity oracle
-    * and as the shape the fps-table paths still use (they need the
-    * exploded fingerprints anyway).
-    */
-  private[graft] def minhashSignaturesAgg(documents: DataFrame): DataFrame = {
-    import org.apache.spark.sql.graftinternal.ColumnBridge.{column, expression}
-    // fused shingling; the 31-bit base hash is the fingerprint's top
-    // half — the same value shingleHash31 derives (spec-checked twin)
-    val tri = shingleFps(documents)
-      .select(col("doc_id"), shiftright(col("h"), 32).as("h"))
-    tri.groupBy(col("doc_id"))
-      .agg(column(graft.expressions.MinhashSignature(expression(col("h")))
-        .toAggregateExpression()).as("mh"))
-  }
-
-  /** The declarative 128-min-column twin of [[minhashSignatures]] —
-    * bit-identical results (spec-checked); kept as the parity oracle.
+  /** The declarative 128-min-column reference for
+    * [[minhashSignatures]] — bit-identical results (spec-checked); the
+    * specs' parity oracle.
     */
   private[graft] def minhashSignaturesDeclarative(documents: DataFrame): DataFrame = {
-    val perms = graft.expressions.MinhashSignature.permA
-      .zip(graft.expressions.MinhashSignature.permB)
+    val perms = graft.expressions.MinhashTextSignature.permA
+      .zip(graft.expressions.MinhashTextSignature.permB)
     val tri = shingles(documents).withColumn("h", shingleHash31(col("g")))
     val minCols = perms.zipWithIndex.map { case ((a, b), i) =>
       min(pmod(lit(a) * col("h") + lit(b), lit(MinhashPrime))).as(s"m$i")
@@ -1327,9 +1311,9 @@ object Dedup {
   def bloomShingleFilter(documents: DataFrame, nSeen: Long = 250,
       mBits: Int = 131072, k: Int = 4): DataFrame = {
     require(Integer.bitCount(mBits) == 1, "mBits must be a power of two")
-    require(k <= graft.expressions.MinhashSignature.NumPerms, "not enough perms")
-    val perms = graft.expressions.MinhashSignature.permA
-      .zip(graft.expressions.MinhashSignature.permB).take(k)
+    require(k <= graft.expressions.MinhashTextSignature.NumPerms, "not enough perms")
+    val perms = graft.expressions.MinhashTextSignature.permA
+      .zip(graft.expressions.MinhashTextSignature.permB).take(k)
     // fused shingling; position hashing uses the fingerprint's 31-bit
     // top half (= the oracle's single-prime fold), the distinct-
     // shingle identity stays the full 62-bit fingerprint
@@ -1580,11 +1564,9 @@ object Dedup {
     * with no word explode, no aggregate and NO SHUFFLE — a signature
     * is a per-document value, so nothing about the computation needs
     * to leave the row (the [[minhashSignatures]] move, round 8).
-    * Bit-identical to the explode + fused [[simhashSignaturesAgg]]
-    * aggregate (spec-checked), which stays as the parity twin along
-    * with the declarative 64-conditional-sum
-    * [[simhashSignaturesDeclarative]]. NULL text yields no row,
-    * mirroring the aggregate's empty-group absence.
+    * Bit-identical to the declarative 64-conditional-sum reference
+    * [[simhashSignaturesDeclarative]] (spec-checked). NULL text yields
+    * no row, mirroring the reference's empty-group absence.
     */
   def simhashSignatures(documents: DataFrame): DataFrame = {
     import org.apache.spark.sql.graftinternal.ColumnBridge.{column, expression}
@@ -1595,22 +1577,9 @@ object Dedup {
       .filter(col("sim").isNotNull)
   }
 
-  /** The explode + fused-aggregate twin of [[simhashSignatures]] —
-    * bit-identical results (spec-checked); kept as a parity oracle.
-    */
-  private[graft] def simhashSignaturesAgg(documents: DataFrame): DataFrame = {
-    import org.apache.spark.sql.graftinternal.ColumnBridge.{column, expression}
-    documents
-      .select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
-      .withColumn("h", saltedTokenHash(col("w")))
-      .groupBy(col("doc_id"))
-      .agg(column(graft.expressions.SimhashSignature(expression(col("h")))
-        .toAggregateExpression()).as("sim"))
-  }
-
-  /** The declarative 64-conditional-sum twin of [[simhashSignatures]]
-    * — bit-identical results (spec-checked); kept as the parity
-    * oracle.
+  /** The declarative 64-conditional-sum reference for
+    * [[simhashSignatures]] — bit-identical results (spec-checked); the
+    * specs' parity oracle.
     */
   private[graft] def simhashSignaturesDeclarative(documents: DataFrame): DataFrame = {
     val words = documents

@@ -26,7 +26,6 @@ private[operators] object H264 {
   /** MSB-first bit reader over an unescaped RBSP. */
   private final class BitReader(data: Array[Byte]) {
     private var pos = 0
-    def bitsLeft: Int = data.length * 8 - pos
     def bit(): Int = {
       if (pos >= data.length * 8) throw new IllegalArgumentException("rbsp underrun")
       val b = (data(pos >> 3) >> (7 - (pos & 7))) & 1

@@ -742,8 +742,7 @@ object Multimodal {
     * metadata transform pattern — the real pixel work would live in
     * the decode stub.
     */
-  def resizeMeta(records: Dataset[MMRecord], maxDim: Int = 256)
-      (implicit spark: SparkSession): DataFrame =
+  def resizeMeta(records: Dataset[MMRecord], maxDim: Int = 256): DataFrame =
     records.toDF().select(
       col("doc_id"), col("format"), col("width"), col("height"),
       when(greatest(col("width"), col("height")) <= maxDim, col("width"))

@@ -103,16 +103,14 @@ object DocPipelineJobs {
     * operator keeps the min-doc_id canonical per hash and counts its
     * batch duplicates; a stream has no global order, so the live
     * contract is FIRST-SEEN-survives with no dup count — the same
-    * divergence [[dedupCleanStream]] documents. With `dedupTtl =
-    * Some((tsCol, delay))` the within-stream state is
-    * watermark-bounded; with None it holds every new hash seen (only
-    * safe for bounded replays — production compacts survivors into
-    * the static index and restarts the stream, which is exactly the
-    * incremental-crawl cycle this operator models).
+    * divergence [[dedupCleanStream]] documents. The within-stream
+    * dedup state holds every new hash seen, which is safe for bounded
+    * replays: production compacts survivors into the static index and
+    * restarts the stream, which is exactly the incremental-crawl cycle
+    * this operator models.
     */
   def incrementalGateStream(stream: DataFrame, storedIndex: DataFrame,
-      minWords: Int = 5, maxStopRatio: Double = 0.5,
-      dedupTtl: Option[(String, String)] = None): DataFrame = {
+      minWords: Int = 5, maxStopRatio: Double = 0.5): DataFrame = {
     // the static side of a stream-static join is RE-PLANNED every
     // micro-batch, so an un-materialized distinct here would
     // re-shuffle the whole corpus-sized index per batch. Eagerly
@@ -129,12 +127,7 @@ object DocPipelineJobs {
     val fresh = TextOps.cleanScored(stream, minWords, maxStopRatio)
       .join(graft.operators.Caching.materialize(
         storedIndex.select(col("h")).distinct()), Seq("h"), "left_anti")
-    val deduped = dedupTtl match {
-      case Some((tsCol, delay)) =>
-        fresh.withWatermark(tsCol, delay).dropDuplicatesWithinWatermark("h")
-      case None => fresh.dropDuplicates("h")
-    }
-    deduped.select(col("doc_id"), col("h"), col("n_words"))
+    fresh.dropDuplicates("h").select(col("doc_id"), col("h"), col("n_words"))
   }
 
   /** Live DSIR importance scoring with a FROZEN trained model: the
@@ -417,10 +410,10 @@ object DocPipelineJobs {
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     require(Integer.bitCount(mBits) == 1 && mBits >= 64,
       "mBits must be a power of two >= 64")
-    require(k <= graft.expressions.MinhashSignature.NumPerms, "not enough perms")
-    val perms = graft.expressions.MinhashSignature.permA
-      .zip(graft.expressions.MinhashSignature.permB).take(k)
-    val prime = graft.expressions.MinhashSignature.Prime
+    require(k <= graft.expressions.MinhashTextSignature.NumPerms, "not enough perms")
+    val perms = graft.expressions.MinhashTextSignature.permA
+      .zip(graft.expressions.MinhashTextSignature.permB).take(k)
+    val prime = graft.expressions.MinhashTextSignature.Prime
     val spark = stream.sparkSession
     import spark.implicits._
     stream

@@ -324,8 +324,7 @@ object EventStreamJobs {
     * checkpointed and partitioned like any keyed agg. Run in Complete
     * mode for the full registry view or Update mode for deltas.
     */
-  def organizeStream(events: Dataset[LiveEvent], nStreams: Int = 4)
-      (implicit spark: SparkSession): DataFrame =
+  def organizeStream(events: Dataset[LiveEvent], nStreams: Int = 4): DataFrame =
     events.toDF()
       .withColumn("stream",
         concat(lit("stream_"), pmod(col("user_id"), lit(nStreams)).cast("string")))

@@ -507,25 +507,25 @@ class DedupSpec extends AnyFunSuite {
     assert(row.getLong(2) == row.getLong(3))
   }
 
-  test("fused minhash aggregate equals the declarative 128-min-column twin") {
+  test("per-row minhash signature equals the declarative 128-min-column reference") {
     val rnd = new scala.util.Random(2468)
     val vocab = Vector("alpha", "beta", "gamma", "delta", "eps", "zeta")
     val docsDf = (1L to 20L).map(i =>
       (i, Seq.fill(8 + rnd.nextInt(30))(vocab(rnd.nextInt(vocab.size))).mkString(" ")))
       .toDF("doc_id", "text")
-    val fused = Dedup.minhashSignatures(docsDf).collect()
+    val perRow = Dedup.minhashSignatures(docsDf).collect()
       .map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
     val declarative = Dedup.minhashSignaturesDeclarative(docsDf).collect()
       .map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
-    assert(fused.keySet == declarative.keySet)
-    fused.keySet.foreach(id => assert(fused(id) == declarative(id), s"doc $id"))
+    assert(perRow.keySet == declarative.keySet)
+    perRow.keySet.foreach(id => assert(perRow(id) == declarative(id), s"doc $id"))
   }
 
-  test("per-row text signature equals the explode+aggregate twin on edge docs") {
+  test("per-row minhash signature equals the declarative reference on edge docs") {
     // duplicate shingles (min is duplicate-insensitive), consecutive
-    // spaces (split keeps empty tokens), a non-BMP code point, and
-    // short docs that must be ABSENT (the expression NULLs, the
-    // aggregate simply has no group)
+    // spaces (split keeps empty tokens), a non-BMP code point, an
+    // all-identical group, and short or NULL docs that must be ABSENT
+    // (the expression NULLs, the reference simply has no group)
     val docsDf = Seq(
       (1L, base),
       (2L, base + " " + base), // heavy shingle duplication
@@ -533,17 +533,18 @@ class DedupSpec extends AnyFunSuite {
       (4L, "emoji 😃 tail words here"),
       (5L, "two words"),       // < 3 words: absent from both
       (6L, ""),                // empty text: absent from both
-      (7L, "x y z")).toDF("doc_id", "text")
+      (7L, "x y z"),
+      (8L, null: String),      // NULL text: absent from both
+      (9L, distinct1), (10L, distinct1), (11L, distinct1)) // identical docs
+      .toDF("doc_id", "text")
     val perRow = Dedup.minhashSignatures(docsDf).collect()
       .map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
-    val agg = Dedup.minhashSignaturesAgg(docsDf).collect()
+    val declarative = Dedup.minhashSignaturesDeclarative(docsDf).collect()
       .map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
-    assert(perRow.keySet == agg.keySet && !perRow.keySet.contains(5L)
-      && !perRow.keySet.contains(6L))
-    perRow.keySet.foreach(id => assert(perRow(id) == agg(id), s"doc $id"))
-    // doc 2's signature equals doc 1's on the duplicated-content part?
-    // No — doc 2 has extra joining shingles; just pin doc 7 is present
-    assert(perRow.contains(7L))
+    assert(perRow.keySet == declarative.keySet)
+    assert(perRow.keySet == Set(1L, 2L, 3L, 4L, 7L, 9L, 10L, 11L))
+    perRow.keySet.foreach(id => assert(perRow(id) == declarative(id), s"doc $id"))
+    assert(perRow(9L) == perRow(10L) && perRow(10L) == perRow(11L))
   }
 
   test("graft_band_hashes equals the interpreted transform+aggregate fold") {
@@ -571,20 +572,20 @@ class DedupSpec extends AnyFunSuite {
     assert(e.getSeq[Any](2)(1) == null) // short signature: tail band null
   }
 
-  test("fused simhash aggregate equals the declarative 64-sum twin") {
+  test("per-row simhash signature equals the declarative 64-sum reference") {
     val rnd = new scala.util.Random(1357)
     val vocab = Vector("alpha", "beta", "gamma", "delta", "eps", "zeta")
     val docsDf = (1L to 20L).map(i =>
       (i, Seq.fill(3 + rnd.nextInt(40))(vocab(rnd.nextInt(vocab.size))).mkString(" ")))
       .toDF("doc_id", "text")
-    val fused = Dedup.simhashSignaturesAgg(docsDf).collect()
+    val perRow = Dedup.simhashSignatures(docsDf).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     val declarative = Dedup.simhashSignaturesDeclarative(docsDf).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(fused == declarative)
+    assert(perRow == declarative)
   }
 
-  test("per-row simhash expression equals the explode+aggregate twin, incl. split edge cases") {
+  test("per-row simhash signature equals the declarative reference on split edge cases") {
     val rnd = new scala.util.Random(8642)
     val vocab = Vector("alpha", "beta", "gamma", "delta", "eps", "zeta")
     val random = (1L to 20L).map(i =>
@@ -592,17 +593,21 @@ class DedupSpec extends AnyFunSuite {
     // split(text, ' ') limit -1 semantics the per-row scan must
     // reproduce: empty string -> one empty token; consecutive spaces
     // -> empty tokens between; trailing space -> trailing empty
-    // token; non-ASCII incl. an astral (surrogate-pair) code point
+    // token; non-ASCII incl. an astral (surrogate-pair) code point;
+    // NULL text (no row on either side) and an all-identical group
     val edges = Seq(
       (100L, ""), (101L, " "), (102L, "a  b"), (103L, "a b "),
       (104L, " a"), (105L, "über café"), (106L, "x😀y z"),
-      (107L, "single"))
+      (107L, "single"), (108L, null: String),
+      (109L, distinct2), (110L, distinct2), (111L, distinct2))
     val docsDf = (random ++ edges).toDF("doc_id", "text")
     val perRow = Dedup.simhashSignatures(docsDf).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val agg = Dedup.simhashSignaturesAgg(docsDf).collect()
+    val declarative = Dedup.simhashSignaturesDeclarative(docsDf).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(perRow == agg)
+    assert(perRow == declarative)
+    assert(perRow.keySet == (1L to 20L).toSet ++ (100L to 107L) ++ (109L to 111L))
+    assert(perRow(109L) == perRow(110L) && perRow(110L) == perRow(111L))
   }
 
   test("minhash signatures are 128 wide and deterministic across plans") {
@@ -778,7 +783,7 @@ class DedupSpec extends AnyFunSuite {
     // (doc_id, ci, cj, band_idx, band_hash) row must match exactly,
     // including the partner-class eligibility gating and the gap-0
     // small-role rows routing to the LARGE side.
-    import org.apache.spark.sql.functions.{col, explode, floor, least, lit, log2, posexplode, size}
+    import org.apache.spark.sql.functions.{col, explode, floor, log2, posexplode, size}
     import org.apache.spark.sql.graftinternal.ColumnBridge.{column, expression}
     val rnd = new scala.util.Random(11)
     val vocab = (0 until 30).map(i => s"w$i")

@@ -465,7 +465,6 @@ class MultimodalSpec extends AnyFunSuite {
   }
 
   test("multi-index pairer equals the banded pairer exactly, incl. planted near-pairs") {
-    implicit val s = spark
     import spark.implicits._
     val rnd = new scala.util.Random(42)
     // random 64-bit hashes + planted pairs at every distance 0..4
@@ -494,7 +493,6 @@ class MultimodalSpec extends AnyFunSuite {
   }
 
   test("phashStrategy picks banded on uncorrelated hashes, MIH on clustered ones") {
-    implicit val s = spark
     import spark.implicits._
     val rnd = new scala.util.Random(7)
     // uncorrelated: 64-bit random hashes — band buckets ~singleton,

@@ -61,7 +61,6 @@ class StreamBatchParitySpec extends AnyFunSuite {
   }
 
   test("organize twin: complete-mode table equals the batch per-(stream, type) pivot") {
-    implicit val s = spark
     val in = newFeed()
     val live = replay(EventStreamJobs.organizeStream(in.toDS()), "complete", "par_org")
       .map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getLong(3), r.getLong(4)))
@@ -125,7 +124,6 @@ class StreamBatchParitySpec extends AnyFunSuite {
 
   test("journeys twin: final per-user paths aggregate to the batch journey counts") {
     implicit val s = spark
-    import spark.implicits._
     val in = newFeed()
     val rows = replay(EventStreamJobs.journeyStream(in.toDS()), "update", "par_jrn")
       .map(r => (r.getLong(0), r.getString(1)))

@@ -234,7 +234,6 @@ class StreamingSpec extends AnyFunSuite {
 
   test("live organize view converges to the batch per-(stream, type) pivot") {
     import spark.implicits._
-    implicit val s = spark
     implicit val sqlCtx = spark.sqlContext
     val in = MemoryStream[LiveEvent]
     val q = EventStreamJobs.organizeStream(in.toDS())
@@ -582,37 +581,6 @@ class StreamingSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
-  test("fused minhash aggregate computes live signatures equal to the batch operator") {
-    import spark.implicits._
-    import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.graftinternal.ColumnBridge.{column, expression}
-    implicit val sqlCtx = spark.sqlContext
-    val t1 = "spark engines shuffle partitions across executors tonight again"
-    val t2 = "broadcast small dimension tables for colocated joins today"
-    val in = MemoryStream[(Long, String)]
-    // the same shingle → custom-aggregate shape as
-    // Dedup.minhashSignatures (sharing Dedup.shingles, so this stays
-    // the real batch pipeline), in update mode: each micro-batch
-    // refines the per-doc signature
-    val sigs = graft.operators.Dedup.shingles(in.toDF().toDF("doc_id", "text"))
-      .withColumn("h", graft.operators.Dedup.shingleHash31(col("g")))
-      .groupBy(col("doc_id"))
-      .agg(column(graft.expressions.MinhashSignature(expression(col("h")))
-        .toAggregateExpression()).as("mh"))
-    val q = sigs.writeStream.format("memory").queryName("minhash_live")
-      .outputMode("update").start()
-    try {
-      in.addData((1L, t1), (2L, t2))
-      q.processAllAvailable()
-      val live = spark.table("minhash_live").collect()
-        .map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
-      val batch = graft.operators.Dedup.minhashSignatures(
-        Seq((1L, t1), (2L, t2)).toDF("doc_id", "text"))
-        .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
-      assert(live == batch)
-    } finally q.stop()
-  }
-
   test("watermarked streaming dedup bounds state and still drops in-window dups") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
@@ -735,8 +703,8 @@ class StreamingSpec extends AnyFunSuite {
       val rows = spark.table("mh_gate").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
       // the copy is flagged against doc 1 with estimated Jaccard 1.0 —
-      // which also proves the per-row streaming signature is
-      // bit-identical to the batch groupBy aggregate's
+      // which also proves the live signature is bit-identical to the
+      // batch signature table's
       assert(rows.exists(t => t._1 == 100L && t._2 == 1L && t._3 == 1.0))
       // nothing else flagged, and exactly one row per flagged pair
       assert(rows.forall(_._1 == 100L))

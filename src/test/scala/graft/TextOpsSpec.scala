@@ -132,7 +132,6 @@ class TextOpsSpec extends AnyFunSuite {
   }
 
   test("pii redaction counts and strips planted emails, phones and IPs") {
-    import org.apache.spark.sql.functions.col
     // doc 42 gets planted user42@mail.example.com, +1-555-0142-0042, 10.42.0.1;
     // the text itself carries one extra email and one extra ip
     val d = docs((42L, "reach me at someone@corp.example.org or 192.168.1.10 ok", "en"))
