@@ -112,21 +112,26 @@ object Tables {
     * subdirectories included) and the inference confs must equal
     * those it was inferred from. Anything else — an overwrite (new
     * part-file names), an append, a file added under a partition
-    * directory, a flipped conf — infers again. The listing is a plain
-    * Hadoop `listFiles` on the driver and never launches a job; it
-    * repeats the listing Spark's file index then does, a cost that
-    * grows with the table's file count, not its size.
+    * directory, a flipped conf — infers again. The listing is a
+    * recursive Hadoop `listStatus` walk on the driver (on a file path
+    * it returns the file itself) and never launches a job; it repeats
+    * the listing Spark's file index then does, a cost that grows with
+    * the table's file count, not its size. It is not `listFiles`:
+    * that wraps each file in a `LocatedFileStatus`, which reads the
+    * file's permission and owner, and without Hadoop's native library
+    * the local file system starts an `ls -ld` per file for that
+    * (16–21 ms against 0.3–0.4 ms for a 5-file directory).
     */
   def parquet(spark: SparkSession, path: String): DataFrame = {
     val p = new Path(path)
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
     val files = {
-      val it = fs.listFiles(p, true)
       val b = Vector.newBuilder[(String, Long, Long)]
-      while (it.hasNext) {
-        val f = it.next()
-        b += ((f.getPath.toString, f.getLen, f.getModificationTime))
+      def walk(q: Path): Unit = fs.listStatus(q).foreach { f =>
+        if (f.isDirectory) walk(f.getPath)
+        else b += ((f.getPath.toString, f.getLen, f.getModificationTime))
       }
+      walk(p)
       b.result().sorted
     }
     val fp: Fingerprint = (files, InferenceConfs.map(spark.conf.getOption))

@@ -11,15 +11,12 @@ import org.apache.spark.sql.SparkSession
 /** One shared local session for all suites (cheap to reuse, slow to boot). */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession
-      .builder()
+    val s = GraftSession.builder()
       .master("local[4]")
       .appName("graft-test")
       .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
