@@ -128,7 +128,7 @@ object Dedup {
     Caching.materialized { held =>
       val tri = held(shingleFps(documents))
       val sizes = tri.groupBy(col("doc_id")).agg(count(lit(1)).as("s"))
-      jaccardVerify(shingleCountJoin(tri), sizes, tauNum, tauDenom)
+      jaccardVerify(joinSizes(shingleCountJoin(tri), sizes), tauNum, tauDenom)
     }
 
   /** The count-join's candidate body over a fingerprint table
@@ -387,36 +387,38 @@ object Dedup {
     // against the full doc universe; oversized pairs re-enter via the
     // fallback union), so joining cands back would be an identity
     // join shuffling the candidate set once more for nothing
-    candVerifiedOnDocs(docSignatures(documents), bandedCandidatesOnDocs(_, rows, bands))(
-      jaccardVerify(_, _, tauNum, tauDenom))
+    candVerifiedOnDocs(docSignatures(documents),
+      sigs => (bandedCandidatesOnDocs(sigs, rows, bands), anyOversized(sigs)))(
+      jaccardVerify(_, tauNum, tauDenom))
 
   /** The generator-agnostic body of the verified paths: holds the
     * per-doc table `perDoc`, which MUST carry (doc_id, s, hs) — the
     * distinct-shingle count and the ascending-sorted fingerprint array
-    * ([[docSignatures]]) — and the candidate pairs `candGen` builds
-    * from it. Threshold sizes, verification arrays and the oversize
-    * probe all read that one columnar cache — the round-13 shape with
-    * zero corpus-sized exchanges outside the candidate join itself.
+    * ([[docSignatures]]). `candGen` builds the candidate pairs from
+    * that held table and says whether any document may exceed
+    * [[MaxMergeArrayLen]] (the banded generator asks [[anyOversized]],
+    * the stratified one reads its corpus probe's max(s)). Verification
+    * arrays and sizes come from ONE (doc_id, hs, s) projection of the
+    * cache per pair side, so `verify` gets (doc1, doc2, inter, s1, s2)
+    * with no further join — zero corpus-sized exchanges outside the
+    * candidate join itself. The candidate frame is not held: every
+    * branch of [[pairIntersectionsOnArrays]] reads it once.
     */
-  private def candVerifiedOnDocs(perDoc: DataFrame, candGen: DataFrame => DataFrame)(
-      verify: (DataFrame, DataFrame) => DataFrame): DataFrame =
+  private def candVerifiedOnDocs(perDoc: DataFrame,
+      candGen: DataFrame => (DataFrame, Boolean))(
+      verify: DataFrame => DataFrame): DataFrame =
     Caching.materialized { held =>
       val sigs = held(perDoc)
-      val cands = held(candGen(sigs))
-      val sizes = sigs.select(col("doc_id"), col("s"))
-      // oversize probe on the per-doc cache (first materialization of
-      // a cache every later stage reads anyway): with no doc above the
-      // cap, pairIntersectionsOnArrays skips its guard apparatus
-      val mayBig = anyOversized(sigs)
-      val docArr = sigs.select(col("doc_id"), col("hs"))
-      // exact verification via the shared sorted-merge counter
-      verify(pairIntersectionsOnArrays(held, cands, docArr, mayHaveOversized = mayBig),
-        sizes)
+      val (cands, mayBig) = candGen(sigs)
+      verify(pairIntersectionsOnArrays(held, cands,
+        sigs.select(col("doc_id"), col("hs"), col("s")), mayHaveOversized = mayBig))
     }
 
   /** Whether any document's distinct-shingle count `s` exceeds
-    * [[MaxMergeArrayLen]] — the oversize probe of the per-row-cache
-    * verified paths. ONE aggregate job, not filter(...).isEmpty: an
+    * [[MaxMergeArrayLen]] — the oversize probe of the banded generator
+    * and [[minhashEstEval]], which have no corpus probe of their own to
+    * read it from (the stratified generator takes it from
+    * [[corpusProbe]]). ONE aggregate job, not filter(...).isEmpty: an
     * (almost always) empty-result limit probe runs CollectLimit's
     * incremental partition batches, and with AQE inside a
     * not-yet-materialized cache each batch re-ran the upstream work
@@ -439,8 +441,8 @@ object Dedup {
     * shape ran a corpus-sized doc_id exchange for the signature
     * aggregate and TWO more for the sizes and verification-array
     * aggregates downstream; one columnar cache (readers prune
-    * columns) now serves band bucketing (mh), threshold sizes (s), the
-    * sorted-merge verification arrays (hs) and the oversize probe (s).
+    * columns) now serves band bucketing (mh), the verification side of
+    * each pair (hs, s) and the oversize decision (s).
     * This is [[minhashSignatures]]' round-11 per-row move extended to
     * the whole verified family — at 100 TB the three removed
     * exchanges were the corpus-sized terms (measured cost-neutral at
@@ -502,32 +504,36 @@ object Dedup {
       tauDenom: Int = 100): DataFrame = Caching.materialized { held =>
     val tri = held(shingleFps(documents))
     val sizes = tri.groupBy(col("doc_id")).agg(count(lit(1)).as("s"))
-    containmentVerify(shingleCountJoin(tri), sizes, tauNum, tauDenom)
+    containmentVerify(joinSizes(shingleCountJoin(tri), sizes), tauNum, tauDenom)
   }
 
-  /** The exact Jaccard verifier the count-join and the banded-LSH
-    * paths feed: takes (doc1, doc2, inter) pair counts, joins sizes,
-    * applies the integer-arithmetic threshold and emits the
-    * (doc1, doc2, inter, s1, s2) contract.
+  /** Attaches both sides' sizes `sizes` (doc_id, s) to (doc1, doc2,
+    * inter) pair counts as s1, s2 — the verifiers' input for the
+    * count-join callers, whose pairs come without the per-doc sizes
+    * that [[pairIntersectionsOnArrays]] carries along.
     */
-  private def jaccardVerify(pairs: DataFrame, sizes: DataFrame,
-      tauNum: Int, tauDenom: Int): DataFrame =
+  private def joinSizes(pairs: DataFrame, sizes: DataFrame): DataFrame =
     pairs
       .join(sizes.select(col("doc_id").as("doc1"), col("s").as("s1")), Seq("doc1"))
       .join(sizes.select(col("doc_id").as("doc2"), col("s").as("s2")), Seq("doc2"))
+
+  /** The exact Jaccard verifier the count-join and the banded-LSH
+    * paths feed: takes (doc1, doc2, inter, s1, s2) pairs, applies the
+    * integer-arithmetic threshold and emits the
+    * (doc1, doc2, inter, s1, s2) contract.
+    */
+  private def jaccardVerify(pairs: DataFrame, tauNum: Int, tauDenom: Int): DataFrame =
+    pairs
       .filter(col("inter") * tauDenom >= (col("s1") + col("s2") - col("inter")) * tauNum)
       .select(col("doc1"), col("doc2"), col("inter"), col("s1"), col("s2"))
       .orderBy(col("doc1"), col("doc2"))
 
-  /** The exact containment verifier both candidate generators feed:
-    * takes (doc1, doc2, inter) pair counts, joins sizes, applies the
+  /** The exact containment verifier every candidate generator feeds:
+    * takes (doc1, doc2, inter, s1, s2) pairs, applies the
     * integer-arithmetic threshold and emits the scored-pair contract.
     */
-  private def containmentVerify(pairs: DataFrame, sizes: DataFrame,
-      tauNum: Int, tauDenom: Int): DataFrame =
+  private def containmentVerify(pairs: DataFrame, tauNum: Int, tauDenom: Int): DataFrame =
     pairs
-      .join(sizes.select(col("doc_id").as("doc1"), col("s").as("s1")), Seq("doc1"))
-      .join(sizes.select(col("doc_id").as("doc2"), col("s").as("s2")), Seq("doc2"))
       // integer threshold arithmetic — no float compare in the cut
       .filter(col("inter") * tauDenom >= least(col("s1"), col("s2")) * tauNum)
       .select(col("doc1"), col("doc2"), col("inter"), col("s1"), col("s2"),
@@ -632,9 +638,9 @@ object Dedup {
       .distinct()
     // verification arrays: ascending-h sort of the SAME per-doc arrays
     // (array_sort re-orders the rarest-first ranking in memory — no
-    // extra corpus shuffle for the sorted-merge verifier's input)
-    val docArr = docSets.select(col("doc_id"), array_sort(col("harr")).as("hs"))
-    val sizes = docSets.select(col("doc_id"), col("s"))
+    // extra corpus shuffle for the sorted-merge verifier's input),
+    // with the sizes riding along on the same pair-side joins
+    val docArr = docSets.select(col("doc_id"), array_sort(col("harr")).as("hs"), col("s"))
     // NO oversize pre-probe here, deliberately (round 13): any
     // construction-time materialization of docSets — limit probe OR a
     // one-job max() — measured ~2–6× on this operator at sf1 (9.9 s
@@ -645,8 +651,7 @@ object Dedup {
     // isNull probe) stays — its cost measured nil here (9.9 s with vs
     // 10.5 s without), unlike the per-row-cache paths where the
     // probed fast path ships (candVerifiedOnDocs).
-    containmentVerify(pairIntersectionsOnArrays(held, cands, docArr),
-      sizes, tauNum, tauDenom)
+    containmentVerify(pairIntersectionsOnArrays(held, cands, docArr), tauNum, tauDenom)
   }
 
   /** DEFAULT per-doc candidate budget for the stratified generator
@@ -747,13 +752,14 @@ object Dedup {
     */
   private[graft] val MinArmRecall = 0.5
 
-  /** The stratified generator's corpus probe: two bounded
-    * driver-side reads of the caller-persisted fingerprint table —
-    * the ≤64-row size-class histogram and one (count, approx vocab)
-    * aggregate.
+  /** The stratified generator's corpus statistics: the size-class
+    * histogram `hist` (≤ 64 classes), the shingle occurrence count
+    * `occ` = Σ s, the approximate vocabulary `vocab` (clamped to ≥ 1),
+    * the largest document's shingle count `maxS` and what the arm
+    * geometry derives from them.
     */
   private[graft] final case class CorpusProbe(hist: Map[Int, Long],
-      nDocs: Long, sBar: Double, occ: Long, vocab: Long, jBg: Double) {
+      nDocs: Long, sBar: Double, occ: Long, vocab: Long, jBg: Double, maxS: Long) {
     /** Cross-class document-pair count at size-class gap `g`. */
     def pairsAtGap(g: Int): Double =
       if (g == 0) hist.values.map(n => n.toDouble * (n - 1) / 2).sum
@@ -761,39 +767,65 @@ object Dedup {
         n.toDouble * hist.getOrElse(c + g, 0L).toDouble }.sum
   }
 
-  /** Probe a per-doc (size `s`, class `cls`) table — the signature
-    * aggregate inside the operator, or any frame with those columns.
+  /** The [[CorpusProbe]] both probe reads build from their measured
+    * statistics.
     */
-  private[graft] def corpusProbe(sized: DataFrame, tri: DataFrame): CorpusProbe = {
-    val hist = sized.groupBy(col("cls")).agg(count(lit(1)).as("n"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    val r = tri.agg(count(lit(1)).as("occ"),
-      approx_count_distinct(col("h")).as("v")).head()
-    val (occ, vocab) = (r.getLong(0), math.max(r.getLong(1), 1L))
+  private def corpusProbeOf(hist: Map[Int, Long], occ: Long, approxVocab: Long,
+      maxS: Long): CorpusProbe = {
+    val vocab = math.max(approxVocab, 1L)
     val nDocs = hist.values.sum
     val sBar = if (nDocs == 0) 0.0 else occ.toDouble / nDocs
     // E|A∩B| of a random pair ≈ s̄²/V; jBg = E∩ / (2s̄ − E∩)
     val eInter = math.min(sBar * sBar / vocab, sBar)
     val jBg = math.max(1e-12,
       math.min(0.999, eInter / math.max(2 * sBar - eInter, 1e-9)))
-    CorpusProbe(hist, nDocs, sBar, occ, vocab, jBg)
+    CorpusProbe(hist, nDocs, sBar, occ, vocab, jBg, maxS)
   }
 
-  /** [[corpusProbe]] from a raw fingerprint table (doc_id, h);
-    * derives the per-doc size/class frame exactly as the operator's
-    * signature aggregate does.
+  /** Probes the held per-doc table (doc_id, hs, s, cls) of
+    * [[stratifiedPerDoc]] with ONE grouped query: `rollup(cls)` over
+    * the exploded fingerprint arrays gives each class's document count
+    * (its rows at position 0) and, in the grand-total row, Σ s, max(s)
+    * and approx_count_distinct(h). The table holds exactly the shingle
+    * set a re-shingling scan of the raw text sees (a doc below three
+    * words has an empty `hs` and a NULL signature, so it is filtered
+    * out having contributed nothing), and HLL++ depends only on that
+    * set, so the result equals [[corpusProbeOnFps]] on the same corpus
+    * bit for bit (spec-pinned). Empty input may yield no grand-total
+    * row at all; that reads as an empty corpus.
     */
-  private[graft] def corpusProbeOnFps(tri: DataFrame): CorpusProbe =
-    corpusProbe(
-      tri.groupBy(col("doc_id")).agg(count(lit(1)).as("s"))
-        .withColumn("cls", floor(log2(col("s"))).cast("int")),
-      tri)
+  private[graft] def corpusProbe(perDoc: DataFrame): CorpusProbe = {
+    val (total, perClass) = perDoc
+      .select(col("cls"), col("s"), posexplode(col("hs")).as(Seq("pos", "h")))
+      .rollup(col("cls"))
+      .agg(grouping(col("cls")), count(when(col("pos") === 0, 1)),
+        count(lit(1)), max(col("s")), approx_count_distinct(col("h")))
+      .collect().partition(_.getByte(1) == 1)
+    val hist = perClass.map(r => r.getInt(0) -> r.getLong(2)).toMap
+    total.headOption match {
+      case Some(t) => corpusProbeOf(hist, t.getLong(3), t.getLong(5), t.getLong(4))
+      case None => corpusProbeOf(hist, 0L, 0L, 0L)
+    }
+  }
+
+  /** The reference for [[corpusProbe]] from a raw fingerprint table
+    * (doc_id, h): two separate reads — the per-class histogram over
+    * the per-doc sizes, and one (count, approx vocab) aggregate over
+    * the fingerprints.
+    */
+  private[graft] def corpusProbeOnFps(tri: DataFrame): CorpusProbe = {
+    val perClass = tri.groupBy(col("doc_id")).agg(count(lit(1)).as("s"))
+      .groupBy(floor(log2(col("s"))).cast("int"))
+      .agg(count(lit(1)), max(col("s"))).collect()
+    val r = tri.agg(count(lit(1)), approx_count_distinct(col("h"))).head()
+    corpusProbeOf(perClass.map(c => c.getInt(0) -> c.getLong(1)).toMap,
+      r.getLong(0), r.getLong(1), perClass.map(_.getLong(2)).maxOption.getOrElse(0L))
+  }
 
   /** Size-stratified banded candidates for CONTAINMENT — the dense-
     * regime generator whose recall is containment-shaped, not
     * Jaccard-shaped, over the held per-doc table `sigs`
-    * ([[docSignatures]] plus its size class `cls`; the
-    * [[candVerifiedOnDocs]] protocol).
+    * ([[stratifiedPerDoc]]; the [[candVerifiedOnDocs]] protocol).
     *
     * The fixed symmetric banding ((6, 21) at τ_J ≈ 0.8) provably
     * misses the embedded-document pairs containment exists for: a
@@ -814,11 +846,14 @@ object Dedup {
     * role)); the bucket join keys on (class pair, band, hash), so
     * collisions beyond true pairs are governed by the measured
     * background similarity, which the arm selection bounds to
-    * [[StratifiedCandBudgetPerDoc]]·n expected rows. Two bounded
-    * driver-side probes at construction (the class histogram — ≤ 64
-    * rows — and one (count, approx vocab) aggregate over the
-    * fingerprints) parameterize the geometry; both read the
-    * caller-persisted table, same precedent as [[jaccardStrategy]].
+    * [[StratifiedCandBudgetPerDoc]]·n expected rows. ONE bounded
+    * driver-side probe query at construction ([[corpusProbe]]: the
+    * class histogram — ≤ 64 rows — plus Σ s, max(s) and the approx
+    * vocabulary) parameterizes the geometry and decides whether the
+    * oversize guard of [[pairIntersectionsOnArrays]] is needed (the
+    * returned flag); it reads the caller-persisted table and is that
+    * cache's first materialization, same precedent as
+    * [[jaccardStrategy]].
     *
     * Honest limits, logged at construction: pairs more than `maxGap`
     * classes apart are not provisioned (the lossless
@@ -827,22 +862,14 @@ object Dedup {
     * recall.
     */
   private def stratifiedCandidatesOnDocs(sigs: DataFrame,
-      docs: DataFrame, tauNum: Int, tauDenom: Int, maxGap: Int, bandBudget: Int,
-      candBudgetPerDoc: Long): DataFrame = {
+      tauNum: Int, tauDenom: Int, maxGap: Int, bandBudget: Int,
+      candBudgetPerDoc: Long): (DataFrame, Boolean) = {
     import org.apache.spark.sql.graftinternal.ColumnBridge.{column, expression}
     require(maxGap >= 0 && bandBudget >= 1 && bandBudget <= 128,
       s"maxGap=$maxGap, bandBudget=$bandBudget out of range")
     require(candBudgetPerDoc >= 1,
       s"candBudgetPerDoc must be >= 1, got $candBudgetPerDoc")
-    // bounded probes ([[corpusProbe]]): the ≤64-row class histogram
-    // (which also materializes the signature cache every emission
-    // branch re-reads) and the corpus background-similarity estimate
-    // — the occurrence/vocabulary aggregate reads a per-row
-    // re-shingling scan (one pass, no shuffle, no cache) instead of
-    // an exploded fingerprint table
-    val probe = corpusProbe(sigs, docs.select(
-      explode(column(graft.expressions.ShingleFingerprints(
-        expression(col("text"))))).as("h")))
+    val probe = corpusProbe(sigs)
     import probe.{hist, jBg, nDocs, pairsAtGap}
     val tau = tauNum.toDouble / tauDenom
     val picked = stratifiedArms(tau, maxGap, bandBudget, jBg, pairsAtGap,
@@ -889,7 +916,7 @@ object Dedup {
             armSpec, occupiedMask, asSmall))).as("e"))
         .select(col("doc_id"), col("e.ci").as("ci"), col("e.cj").as("cj"),
           col("e.band_idx").as("band_idx"), col("e.band_hash").as("band_hash"))
-    if (arms.isEmpty) {
+    val cands = if (arms.isEmpty) {
       // every arm dropped (a corpus whose background similarity
       // swamps even gap 0): no sub-quadratic candidates exist —
       // surface an empty candidate set, never a silent n² join
@@ -909,6 +936,7 @@ object Dedup {
           greatest(col("doc_a"), col("doc_b")).as("doc2"))
         .distinct()
     }
+    (cands, probe.maxS > MaxMergeArrayLen)
   }
 
   /** Containment pairs over the size-stratified banded generator —
@@ -925,11 +953,17 @@ object Dedup {
   def containmentStratified(documents: DataFrame, tauNum: Int = 80,
       tauDenom: Int = 100, maxGap: Int = 5, bandBudget: Int = 64,
       candBudgetPerDoc: Long = StratifiedCandBudgetPerDoc): DataFrame =
-    candVerifiedOnDocs(
-      docSignatures(documents).withColumn("cls", floor(log2(col("s"))).cast("int")),
-      stratifiedCandidatesOnDocs(_, documents, tauNum, tauDenom, maxGap,
-        bandBudget, candBudgetPerDoc))(
-      containmentVerify(_, _, tauNum, tauDenom))
+    candVerifiedOnDocs(stratifiedPerDoc(documents),
+      stratifiedCandidatesOnDocs(_, tauNum, tauDenom, maxGap, bandBudget,
+        candBudgetPerDoc))(
+      containmentVerify(_, tauNum, tauDenom))
+
+  /** [[docSignatures]] plus each document's size class
+    * `cls` = ⌊log₂ s⌋ — the per-doc table [[containmentStratified]]
+    * holds and [[corpusProbe]] reads.
+    */
+  private[graft] def stratifiedPerDoc(documents: DataFrame): DataFrame =
+    docSignatures(documents).withColumn("cls", floor(log2(col("s"))).cast("int"))
 
   /** Adaptive containment: the [[jaccardStrategy]] probe dispatches —
     * dense vocabulary (count-join candidate mass beyond
@@ -987,10 +1021,13 @@ object Dedup {
     */
   private[graft] val MaxMergeArrayLen = 1 << 16
 
-  /** The body over pre-built per-doc sorted arrays `(doc_id, hs)` —
-    * shared with [[containmentPairsLsh]], whose doc-set aggregation
-    * already holds the arrays (re-sorting in memory beats a second
-    * corpus shuffle).
+  /** Exact |A ∩ B| for each candidate pair `cands` (doc1, doc2) over
+    * pre-built per-doc sorted arrays `docArr` (doc_id, hs, s), emitted
+    * as (doc1, doc2, inter, s1, s2): each pair side is ONE lookup that
+    * brings the array and the size together — shared by the
+    * verified paths ([[candVerifiedOnDocs]]), [[containmentPairsLsh]],
+    * whose doc-set aggregation already holds the arrays (re-sorting in
+    * memory beats a second corpus shuffle), and [[minhashEstEval]].
     *
     * Mega-document guard: docs above [[MaxMergeArrayLen]] ship a NULL
     * array into the candidate joins (never their multi-MB payload);
@@ -1001,7 +1038,7 @@ object Dedup {
     * (an earlier length-table split fed the candidate generator into
     * three branches, re-running the probe join per branch — measured
     * ~2× the whole containment-LSH operator at sf0.1). The
-    * intermediate persists (24-byte rows, candidate-count-sized); the
+    * intermediate persists (40-byte rows, candidate-count-sized); the
     * null pairs re-verify through the exact explode-count shape (row
     * width constant regardless of document size); and the fallback
     * branch is SKIPPED driver-side when no pair is oversized, so the
@@ -1014,6 +1051,19 @@ object Dedup {
   private def pairIntersectionsOnArrays(held: Caching.Held, cands: DataFrame,
       docArr: DataFrame, mayHaveOversized: Boolean = true): DataFrame = {
     import org.apache.spark.sql.graftinternal.ColumnBridge.{column, expression}
+    // one (doc_id, hs, s) lookup per pair side: the sizes ride along
+    // with the arrays, so the verifiers join nothing further
+    def intersections(arr: DataFrame): DataFrame = {
+      def side(i: Int) = arr.select(col("doc_id").as(s"doc$i"), col("hs").as(s"hs$i"),
+        col("s").as(s"s$i"))
+      cands.select(col("doc1"), col("doc2"))
+        .join(side(1), Seq("doc1"))
+        .join(side(2), Seq("doc2"))
+        .select(col("doc1"), col("doc2"),
+          column(graft.expressions.SortedIntersectCount(
+            expression(col("hs1")), expression(col("hs2")))).as("inter"),
+          col("s1"), col("s2"))
+    }
     // Fast path (round 13): when the caller has already proved from
     // its per-doc sizes that NO document exceeds the cap (the
     // overwhelmingly common case), the whole guard apparatus —
@@ -1023,24 +1073,12 @@ object Dedup {
     // join runs exactly once, lazily, inside the final plan. Output
     // identical by construction: with no oversized doc the capped
     // array IS the array and the fallback branch was provably empty.
-    if (!mayHaveOversized)
-      return cands.select(col("doc1"), col("doc2"))
-        .join(docArr.select(col("doc_id").as("doc1"), col("hs").as("hs1")), Seq("doc1"))
-        .join(docArr.select(col("doc_id").as("doc2"), col("hs").as("hs2")), Seq("doc2"))
-        .select(col("doc1"), col("doc2"),
-          column(graft.expressions.SortedIntersectCount(
-            expression(col("hs1")), expression(col("hs2")))).as("inter"))
-    val capped = docArr.select(col("doc_id"),
-      when(size(col("hs")) <= MaxMergeArrayLen, col("hs")).as("hs"))
-    val inter0 = held(cands.select(col("doc1"), col("doc2"))
-      .join(capped.select(col("doc_id").as("doc1"), col("hs").as("hs1")), Seq("doc1"))
-      .join(capped.select(col("doc_id").as("doc2"), col("hs").as("hs2")), Seq("doc2"))
-      .select(col("doc1"), col("doc2"),
-        column(graft.expressions.SortedIntersectCount(
-          expression(col("hs1")), expression(col("hs2")))).as("inter")))
+    if (!mayHaveOversized) return intersections(docArr)
+    val inter0 = held(intersections(docArr.select(col("doc_id"),
+      when(size(col("hs")) <= MaxMergeArrayLen, col("hs")).as("hs"), col("s"))))
     val merged = inter0.filter(col("inter").isNotNull)
     val oversized = inter0.filter(col("inter").isNull)
-      .select(col("doc1"), col("doc2"))
+      .select(col("doc1"), col("doc2"), col("s1"), col("s2"))
     // the `oversized.isEmpty` probe runs a Spark job at operator-
     // CONSTRUCTION time (the driver-side small-side check)
     if (oversized.isEmpty) merged else {
@@ -1054,7 +1092,7 @@ object Dedup {
       val exploded = oversized
         .join(ex.select(col("doc_id").as("doc1"), col("h")), Seq("doc1"))
         .join(ex.select(col("doc_id").as("doc2"), col("h")), Seq("doc2", "h"))
-        .groupBy(col("doc1"), col("doc2"))
+        .groupBy(col("doc1"), col("doc2"), col("s1"), col("s2"))
         .agg(count(lit(1)).as("inter"))
       merged.unionByName(exploded)
     }
@@ -1225,10 +1263,10 @@ object Dedup {
       val sizes = perDoc.select(col("doc_id"), col("s"))
       // exact intersections via the shared sorted-merge verifier — one
       // row per candidate pair, no pair×shingle explosion
-      val inter = pairIntersectionsOnArrays(held, cands,
-        perDoc.select(col("doc_id"), col("hs")), mayHaveOversized = anyOversized(perDoc))
+      val inter = pairIntersectionsOnArrays(held, cands, perDoc,
+        mayHaveOversized = anyOversized(perDoc))
       cands
-        .join(inter, Seq("doc1", "doc2"), "left")
+        .join(inter.select(col("doc1"), col("doc2"), col("inter")), Seq("doc1", "doc2"), "left")
         .join(sizes.select(col("doc_id").as("doc1"), col("s").as("s1")), Seq("doc1"))
         .join(sizes.select(col("doc_id").as("doc2"), col("s").as("s2")), Seq("doc2"))
         .withColumn("inter", coalesce(col("inter"), lit(0L)))

@@ -151,6 +151,28 @@ class DedupSpec extends AnyFunSuite {
       s"fixture too small: $sBig / $sNear shingles")
   }
 
+  test("mega-document guard on the stratified path: the probe's max(s) selects the fallback, identical output") {
+    // the stratified generator takes its oversize decision from the
+    // corpus probe's max(s), not from a probe job of its own: two
+    // near-identical docs above MaxMergeArrayLen must still go through
+    // the guard (its isEmpty probe runs inside pairIntersectionsOnArrays)
+    // and verify exactly as the direct count-join does
+    val rnd = new scala.util.Random(13)
+    val bigWords = (0 until 70000).map(i => s"k${i}_${rnd.nextInt(3)}")
+    val big = bigWords.mkString(" ")
+    val bigNear = (bigWords.take(69000) ++ Seq("zzq", "yyq")).mkString(" ")
+    val corpus = docs(1L -> big, 2L -> bigNear, 3L -> distinct1)
+    val probe = Dedup.corpusProbe(Dedup.stratifiedPerDoc(corpus))
+    assert(probe.maxS > Dedup.MaxMergeArrayLen, s"fixture too small: max(s) = ${probe.maxS}")
+    val (strat, jobs) = TestSpark.jobsDuring(
+      Dedup.containmentStratified(corpus).collect().map(_.toSeq).toSeq)
+    val direct = Dedup.containmentPairs(corpus).collect().map(_.toSeq).toSeq
+    assert(strat == direct)
+    assert(strat.map(r => (r(0), r(1))) == Seq((1L, 2L)))
+    assert(jobs.exists(_.contains("pairIntersectionsOnArrays")),
+      s"no guard job ran:\n${jobs.mkString("\n--\n")}")
+  }
+
   test("containment threshold cuts pairs below tau") {
     // ~half of distinct1's shingles shared → containment ≈ 0.5 < 0.8 cut
     val halfOverlap = {
@@ -858,6 +880,36 @@ class DedupSpec extends AnyFunSuite {
       assert(graft.expressions.StratBandEmit
         .compute(shortMh, 3, Array(0, 2, 23), 1L << 4, asSmall).numElements() == 0)
     sigs.unpersist()
+  }
+
+  test("one-query corpus probe equals the two-read reference on short, NULL and empty inputs") {
+    val rnd = new scala.util.Random(5)
+    val vocab = (0 until 20).map(i => s"v$i")
+    def randDoc(n: Int) = (0 until n).map(_ => vocab(rnd.nextInt(vocab.size))).mkString(" ")
+    val mixed = docs((Seq(1L -> base, 2L -> nearDup, 3L -> distinct1, 4L -> distinct2,
+      5L -> "too short", 6L -> "", 7L -> (null: String), 8L -> "a b", 9L -> "a  b",
+      10L -> (base + " " + distinct1 + " " + distinct2)) ++
+      (11L to 80L).map(i => i -> randDoc(3 + rnd.nextInt(60)))): _*)
+    val empty = mixed.limit(0)
+    val allShort = docs(1L -> "too short", 2L -> (null: String), 3L -> "", 4L -> "x")
+    def check(d: DataFrame): Dedup.CorpusProbe = {
+      val probe = Dedup.corpusProbe(Dedup.stratifiedPerDoc(d))
+      val ref = Dedup.corpusProbeOnFps(Dedup.shingleFps(d))
+      assert(probe.hist == ref.hist)
+      assert(probe.nDocs == ref.nDocs)
+      assert(probe.occ == ref.occ)
+      assert(probe.vocab == ref.vocab)
+      assert(probe.jBg == ref.jBg)
+      assert(probe.maxS == ref.maxS)
+      probe
+    }
+    val p = check(mixed)
+    assert(p.nDocs > 70 && p.hist.size > 1, s"fixture drifted: $p")
+    for (d <- Seq(empty, allShort)) {
+      val q = check(d)
+      assert(q.nDocs == 0 && q.occ == 0 && q.vocab == 1 && q.maxS == 0 && q.hist.isEmpty)
+      assert(Dedup.containmentStratified(d).collect().isEmpty)
+    }
   }
 
   test("stratified containment finds the embedded doc on a DENSE corpus") {

@@ -36,4 +36,18 @@ class JobCountSpec extends AnyFunSuite {
         s"$q re-inferred a table schema on a warm session:\n${inference.mkString("\n--\n")}")
     }
   }
+
+  test("a warm session builds dd_containment_strat_budget in at most 10 jobs") {
+    // the stratified containment path's construction-time probes are
+    // one grouped query over the held per-doc table, its oversize
+    // decision comes from that query's max(s), and each pair side is
+    // one (hs, s) lookup. Before that shape the same build launched 17
+    // jobs (separate class-histogram, occurrence/vocabulary and max(s)
+    // queries, and four per-side lookups); a reintroduced probe or
+    // lookup job fails here, though every result would stay correct
+    val q = "dd_containment_strat_budget"
+    SparkEntry.queries(q)(spark, TestSpark.sfDir) // warms the session
+    val (_, jobs) = TestSpark.jobsDuring(SparkEntry.queries(q)(spark, TestSpark.sfDir))
+    assert(jobs.size <= 10, s"$q launched ${jobs.size} jobs:\n${jobs.mkString("\n--\n")}")
+  }
 }
