@@ -919,9 +919,12 @@ object Dedup {
     val cands = if (arms.isEmpty) {
       // every arm dropped (a corpus whose background similarity
       // swamps even gap 0): no sub-quadratic candidates exist —
-      // surface an empty candidate set, never a silent n² join
-      log.warn("containmentStratified: ALL arms dropped — emitting no " +
-        "candidates. Use containmentPairsLsh (lossless) or raise the budget.")
+      // surface an empty candidate set, never a silent n² join. An
+      // empty or all-short corpus lands here too with nothing
+      // dropped: it has no class pair at all, so nothing to warn of
+      if (dropped.nonEmpty)
+        log.warn("containmentStratified: ALL arms dropped — emitting no " +
+          "candidates. Use containmentPairsLsh (lossless) or raise the budget.")
       sigs.select(col("doc_id").as("doc1"), col("doc_id").as("doc2"))
         .filter(lit(false))
     } else {

@@ -1,5 +1,13 @@
 package graft
 
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.logging.log4j.LogManager
+import org.apache.logging.log4j.core.{LogEvent, Logger}
+import org.apache.logging.log4j.core.appender.AbstractAppender
+import org.apache.logging.log4j.core.config.Property
 import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -22,6 +30,26 @@ class DedupSpec extends AnyFunSuite {
 
   private def docs(texts: (Long, String)*): DataFrame =
     texts.toDF("doc_id", "text")
+
+  /** Runs `body`; returns it with every message the Dedup logger
+    * emitted meanwhile at the session's level (WARN).
+    */
+  private def dedupLog[T](body: => T): (T, Seq[String]) = {
+    val logger = LogManager.getLogger(Dedup.getClass.getName).asInstanceOf[Logger]
+    val seen = new ConcurrentLinkedQueue[String]
+    val appender = new AbstractAppender("dedup-spec", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = seen.add(e.getMessage.getFormattedMessage)
+    }
+    appender.start()
+    logger.addAppender(appender)
+    try {
+      val out = body
+      (out, seen.asScala.toSeq)
+    } finally {
+      logger.removeAppender(appender)
+      appender.stop()
+    }
+  }
 
   test("incremental dedup kills index hits, keeps one canonical per batch hash") {
     val d = docs(
@@ -908,7 +936,16 @@ class DedupSpec extends AnyFunSuite {
     for (d <- Seq(empty, allShort)) {
       val q = check(d)
       assert(q.nDocs == 0 && q.occ == 0 && q.vocab == 1 && q.maxS == 0 && q.hist.isEmpty)
-      assert(Dedup.containmentStratified(d).collect().isEmpty)
+      // no arm is dropped on a corpus with no class pair, so the
+      // "ALL arms dropped" warning must not fire (the sentinel shows
+      // the appender hears the Dedup logger)
+      val (pairs, warned) = dedupLog {
+        org.slf4j.LoggerFactory.getLogger(Dedup.getClass).warn("dedup-spec sentinel")
+        Dedup.containmentStratified(d).collect()
+      }
+      assert(pairs.isEmpty)
+      assert(warned.contains("dedup-spec sentinel"))
+      assert(!warned.exists(_.contains("ALL arms dropped")), warned)
     }
   }
 
