@@ -304,7 +304,7 @@ object SparkEntry {
     // structure as a dHash) lets DuckDB re-derive the hashes AND
     // brute-force all pairs ≤ 3 bits — proving the 4×16-bit banding's
     // exact-recall claim against an engine with no banding at all.
-    // The image/audio decode front-ends stay spec-verified (pixel
+    // The image decode front-end stays spec-verified (pixel
     // codecs can't run in SQL); this pins everything downstream of
     // the hash column.
     "mm_phash_pairs" -> ((s, dir) => {
@@ -450,8 +450,8 @@ object SparkEntry {
   /** The trained IVF coarse quantizer as DuckDB VALUES rows of
     * (cluster_id, 64-double list literal), and the trained PQ codebook
     * as (s, cc, subDim-double list literal) rows. Training is
-    * deterministic and driver-side ([[Similarity.ivfTrain]] /
-    * [[Similarity.pqTrain]]), so the model constants interpolate into
+    * deterministic and driver-side ([[Similarity.ivfTrain]] and
+    * Similarity's PQ Lloyd), so the model constants interpolate into
     * the oracle exactly like the LSH planes: ONE model shared by
     * operator and oracle, with assignment, routing, ADC scan and
     * ranking all re-derived independently in SQL.

@@ -30,9 +30,6 @@ private[graft] object Caching {
       df
     }
 
-    /** The held frames, in the order they were held. */
-    def frames: Seq[DataFrame] = held.toSeq
-
     /** Unpersists every held frame without waiting for its blocks. */
     def release(): Unit = held.foreach(_.unpersist(blocking = false))
   }

@@ -86,18 +86,6 @@ object Dedup {
       .orderBy(col("doc_id"))
   }
 
-  /** The stored hash index a crawl maintains — [[incrementalDedup]]'s
-    * index derivation as a standalone (same shared cleanScored
-    * prefix), for callers that persist the index across runs and for
-    * the streaming twin
-    * ([[graft.streaming.DocPipelineJobs.incrementalGateStream]]),
-    * which anti-joins a live feed against exactly this table.
-    */
-  def incrementalIndex(documents: DataFrame, minWords: Int = 5,
-      maxStopRatio: Double = 0.5): DataFrame =
-    graft.operators.TextOps.cleanScored(documents, minWords, maxStopRatio)
-      .select(col("h")).distinct()
-
   /** Exact dedup: hash-groupBy on md5 of the text. Emitting every
     * group (not just dups) doubles as an md5-parity check against the
     * oracle; the key is uniform so the shuffle cannot skew.

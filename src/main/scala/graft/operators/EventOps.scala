@@ -668,7 +668,7 @@ object EventOps {
     * purchase picks up the most recent preceding view of the same
     * user via the custom [[graft.plans.AsofJoinExec]] operator
     * ([[Temporal.asofBackwardExec]] — the declarative
-    * [[Temporal.asofBackward]] is the spec's cross-check). View ties
+    * [[Temporal.asofBackwardDeclarative]] is the spec's cross-check). View ties
     * per (user, ts) pre-aggregate to the max event_id so the match is
     * deterministic; unmatched purchases surface with −1 (hash-stable
     * null encoding).

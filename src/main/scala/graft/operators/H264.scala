@@ -18,8 +18,8 @@ package graft.operators
   * framing, emulation-prevention unescape, exp-Golomb, SPS/PPS/slice
   * headers, macroblock walk, 4:2:0 plane assembly, cropping, YUV→RGB.
   * Non-I_PCM macroblocks and CABAC streams return None and the row
-  * takes the declared histogram-stub lane, exactly like any other
-  * out-of-baseline payload.
+  * takes the undecodable lane, exactly like any other out-of-baseline
+  * payload.
   */
 private[operators] object H264 {
 

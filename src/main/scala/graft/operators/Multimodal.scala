@@ -8,24 +8,18 @@ final case class MMRecord(
     doc_id: Long, content: Array[Byte], format: String,
     width: Int, height: Int, n_frames: Int)
 
-/** A decoded feature row produced by the (stubbed) decoder. */
-final case class MMFeatures(
-    doc_id: Long, format: String, n_bytes: Int, features: Array[Double])
-
 /** Multimodal-column plumbing (SURVEY.md §2.3): image/audio/video as
-  * opaque `binary` columns with typed metadata, decoded per partition
-  * in batches.
+  * opaque `binary` columns with typed metadata, processed per
+  * partition at scan parallelism.
   *
-  * The Spark-side plumbing — schema, partitioning, batch shape — is
-  * real, and so are the image/audio codecs: hand-written byte
-  * parsers for BMP/PNG/WAV plus the stock-JDK `javax.imageio` JPEG
-  * reader. Only mp4 frame content takes the clearly-marked
-  * deterministic histogram STUB (no JVM mp4 codec exists in this
-  * container; its box metadata is still parsed for real — see
-  * [[mp4Meta]]). On a real cluster the stub body is the only thing
-  * that changes: swap `fakeDecode` for a JNI/FFI codec call and the
-  * operator is unchanged — batching amortizes per-batch codec setup
-  * exactly like an Arrow-batched pandas UDF would.
+  * The image codecs are real: hand-written byte parsers for BMP and
+  * PNG, the stock-JDK `javax.imageio` JPEG reader, and the first
+  * keyframe of JPEG-coded and I_PCM `avc1` mp4 tracks (see
+  * [[mp4FramePixels]]). [[imagePixels]] sniffs the container and
+  * hands every consumer — the perceptual hash and the live phash
+  * gate — one top-down packed-RGB grid. mp4 box metadata is parsed
+  * for real ([[mp4Meta]]); entropy-coded video frames have no codec
+  * here and those rows take the undecodable lane.
   */
 object Multimodal {
 
@@ -44,43 +38,22 @@ object Multimodal {
       (col("doc_id") % 480 + 48).cast("int").as("height"),
       (col("doc_id") % 120 + 1).cast("int").as("n_frames"))
 
-  /** Typed view for the partition-wise decode path. */
+  /** Typed view for the partition-wise pixel and metadata paths. */
   def records(documents: DataFrame)(implicit spark: SparkSession): Dataset[MMRecord] = {
     import spark.implicits._
     attachBinary(documents).as[MMRecord]
   }
 
-  /** STUB deterministic "decode": an 8-bin byte histogram, L1
-    * normalized — stands in for feature extraction for the one format
-    * with no in-container codec (mp4 frame content) and for payloads
-    * no codec recognizes. Deterministic per input, so specs can
-    * assert exact values.
-    */
-  private[operators] def fakeDecode(r: MMRecord): MMFeatures = {
-    val bins = new Array[Double](8)
-    r.content.foreach(b => bins((b & 0xff) / 32) += 1.0)
-    val total = math.max(1.0, r.content.length.toDouble)
-    MMFeatures(r.doc_id, r.format, r.content.length, bins.map(_ / total))
-  }
-
-  /** REAL pure-JVM decoder: uncompressed 24-bit BMP (BITMAPINFOHEADER,
+  /** REAL pure-JVM BMP parse: uncompressed 24-bit (BITMAPINFOHEADER,
     * BI_RGB, bottom-up, 4-byte row padding — the baseline every BMP
-    * writer emits). Parses the actual byte layout: pixel-array offset
+    * writer emits). Reads the actual byte layout: pixel-array offset
     * at 10, width/height at 18/22, bpp at 28, compression at 30;
-    * pixels are BGR triples. Features: [meanR, meanG, meanB,
-    * meanLuma] in 0–1 plus [width, height, nPixels, 2.0] (codec tag).
-    * Returns None for any shape this baseline doesn't cover (other
-    * bpp, compressed, truncated) — the caller falls back, as a real
-    * pipeline routes unsupported codecs to a fallback lane.
-    */
-  private[operators] def decodeBmp(r: MMRecord): Option[MMFeatures] =
-    bmpPixels(r).map { case (w, h, px) => rgbFeatures(r, w, h, px, 2.0) }
-
-  /** The BMP byte parse, exposed as a packed-RGB pixel grid in
+    * pixels are BGR triples. Returns a packed-RGB pixel grid in
     * **top-down row-major order** (positive biHeight means the file
     * stores rows bottom-up; the flip is normalized here so every
-    * pixel consumer — feature means, perceptual hash — sees the same
-    * orientation regardless of container).
+    * pixel consumer sees the same orientation regardless of
+    * container), or None for any shape this baseline doesn't cover
+    * (other bpp, compressed, truncated).
     */
   private[operators] def bmpPixels(r: MMRecord): Option[(Int, Int, Array[Int])] = {
     val c = r.content
@@ -127,109 +100,15 @@ object Multimodal {
     Some((width, absH, px))
   }
 
-  /** Shared feature epilogue over a packed-RGB grid: channel means +
-    * luma mean in 0–1, then the [w, h, nPixels, codecTag] block — the
-    * contract both image decoders emit.
-    */
-  private def rgbFeatures(r: MMRecord, w: Int, h: Int, px: Array[Int],
-      tag: Double): MMFeatures = {
-    var (sr, sg, sb2, sl) = (0.0, 0.0, 0.0, 0.0)
-    var i = 0
-    while (i < px.length) {
-      val p = px(i)
-      val rr = (p >> 16) & 0xff; val g = (p >> 8) & 0xff; val b = p & 0xff
-      sr += rr; sg += g; sb2 += b
-      sl += 0.299 * rr + 0.587 * g + 0.114 * b
-      i += 1
-    }
-    val n = w.toDouble * h
-    MMFeatures(r.doc_id, r.format, r.content.length, Array(
-      sr / n / 255.0, sg / n / 255.0, sb2 / n / 255.0, sl / n / 255.0,
-      w.toDouble, h.toDouble, n, tag))
-  }
-
-  /** REAL pure-JVM decoder: RIFF/WAVE PCM 16-bit. Walks the chunk list
-    * (id + little-endian size, word-aligned) to the `fmt ` and `data`
-    * chunks, then folds the signed-16 samples once. Features:
-    * [mean, rms, zeroCrossRate, maxAbs] of amplitude normalized by
-    * 32768, plus [nSamples, sampleRate, nChannels, 3.0] (codec tag).
-    * None for non-PCM / non-16-bit / malformed — fallback lane.
-    */
-  private[operators] def decodeWav(r: MMRecord): Option[MMFeatures] =
-    wavSamples(r).map { case (sampleRate, nChannels, s) =>
-      var (sum, sumSq, maxAbs) = (0.0, 0.0, 0.0)
-      var crossings = 0L; var prevNeg = false; var first = true
-      var i = 0
-      while (i < s.length) {
-        val v = s(i)
-        sum += v; sumSq += v * v
-        if (math.abs(v) > maxAbs) maxAbs = math.abs(v)
-        val neg = v < 0
-        if (!first && neg != prevNeg) crossings += 1
-        prevNeg = neg; first = false
-        i += 1
-      }
-      MMFeatures(r.doc_id, r.format, r.content.length, Array(
-        sum / s.length, math.sqrt(sumSq / s.length),
-        if (s.length > 1) crossings.toDouble / (s.length - 1) else 0.0, maxAbs,
-        s.length.toDouble, sampleRate.toDouble, nChannels.toDouble, 3.0))
-    }
-
-  /** The WAV chunk walk, exposed as normalized [-1, 1) samples —
-    * the audio analog of [[bmpPixels]]/[[pngPixels]], shared by the
-    * feature decoder and the acoustic fingerprint.
-    */
-  private[operators] def wavSamples(r: MMRecord): Option[(Int, Int, Array[Double])] = {
-    val c = r.content
-    if (c.length < 44) return None
-    def tag(off: Int) = new String(c, off, 4, java.nio.charset.StandardCharsets.US_ASCII)
-    if (tag(0) != "RIFF" || tag(8) != "WAVE") return None
-    val bb = java.nio.ByteBuffer.wrap(c).order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    var off = 12
-    var fmtOk = false; var nChannels = 0; var sampleRate = 0
-    var dataOff = -1; var dataLen = 0
-    while (off + 8 <= c.length && (dataOff < 0 || !fmtOk)) {
-      val id = tag(off); val size = bb.getInt(off + 4)
-      if (size < 0 || off + 8 + size > c.length) return None
-      if (id == "fmt " && size >= 16) {
-        val audioFormat = bb.getShort(off + 8).toInt
-        nChannels = bb.getShort(off + 10).toInt
-        sampleRate = bb.getInt(off + 12)
-        val bitsPerSample = bb.getShort(off + 22).toInt
-        if (audioFormat != 1 || bitsPerSample != 16 || nChannels <= 0) return None
-        fmtOk = true
-      } else if (id == "data") { dataOff = off + 8; dataLen = size }
-      off += 8 + size + (size & 1) // chunks are word-aligned
-    }
-    if (!fmtOk || dataOff < 0 || dataLen % 2 != 0) return None
-    val nSamples = dataLen / 2
-    if (nSamples == 0) return None
-    val samples = new Array[Double](nSamples)
-    var i = 0
-    while (i < nSamples) {
-      samples(i) = bb.getShort(dataOff + 2 * i) / 32768.0
-      i += 1
-    }
-    Some((sampleRate, nChannels, samples))
-  }
-
-  /** REAL pure-JVM decoder: PNG, 8-bit truecolor (RGB / RGBA),
-    * non-interlaced — the baseline every PNG encoder can emit. This
-    * one is a full real codec: big-endian chunk walk (IHDR first,
-    * IDAT concatenation), zlib inflate via `java.util.zip.Inflater`
-    * (in the JDK), then per-scanline unfiltering (None/Sub/Up/
-    * Average/Paeth — the complete PNG filter set). Features: the same
-    * [meanR, meanG, meanB, meanLuma, width, height, nPixels, tag]
-    * contract as BMP with tag 4.0; alpha is ignored for the color
-    * means. None for palette/gray/16-bit/interlaced — fallback lane.
-    */
-  private[operators] def decodePng(r: MMRecord): Option[MMFeatures] =
-    pngPixels(r).map { case (w, h, px) => rgbFeatures(r, w, h, px, 4.0) }
-
-  /** The PNG inflate+unfilter parse, exposed as a packed-RGB top-down
-    * pixel grid (PNG already stores top-down; alpha, when present, is
-    * dropped after unfiltering — it participates in filter prediction
-    * but not in color features or hashes).
+  /** REAL pure-JVM PNG parse: 8-bit truecolor (RGB / RGBA),
+    * non-interlaced — the baseline every PNG encoder can emit. A full
+    * real codec: big-endian chunk walk (IHDR first, IDAT
+    * concatenation), zlib inflate via `java.util.zip.Inflater` (in the
+    * JDK), then per-scanline unfiltering (None/Sub/Up/Average/Paeth —
+    * the complete PNG filter set). Returns a packed-RGB top-down pixel
+    * grid (PNG already stores top-down; alpha, when present, takes
+    * part in filter prediction and is then dropped), or None for
+    * palette/gray/16-bit/interlaced.
     */
   private[operators] def pngPixels(r: MMRecord): Option[(Int, Int, Array[Int])] = {
     val c = r.content
@@ -319,8 +198,7 @@ object Multimodal {
   /** REAL JPEG decode via the stock-JDK codec (`javax.imageio` ships
     * a baseline+progressive JPEG reader in every JRE — no external
     * library). Exposed as the same packed-RGB top-down grid as
-    * [[bmpPixels]]/[[pngPixels]] so the feature epilogue and
-    * [[dHash64]] are container-blind. `ImageIO` is only reached
+    * [[bmpPixels]]/[[pngPixels]] so [[dHash64]] is container-blind. `ImageIO` is only reached
     * behind the 0xFFD8FF magic sniff; a payload the reader rejects
     * returns None — the fallback lane, like every other decoder here.
     */
@@ -344,24 +222,27 @@ object Multimodal {
     } catch { case _: java.io.IOException | _: RuntimeException => None }
   }
 
-  private[operators] def decodeJpeg(r: MMRecord): Option[MMFeatures] =
-    jpegPixels(r).map { case (w, h, px) => rgbFeatures(r, w, h, px, 5.0) }
-
   /** One magic-byte sniff for every image container with a real
-    * decoder (BMP, PNG, JPEG) — shared by the feature path and the
-    * perceptual hash so the two can't disagree on what's an image.
+    * decoder (BMP, PNG, JPEG, and the keyframe of an mp4 track).
     * Returns the normalized top-down packed-RGB grid or None.
+    *
+    * Total by construction AND by backstop: each codec validates its
+    * own header (long arithmetic, pixel caps, bounds vs the payload
+    * that actually arrived), and a catch-all turns any residual
+    * parser surprise into None — a crafted payload may waste one
+    * record's worth of work, never a task (fuzz-spec-pinned over
+    * random, magic-prefixed and mutated-valid payloads).
     */
-  private[operators] def imagePixels(r: MMRecord): Option[(Int, Int, Array[Int])] = try {
+  private[graft] def imagePixels(r: MMRecord): Option[(Int, Int, Array[Int])] = try {
     val c = r.content
     if (c.length >= 2 && c(0) == 'B'.toByte && c(1) == 'M'.toByte) bmpPixels(r)
     else if (c.length >= 4 && (c(0) & 0xff) == 0x89 && c(1) == 'P'.toByte &&
         c(2) == 'N'.toByte && c(3) == 'G'.toByte) pngPixels(r)
     else if (c.length >= 3 && (c(0) & 0xff) == 0xff && (c(1) & 0xff) == 0xd8 &&
         (c(2) & 0xff) == 0xff) jpegPixels(r)
-    else if (isMp4(c)) mp4FramePixels(c) // keyframe of a JPEG-coded track
+    else if (isMp4(c)) mp4FramePixels(c) // keyframe of a JPEG- or I_PCM-coded track
     else None
-  } catch { // same never-fail-a-task backstop as decodeOne
+  } catch {
     case scala.util.control.NonFatal(_) => None
   }
 
@@ -377,65 +258,6 @@ object Multimodal {
     */
   private[operators] val MaxDecodePixels = 1L << 26
 
-  /** Content-sniffing dispatch, like a real codec registry: magic
-    * bytes pick the decoder; anything unrecognized (or recognized but
-    * outside the baseline profile) takes the declared stub lane.
-    *
-    * Total by construction AND by backstop: each codec validates its
-    * own header (long arithmetic, pixel caps, bounds vs the payload
-    * that actually arrived), and a defensive catch-all routes any
-    * residual parser surprise to the fallback features — a crafted
-    * payload may waste one record's worth of work, never a task
-    * (fuzz-spec-pinned over random, magic-prefixed and
-    * mutated-valid payloads).
-    */
-  private[operators] def decodeOne(r: MMRecord): MMFeatures =
-    try decodeOneUnsafe(r)
-    catch { case scala.util.control.NonFatal(_) => fakeDecode(r) }
-
-  private def decodeOneUnsafe(r: MMRecord): MMFeatures = {
-    val c = r.content
-    if (c.length >= 2 && c(0) == 'B'.toByte && c(1) == 'M'.toByte)
-      decodeBmp(r).getOrElse(fakeDecode(r))
-    else if (c.length >= 12 && c(0) == 'R'.toByte && c(1) == 'I'.toByte &&
-        c(2) == 'F'.toByte && c(3) == 'F'.toByte)
-      decodeWav(r).getOrElse(fakeDecode(r))
-    else if (c.length >= 4 && (c(0) & 0xff) == 0x89 && c(1) == 'P'.toByte &&
-        c(2) == 'N'.toByte && c(3) == 'G'.toByte)
-      decodePng(r).getOrElse(fakeDecode(r))
-    else if (c.length >= 3 && (c(0) & 0xff) == 0xff && (c(1) & 0xff) == 0xd8 &&
-        (c(2) & 0xff) == 0xff)
-      decodeJpeg(r).getOrElse(fakeDecode(r))
-    else if (isMp4(c))
-      // real pixels for JPEG-coded tracks (first keyframe through the
-      // ImageIO lane) and for I_PCM-coded `avc1` IDR frames (the
-      // in-tree H264 lane), codec tag 6.0; entropy-coded AVC and HEVC
-      // stay the declared histogram stub — the dependency-boundary
-      // decision in SURVEY §4
-      mp4FramePixels(c).map { case (w, h, px) => rgbFeatures(r, w, h, px, 6.0) }
-        .getOrElse(fakeDecode(r))
-    else fakeDecode(r)
-  }
-
-  /** Batched per-partition decode: real codecs (BMP, PNG, WAV byte
-    * parsers + the stock-JDK JPEG reader) behind content sniffing,
-    * the declared histogram stub only for mp4 frame content (no JVM
-    * codec exists in this container).
-    * `grouped(batchSize)` is the batch shape a vectorized (Arrow)
-    * decoder consumes; no shuffle — runs at scan parallelism.
-    */
-  def decodeFeatures(records: Dataset[MMRecord], batchSize: Int = 64)
-      (implicit spark: SparkSession): Dataset[MMFeatures] = {
-    import spark.implicits._
-    records.mapPartitions { iter =>
-      iter.grouped(batchSize).flatMap { batch =>
-        // real codecs initialize per batch here (decoder handle, GPU
-        // context, ...); BMP/WAV need none, so the batch just maps
-        batch.iterator.map(decodeOne)
-      }
-    }
-  }
-
   /** Parsed MP4 container metadata — what the `moov` header actually
     * stores (no codec needed): brand from `ftyp`, clock + length from
     * `mvhd`, track count from the `trak` children.
@@ -443,7 +265,7 @@ object Multimodal {
   final case class Mp4Meta(majorBrand: String, timescale: Long, duration: Long, nTracks: Int)
 
   /** REAL pure-JVM MP4 box parse (ISO/IEC 14496-12 byte layout, like
-    * the BMP/WAV parsers): walks the top-level box list — 32-bit
+    * the BMP/PNG parsers): walks the top-level box list — 32-bit
     * big-endian size + fourcc, with the spec's two escape hatches
     * (size==1 → 64-bit largesize follows the fourcc; size==0 → box
     * runs to EOF) — reads the `ftyp` major brand, then inside `moov`
@@ -542,7 +364,7 @@ object Multimodal {
     * The slice [off, off+size) is returned only when it carries the
     * JPEG magic, so an AVC/HEVC track (`avc1`/`hvc1` entries, or
     * `mp4v` holding real MPEG-4 Part 2) cleanly returns None — that
-    * lane stays the declared histogram stub (no JVM codec exists).
+    * lane is [[mp4FirstAvcFrame]]'s.
     * Any malformed geometry degrades to None, never a task failure.
     */
   /** Shared ISO-BMFF box grammar for the first-sample extractors —
@@ -649,8 +471,8 @@ object Multimodal {
 
   /** First keyframe of an `avc1`-coded track, decoded through the
     * in-tree H.264 I_PCM lane ([[H264]] — real pixels for
-    * uncompressed-coded IDR frames; entropy-coded streams return None
-    * and keep the declared histogram stub). SPS/PPS come from the
+    * uncompressed-coded IDR frames; entropy-coded streams return
+    * None). SPS/PPS come from the
     * sample entry's `avcC` configuration box (ISO 14496-15: after the
     * 86-byte VisualSampleEntry header — ver/profile/compat/level, a
     * 2-bit NAL length-size, then length-prefixed SPS and PPS sets);
@@ -688,8 +510,7 @@ object Multimodal {
   /** Pixels of an mp4's first video keyframe: JPEG-coded samples go
     * through the same ImageIO lane every plain-JPEG payload takes —
     * so a video keyframe and the standalone image it was muxed from
-    * produce the same packed-RGB grid, the same features and the same
-    * dHash — and `avc1` tracks through the in-tree H.264 I_PCM lane.
+    * produce the same packed-RGB grid and the same dHash — and `avc1` tracks through the in-tree H.264 I_PCM lane.
     */
   private[graft] def mp4FramePixels(c: Array[Byte]): Option[(Int, Int, Array[Int])] =
     mp4FirstJpegFrame(c).flatMap(jpegBytesPixels)
@@ -739,8 +560,8 @@ object Multimodal {
   /** Metadata-only "resize": aspect-preserving fit into a maxDim box
     * with exact integer arithmetic (floor of dim·maxDim / longest
     * side; images already inside the box pass through). The typed-
-    * metadata transform pattern — the real pixel work would live in
-    * the decode stub.
+    * metadata transform pattern — the real pixel work would start
+    * from [[imagePixels]].
     */
   def resizeMeta(records: Dataset[MMRecord], maxDim: Int = 256): DataFrame =
     records.toDF().select(
@@ -815,56 +636,6 @@ object Multimodal {
     records.mapPartitions { iter =>
       iter.flatMap { r =>
         imagePixels(r).map { case (w, h, arr) => (r.doc_id, r.format, dHash64(w, h, arr)) }
-      }
-    }.toDF("doc_id", "format", "phash")
-  }
-
-  /** 64-bit acoustic fingerprint: RMS energy envelope over 65 equal
-    * time windows, bit k = (window k) < (window k+1) — the audio
-    * analog of [[dHash64]] (difference hash over time instead of
-    * space). Robust to gain changes that preserve envelope shape and
-    * to small sample noise; clips shorter than one sample per window
-    * are unhashable and must be dropped by the caller.
-    */
-  private[operators] def aHash64(samples: Array[Double]): Long = {
-    val nw = 65
-    val rms = new Array[Double](nw)
-    var w = 0
-    while (w < nw) {
-      val i0 = (w.toLong * samples.length / nw).toInt
-      val i1 = math.max(i0 + 1, ((w + 1).toLong * samples.length / nw).toInt)
-      var s = 0.0; var n = 0
-      var i = i0
-      while (i < i1 && i < samples.length) { s += samples(i) * samples(i); n += 1; i += 1 }
-      rms(w) = if (n > 0) math.sqrt(s / n) else 0.0
-      w += 1
-    }
-    var hash = 0L
-    var k = 0
-    while (k < 64) {
-      if (rms(k) < rms(k + 1)) hash |= (1L << k)
-      k += 1
-    }
-    hash
-  }
-
-  /** Acoustic fingerprint per audio record: real WAV sample decode →
-    * [[aHash64]] energy-envelope hash. Emits the same (doc_id,
-    * format, phash) shape as [[imagePhash]], so [[phashPairs]] (and
-    * the streaming gate) serve both modalities unchanged — one banded
-    * Hamming pairing operator, two fingerprint front-ends. Clips with
-    * fewer than 65 samples drop to the unhashable lane.
-    */
-  def audioPhash(records: Dataset[MMRecord])(implicit spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    records.mapPartitions { iter =>
-      iter.flatMap { r =>
-        val c = r.content
-        val ok = c.length >= 12 && c(0) == 'R'.toByte && c(1) == 'I'.toByte &&
-          c(2) == 'F'.toByte && c(3) == 'F'.toByte
-        (if (ok) wavSamples(r) else None)
-          .filter(_._3.length >= 65)
-          .map { case (_, _, s) => (r.doc_id, r.format, aHash64(s)) }
       }
     }.toDF("doc_id", "format", "phash")
   }

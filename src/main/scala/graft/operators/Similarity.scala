@@ -5,7 +5,6 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.VectorOps
-import graft.sources.Tables
 
 /** Similarity search over the embeddings table (SURVEY.md §2.3).
   *
@@ -150,8 +149,7 @@ object Similarity {
     * corpus scale each retrain re-runs the TakeOrdered sample collect
     * over the full corpus. The sample caches on the corpus plan's
     * `semanticHash` (same source ⇒ same plan ⇒ same sample; assumes
-    * the underlying files are immutable within a JVM session — call
-    * [[clearModelCache]] after rewriting a corpus in place); models
+    * the underlying files are immutable within a JVM session); models
     * cache on the sample's CONTENT fingerprint + every training
     * param, which is exact regardless of where the sample came from.
     */
@@ -173,15 +171,6 @@ object Similarity {
     * churning the cache.
     */
   private[graft] val trainingsRun = new java.util.concurrent.atomic.AtomicInteger(0)
-
-  /** Drop every cached sample, model and recorded oracle model — for
-    * tests and for sessions that rewrite a corpus path in place.
-    */
-  def clearModelCache(): Unit = {
-    sampleCache.clear(); ivfCache.clear(); pqCache.clear(); resPqCache.clear()
-    recordedIvf.clear(); recordedPq.clear(); recordedResPq.clear()
-    pcaCache.clear(); recordedPca.clear()
-  }
 
   /** PCA model over the training sample: per-dimension mean + top-k
     * principal axes (orthonormal up to power-iteration convergence).
@@ -413,150 +402,10 @@ object Similarity {
       .orderBy(col("cluster_id"), col("rnk"))
   }
 
-  /** Materialize an IVF index on storage: the tiny centroid table plus
-    * the corpus partitioned by cluster_id (one directory per inverted
-    * list). Build once, search many — at 100 TB this is the only
-    * sane shape: search reads ONLY the probed lists' files via
-    * partition pruning, never the full corpus.
-    */
-  def buildIvfIndex(embeddings: DataFrame, dir: String, nProbes: Int = 10,
-      nClusters: Int = 16, iters: Int = 3): Unit = {
-    val spark = embeddings.sparkSession
-    import spark.implicits._
-    val c = corpus(embeddings, nProbes)
-    val centroids = ivfTrain(c, nClusters, iters)
-    val cDF = broadcast(spark.createDataset(centroids).toDF())
-    assignClusters(c, cDF)
-      .write.mode("overwrite").partitionBy("cluster_id").parquet(s"$dir/lists")
-    spark.createDataset(centroids).toDF()
-      .write.mode("overwrite").parquet(s"$dir/centroids")
-  }
-
-  /** Incrementally extend a stored IVF index with new vectors: assign
-    * them with the STORED centroids (no retrain — the coarse
-    * quantizer is the contract every existing list was built against;
-    * retraining would silently orphan them) and append to the
-    * partitioned lists. This is the daily-crawl maintenance path:
-    * cost is one assignment pass over the NEW vectors only, the
-    * existing lists are untouched on storage, and a search
-    * immediately sees old + new identically to a from-scratch build
-    * (spec-pinned). Re-train + rebuild only when drift accumulates —
-    * that decision belongs to the operator, not this function.
-    * `newVecs` must be (vec_id, cv) rows like the stored lists.
-    */
-  def appendToIvfIndex(newVecs: DataFrame, dir: String): Unit = {
-    val spark = newVecs.sparkSession
-    val cDF = broadcast(Tables.parquet(spark, s"$dir/centroids"))
-    assignClusters(newVecs.select(col("vec_id"), col("cv")), cDF)
-      .write.mode("append").partitionBy("cluster_id").parquet(s"$dir/lists")
-  }
-
-  /** Search a stored IVF index: probes rank the (collected, tiny)
-    * centroid table, and the list scan is filtered to the probed
-    * cluster_ids — partition pruning keeps the read at
-    * ~nProbeClusters/nClusters of the corpus (the spec asserts the
-    * pruned scan). Same output contract as [[annIvfTopK]].
-    */
-  def searchIvfIndex(embeddings: DataFrame, dir: String, nProbes: Int = 10,
-      k: Int = 5, nProbeClusters: Int = 4): DataFrame = {
-    val spark = embeddings.sparkSession
-    val cDF = broadcast(Tables.parquet(spark, s"$dir/centroids"))
-    val pc = probeClusters(probes(embeddings, nProbes), cDF, nProbeClusters)
-    val probedIds = pc.select(col("cluster_id")).distinct()
-      .collect().map(_.getInt(0)).toSeq
-    val lists = Tables.parquet(spark, s"$dir/lists")
-      .filter(col("cluster_id").isin(probedIds: _*)) // partition pruning
-    rankTopK(
-      lists.join(broadcast(pc), Seq("cluster_id"))
-        .withColumn("cos", VectorOps.cosine(col("pv"), col("cv"))), k)
-  }
-
   /** One product-quantization codebook row: subspace, code id, and
     * the (dim/nSub)-dim sub-centroid.
     */
   final case class PqCentroid(s: Int, c: Int, centroid: Seq[Double])
-
-  /** Materialize a PQ index: the (vec_id, s, c) code table — 4 bytes
-    * of payload per vector at the defaults — plus the tiny codebook.
-    * Build once, search many: at 100 TB the ADC scan in
-    * [[searchPqIndex]] reads ONLY this code table; the raw vectors
-    * are touched again only for the `rerank` finalists.
-    */
-  def buildPqIndex(embeddings: DataFrame, dir: String, nProbes: Int = 10,
-      nSub: Int = 8, kCodes: Int = 16, iters: Int = 3): Unit = {
-    withTrainedSubs(embeddings, nProbes, nSub, kCodes, iters) { (subs, cb) =>
-      cb.write.mode("overwrite").parquet(s"$dir/codebook")
-      val codes = assignCodes(subs, cb).select(col("vec_id"), col("s"), col("c"))
-      codes.write.mode("overwrite").parquet(s"$dir/codes")
-      codes // withTrainedSubs contract; the writes above are the point
-    }
-    ()
-  }
-
-  /** The retrain signal for an aging IVF index: per-cluster assignment
-    * quality (mean cosine of members to their centroid) for the STORED
-    * lists vs a batch of NEW vectors assigned by the same centroids.
-    * Positive drift = new data aligns worse with the old coarse
-    * quantizer than the data it was trained on — when that grows past
-    * the operator's threshold (with enough n_new behind it), rebuild;
-    * [[appendToIvfIndex]] otherwise. Both sides are one broadcast
-    * score + keyed aggregate; the stored side reads the lists once.
-    */
-  def ivfDriftStats(newVecs: DataFrame, dir: String): DataFrame = {
-    val spark = newVecs.sparkSession
-    val cDF = broadcast(Tables.parquet(spark, s"$dir/centroids"))
-    def quality(assigned: DataFrame): DataFrame =
-      assigned.join(cDF, Seq("cluster_id"))
-        .withColumn("cos", VectorOps.dot(col("cv"), col("centroid")) /
-          sqrt(VectorOps.dot(col("cv"), col("cv"))))
-        .groupBy(col("cluster_id"))
-        .agg(count(lit(1)).as("n"),
-          (sum(col("cos").cast("decimal(38,15)")) / count(lit(1)))
-            .cast("double").as("mean_cos"))
-    val stored = quality(Tables.parquet(spark, s"$dir/lists"))
-      .select(col("cluster_id"), col("n").as("n_stored"),
-        col("mean_cos").as("stored_cos"))
-    val fresh = quality(
-      assignClusters(newVecs.select(col("vec_id"), col("cv")), cDF))
-      .select(col("cluster_id"), col("n").as("n_new"),
-        col("mean_cos").as("new_cos"))
-    stored.join(fresh, Seq("cluster_id"), "full")
-      .select(col("cluster_id"),
-        coalesce(col("n_stored"), lit(0L)).as("n_stored"),
-        round(col("stored_cos"), 6).as("stored_cos"),
-        coalesce(col("n_new"), lit(0L)).as("n_new"),
-        round(col("new_cos"), 6).as("new_cos"),
-        round(coalesce(col("stored_cos") - col("new_cos"), lit(0.0)), 6).as("drift"))
-      .orderBy(col("cluster_id"))
-  }
-
-  /** Incrementally extend a stored PQ index: encode new vectors with
-    * the STORED codebook (same no-retrain contract as
-    * [[appendToIvfIndex]] — the codebook is what every stored code
-    * means) and append their (vec_id, s, c) triples to the code
-    * table. One subvector-encode pass over the new vectors only.
-    * `newVecs` must be (vec_id, cv) rows.
-    */
-  def appendToPqIndex(newVecs: DataFrame, dir: String, nSub: Int = 8): Unit = {
-    val spark = newVecs.sparkSession
-    val cb = broadcast(Tables.parquet(spark, s"$dir/codebook"))
-    assignCodes(subVectors(newVecs.select(col("vec_id"), col("cv")), nSub), cb)
-      .select(col("vec_id"), col("s"), col("c"))
-      .write.mode("append").parquet(s"$dir/codes")
-  }
-
-  /** Search a stored PQ index: the broadcast codebook rebuilds the
-    * per-probe distance tables, the stored code table feeds the ADC
-    * scan, and only the rerank finalists read their full vectors.
-    * Same output contract as [[annPqTopK]] (spec-pinned equal).
-    */
-  def searchPqIndex(embeddings: DataFrame, dir: String, nProbes: Int = 10,
-      k: Int = 5, nSub: Int = 8, rerank: Int = 20): DataFrame = {
-    val spark = embeddings.sparkSession
-    val cb = broadcast(Tables.parquet(spark, s"$dir/codebook"))
-    val codes = Tables.parquet(spark, s"$dir/codes")
-    adcRerankTopK(embeddings, codes, cb, nProbes, nSub, k, rerank)
-  }
 
   /** Train PQ codebooks: the unit-normalized vector splits into nSub
     * contiguous subspaces, each L2-quantized to kCodes centroids.
@@ -568,10 +417,6 @@ object Similarity {
     * subDim doubles broadcast everywhere; encoding and the ADC scan
     * — the data-sized steps — stay distributed plans.
     */
-  def pqTrain(corpusVecs: DataFrame, nSub: Int = 8, kCodes: Int = 16,
-      iters: Int = 3): Seq[PqCentroid] =
-    pqTrainOnSample(trainSample(corpusVecs), nSub, kCodes, iters)
-
   private def pqTrainOnSample(ts: TrainSample,
       nSub: Int, kCodes: Int, iters: Int): Seq[PqCentroid] = {
     val model = pqCache.computeIfAbsent((ts.fp, nSub, kCodes, iters),
@@ -580,7 +425,7 @@ object Similarity {
     model
   }
 
-  /** Residual-PQ codebook: like [[pqTrain]] but trained on each sample
+  /** Residual-PQ codebook: like [[pqTrainOnSample]] but trained on each sample
     * vector's residual against its assigned coarse centroid
     * (assignment = the same argmax-dot / smaller-id rule as
     * [[assignClusters]]; unit centroids make raw-vs-normalized
@@ -836,7 +681,7 @@ object Similarity {
     val cDF = broadcast(spark.createDataset(centroids).toDF())
     val listed = assignClusterIds(c, cDF) // (vec_id, cluster_id)
     withTrainedSubs(embeddings, nProbes, nSub, kCodes, pqIters) { (subs, cb) =>
-      // the stored index shape: (cluster_id, vec_id, s, c) — codes
+      // the IVF-PQ index shape: (cluster_id, vec_id, s, c) — codes
       // partitioned by inverted list
       val codes = assignCodes(subs, cb)
         .select(col("vec_id"), col("s"), col("c"))

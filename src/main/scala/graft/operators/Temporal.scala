@@ -31,7 +31,7 @@ object Temporal {
     * forward. Returns every left column plus `asof` (struct of
     * `carry` columns from the matched right row, null when no match).
     */
-  def asofBackward(left: DataFrame, leftTs: String,
+  def asofBackwardDeclarative(left: DataFrame, leftTs: String,
       right: DataFrame, rightTs: String,
       key: String, carry: Seq[String]): DataFrame = {
     val rowType = org.apache.spark.sql.types.StructType(left.schema.fields)
@@ -59,7 +59,7 @@ object Temporal {
   }
 
   /** Backward as-of join on the custom [[graft.plans.AsofJoinExec]]
-    * operator — same semantics as [[asofBackward]], but as a
+    * operator — same semantics as [[asofBackwardDeclarative]], but as a
     * first-class Catalyst plan: one exchange per side (none over a
     * store already partitioned on the key), per-partition streaming
     * merge holding a single buffered right row. Right rows must be

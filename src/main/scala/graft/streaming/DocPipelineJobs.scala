@@ -122,8 +122,8 @@ object DocPipelineJobs {
     // once the streaming query that references the plan is dropped,
     // which is exactly the gate's lifetime; per-batch cost stays a
     // cached-block scan either way, and a restart rebuilds it from
-    // the index parquet. `incrementalIndex` output is already
-    // distinct, but the contract here can't assume every caller's is.
+    // the index parquet. A stored hash index is usually distinct
+    // already, but the contract here can't assume every caller's is.
     val fresh = TextOps.cleanScored(stream, minWords, maxStopRatio)
       .join(graft.operators.Caching.materialize(
         storedIndex.select(col("h")).distinct()), Seq("h"), "left_anti")

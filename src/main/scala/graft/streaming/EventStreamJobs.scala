@@ -5,6 +5,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
 
 /** A live event on the bus (the reference's message envelope,
   * `messages/base.py:490`, mapped per SURVEY.md §3).
@@ -132,16 +133,24 @@ object EventStreamJobs {
       .agg(count(lit(1)).as("n_events"),
         sum(col("value").cast("decimal(18,2)")).cast("double").as("total_value"))
 
+  /** The events JSON-lines schema (the wire format of the bus). */
+  private val eventJsonSchema = StructType(Seq(
+    StructField("event_id", LongType),
+    StructField("ts_us", LongType),
+    StructField("user_id", LongType),
+    StructField("event_type", StringType),
+    StructField("value", DoubleType),
+    StructField("props", StringType)))
+
   /** Tail a JSONL event archive directory as a live stream (the
     * file-drop ingestion path: producers append files, the bus picks
-    * them up). Explicit schema — no inference pass; `maxFilesPerTrigger`
-    * bounds batch size so backfills don't produce one giant batch.
+    * them up). Explicit schema — no inference pass; at most 16 files
+    * a trigger, so backfills don't produce one giant batch.
     */
-  def archiveStream(spark: SparkSession, path: String,
-                    maxFilesPerTrigger: Int = 16): DataFrame =
+  def archiveStream(spark: SparkSession, path: String): DataFrame =
     spark.readStream
-      .schema(graft.sources.Sinks.eventJsonSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
+      .schema(eventJsonSchema)
+      .option("maxFilesPerTrigger", 16)
       .json(path)
       .withColumn("ts", timestamp_micros(col("ts_us")))
 
@@ -153,7 +162,7 @@ object EventStreamJobs {
     */
   def parsedStream(stream: DataFrame, jsonCol: String,
       schemas: Seq[graft.model.MessageSchema],
-      superset: org.apache.spark.sql.types.StructType): DataFrame =
+      superset: StructType): DataFrame =
     graft.model.MessageParser.parse(stream, col(jsonCol), schemas, superset)
 
   /** At-least-once delivery dedup on the live bus: duplicates are

@@ -39,15 +39,15 @@ final class LocalCheckpointFileManager(path: Path, hadoopConf: Configuration)
       }
   }
 
-  def createAtomic(p: Path, overwriteIfPossible: Boolean): CancellableFSDataOutputStream =
+  override def createAtomic(p: Path, overwriteIfPossible: Boolean): CancellableFSDataOutputStream =
     underlying.createAtomic(p, overwriteIfPossible)
-  def open(p: Path): FSDataInputStream = underlying.open(p)
-  def list(p: Path, filter: PathFilter): Array[FileStatus] = underlying.list(p, filter)
+  override def open(p: Path): FSDataInputStream = underlying.open(p)
+  override def list(p: Path, filter: PathFilter): Array[FileStatus] = underlying.list(p, filter)
   override def list(p: Path): Array[FileStatus] = underlying.list(p)
-  def mkdirs(p: Path): Unit = underlying.mkdirs(p)
-  def exists(p: Path): Boolean = underlying.exists(p)
-  def delete(p: Path): Unit = underlying.delete(p)
-  def isLocal: Boolean = underlying.isLocal
-  def createCheckpointDirectory(): Path = underlying.createCheckpointDirectory()
+  override def mkdirs(p: Path): Unit = underlying.mkdirs(p)
+  override def exists(p: Path): Boolean = underlying.exists(p)
+  override def delete(p: Path): Unit = underlying.delete(p)
+  override def isLocal: Boolean = underlying.isLocal
+  override def createCheckpointDirectory(): Path = underlying.createCheckpointDirectory()
   override def close(): Unit = underlying.close()
 }

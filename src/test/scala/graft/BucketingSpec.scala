@@ -1,9 +1,10 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sources.{Bucketing, Tables}
+import graft.sources.Tables
 
 /** Co-located join via bucketing: both sides pre-bucketed on the join
   * key ⇒ the join plan contains no shuffle exchange at all.
@@ -11,10 +12,22 @@ import graft.sources.{Bucketing, Tables}
 class BucketingSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
+  /** Write `df` as a bucketed, sorted datasource table; both join
+    * sides must agree on the bucket count.
+    */
+  private def writeBucketed(df: DataFrame, table: String, bucketCol: String,
+      nBuckets: Int): Unit =
+    df.write
+      .mode("overwrite")
+      .bucketBy(nBuckets, bucketCol)
+      .sortBy(bucketCol)
+      .format("parquet")
+      .saveAsTable(table)
+
   test("bucketed fact tables join without any shuffle exchange") {
     val t = Tables(spark, TestSpark.sfDir)
-    Bucketing.writeBucketed(t.lineitem, "lineitem_b", "l_orderkey", 4)
-    Bucketing.writeBucketed(t.orders, "orders_b", "o_orderkey", 4)
+    writeBucketed(t.lineitem, "lineitem_b", "l_orderkey", 4)
+    writeBucketed(t.orders, "orders_b", "o_orderkey", 4)
 
     // force a sort-merge join so the exchange question is real; the
     // join-only plan must contain zero shuffle exchanges (the later
@@ -41,7 +54,7 @@ class BucketingSpec extends AnyFunSuite {
 
   test("user-bucketed event store runs sessionization without a shuffle") {
     val t = Tables(spark, TestSpark.sfDir)
-    Bucketing.writeBucketed(t.events, "events_b", "user_id", 4)
+    writeBucketed(t.events, "events_b", "user_id", 4)
     val sessions = graft.operators.EventOps.sessionGap(
       spark.table("events_b"))
     // the user-keyed window AND the (user, session) groupBy both ride
@@ -58,7 +71,7 @@ class BucketingSpec extends AnyFunSuite {
   test("custom as-of join over the user-bucketed store is exchange-free") {
     import graft.operators.{EventOps, Temporal}
     val t = Tables(spark, TestSpark.sfDir)
-    Bucketing.writeBucketed(t.events, "events_asof_b", "user_id", 4)
+    writeBucketed(t.events, "events_asof_b", "user_id", 4)
     val e = EventOps.withTsUs(spark.table("events_asof_b"))
     val views = e.filter(col("event_type") === "view")
       .groupBy(col("user_id"), col("ts_us").as("v_us"))

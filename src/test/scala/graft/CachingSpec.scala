@@ -33,7 +33,7 @@ class CachingSpec extends AnyFunSuite {
         // a construction-time probe: fills both caches, so their RDDs
         // are registered before the builder fails
         assert(b.count() == 200)
-        held = h.frames
+        held = Seq(a, b)
         assert(held.forall(isCached) && entries == entriesBefore + 2)
         throw new IllegalStateException("builder failed")
       }
@@ -53,7 +53,7 @@ class CachingSpec extends AnyFunSuite {
       Caching.materialized { h =>
         val a = h(spark.range(300).toDF("id"))
         assert(a.count() == 300)
-        held = h.frames
+        held = Seq(a)
         heldRdds = persistentRdds -- rdds
         a.select(boom(col("id")).as("y"))
       }
@@ -75,7 +75,7 @@ class CachingSpec extends AnyFunSuite {
     var held = Seq.empty[DataFrame]
     val out = Caching.materialized { h =>
       val a = h(spark.range(400).toDF("id"))
-      held = h.frames
+      held = Seq(a)
       a.join(a.select((col("id") + 1).as("id")), Seq("id"))
     }
     assert(held.size == 1 && !held.exists(isCached))

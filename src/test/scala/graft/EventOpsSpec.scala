@@ -90,7 +90,7 @@ class EventOpsSpec extends AnyFunSuite {
         coalesce(col("v_us"), lit(-1L)))
     // SparkPlan.nodeName strips the Exec suffix in plan display
     assert(exec.queryExecution.executedPlan.toString.contains("AsofJoin"))
-    val declarative = Temporal.asofBackward(purchases, "p_us", views, "v_us",
+    val declarative = Temporal.asofBackwardDeclarative(purchases, "p_us", views, "v_us",
         "user_id", Seq("v_event_id", "v_us"))
       .select(col("event_id"), coalesce(col("asof.v_event_id"), lit(-1L)),
         coalesce(col("asof.v_us"), lit(-1L)))

@@ -20,24 +20,7 @@ class MultimodalSpec extends AnyFunSuite {
     assert(rec.count() == docs.count())
   }
 
-  test("batched decode emits deterministic stub features, one row per record") {
-    implicit val s = spark
-    val rec = Multimodal.records(docs.limit(100))
-    val feats = Multimodal.decodeFeatures(rec, batchSize = 16).collect()
-    assert(feats.length == 100)
-    feats.foreach { f =>
-      assert(f.features.length == 8)
-      assert(math.abs(f.features.sum - 1.0) < 1e-9) // L1 normalized
-    }
-    // determinism: same input → identical features
-    val again = Multimodal.decodeFeatures(rec, batchSize = 7).collect()
-    assert(feats.sortBy(_.doc_id).map(_.features.toSeq).toSeq ==
-      again.sortBy(_.doc_id).map(_.features.toSeq).toSeq)
-  }
-
-  test("real BMP and WAV fixture bytes decode through the batched path") {
-    implicit val s = spark
-    import spark.implicits._
+  test("real BMP fixture bytes decode to their top-down pixel grid") {
     import java.nio.{ByteBuffer, ByteOrder}
     // a real 2x2 24bpp bottom-up BMP: bottom row red,green; top row
     // blue,white — rows padded to 4 bytes (6 pixel bytes + 2 pad)
@@ -48,33 +31,17 @@ class MultimodalSpec extends AnyFunSuite {
     // BGR triples: red=(0,0,255) green=(0,255,0); blue=(255,0,0) white=(255,255,255)
     bmp.put(Array[Byte](0, 0, -1, 0, -1, 0, 0, 0)) // bottom row + pad
     bmp.put(Array[Byte](-1, 0, 0, -1, -1, -1, 0, 0)) // top row + pad
-    // a real PCM16 mono WAV at 8 kHz: samples ±16384 (±0.5 normalized)
-    val wav = ByteBuffer.allocate(44 + 8).order(ByteOrder.LITTLE_ENDIAN)
-    wav.put("RIFF".getBytes).putInt(36 + 8).put("WAVE".getBytes)
-    wav.put("fmt ".getBytes).putInt(16).putShort(1).putShort(1)
-      .putInt(8000).putInt(16000).putShort(2).putShort(16)
-    wav.put("data".getBytes).putInt(8)
-      .putShort(16384).putShort(-16384).putShort(16384).putShort(-16384)
-    val rec = Seq(
-      graft.operators.MMRecord(1L, bmp.array(), "bmp", 2, 2, 1),
-      graft.operators.MMRecord(2L, wav.array(), "wav", 0, 0, 1),
-      graft.operators.MMRecord(3L, "not a codec payload".getBytes, "jpeg", 8, 8, 1)
-    ).toDS()
-    val feats = Multimodal.decodeFeatures(rec, batchSize = 2).collect()
-      .map(f => f.doc_id -> f.features).toMap
-    // BMP: mean R=G=B=0.5 by construction, luma mean 0.5, 2x2=4 px, tag 2
-    assert(feats(1L).map(v => math.rint(v * 1e9) / 1e9).toSeq ==
-      Seq(0.5, 0.5, 0.5, 0.5, 2.0, 2.0, 4.0, 2.0))
-    // WAV: mean 0, rms 0.5, every adjacent pair crosses zero, max 0.5
-    assert(feats(2L).map(v => math.rint(v * 1e9) / 1e9).toSeq ==
-      Seq(0.0, 0.5, 1.0, 0.5, 4.0, 8000.0, 1.0, 3.0))
-    // unrecognized payload falls back to the declared histogram stub
-    assert(math.abs(feats(3L).sum - 1.0) < 1e-9)
+    val (w, h, px) = Multimodal.imagePixels(
+      graft.operators.MMRecord(1L, bmp.array(), "bmp", 2, 2, 1)).get
+    // the bottom-up file rows come back top-down: blue, white / red, green
+    assert((w, h) == (2, 2))
+    assert(px.toSeq == Seq(0x0000FF, 0xFFFFFF, 0xFF0000, 0x00FF00))
+    // an unrecognized payload has no pixels
+    assert(Multimodal.imagePixels(graft.operators.MMRecord(
+      3L, "not a codec payload".getBytes, "jpeg", 8, 8, 1)).isEmpty)
   }
 
   test("real PNG bytes (ImageIO-encoded) decode through the full inflate+unfilter path") {
-    implicit val s = spark
-    import spark.implicits._
     // encode a REAL png with the JDK's own encoder (different codebase
     // from our parser) — 2x2: red, green / blue, white
     val img = new java.awt.image.BufferedImage(2, 2,
@@ -87,31 +54,20 @@ class MultimodalSpec extends AnyFunSuite {
     // also a bigger gradient image to exercise Sub/Up/Paeth filters
     val grad = new java.awt.image.BufferedImage(64, 64,
       java.awt.image.BufferedImage.TYPE_3BYTE_BGR)
-    var sumR = 0L; var sumG = 0L; var sumB = 0L
-    for (y <- 0 until 64; x <- 0 until 64) {
-      val (r, g, b) = (x * 4 % 256, y * 4 % 256, (x + y) * 2 % 256)
-      sumR += r; sumG += g; sumB += b
-      grad.setRGB(x, y, (r << 16) | (g << 8) | b)
-    }
+    def rgb(x: Int, y: Int) = ((x * 4 % 256) << 16) | ((y * 4 % 256) << 8) | ((x + y) * 2 % 256)
+    for (y <- 0 until 64; x <- 0 until 64) grad.setRGB(x, y, rgb(x, y))
     val bos2 = new java.io.ByteArrayOutputStream()
     assert(javax.imageio.ImageIO.write(grad, "png", bos2))
-    val rec = Seq(
-      graft.operators.MMRecord(1L, png, "png", 2, 2, 1),
-      graft.operators.MMRecord(2L, bos2.toByteArray, "png", 64, 64, 1)).toDS()
-    val feats = Multimodal.decodeFeatures(rec, batchSize = 8).collect()
-      .map(f => f.doc_id -> f.features).toMap
-    val f1 = feats(1L)
-    assert(f1(7) == 4.0, "must take the real PNG lane, not the stub")
-    assert(math.rint(f1(0) * 1e9) / 1e9 == 0.5) // mean R
-    assert(math.rint(f1(1) * 1e9) / 1e9 == 0.5)
-    assert(math.rint(f1(2) * 1e9) / 1e9 == 0.5)
-    assert(f1(4) == 2.0 && f1(5) == 2.0 && f1(6) == 4.0)
-    val f2 = feats(2L)
-    assert(f2(7) == 4.0)
-    val n = 64.0 * 64.0
-    assert(math.abs(f2(0) - sumR / n / 255.0) < 1e-12)
-    assert(math.abs(f2(1) - sumG / n / 255.0) < 1e-12)
-    assert(math.abs(f2(2) - sumB / n / 255.0) < 1e-12)
+    val (w1, h1, px1) = Multimodal.imagePixels(
+      graft.operators.MMRecord(1L, png, "png", 2, 2, 1)).get
+    assert((w1, h1) == (2, 2))
+    assert(px1.toSeq == Seq(0xFF0000, 0x00FF00, 0x0000FF, 0xFFFFFF))
+    // PNG is lossless: every gradient pixel comes back exactly
+    val (w2, h2, px2) = Multimodal.imagePixels(
+      graft.operators.MMRecord(2L, bos2.toByteArray, "png", 64, 64, 1)).get
+    assert((w2, h2) == (64, 64))
+    for (y <- 0 until 64; x <- 0 until 64)
+      assert(px2(y * 64 + x) == rgb(x, y), s"pixel ($x,$y)")
   }
 
   test("perceptual hash: identical pixels hash identically from PNG and BMP containers") {
@@ -165,47 +121,7 @@ class MultimodalSpec extends AnyFunSuite {
     assert(h1 == h2)
   }
 
-  test("acoustic fingerprint pairs the re-encoded clip, not the different one") {
-    implicit val s = spark
-    import spark.implicits._
-    import java.nio.{ByteBuffer, ByteOrder}
-    // 1300 samples = 20 per envelope window; envelope = slow ramp with
-    // a mid dip — a distinctive energy shape
-    def wav(gain: Double, reverse: Boolean, seed: Int): Array[Byte] = {
-      val n = 1300
-      val bb = ByteBuffer.allocate(44 + n * 2).order(ByteOrder.LITTLE_ENDIAN)
-      bb.put("RIFF".getBytes).putInt(36 + n * 2).put("WAVE".getBytes)
-      bb.put("fmt ".getBytes).putInt(16).putShort(1).putShort(1)
-        .putInt(8000).putInt(16000).putShort(2).putShort(16)
-      bb.put("data".getBytes).putInt(n * 2)
-      for (i <- 0 until n) {
-        val t = if (reverse) n - 1 - i else i
-        val env = 0.2 + 0.7 * (t.toDouble / n) * (if ((t / 100) % 3 == 2) 0.3 else 1.0)
-        val noise = ((i * 31 + seed) % 7 - 3) / 3000.0
-        val v = (math.sin(i * 0.9) * env * gain + noise) * 16000
-        bb.putShort(math.max(-32768, math.min(32767, v.round.toInt)).toShort)
-      }
-      bb.array()
-    }
-    val rec = Seq(
-      graft.operators.MMRecord(1L, wav(1.0, reverse = false, seed = 0), "wav", 0, 0, 1),
-      // same envelope, 20% quieter, different noise — a re-encode
-      graft.operators.MMRecord(2L, wav(0.8, reverse = false, seed = 5), "wav", 0, 0, 1),
-      // reversed envelope — different audio
-      graft.operators.MMRecord(3L, wav(1.0, reverse = true, seed = 0), "wav", 0, 0, 1),
-      // undecodable payload drops out
-      graft.operators.MMRecord(4L, "not audio".getBytes, "wav", 0, 0, 1)).toDS()
-    val hashes = Multimodal.audioPhash(rec)
-    assert(hashes.collect().length == 3)
-    val pairs = Multimodal.phashPairs(hashes).collect()
-      .map(r => (r.getLong(0), r.getLong(1)))
-    // the same banded pairing operator serves audio unchanged
-    assert(pairs.toSeq == Seq((1L, 2L)))
-  }
-
   test("real JPEG bytes decode through the stock-JDK codec lane, within lossy tolerance of PNG") {
-    implicit val s = spark
-    import spark.implicits._
     // same pixels through two containers: PNG is lossless ground
     // truth, JPEG is the lossy re-encode the new lane must decode
     val img = new java.awt.image.BufferedImage(64, 64,
@@ -218,15 +134,18 @@ class MultimodalSpec extends AnyFunSuite {
     }
     val jpg = enc("jpg")
     assert((jpg(0) & 0xff) == 0xff && (jpg(1) & 0xff) == 0xd8, "fixture must be a real JPEG")
-    val rec = Seq(
-      graft.operators.MMRecord(1L, enc("png"), "png", 64, 64, 1),
-      graft.operators.MMRecord(2L, jpg, "jpeg", 64, 64, 1)).toDS()
-    val feats = Multimodal.decodeFeatures(rec, batchSize = 8).collect()
-      .map(f => f.doc_id -> f.features).toMap
-    val png = feats(1L); val jpeg = feats(2L)
-    assert(png(7) == 4.0, "PNG lane")
-    assert(jpeg(7) == 5.0, "JPEG must take the real codec lane, not the histogram stub")
-    assert(jpeg(4) == 64.0 && jpeg(5) == 64.0 && jpeg(6) == 4096.0)
+    val pixels = Seq(enc("png") -> "png", jpg -> "jpeg").map { case (c, fmt) =>
+      Multimodal.imagePixels(graft.operators.MMRecord(1L, c, fmt, 64, 64, 1)).get }
+    assert(pixels.forall { case (w, h, px) => w == 64 && h == 64 && px.length == 4096 })
+    // channel + luma means of a grid, in 0–1
+    def means(px: Array[Int]): Seq[Double] = {
+      val chans = px.toSeq.map { p =>
+        val (r, g, b) = ((p >> 16) & 0xff, (p >> 8) & 0xff, p & 0xff)
+        Seq(r.toDouble, g.toDouble, b.toDouble, 0.299 * r + 0.587 * g + 0.114 * b)
+      }
+      (0 to 3).map(i => chans.map(_(i)).sum / px.length / 255.0)
+    }
+    val png = means(pixels(0)._3); val jpeg = means(pixels(1)._3)
     // lossy but mean-preserving: channel + luma means within 2/255
     for (i <- 0 to 3)
       assert(math.abs(png(i) - jpeg(i)) < 2.0 / 255.0,
@@ -369,15 +288,14 @@ class MultimodalSpec extends AnyFunSuite {
     val rec = Seq(
       graft.operators.MMRecord(1L, video, "mp4", 64, 48, 135),
       graft.operators.MMRecord(2L, jpg, "jpeg", 64, 48, 1),
-      // an AVC-coded track stays on the declared histogram lane
+      // an AVC-coded track whose sample is not H.264 stays undecoded
       graft.operators.MMRecord(3L, mp4WithSample(jpg, "avc1"), "mp4", 64, 48, 135)).toDS()
-    val feats = Multimodal.decodeFeatures(rec, batchSize = 4).collect()
-      .map(f => f.doc_id -> f.features).toMap
-    assert(feats(1L)(7) == 6.0, "jpeg-in-mp4 must take the real keyframe lane")
-    assert(feats(3L).length == 8 && feats(3L)(7) != 6.0, "AVC stays the stub")
-    // same bitstream, same decoded grid: keyframe features equal the
-    // standalone image's except the codec tag
-    for (i <- 0 to 6) assert(feats(1L)(i) == feats(2L)(i), s"feature $i")
+    val pixels = rec.collect().map(r => r.doc_id -> Multimodal.imagePixels(r)).toMap
+    assert(pixels(1L).isDefined, "jpeg-in-mp4 must take the real keyframe lane")
+    assert(pixels(3L).isEmpty, "a JPEG payload under an avc1 entry has no pixels")
+    // same bitstream, same decoded grid as the standalone image
+    val ((w1, h1, px1), (w2, h2, px2)) = (pixels(1L).get, pixels(2L).get)
+    assert((w1, h1) == (64, 48) && (w1, h1) == (w2, h2) && px1.sameElements(px2))
     // and the phash lane hashes the keyframe identically to the image
     val hashes = Multimodal.imagePhash(rec).collect()
       .map(r => r.getLong(0) -> r.getLong(2)).toMap
@@ -516,9 +434,9 @@ class MultimodalSpec extends AnyFunSuite {
       rows(Multimodal.phashPairs(sampleDf)))
   }
 
-  test("codec fuzz: arbitrary and mutated payloads never fail a task, one row per record") {
-    // the documented contract — "None / fallback features for anything
-    // malformed" — under adversarial bytes: pure-random blobs, magic
+  test("codec fuzz: arbitrary and mutated payloads never fail a task") {
+    // the documented contract — "None for anything malformed" — under
+    // adversarial bytes: pure-random blobs, magic
     // numbers glued to garbage, and random single-byte mutations +
     // truncations of VALID png/bmp/wav/jpeg/mp4 payloads (headers that
     // lie about their own length fields are exactly what a web crawl
@@ -553,7 +471,6 @@ class MultimodalSpec extends AnyFunSuite {
       (121 to 180).map(i => graft.operators.MMRecord(i.toLong,
         mutate(valid(i % 2)), fmts(i % 5), 8, 8, 3))
     ).toDS()
-    assert(Multimodal.decodeFeatures(recs).count() == 180) // fallback, never crash
     assert(Multimodal.resizeMeta(recs).count() == 180)
     assert(Multimodal.frameSample(recs).count() >= 0)
     assert(Multimodal.imagePhash(recs).count() >= 0) // unhashable rows drop
@@ -730,14 +647,11 @@ class MultimodalSpec extends AnyFunSuite {
       assert(px(y * 32 + x) == ((lum << 16) | (lum << 8) | lum),
         s"pixel ($x,$y)")
     }
-    // the decodeFeatures lane scores it as a REAL keyframe (tag 6.0)
-    implicit val s = spark
-    import spark.implicits._
-    val recs = Seq(graft.operators.MMRecord(9L, video, "mp4", 32, 32, 1)).toDS()
-    val f = Multimodal.decodeFeatures(recs).collect().head.features
-    assert(f(7) == 6.0, "avc I_PCM must take the real keyframe lane")
-    val meanLum = (0 until 16).map(_ * 16).sum / 16.0 / 255.0
-    assert(math.abs(f(3) - meanLum) < 1e-9, "luma mean must match the PCM payload")
+    // the container sniff routes the mp4 record to the same keyframe
+    val sniffed = Multimodal.imagePixels(
+      graft.operators.MMRecord(9L, video, "mp4", 32, 32, 1))
+    assert(sniffed.exists { case (sw, sh, spx) => sw == 32 && sh == 32 && spx.sameElements(px) },
+      "avc I_PCM must take the real keyframe lane")
   }
 
   test("avc1 color conversion, cropping, and the declared entropy-coded boundary") {
@@ -760,15 +674,11 @@ class MultimodalSpec extends AnyFunSuite {
     assert(w2 == 20 && h2 == 16 && px2.length == 320)
     assert(px2.forall(_ == ((77 << 16) | (77 << 8) | 77)))
     // the boundary: a CABAC PPS — no entropy decoder in-tree — must
-    // return None and leave the row on the histogram stub
+    // return None, and the record has no pixels
     val cabac = mp4WithAvcSample(spsBytes(1, 1), ppsBytes(cabac = true),
       idrIPcmBytes(Seq((y100, cb200, cr50))))
     assert(graft.operators.Multimodal.mp4FirstAvcFrame(cabac).isEmpty)
-    implicit val s = spark
-    import spark.implicits._
-    val f = Multimodal.decodeFeatures(
-      Seq(graft.operators.MMRecord(3L, cabac, "mp4", 16, 16, 1)).toDS())
-      .collect().head.features
-    assert(f(7) != 6.0, "CABAC stream stays on the declared stub lane")
+    assert(Multimodal.imagePixels(graft.operators.MMRecord(3L, cabac, "mp4", 16, 16, 1)).isEmpty,
+      "CABAC stream has no in-tree decoder")
   }
 }

@@ -191,8 +191,10 @@ class PlanPinSpec extends AnyFunSuite {
     val docs = graft.sources.Tables(spark, TestSpark.sfDir).documents
     val held = new graft.operators.Caching.Held
     try {
-      val scored = graft.operators.TextOps.bigramSurprisalPlan(held, docs)
-      val bg = held.frames.head
+      // the first frame bigramSurprisalPlan holds is the bigram frame
+      var bg: org.apache.spark.sql.DataFrame = null
+      val scored = graft.operators.TextOps.bigramSurprisalPlan(
+        df => { if (bg == null) bg = df; held(df) }, docs)
       // bg reads its own cache; the single corpus explode lives in the
       // cached plan INSIDE the InMemoryRelation
       val bgCached = collectAll(bg.queryExecution.executedPlan) {

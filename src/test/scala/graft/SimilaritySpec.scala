@@ -202,102 +202,6 @@ class SimilaritySpec extends AnyFunSuite {
     info(s"IVF recall vs brute force (4/16 lists probed): ${ivf.count(brute.contains)}/${brute.size}")
   }
 
-  test("stored IVF index: pruned-partition search equals the inline operator") {
-    val dir = java.nio.file.Files.createTempDirectory("ivf-idx").toString
-    Similarity.buildIvfIndex(emb, dir, nProbes = 10, nClusters = 16, iters = 3)
-    val stored = Similarity.searchIvfIndex(emb, dir, nProbes = 10, k = 5,
-      nProbeClusters = 4)
-    // the list scan must be partition-pruned to the probed clusters
-    val scan = stored.queryExecution.executedPlan.toString
-    assert(scan.contains("PartitionFilters: [cluster_id"))
-    val inline = Similarity.annIvfTopK(emb, nProbes = 10, k = 5,
-      nClusters = 16, nProbeClusters = 4, iters = 3)
-    assert(stored.collect().map(_.toSeq).toSeq ==
-      inline.collect().map(_.toSeq).toSeq)
-  }
-
-  test("IVF index append: new vectors join their lists with no retrain; search sees them") {
-    val dir = java.nio.file.Files.createTempDirectory("ivf-append").toString
-    Similarity.buildIvfIndex(emb, dir, nProbes = 10, nClusters = 16, iters = 3)
-    val baseline = Similarity.searchIvfIndex(emb, dir, nProbes = 10, k = 1)
-      .collect().map(r => r.getLong(0) -> (r.getLong(2), r.getDouble(3))).toMap
-    val before = Similarity.trainingsRun.get
-    // append an exact copy of probe 3's vector as a new corpus row:
-    // identical vector ⇒ identical coarse assignment ⇒ it lands in a
-    // list probe 3 probes first, so recall at rank 1 is guaranteed
-    val pv = emb.filter($"vec_id" === 3L)
-      .select(org.apache.spark.sql.functions.expr(
-        "transform(embedding, x -> cast(x as double))"))
-      .collect().head.getSeq[Double](0)
-    Similarity.appendToIvfIndex(Seq((99999L, pv)).toDF("vec_id", "cv"), dir)
-    assert(Similarity.trainingsRun.get == before,
-      "append must assign with the stored centroids, never retrain")
-    val got = Similarity.searchIvfIndex(emb, dir, nProbes = 10, k = 1)
-      .collect().map(r => r.getLong(0) -> (r.getLong(2), r.getDouble(3))).toMap
-    assert(got(3L)._1 == 99999L && got(3L)._2 > 0.999999)
-    // other probes' results are untouched unless the new vector wins
-    got.foreach { case (p, (v, c)) =>
-      if (p != 3L && v != 99999L) assert((v, c) == baseline(p))
-    }
-  }
-
-  test("stored PQ index: code-only ADC search equals the inline operator") {
-    val dir = java.nio.file.Files.createTempDirectory("pq-idx").toString
-    Similarity.buildPqIndex(emb, dir, nProbes = 10)
-    val stored = Similarity.searchPqIndex(emb, dir, nProbes = 10, k = 5)
-    // deterministic training ⇒ identical codebook ⇒ identical results
-    val inline = Similarity.annPqTopK(emb, nProbes = 10, k = 5)
-    assert(stored.collect().map(_.toSeq).toSeq ==
-      inline.collect().map(_.toSeq).toSeq)
-    // the stored scan feeding the ADC join reads ONLY the code triple
-    val plan = stored.queryExecution.executedPlan.toString
-    assert(plan.contains("struct<vec_id:bigint,s:int,c:int>"))
-  }
-
-  test("IVF drift stats: zero for in-distribution data, positive for decorrelated data") {
-    val dir = java.nio.file.Files.createTempDirectory("ivf-drift").toString
-    Similarity.buildIvfIndex(emb, dir, nProbes = 10)
-    val cvs = emb.filter($"vec_id" >= 10)
-      .select($"vec_id" + 100000L as "vec_id",
-        org.apache.spark.sql.functions.expr(
-          "transform(embedding, x -> cast(x as double))").as("cv"))
-    // an exact re-send of the corpus: same assignments, same per-
-    // cluster means → drift exactly 0 everywhere
-    val same = Similarity.ivfDriftStats(cvs, dir).collect()
-    assert(same.nonEmpty)
-    same.foreach(r => assert(r.getDouble(5) == 0.0, s"cluster ${r.getInt(0)}"))
-    // decorrelated new data (fixed sinusoidal offset) aligns worse
-    // with the old quantizer: aggregate weighted drift must be > 0
-    val shifted = cvs.select($"vec_id",
-      org.apache.spark.sql.functions.expr(
-        "transform(cv, (x, j) -> x + 0.5 * sin(cast(j + 1 as double)))").as("cv"))
-    val drift = Similarity.ivfDriftStats(shifted, dir).collect()
-    val weighted = drift.map(r => r.getDouble(5) * r.getLong(3)).sum /
-      math.max(1L, drift.map(_.getLong(3)).sum)
-    assert(weighted > 0.01, s"weighted drift $weighted")
-  }
-
-  test("PQ index append: new vectors encode with the stored codebook; ADC search sees them") {
-    val dir = java.nio.file.Files.createTempDirectory("pq-append").toString
-    Similarity.buildPqIndex(emb, dir, nProbes = 10)
-    val before = Similarity.trainingsRun.get
-    val pv = emb.filter($"vec_id" === 4L)
-      .select(org.apache.spark.sql.functions.expr(
-        "transform(embedding, x -> cast(x as double))"))
-      .collect().head.getSeq[Double](0)
-    Similarity.appendToPqIndex(Seq((88888L, pv)).toDF("vec_id", "cv"), dir)
-    assert(Similarity.trainingsRun.get == before,
-      "append must encode with the stored codebook, never retrain")
-    // the rerank stage reads exact vectors from the base table, so a
-    // real append grows that table too — search against the grown one
-    val embPlus = emb.select($"vec_id", $"embedding", $"label")
-      .union(Seq((88888L, pv.map(_.toFloat), 0)).toDF("vec_id", "embedding", "label"))
-    // the appended exact copy of probe 4's vector re-ranks to cos ≈ 1
-    val got = Similarity.searchPqIndex(embPlus, dir, nProbes = 10, k = 1)
-      .collect().map(r => r.getLong(0) -> (r.getLong(2), r.getDouble(3))).toMap
-    assert(got(4L)._1 == 88888L && got(4L)._2 > 0.999999)
-  }
-
   test("PQ ANN: planted identical vector is recalled at rank 1 via ADC + re-rank") {
     val v = Array.tabulate(64)(i => math.sin(i * 0.7 + 1).toFloat).toSeq
     val corpus = (0 until 60).map(j =>

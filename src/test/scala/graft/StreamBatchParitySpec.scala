@@ -300,8 +300,9 @@ class StreamBatchParitySpec extends AnyFunSuite {
     val arrivals = docRows.filter(_._1 >= splitId) ++ Seq(recrawl, dupA, dupB)
     // the stored index, derived exactly as the batch operator derives
     // it (shared cleanScored prefix over the previous crawl)
-    val indexDf = graft.operators.Dedup
-      .incrementalIndex(docRows.filter(_._1 < splitId).toDF("doc_id", "text"))
+    val indexDf = graft.operators.TextOps
+      .cleanScored(docRows.filter(_._1 < splitId).toDF("doc_id", "text"), 5, 0.5)
+      .select("h").distinct()
     val in = MemoryStream[(Long, String)]
     val q = graft.streaming.DocPipelineJobs
       .incrementalGateStream(in.toDF().toDF("doc_id", "text"), indexDf)

@@ -104,21 +104,6 @@ class TextOpsSpec extends AnyFunSuite {
     assert(out(0) != out(2))
   }
 
-  test("isTrue mirrors the reference truthiness table") {
-    import graft.functions.ValueOps
-    import org.apache.spark.sql.functions.col
-    // cases straight from the reference doctests (common.py:138)
-    val cases = Seq(
-      "true" -> true, "False" -> false, "off" -> false, "ON" -> true,
-      "1" -> true, "0" -> false, "0.001" -> false, "0.97" -> true,
-      "" -> false, "-3" -> true, "y" -> true, "banana" -> false,
-      "inf" -> true, "-inf" -> false, "nan" -> false)
-    val got = cases.map(_._1).toDF("v")
-      .select(col("v"), ValueOps.isTrue(col("v")).as("t"))
-      .collect().map(r => r.getString(0) -> r.getBoolean(1)).toMap
-    cases.foreach { case (v, want) => assert(got(v) == want, s"isTrue($v)") }
-  }
-
   test("codegen'd fingerprint equals the declarative fold, incl. non-ASCII") {
     val d = docs(
       (1L, "key agg row scan slow fast table value part hash", "en"),
@@ -316,75 +301,6 @@ class TextOpsSpec extends AnyFunSuite {
       0.7 * (59.0 / 15.0 / 10.0)
     val p = math.round(1.0 / (1.0 + math.exp(-z)) * 1e6) / 1e6
     assert(out(1L)._1 == p)
-  }
-
-  test("getByPath navigates json by key/index with defaults like the reference") {
-    import graft.functions.ValueOps
-    import org.apache.spark.sql.functions.{col, lit}
-    // mirrors reference tests/test_common.py test_get_by_path
-    val json = """{"name": "Event Example",
-      "handlers": [{"h": "first"}, {"handler": {"kwargs": {"three": {"a": "a"}}}}]}"""
-    val df = Seq(json).toDF("j")
-    def get(path: Seq[Any], default: org.apache.spark.sql.Column = lit(null)) =
-      df.select(ValueOps.getByPath(col("j"), path, default)).collect().head
-    assert(get(Seq("name")).getString(0) == "Event Example")
-    assert(get(Seq("handlers", 0)).getString(0) == """{"h":"first"}""")
-    assert(get(Seq("handlers", 17), lit(false).cast("string")).getString(0) == "false")
-    assert(get(Seq("handlers", 1, "handler", "kwargs", "three", "a"),
-      lit(7).cast("string")).getString(0) == "a")
-    assert(get(Seq("missing")).isNullAt(0))
-    // negative index never matches -> default (reference semantics)
-    assert(get(Seq("handlers", -1), lit("fb")).getString(0) == "fb")
-    // Long indices navigate arrays like Ints
-    assert(get(Seq("handlers", 0L)).getString(0) == """{"h":"first"}""")
-    // dotted keys are literal keys, not two navigation steps
-    val dotted = Seq("""{"a.b": "lit", "a": {"b": "nested"}}""").toDF("j")
-    assert(dotted.select(graft.functions.ValueOps.getByPath(
-      org.apache.spark.sql.functions.col("j"), Seq("a.b")))
-      .collect().head.getString(0) == "lit")
-    // keys Spark's JSON-path grammar can't express fail loudly
-    // instead of silently resolving to the default
-    for (bad <- Seq("a'b", "a]b", "a\\b"))
-      intercept[IllegalArgumentException] {
-        ValueOps.getByPath(col("j"), Seq(bad))
-      }
-  }
-
-  test("groupName joins stream/application/extras/listener with the key separator") {
-    import graft.functions.ValueOps
-    import org.apache.spark.sql.functions.{col, lit}
-    // mirrors reference tests/test_common.py test_generate_group_name
-    val df = Seq(("UNITTEST", "UnitTest", "Test")).toDF("s", "a", "l")
-    val plain = df.select(ValueOps.groupName(col("s"), col("a"), col("l")))
-      .collect().head.getString(0)
-    assert(plain == "UNITTEST:UnitTest:Test")
-    val withArgs = df.select(ValueOps.groupName(col("s"), col("a"), col("l"),
-      Seq(lit("GroupConsumer"), lit("OrderedDict")))).collect().head.getString(0)
-    assert(withArgs == "UNITTEST:UnitTest:GroupConsumer:OrderedDict:Test")
-    // a NULL part renders as "None" (str(None) in the reference),
-    // not silently skipped — the joined shape stays fixed-arity
-    val withNull = df.select(ValueOps.groupName(col("s"), col("a"), col("l"),
-      Seq(lit(null).cast("string")))).collect().head.getString(0)
-    assert(withNull == "UNITTEST:UnitTest:None:Test")
-  }
-
-  test("interpret classifies raw payload strings like the reference") {
-    import graft.functions.ValueOps
-    import org.apache.spark.sql.functions.col
-    val vals = Seq("42", "-7", "3.14", "true", "NaN", "null",
-      """{"a": 1}""", "[1, 2]", "plain words", "{}", "[ ]")
-    val got = vals.toDF("v")
-      .select(ValueOps.interpret(col("v")).as("i"))
-      .select("i.vtype", "i.int_value", "i.float_value", "i.bool_value")
-      .collect()
-    assert(got.map(_.getString(0)).toSeq ==
-      Seq("int", "int", "float", "bool", "float", "null", "json", "json",
-        // empty containers are falsy in the reference → raw string
-        "string", "string", "string"))
-    assert(got(0).getLong(1) == 42L && got(1).getLong(1) == -7L)
-    assert(got(2).getDouble(2) == 3.14)
-    assert(got(3).getBoolean(3))
-    assert(got(4).getDouble(2).isNaN)
   }
 
   test("bm25 ranks keyword matches per Okapi formula with doc_id tie-break") {
