@@ -53,7 +53,7 @@ object GraftSession {
       "spark.sql.extensions" -> "graft.GraftExtensions",
       "spark.sql.session.timeZone" -> "UTC",
       // the generated-class cache defaults to 100 entries; a session
-      // running the full 134-query suite compiles far more codegen
+      // running the full 143-query suite compiles far more codegen
       // units than that, so every pass would silently recompile every
       // plan (Janino time billed to whichever query runs next — the
       // residual drift SCALING.md chased in round 5). Sized for the

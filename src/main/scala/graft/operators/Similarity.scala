@@ -19,25 +19,66 @@ import graft.functions.VectorOps
   */
 object Similarity {
 
+  // Tuning constants. Every SparkEntry query runs with exactly these
+  // values, and the DuckDB oracles (SparkEntry.oracleSql) hardcode
+  // them, so a second value could never be verified.
+  /** vec_id < NProbes are the probes; the rest is the corpus. */
+  private val NProbes = 10
+  /** Neighbors per probe returned by every top-k search. */
+  private val TopK = 5
+  /** Voters per probe in [[knnVote]]. */
+  private val KnnVoters = 10
+  /** LSH geometry: independent hyperplane tables × bits per table. */
+  private val LshTables = 12
+  private val LshBitsPerTable = 6
+  /** IVF coarse quantizer: lists trained, lists probed, Lloyd passes. */
+  private val IvfClusters = 16
+  private val IvfProbeClusters = 4
+  private val IvfIters = 3
+  /** PQ codebook: subspaces, codes per subspace, Lloyd passes, and the
+    * approx candidates each probe re-ranks by exact cosine.
+    */
+  private val PqSubspaces = 8
+  private val PqCodes = 16
+  private val PqIters = 3
+  private val PqRerank = 20
+  /** [[rangeSearch]]'s cosine threshold. */
+  private val RangeTau = 0.25
+  /** PCA: components kept, power iterations per component. */
+  private val PcaComponents = 4
+  private val PcaPowerIters = 200
+  /** Label terms per cluster in [[clusterTopics]]. */
+  private val TopicTerms = 5
+  /** [[hybridRrf]]: per-arm depth, fused depth, RRF rank offset. */
+  private val RrfArmK = 20
+  private val RrfTopK = 10
+  private val RrfOffset = 60
+  /** Size cap for model training samples. Codebook quality saturates
+    * at a few thousand training points per centroid family (the FAISS
+    * rule of thumb is ~100–1000 points per centroid), so the sample —
+    * not the corpus — bounds training cost.
+    */
+  private val TrainSampleSize = 4096
+
   // zero-norm vectors have no direction: cosine would be NaN, and
   // Spark ranks NaN above every number — they are excluded up front
   // (mirrored in the oracle SQL)
-  private def probes(embeddings: DataFrame, nProbes: Int): DataFrame =
-    embeddings.filter(col("vec_id") < nProbes)
+  private def probes(embeddings: DataFrame): DataFrame =
+    embeddings.filter(col("vec_id") < NProbes)
       .select(col("vec_id").as("probe_id"),
         VectorOps.toDoubleArray(col("embedding")).as("pv"))
       .filter(VectorOps.dot(col("pv"), col("pv")) > 0)
 
-  private def corpus(embeddings: DataFrame, nProbes: Int): DataFrame =
-    embeddings.filter(col("vec_id") >= nProbes)
+  private def corpus(embeddings: DataFrame): DataFrame =
+    embeddings.filter(col("vec_id") >= NProbes)
       .select(col("vec_id"), col("label"),
         VectorOps.toDoubleArray(col("embedding")).as("cv"))
       .filter(VectorOps.dot(col("cv"), col("cv")) > 0)
 
   /** The shared top-k epilogue: rank per probe by cosine desc with a
     * deterministic vec_id tie-break — ONE definition, because the
-    * stored-index-equals-inline-operator spec depends on every ANN
-    * variant ranking and rounding identically.
+    * recall specs compare every ANN variant against [[bruteTopK]] and
+    * so depend on all of them ranking and rounding identically.
     */
   private def rankTopK(scored: DataFrame, k: Int): DataFrame = {
     val w = Window.partitionBy(col("probe_id"))
@@ -54,13 +95,13 @@ object Similarity {
     * pass over the corpus; rank per probe with deterministic
     * tie-break on vec_id.
     */
-  def bruteTopK(embeddings: DataFrame, nProbes: Int = 10, k: Int = 5): DataFrame =
+  def bruteTopK(embeddings: DataFrame): DataFrame =
     rankTopK(
-      corpus(embeddings, nProbes)
-        .crossJoin(broadcast(probes(embeddings, nProbes)))
-        .withColumn("cos", VectorOps.cosine(col("pv"), col("cv"))), k)
+      corpus(embeddings)
+        .crossJoin(broadcast(probes(embeddings)))
+        .withColumn("cos", VectorOps.cosine(col("pv"), col("cv"))), TopK)
 
-  /** Multi-table LSH ANN: candidates come from nTables independent
+  /** Multi-table LSH ANN: candidates come from LshTables independent
     * hyperplane signatures (explode + one equi-join on the packed
     * table key); cosine is computed only for bucket collisions, then
     * duplicate (probe, vec) hits across tables collapse through a
@@ -71,14 +112,13 @@ object Similarity {
     * parameters prune far harder. Recall vs `bruteTopK` is the spec's
     * property check.
     */
-  def annLshTopK(embeddings: DataFrame, nProbes: Int = 10, k: Int = 5,
-      nTables: Int = 12, bitsPerTable: Int = 6): DataFrame = {
-    val p = probes(embeddings, nProbes)
+  def annLshTopK(embeddings: DataFrame): DataFrame = {
+    val p = probes(embeddings)
       .withColumn("bucket",
-        explode(VectorOps.lshTableKeys(col("pv"), nTables, bitsPerTable)))
-    val c = corpus(embeddings, nProbes)
+        explode(VectorOps.lshTableKeys(col("pv"), LshTables, LshBitsPerTable)))
+    val c = corpus(embeddings)
       .withColumn("bucket",
-        explode(VectorOps.lshTableKeys(col("cv"), nTables, bitsPerTable)))
+        explode(VectorOps.lshTableKeys(col("cv"), LshTables, LshBitsPerTable)))
     val scored = c.join(broadcast(p), Seq("bucket"))
       .withColumn("cos", VectorOps.cosine(col("pv"), col("cv")))
       // same pair can collide in several tables; cos is identical on
@@ -86,17 +126,17 @@ object Similarity {
       // already needed to rank per probe
       .groupBy(col("probe_id"), col("vec_id"))
       .agg(max(col("cos")).as("cos"))
-    rankTopK(scored, k)
+    rankTopK(scored, TopK)
   }
 
   /** One IVF centroid: id + unit-norm vector. */
   final case class Centroid(cluster_id: Int, centroid: Seq[Double])
 
   /** Corpus → (cluster_id, vec_id, cv) by broadcast centroid argmax —
-    * shared by the inline operator and the index builder so stored
-    * and inline assignments are identical by construction. Centroids
-    * are unit vectors, so argmax_c dot(v, c) ≡ argmax_c cos(v, c):
-    * no need to normalize the data side for ranking.
+    * shared by the IVF and IVF-SQ8 searches so their list assignments
+    * are identical by construction. Centroids are unit vectors, so
+    * argmax_c dot(v, c) ≡ argmax_c cos(v, c): no need to normalize the
+    * data side for ranking.
     */
   private def assignClusters(c: DataFrame, cDF: DataFrame): DataFrame =
     c.crossJoin(cDF)
@@ -118,7 +158,7 @@ object Similarity {
       .select(col("vec_id"), col("cluster_id"))
 
   /** Each probe's nProbeClusters nearest centroids (broadcast score +
-    * per-probe rank) — shared by the inline operator and index search.
+    * per-probe rank) — shared by every IVF-routed search.
     */
   private def probeClusters(p: DataFrame, cDF: DataFrame,
       nProbeClusters: Int): DataFrame = {
@@ -131,39 +171,41 @@ object Similarity {
       .select(col("probe_id"), col("pv"), col("cluster_id"))
   }
 
-  /** Size cap for codebook training samples. Codebook quality
-    * saturates at a few thousand training points per centroid family
-    * (the FAISS rule of thumb is ~100–1000 points per centroid), so
-    * the sample — not the corpus — bounds training cost.
-    */
-  private val TrainSampleSize = 4096
-
   /** A collected training sample plus a content fingerprint (ids +
     * exact double bits), so trained models can key on WHAT was
     * trained on, not on which DataFrame object happened to produce it.
     */
   private final case class TrainSample(vecs: Array[(Long, Array[Double])], fp: Long)
 
-  /** Cross-query caches. Training is deterministic for fixed params +
-    * data, so retraining the same model per query is pure waste — at
-    * corpus scale each retrain re-runs the TakeOrdered sample collect
-    * over the full corpus. The sample caches on the corpus plan's
-    * `semanticHash` (same source ⇒ same plan ⇒ same sample; assumes
-    * the underlying files are immutable within a JVM session); models
-    * cache on the sample's CONTENT fingerprint + every training
-    * param, which is exact regardless of where the sample came from.
+  /** Cross-query caches. Training is deterministic for fixed data
+    * (every training parameter is a constant), so retraining the same
+    * model per query is pure waste — at corpus scale each retrain
+    * re-runs the TakeOrdered sample collect over the full corpus. The
+    * sample caches on the corpus plan's `semanticHash` (same source ⇒
+    * same plan ⇒ same sample; assumes the underlying files are
+    * immutable within a JVM session); models cache on the sample's
+    * CONTENT fingerprint, which is exact regardless of where the
+    * sample came from.
+    *
+    * The model caches double as the record `SparkEntry.oracleSql`
+    * reads: it interpolates the learned constants into the DuckDB
+    * oracles (the same shared-model pattern as the LSH plane and
+    * MinHash permutation literals — ONE model definition,
+    * assignment/routing/search verified independently in SQL). If two
+    * DIFFERENT corpora train in one JVM the model is ambiguous — the
+    * `last*Model` accessors return None and the affected queries
+    * degrade to rows-only rather than emit a wrong oracle.
     */
   private val sampleCache =
-    new java.util.concurrent.ConcurrentHashMap[(Int, Int), TrainSample]()
+    new java.util.concurrent.ConcurrentHashMap[Int, TrainSample]()
   private val ivfCache =
-    new java.util.concurrent.ConcurrentHashMap[(Long, Int, Int), Seq[Centroid]]()
+    new java.util.concurrent.ConcurrentHashMap[Long, Seq[Centroid]]()
   private val pqCache =
-    new java.util.concurrent.ConcurrentHashMap[(Long, Int, Int, Int), Seq[PqCentroid]]()
+    new java.util.concurrent.ConcurrentHashMap[Long, Seq[PqCentroid]]()
   // the residual-trained codebook is a DIFFERENT model from the plain
-  // PQ codebook (and depends on the coarse quantizer's params too) —
-  // its own cache so the two can never cross
+  // PQ codebook — its own cache so the two can never cross
   private val resPqCache =
-    new java.util.concurrent.ConcurrentHashMap[(Long, Int, Int, Int, Int, Int), Seq[PqCentroid]]()
+    new java.util.concurrent.ConcurrentHashMap[Long, Seq[PqCentroid]]()
 
   /** Count of actual Lloyd trainings run this JVM (cache misses only)
     * — lets specs pin that a suite of ANN queries trains each model
@@ -181,11 +223,14 @@ object Similarity {
   final case class PcaModel(mean: Array[Double], axes: Array[Array[Double]])
 
   private val pcaCache =
-    new java.util.concurrent.ConcurrentHashMap[(Long, Int, Int), PcaModel]()
-  private val recordedPca =
     new java.util.concurrent.ConcurrentHashMap[Long, PcaModel]()
-  def lastPcaModel: Option[PcaModel] = soleValue(recordedPca)
-  private val DefaultPcaParams = (4, 200) // (nComponents, powerIters)
+
+  private def soleValue[V](m: java.util.concurrent.ConcurrentHashMap[Long, V]): Option[V] =
+    if (m.size == 1) Some(m.values.iterator.next()) else None
+  def lastIvfModel: Option[Seq[Centroid]] = soleValue(ivfCache)
+  def lastPqModel: Option[Seq[PqCentroid]] = soleValue(pqCache)
+  def lastResPqModel: Option[Seq[PqCentroid]] = soleValue(resPqCache)
+  def lastPcaModel: Option[PcaModel] = soleValue(pcaCache)
 
   /** μ·axisₖ as ONE fixed-order driver-side sum — shared by the
     * projection operator and the SQL oracle emitter so the centering
@@ -197,51 +242,22 @@ object Similarity {
     s
   }
 
-  /** Default training params — the single source for the "record this
-    * model for the SQL oracle" checks below.
+  /** Deterministic, content-independent training sample: the
+    * [[TrainSampleSize]] corpus vectors with the lowest `md5(vec_id)`
+    * (vec_id tie-break), unit-normalized, returned in vec_id order. A
+    * TakeOrdered-shaped job — the corpus streams once and only the
+    * winners move; at 100 TB the sample is the only vector data that
+    * ever reaches the driver. The md5 ordering decorrelates the sample
+    * from ingestion order (a plain `LIMIT n` would train on one
+    * shard's vectors).
     */
-  private val DefaultIvfParams = (16, 3) // (nClusters, iters)
-  private val DefaultPqParams = (8, 16, 3) // (nSub, kCodes, iters)
-
-  /** Models recorded for `SparkEntry.oracleSql`, which interpolates
-    * the learned constants into the DuckDB oracles (the same
-    * shared-model pattern as the LSH plane and MinHash permutation
-    * literals — ONE model definition, assignment/routing/search
-    * verified independently in SQL). Keyed by sample fingerprint and
-    * recorded ONLY for default-param trainings: the oracle queries run
-    * with defaults, so a non-default training (a spec, an ad-hoc call)
-    * can never overwrite the model the verified queries used. If two
-    * DIFFERENT corpora both train with defaults in one JVM the model
-    * is ambiguous — the accessors return None and the affected queries
-    * degrade to rows-only rather than emit a wrong oracle.
-    */
-  private val recordedIvf =
-    new java.util.concurrent.ConcurrentHashMap[Long, Seq[Centroid]]()
-  private val recordedPq =
-    new java.util.concurrent.ConcurrentHashMap[Long, Seq[PqCentroid]]()
-  private val recordedResPq =
-    new java.util.concurrent.ConcurrentHashMap[Long, Seq[PqCentroid]]()
-  private def soleValue[V](m: java.util.concurrent.ConcurrentHashMap[Long, V]): Option[V] =
-    if (m.size == 1) Some(m.values.iterator.next()) else None
-  def lastIvfModel: Option[Seq[Centroid]] = soleValue(recordedIvf)
-  def lastPqModel: Option[Seq[PqCentroid]] = soleValue(recordedPq)
-  def lastResPqModel: Option[Seq[PqCentroid]] = soleValue(recordedResPq)
-
-  /** Deterministic, content-independent training sample: the n corpus
-    * vectors with the lowest `md5(vec_id)` (vec_id tie-break),
-    * unit-normalized, returned in vec_id order. A TakeOrdered-shaped
-    * job — the corpus streams once and only the winners move; at
-    * 100 TB the sample is the only vector data that ever reaches the
-    * driver. The md5 ordering decorrelates the sample from ingestion
-    * order (a plain `LIMIT n` would train on one shard's vectors).
-    */
-  private def sampleUnitVecs(corpusVecs: DataFrame, n: Int): Array[(Long, Array[Double])] =
+  private def sampleUnitVecs(corpusVecs: DataFrame): Array[(Long, Array[Double])] =
     corpusVecs
       .select(col("vec_id"), col("cv"))
-      .orderBy(md5(col("vec_id").cast("string")), col("vec_id")).limit(n)
+      .orderBy(md5(col("vec_id").cast("string")), col("vec_id")).limit(TrainSampleSize)
       .collect()
       .map { r =>
-        // normalize the n winners here instead of mapping an
+        // normalize the winners here instead of mapping an
         // interpreted per-element lambda over the whole corpus before
         // the TakeOrdered cut; sequential sum + Math.sqrt + division
         // are the exact double ops the SQL formulation ran, so
@@ -257,11 +273,11 @@ object Similarity {
       .sortBy(_._1)
 
   /** The cached sample for a corpus plan: one TakeOrdered collect per
-    * (corpus, n) per JVM, shared by every model that trains on it.
+    * corpus per JVM, shared by every model that trains on it.
     */
-  private def trainSample(corpusVecs: DataFrame, n: Int = TrainSampleSize): TrainSample =
-    sampleCache.computeIfAbsent((corpusVecs.semanticHash(), n), { _ =>
-      val vecs = sampleUnitVecs(corpusVecs, n)
+  private def trainSample(corpusVecs: DataFrame): TrainSample =
+    sampleCache.computeIfAbsent(corpusVecs.semanticHash(), { _ =>
+      val vecs = sampleUnitVecs(corpusVecs)
       var h = 1125899906842597L // FNV-ish seeded polynomial over exact bits
       vecs.foreach { case (id, v) =>
         h = h * 31 + id
@@ -281,10 +297,11 @@ object Similarity {
     * assignment, routing, search) stays a distributed plan; training
     * cost is bounded by the sample, not the corpus — running
     * distributed Lloyd over 100 TB per query to fit a 16×64-double
-    * model would be shuffle for nothing.
+    * model would be shuffle for nothing. An empty corpus throws
+    * `IllegalArgumentException("requirement failed: empty corpus")`.
     */
-  def ivfTrain(corpusVecs: DataFrame, nClusters: Int = 16, iters: Int = 3): Seq[Centroid] =
-    ivfTrainOnSample(trainSample(corpusVecs), nClusters, iters)
+  def ivfTrain(corpusVecs: DataFrame): Seq[Centroid] =
+    ivfTrainOnSample(trainSample(corpusVecs))
 
   /** The ONE coarse-assignment rule: argmax dot, strict > so ties
     * keep the smaller cluster id — shared by Lloyd training and
@@ -304,16 +321,10 @@ object Similarity {
     best
   }
 
-  private def ivfTrainOnSample(ts: TrainSample,
-      nClusters: Int, iters: Int): Seq[Centroid] = {
-    val model = ivfCache.computeIfAbsent((ts.fp, nClusters, iters),
-      _ => ivfLloyd(ts.vecs, nClusters, iters))
-    if ((nClusters, iters) == DefaultIvfParams) recordedIvf.put(ts.fp, model)
-    model
-  }
+  private def ivfTrainOnSample(ts: TrainSample): Seq[Centroid] =
+    ivfCache.computeIfAbsent(ts.fp, _ => ivfLloyd(ts.vecs))
 
-  private def ivfLloyd(samplePairs: Array[(Long, Array[Double])],
-      nClusters: Int, iters: Int): Seq[Centroid] = {
+  private def ivfLloyd(samplePairs: Array[(Long, Array[Double])]): Seq[Centroid] = {
     trainingsRun.incrementAndGet()
     val sample = samplePairs.map(_._2)
     require(sample.nonEmpty, "empty corpus")
@@ -324,8 +335,8 @@ object Similarity {
       s
     }
     var centroids: Array[Array[Double]] =
-      sample.take(nClusters).map(_.clone())
-    for (_ <- 1 to iters) {
+      sample.take(IvfClusters).map(_.clone())
+    for (_ <- 1 to IvfIters) {
       val sums = Array.fill(centroids.length)(new Array[Double](dim))
       val counts = new Array[Long](centroids.length)
       sample.foreach { v =>
@@ -348,45 +359,45 @@ object Similarity {
 
   /** IVF ANN: corpus vectors are assigned once to their nearest coarse
     * centroid (broadcast cross-score + keyed argmax — the corpus never
-    * shuffles); each probe searches only its nProbeClusters nearest
-    * inverted lists. Scanned fraction ≈ nProbeClusters / nClusters on
-    * balanced lists; this is the classic IVF-Flat trade. Rows-only
-    * oracle; the spec plants an identical vector (guaranteed same
-    * cluster as its probe ⇒ guaranteed recall) and reports observed
-    * recall vs `bruteTopK`.
+    * shuffles); each probe searches only its IvfProbeClusters nearest
+    * inverted lists. Scanned fraction ≈ IvfProbeClusters / IvfClusters
+    * on balanced lists; this is the classic IVF-Flat trade. The spec
+    * plants an identical vector (guaranteed same cluster as its probe
+    * ⇒ guaranteed recall) and reports observed recall vs `bruteTopK`.
+    * An empty corpus throws [[ivfTrain]]'s "empty corpus" error while
+    * the DataFrame is built.
     */
-  def annIvfTopK(embeddings: DataFrame, nProbes: Int = 10, k: Int = 5,
-      nClusters: Int = 16, nProbeClusters: Int = 4, iters: Int = 3): DataFrame = {
+  def annIvfTopK(embeddings: DataFrame): DataFrame = {
     val spark = embeddings.sparkSession
     import spark.implicits._
-    val c = corpus(embeddings, nProbes)
-    val centroids = ivfTrain(c, nClusters, iters)
+    val c = corpus(embeddings)
+    val centroids = ivfTrain(c)
     val cDF = broadcast(spark.createDataset(centroids).toDF())
     val assigned = assignClusters(c, cDF)
-    val pc = probeClusters(probes(embeddings, nProbes), cDF, nProbeClusters)
+    val pc = probeClusters(probes(embeddings), cDF, IvfProbeClusters)
     rankTopK(
       assigned.join(broadcast(pc), Seq("cluster_id"))
-        .withColumn("cos", VectorOps.cosine(col("pv"), col("cv"))), k)
+        .withColumn("cos", VectorOps.cosine(col("pv"), col("cv"))), TopK)
   }
 
   /** Semantic topic labeling: IVF-cluster the embedding corpus with
-    * the SAME trained coarse quantizer the ANN queries use (cached,
-    * recorded), then label each cluster with its top TF-IDF terms —
-    * tf summed over member docs, idf at cluster granularity
+    * the SAME trained coarse quantizer the ANN queries use (one cached
+    * model per corpus), then label each cluster with its top TF-IDF
+    * terms — tf summed over member docs, idf at cluster granularity
     * (ln((C+1)/(cf+1)), cf = clusters containing the term). The
     * "what is this corpus about" primitive: k-means topics with
     * readable labels, composed entirely from verified stages. Member
     * assignment is the broadcast-centroid argmax (corpus never
     * shuffles for it); the doc join keys on doc_id; term stats are
-    * cluster-keyed aggregates over ≤ nClusters·|vocab| rows.
+    * cluster-keyed aggregates over ≤ IvfClusters·|vocab| rows. An
+    * empty corpus throws [[ivfTrain]]'s "empty corpus" error while the
+    * DataFrame is built.
     */
-  def clusterTopics(documents: DataFrame, embeddings: DataFrame,
-      kTerms: Int = 5, nProbes: Int = 10, nClusters: Int = 16,
-      iters: Int = 3): DataFrame = {
+  def clusterTopics(documents: DataFrame, embeddings: DataFrame): DataFrame = {
     val spark = embeddings.sparkSession
     import spark.implicits._
-    val c = corpus(embeddings, nProbes)
-    val cDF = broadcast(spark.createDataset(ivfTrain(c, nClusters, iters)).toDF())
+    val c = corpus(embeddings)
+    val cDF = broadcast(spark.createDataset(ivfTrain(c)).toDF())
     val member = assignClusterIds(c, cDF)
     val terms = documents
       .join(member, documents("doc_id") === member("vec_id"))
@@ -395,7 +406,7 @@ object Similarity {
     // a HANDFUL of groups, so the partial WindowGroupLimit pass is
     // the right plan and the bare-window arm is kept; see topKByScore)
     graft.operators.TextOps.tfidfTopK(terms, "cluster_id",
-        terms.agg(count_distinct(col("cluster_id")).as("n_groups")), kTerms,
+        terms.agg(count_distinct(col("cluster_id")).as("n_groups")), TopicTerms,
         corpusSizedGroups = false)
       .select(col("cluster_id").cast("long").as("cluster_id"), col("rnk"),
         col("term"), col("score"))
@@ -403,27 +414,22 @@ object Similarity {
   }
 
   /** One product-quantization codebook row: subspace, code id, and
-    * the (dim/nSub)-dim sub-centroid.
+    * the (dim/PqSubspaces)-dim sub-centroid.
     */
   final case class PqCentroid(s: Int, c: Int, centroid: Seq[Double])
 
-  /** Train PQ codebooks: the unit-normalized vector splits into nSub
-    * contiguous subspaces, each L2-quantized to kCodes centroids.
-    * Like [[ivfTrain]], Lloyd runs in memory on a bounded
+  /** Train PQ codebooks: the unit-normalized vector splits into
+    * PqSubspaces contiguous subspaces, each L2-quantized to PqCodes
+    * centroids. Like [[ivfTrain]], Lloyd runs in memory on a bounded
     * [[sampleUnitVecs]] sample (init = the sample's lowest-vec_id
     * subvectors; assignment = the same argmax(sub·c − ‖c‖²/2) with
     * smaller-code tie-break as [[assignCodes]]; fixed iteration order
-    * ⇒ deterministic). The codebook is the model — nSub × kCodes ×
-    * subDim doubles broadcast everywhere; encoding and the ADC scan
-    * — the data-sized steps — stay distributed plans.
+    * ⇒ deterministic). The codebook is the model — PqSubspaces ×
+    * PqCodes × subDim doubles broadcast everywhere; encoding and the
+    * ADC scan — the data-sized steps — stay distributed plans.
     */
-  private def pqTrainOnSample(ts: TrainSample,
-      nSub: Int, kCodes: Int, iters: Int): Seq[PqCentroid] = {
-    val model = pqCache.computeIfAbsent((ts.fp, nSub, kCodes, iters),
-      _ => lloydPq(ts.vecs, nSub, kCodes, iters))
-    if ((nSub, kCodes, iters) == DefaultPqParams) recordedPq.put(ts.fp, model)
-    model
-  }
+  private def pqTrainOnSample(ts: TrainSample): Seq[PqCentroid] =
+    pqCache.computeIfAbsent(ts.fp, _ => lloydPq(ts.vecs))
 
   /** Residual-PQ codebook: like [[pqTrainOnSample]] but trained on each sample
     * vector's residual against its assigned coarse centroid
@@ -434,29 +440,26 @@ object Similarity {
     * list the residual magnitudes are a fraction of the vector norms,
     * so the same 4-bit budget spends on much finer structure.
     */
-  private def pqTrainResidualsOnSample(ts: TrainSample, centroids: Seq[Centroid],
-      nClusters: Int, ivfIters: Int, nSub: Int, kCodes: Int, iters: Int): Seq[PqCentroid] = {
-    val model = resPqCache.computeIfAbsent(
-      (ts.fp, nClusters, ivfIters, nSub, kCodes, iters), { _ =>
-        val cents = centroids.sortBy(_.cluster_id).map(_.centroid.toArray).toArray
-        val residuals = ts.vecs.map { case (id, v) =>
-          val best = nearestCentroid(v, cents)
-          val r = new Array[Double](v.length)
-          var i = 0
-          while (i < v.length) { r(i) = v(i) - cents(best)(i); i += 1 }
-          (id, r)
-        }
-        lloydPq(residuals, nSub, kCodes, iters)
-      })
-    if ((nClusters, ivfIters) == DefaultIvfParams && (nSub, kCodes, iters) == DefaultPqParams)
-      recordedResPq.put(ts.fp, model)
-    model
-  }
+  private def pqTrainResidualsOnSample(ts: TrainSample,
+      centroids: Seq[Centroid]): Seq[PqCentroid] =
+    // `centroids` is the IVF model trained on the same sample, so the
+    // sample fingerprint alone keys the residual codebook
+    resPqCache.computeIfAbsent(ts.fp, { _ =>
+      val cents = centroids.sortBy(_.cluster_id).map(_.centroid.toArray).toArray
+      val residuals = ts.vecs.map { case (id, v) =>
+        val best = nearestCentroid(v, cents)
+        val r = new Array[Double](v.length)
+        var i = 0
+        while (i < v.length) { r(i) = v(i) - cents(best)(i); i += 1 }
+        (id, r)
+      }
+      lloydPq(residuals)
+    })
 
-  private def lloydPq(sample: Array[(Long, Array[Double])],
-      nSub: Int, kCodes: Int, iters: Int): Seq[PqCentroid] = {
+  private def lloydPq(sample: Array[(Long, Array[Double])]): Seq[PqCentroid] = {
     trainingsRun.incrementAndGet()
     require(sample.nonEmpty, "empty corpus")
+    val nSub = PqSubspaces
     val dim = sample(0)._2.length
     val subDim = dim / nSub
     def dot(a: Array[Double], b: Array[Double]): Double = {
@@ -468,13 +471,13 @@ object Similarity {
     val subs: Array[Array[Array[Double]]] = sample.map { case (_, v) =>
       Array.tabulate(nSub)(s => java.util.Arrays.copyOfRange(v, s * subDim, (s + 1) * subDim))
     }
-    // init = the kCodes lowest vec_ids in the sample (sample is
+    // init = the PqCodes lowest vec_ids in the sample (sample is
     // vec_id-sorted), code id = rank within that set
     var codebook: Array[Array[Array[Double]]] =
-      Array.tabulate(nSub)(s => subs.take(kCodes).map(_(s).clone()))
-    for (_ <- 1 to iters) {
-      val sums = Array.fill(nSub, kCodes)(new Array[Double](subDim))
-      val counts = Array.fill(nSub)(new Array[Long](kCodes))
+      Array.tabulate(nSub)(s => subs.take(PqCodes).map(_(s).clone()))
+    for (_ <- 1 to PqIters) {
+      val sums = Array.fill(nSub, PqCodes)(new Array[Double](subDim))
+      val counts = Array.fill(nSub)(new Array[Long](PqCodes))
       subs.foreach { vsubs =>
         var s = 0
         while (s < nSub) {
@@ -502,10 +505,11 @@ object Similarity {
       yield PqCentroid(s, c, codebook(s)(c).toSeq)).toSeq
   }
 
-  /** (vec_id, s, sub): the unit-normalized vector's nSub contiguous
-    * subvectors — one narrow map, the corpus never shuffles.
+  /** (vec_id, s, sub): the unit-normalized vector's PqSubspaces
+    * contiguous subvectors — one narrow map, the corpus never shuffles.
     */
-  private def subVectors(corpusVecs: DataFrame, nSub: Int): DataFrame =
+  private def subVectors(corpusVecs: DataFrame): DataFrame = {
+    val nSub = PqSubspaces
     corpusVecs
       .withColumn("norm", sqrt(VectorOps.dot(col("cv"), col("cv"))))
       // subDim derives from the vector itself (size(cv) div nSub), so
@@ -521,14 +525,15 @@ object Similarity {
           " s -> struct(s as s, transform(slice(cv, s * subdim + 1, subdim)," +
           " x -> x / norm) as sub))")).as("e"))
       .select(col("vec_id"), col("e.s").as("s"), col("e.sub").as("sub"))
+  }
 
   /** Per (vec_id, s): the L2-nearest code (tie → smaller c) against a
     * broadcast codebook — shared by training, encoding and search so
     * assignments agree by construction. argmin‖sub − c‖² ≡
     * argmax (sub·c − ‖c‖²/2), which runs through the codegen'd
     * `graft_dot` instead of an interpreted zip_with fold — this is
-    * the hot loop of training AND encoding (|corpus|·nSub·kCodes
-    * evaluations per pass).
+    * the hot loop of training AND encoding
+    * (|corpus|·PqSubspaces·PqCodes evaluations per pass).
     */
   private def assignCodes(subs: DataFrame, cb: DataFrame): DataFrame = {
     val scored = cb.withColumn("half_cn2",
@@ -548,8 +553,8 @@ object Similarity {
   }
 
   /** PQ encoding: each corpus vector compresses to one packed long
-    * (nSub codes × log₂(kCodes) bits — 64-dim float → 4 bytes at the
-    * defaults, a 64× storage cut). This is the 100 TB memory story:
+    * (PqSubspaces codes × log₂(PqCodes) bits — 64-dim float → 4
+    * bytes, a 64× storage cut). This is the 100 TB memory story:
     * the ADC scan in [[annPqTopK]] reads ONLY these codes, never the
     * vectors.
     */
@@ -561,22 +566,23 @@ object Similarity {
     * ONE definition, because every PQ consumer must quantize against
     * an identically-trained codebook.
     */
-  private def withTrainedSubs(embeddings: DataFrame, nProbes: Int,
-      nSub: Int, kCodes: Int, iters: Int)(
+  private def withTrainedSubs(embeddings: DataFrame)(
       body: (DataFrame, DataFrame) => DataFrame): DataFrame = {
     val spark = embeddings.sparkSession
     import spark.implicits._
-    val c = corpus(embeddings, nProbes)
-    val codebook = pqTrainOnSample(trainSample(c), nSub, kCodes, iters)
+    val c = corpus(embeddings)
+    val codebook = pqTrainOnSample(trainSample(c))
     val cb = broadcast(spark.createDataset(codebook).toDF())
-    body(subVectors(c, nSub), cb)
+    body(subVectors(c), cb)
   }
 
-  def pqCodes(embeddings: DataFrame, nProbes: Int = 10, nSub: Int = 8,
-      kCodes: Int = 16, iters: Int = 3): DataFrame = {
-    val bitsPerCode = 32 - Integer.numberOfLeadingZeros(kCodes - 1)
-    require(nSub * bitsPerCode <= 63, "packed code must fit one long")
-    withTrainedSubs(embeddings, nProbes, nSub, kCodes, iters) { (subs, cb) =>
+  /** An empty corpus throws the PQ trainer's "empty corpus" error
+    * while the DataFrame is built.
+    */
+  def pqCodes(embeddings: DataFrame): DataFrame = {
+    // 8 subspaces × 4 bits: the packed code fits one long
+    val bitsPerCode = 32 - Integer.numberOfLeadingZeros(PqCodes - 1)
+    withTrainedSubs(embeddings) { (subs, cb) =>
       assignCodes(subs, cb)
         .groupBy(col("vec_id"))
         .agg(sum(expr(
@@ -587,24 +593,23 @@ object Similarity {
   }
 
   /** PQ ANN: asymmetric-distance top-k. Each probe computes a tiny
-    * (nSub × kCodes) dot-product table against the codebook; the
-    * corpus contributes only its codes, so the scan is a broadcast
+    * (PqSubspaces × PqCodes) dot-product table against the codebook;
+    * the corpus contributes only its codes, so the scan is a broadcast
     * lookup join + a (probe, vec)-keyed sum — no vectors move. The
-    * approx ranking picks `rerank` candidates, which re-rank by exact
+    * approx ranking picks PqRerank candidates, which re-rank by exact
     * cosine (the standard ADC + re-rank shape). Same output contract
-    * as [[bruteTopK]]; planted-recall spec.
+    * as [[bruteTopK]]; planted-recall spec. An empty corpus throws the
+    * PQ trainer's "empty corpus" error while the DataFrame is built.
     */
-  def annPqTopK(embeddings: DataFrame, nProbes: Int = 10, k: Int = 5,
-      nSub: Int = 8, kCodes: Int = 16, iters: Int = 3, rerank: Int = 20): DataFrame =
-    withTrainedSubs(embeddings, nProbes, nSub, kCodes, iters) { (subs, cb) =>
+  def annPqTopK(embeddings: DataFrame): DataFrame =
+    withTrainedSubs(embeddings) { (subs, cb) =>
       adcRerankTopK(embeddings,
-        assignCodes(subs, cb).select(col("vec_id"), col("s"), col("c")),
-        cb, nProbes, nSub, k, rerank)
+        assignCodes(subs, cb).select(col("vec_id"), col("s"), col("c")), cb)
     }
 
   /** The shared ADC epilogue: per-probe distance tables against the
     * codebook, the approx (probe, vec) ranking over a codes DataFrame,
-    * the `rerank` candidate cut and the exact-cosine re-rank into
+    * the PqRerank candidate cut and the exact-cosine re-rank into
     * [[rankTopK]]'s contract. ONE definition, because every
     * code-scanning ANN variant must rank identically — a fix to the
     * dt formula, the ADC tie-break or the rerank cut must not
@@ -614,102 +619,101 @@ object Similarity {
     * scores only against its routed probe.
     */
   private def adcRerankTopK(embeddings: DataFrame, codes: DataFrame,
-      cb: DataFrame, nProbes: Int, nSub: Int, k: Int, rerank: Int): DataFrame = {
-    val dt = probeDistanceTable(embeddings, nProbes, nSub, cb)
+      cb: DataFrame): DataFrame = {
+    val dt = probeDistanceTable(embeddings, cb)
     val dtKeys =
       if (codes.columns.contains("probe_id")) Seq("probe_id", "s", "c")
       else Seq("s", "c")
-    // the nSub per-code distances sum as DECIMAL(38,18): a double sum
-    // over shuffled rows is addition-order-dependent (partial-agg
-    // arrival order varies run to run), and a last-ulp wobble at the
-    // rerank cut would make the candidate set — and the oracle compare
-    // — nondeterministic; decimal is exact and associative
+    // the PqSubspaces per-code distances sum as DECIMAL(38,18): a
+    // double sum over shuffled rows is addition-order-dependent
+    // (partial-agg arrival order varies run to run), and a last-ulp
+    // wobble at the rerank cut would make the candidate set — and the
+    // oracle compare — nondeterministic; decimal is exact and
+    // associative
     val approx = codes.join(broadcast(dt), dtKeys)
       .groupBy(col("probe_id"), col("vec_id"))
       .agg(sum(col("dp").cast("decimal(38,18)")).as("approx"))
-    rerankExact(embeddings, approx, nProbes, k, rerank)
+    rerankExact(embeddings, approx)
   }
 
   /** Per-probe distance table: dot(probe_sub, centroid) for every
-    * (s, code) — nSub·kCodes rows per probe, broadcast everywhere.
+    * (s, code) — PqSubspaces·PqCodes rows per probe, broadcast
+    * everywhere.
     */
-  private def probeDistanceTable(embeddings: DataFrame, nProbes: Int,
-      nSub: Int, cb: DataFrame): DataFrame =
+  private def probeDistanceTable(embeddings: DataFrame, cb: DataFrame): DataFrame =
     subVectors(
-      probes(embeddings, nProbes).select(col("probe_id").as("vec_id"), col("pv").as("cv")),
-      nSub)
+      probes(embeddings).select(col("probe_id").as("vec_id"), col("pv").as("cv")))
       .join(cb, Seq("s"))
       .select(col("vec_id").as("probe_id"), col("s"), col("c"),
         VectorOps.dot(col("sub"), col("centroid")).as("dp"))
 
   /** The rerank-cut + exact-cosine epilogue shared by every ADC
     * variant: `approx` is (probe_id, vec_id, approx) with approx
-    * decimal-exact; the top `rerank` per probe re-rank by true cosine
+    * decimal-exact; the top PqRerank per probe re-rank by true cosine
     * into [[rankTopK]]'s contract.
     */
-  private def rerankExact(embeddings: DataFrame, approx: DataFrame,
-      nProbes: Int, k: Int, rerank: Int): DataFrame = {
+  private def rerankExact(embeddings: DataFrame, approx: DataFrame): DataFrame = {
     val wa = Window.partitionBy(col("probe_id"))
       .orderBy(col("approx").desc, col("vec_id"))
     val cand = approx.withColumn("ar", row_number().over(wa))
-      .filter(col("ar") <= rerank)
+      .filter(col("ar") <= PqRerank)
       .select(col("probe_id"), col("vec_id"))
     rankTopK(
-      cand.join(corpus(embeddings, nProbes), Seq("vec_id"))
-        .join(broadcast(probes(embeddings, nProbes)), Seq("probe_id"))
-        .withColumn("cos", VectorOps.cosine(col("pv"), col("cv"))), k)
+      cand.join(corpus(embeddings), Seq("vec_id"))
+        .join(broadcast(probes(embeddings)), Seq("probe_id"))
+        .withColumn("cos", VectorOps.cosine(col("pv"), col("cv"))), TopK)
   }
 
   /** IVF-PQ ANN: the 100 TB composition — the IVF coarse quantizer
-    * routes each probe to nProbeClusters inverted lists, and within
+    * routes each probe to IvfProbeClusters inverted lists, and within
     * the probed lists the ADC scan reads ONLY the PQ codes (4 bytes a
-    * vector at the defaults), so a search touches
-    * ~(nProbeClusters/nClusters) of the corpus as codes and exactly
-    * `rerank` full vectors. Codes here quantize the unit vectors
-    * directly (IVF-Flat routing + PQ storage); encoding residuals
-    * against the assigned centroid is the standard refinement when
-    * quantization error dominates. Rows-only; planted-recall spec.
+    * vector), so a search touches ~(IvfProbeClusters/IvfClusters) of
+    * the corpus as codes and exactly PqRerank full vectors. Codes here
+    * quantize the unit vectors directly (IVF-Flat routing + PQ
+    * storage); encoding residuals against the assigned centroid is the
+    * standard refinement when quantization error dominates.
+    * Planted-recall spec. An empty corpus throws the trainers' "empty
+    * corpus" error while the DataFrame is built.
     */
-  def annIvfPqTopK(embeddings: DataFrame, nProbes: Int = 10, k: Int = 5,
-      nClusters: Int = 16, nProbeClusters: Int = 4, ivfIters: Int = 3,
-      nSub: Int = 8, kCodes: Int = 16, pqIters: Int = 3,
-      rerank: Int = 20): DataFrame = {
+  def annIvfPqTopK(embeddings: DataFrame): DataFrame = {
     val spark = embeddings.sparkSession
     import spark.implicits._
-    val c = corpus(embeddings, nProbes)
-    val centroids = ivfTrain(c, nClusters, ivfIters)
+    val c = corpus(embeddings)
+    val centroids = ivfTrain(c)
     val cDF = broadcast(spark.createDataset(centroids).toDF())
     val listed = assignClusterIds(c, cDF) // (vec_id, cluster_id)
-    withTrainedSubs(embeddings, nProbes, nSub, kCodes, pqIters) { (subs, cb) =>
+    withTrainedSubs(embeddings) { (subs, cb) =>
       // the IVF-PQ index shape: (cluster_id, vec_id, s, c) — codes
       // partitioned by inverted list
       val codes = assignCodes(subs, cb)
         .select(col("vec_id"), col("s"), col("c"))
         .join(listed, Seq("vec_id"))
-      val pc = probeClusters(probes(embeddings, nProbes), cDF, nProbeClusters)
+      val pc = probeClusters(probes(embeddings), cDF, IvfProbeClusters)
       // route codes to probed lists only, then the shared ADC epilogue
       // scores each code row against its routed probe
       val routed = codes.join(broadcast(pc.select(col("probe_id"), col("cluster_id"))),
         Seq("cluster_id"))
         .select(col("probe_id"), col("vec_id"), col("s"), col("c"))
-      adcRerankTopK(embeddings, routed, cb, nProbes, nSub, k, rerank)
+      adcRerankTopK(embeddings, routed, cb)
     }
   }
 
   /** cdot(cluster_id, s, c) = dot(coarse-centroid subvector, code
-    * centroid): the cross table of the two models (nClusters × nSub ×
-    * kCodes rows) that makes residual arithmetic linear — derived by
-    * both Spark and the SQL oracle from the same model literals.
+    * centroid): the cross table of the two models (IvfClusters ×
+    * PqSubspaces × PqCodes rows) that makes residual arithmetic linear
+    * — derived by both Spark and the SQL oracle from the same model
+    * literals.
     */
-  private def centroidCodeDots(cDF: DataFrame, cb: DataFrame, nSub: Int): DataFrame =
+  private def centroidCodeDots(cDF: DataFrame, cb: DataFrame): DataFrame =
     cDF.select(col("cluster_id"), col("centroid").as("ivf_centroid"))
       .crossJoin(cb)
       // subDim = the code centroid's own length (not a hardcoded
-      // dim/nSub): any corpus dimensionality slices correctly, and the
-      // guard fails loudly if the two models' shapes ever disagree
+      // dim/PqSubspaces): any corpus dimensionality slices correctly,
+      // and the guard fails loudly if the two models' shapes ever
+      // disagree
       .select(col("cluster_id"), col("s"), col("c"),
         VectorOps.dot(
-          expr("CASE WHEN size(ivf_centroid) = size(centroid) * " + nSub +
+          expr("CASE WHEN size(ivf_centroid) = size(centroid) * " + PqSubspaces +
             " THEN slice(ivf_centroid, s * size(centroid) + 1, size(centroid)) " +
             "ELSE raise_error('IVF centroid dim <> code subdim * nSub') END"),
           col("centroid")).as("cdot"))
@@ -745,26 +749,24 @@ object Similarity {
     * ADC scan ever materializes a residual vector, the corpus still
     * contributes only its codes, and the approx sum stays
     * decimal-exact. Same output contract as [[bruteTopK]];
-    * planted-recall spec + full model-literal oracle.
+    * planted-recall spec + full model-literal oracle. An empty corpus
+    * throws the trainers' "empty corpus" error while the DataFrame is
+    * built.
     */
-  def annIvfPqResTopK(embeddings: DataFrame, nProbes: Int = 10, k: Int = 5,
-      nClusters: Int = 16, nProbeClusters: Int = 4, ivfIters: Int = 3,
-      nSub: Int = 8, kCodes: Int = 16, pqIters: Int = 3,
-      rerank: Int = 20): DataFrame = {
+  def annIvfPqResTopK(embeddings: DataFrame): DataFrame = {
     val spark = embeddings.sparkSession
     import spark.implicits._
-    val c = corpus(embeddings, nProbes)
+    val c = corpus(embeddings)
     val sample = trainSample(c)
-    val centroids = ivfTrainOnSample(sample, nClusters, ivfIters)
-    val codebook = pqTrainResidualsOnSample(sample, centroids,
-      nClusters, ivfIters, nSub, kCodes, pqIters)
+    val centroids = ivfTrainOnSample(sample)
+    val codebook = pqTrainResidualsOnSample(sample, centroids)
     val cDF = broadcast(spark.createDataset(centroids).toDF())
     val cb = broadcast(spark.createDataset(codebook).toDF())
-    val cdot = broadcast(centroidCodeDots(cDF, cb, nSub))
+    val cdot = broadcast(centroidCodeDots(cDF, cb))
     val listed = assignClusterIds(c, cDF)
-    val codes = assignResidualCodes(subVectors(c, nSub), listed, cb, cdot)
-    val pc = probeClusters(probes(embeddings, nProbes), cDF, nProbeClusters)
-    val dt = probeDistanceTable(embeddings, nProbes, nSub, cb)
+    val codes = assignResidualCodes(subVectors(c), listed, cb, cdot)
+    val pc = probeClusters(probes(embeddings), cDF, IvfProbeClusters)
+    val dt = probeDistanceTable(embeddings, cb)
     // approx similarity = p̂·(c + q̂) = p̂·c + Σₛ p̂ₛ·qₛ — the p̂·c term
     // is what ranks vectors from DIFFERENT probed lists correctly
     // (without it only the residual cross-term survives and
@@ -785,31 +787,31 @@ object Similarity {
       // precision-loss promotion vs DuckDB's)
       .withColumn("approx", col("sum_dp").cast("double") + col("pcdot"))
       .select(col("probe_id"), col("vec_id"), col("approx"))
-    rerankExact(embeddings, approx, nProbes, k, rerank)
+    rerankExact(embeddings, approx)
   }
 
   /** ANN quality harness: per-probe recall@k of the LSH index against
     * the exact [[bruteTopK]] baseline — the measurement every
     * approximate-index rollout needs before trusting it at corpus
-    * scale. Both sides are top-k tables (nProbes·k rows), so the
+    * scale. Both sides are top-k tables (NProbes·TopK rows), so the
     * comparison join is trivially small whatever the corpus size; the
     * cost is the two searches themselves. n_hits is exact integer,
-    * recall = n_hits/k in one fixed-order double division.
+    * recall = n_hits/TopK in one fixed-order double division.
     */
-  def recallAtK(embeddings: DataFrame, nProbes: Int = 10, k: Int = 5): DataFrame = {
-    val brute = bruteTopK(embeddings, nProbes, k)
+  def recallAtK(embeddings: DataFrame): DataFrame = {
+    val brute = bruteTopK(embeddings)
       .select(col("probe_id"), col("vec_id"))
-    val approx = annLshTopK(embeddings, nProbes, k)
+    val approx = annLshTopK(embeddings)
       .select(col("probe_id"), col("vec_id"), lit(1L).as("hit"))
     brute.join(approx, Seq("probe_id", "vec_id"), "left")
       .groupBy(col("probe_id"))
       .agg(sum(coalesce(col("hit"), lit(0L))).as("n_hits"))
       .select(col("probe_id"), col("n_hits"),
-        round(col("n_hits") / lit(k.toDouble), 6).as("recall"))
+        round(col("n_hits") / lit(TopK.toDouble), 6).as("recall"))
       .orderBy(col("probe_id"))
   }
 
-  /** Range search: every corpus vector within cosine ≥ tau of each
+  /** Range search: every corpus vector within cosine ≥ RangeTau of each
     * probe (the "all near neighbors" companion to top-k — what a
     * contamination / near-dup-against-eval check runs). Probes
     * broadcast, corpus streamed once, no shuffle at all: the filter
@@ -817,11 +819,11 @@ object Similarity {
     * [[bruteTopK]]; swap the corpus side to LSH buckets exactly as
     * `annLshTopK` does when the probe set outgrows a broadcast.
     */
-  def rangeSearch(embeddings: DataFrame, nProbes: Int = 10, tau: Double = 0.25): DataFrame =
-    corpus(embeddings, nProbes)
-      .crossJoin(broadcast(probes(embeddings, nProbes)))
+  def rangeSearch(embeddings: DataFrame): DataFrame =
+    corpus(embeddings)
+      .crossJoin(broadcast(probes(embeddings)))
       .withColumn("cos", VectorOps.cosine(col("pv"), col("cv")))
-      .filter(col("cos") >= tau)
+      .filter(col("cos") >= RangeTau)
       .select(col("probe_id"), col("vec_id"), round(col("cos"), 6).as("cos"))
       .orderBy(col("probe_id"), col("vec_id"))
 
@@ -846,21 +848,23 @@ object Similarity {
 
   /** Deterministic PCA fit on the in-memory sample: exact mean +
     * centered covariance accumulated in fixed order, then power
-    * iteration with deflation for the top-k axes. A fixed iteration
-    * count and a fixed generic start vector (no randomness) make the
-    * fit bit-deterministic across runs and partitionings — the same
-    * property every other trained model here relies on for its
-    * literal-interpolated oracle. Sign convention: the
+    * iteration with deflation for the top PcaComponents axes. A fixed
+    * iteration count and a fixed generic start vector (no randomness)
+    * make the fit bit-deterministic across runs and partitionings —
+    * the same property every other trained model here relies on for
+    * its literal-interpolated oracle. Sign convention: the
     * largest-|coordinate| entry of each axis is positive (first
-    * index on ties), so the axis orientation is well-defined.
+    * index on ties), so the axis orientation is well-defined. A
+    * sample whose deflated covariance maps an iterate to exactly zero
+    * (a single vector, or identical ones: zero covariance) throws
+    * `IllegalArgumentException` "power iteration collapsed".
     */
-  private[graft] def pcaFit(samplePairs: Array[(Long, Array[Double])],
-      nComponents: Int, powerIters: Int): PcaModel = {
+  private[graft] def pcaFit(samplePairs: Array[(Long, Array[Double])]): PcaModel = {
     trainingsRun.incrementAndGet()
     val sample = samplePairs.map(_._2)
     require(sample.nonEmpty, "empty corpus")
     val dim = sample(0).length
-    require(nComponents <= dim, "more components than dimensions")
+    require(PcaComponents <= dim, "more components than dimensions")
     val n = sample.length
     def forDim(f: Int => Unit): Unit = {
       var i = 0; while (i < dim) { f(i); i += 1 }
@@ -886,14 +890,14 @@ object Similarity {
       }
       out
     }
-    val axes = Array.ofDim[Double](nComponents, dim)
+    val axes = Array.ofDim[Double](PcaComponents, dim)
     var k = 0
-    while (k < nComponents) {
+    while (k < PcaComponents) {
       // generic deterministic start: decaying weights offset per
       // component so no start is symmetric with a coordinate axis
       var w = Array.tabulate(dim)(i => 1.0 / (1 + i + 3 * k))
       var it = 0
-      while (it < powerIters) {
+      while (it < PcaPowerIters) {
         val nw = matVec(w)
         var norm = 0.0
         forDim(i => norm += nw(i) * nw(i))
@@ -917,35 +921,32 @@ object Similarity {
   }
 
   /** Train (or fetch the cached) PCA model for a corpus — same
-    * sample/caching/recording discipline as [[ivfTrain]]: one
-    * TakeOrdered sample per corpus per JVM, models keyed on the
-    * sample's content fingerprint + params, recorded for the SQL
-    * oracle only on default-param trainings.
+    * sample/caching discipline as [[ivfTrain]]: one TakeOrdered
+    * sample per corpus per JVM, models keyed on the sample's content
+    * fingerprint. Throws what [[pcaFit]] throws.
     */
-  def pcaTrain(corpusVecs: DataFrame, nComponents: Int = 4,
-      powerIters: Int = 200): PcaModel = {
+  def pcaTrain(corpusVecs: DataFrame): PcaModel = {
     val ts = trainSample(corpusVecs)
-    val model = pcaCache.computeIfAbsent((ts.fp, nComponents, powerIters),
-      _ => pcaFit(ts.vecs, nComponents, powerIters))
-    if ((nComponents, powerIters) == DefaultPcaParams) recordedPca.put(ts.fp, model)
-    model
+    pcaCache.computeIfAbsent(ts.fp, _ => pcaFit(ts.vecs))
   }
 
-  /** PCA projection of the corpus onto the top-k principal axes —
-    * the dimensionality-reduction step before cheap ANN / clustering
-    * / visualization. The model is driver-trained on the bounded
+  /** PCA projection of the corpus onto the top PcaComponents principal
+    * axes — the dimensionality-reduction step before cheap ANN /
+    * clustering / visualization. The model is driver-trained on the bounded
     * sample ([[pcaFit]]); the projection is a narrow per-row map:
     * each component is one fixed-order multiply-add chain over the
     * vector's elements (codegen'd, no shuffle) using the axis
     * literals, with the centering folded into a per-component scalar
     * bias (y = v·w − μ·w) so centered vectors never materialize —
     * the same linear split the residual IVF-PQ ADC uses. The oracle
-    * re-derives the identical chain from the identical literals.
+    * re-derives the identical chain from the identical literals. The
+    * model is trained while the DataFrame is built, so an empty corpus
+    * throws "empty corpus" and a zero-covariance one "power iteration
+    * collapsed" ([[pcaFit]]) there.
     */
-  def pcaProject(embeddings: DataFrame, nComponents: Int = 4,
-      powerIters: Int = 200, nProbes: Int = 10): DataFrame = {
-    val cvs = corpus(embeddings, nProbes)
-    val m = pcaTrain(cvs, nComponents, powerIters)
+  def pcaProject(embeddings: DataFrame): DataFrame = {
+    val cvs = corpus(embeddings)
+    val m = pcaTrain(cvs)
     cvs.select(col("vec_id") +: pcaColumns(m): _*).orderBy(col("vec_id"))
   }
 
@@ -954,12 +955,12 @@ object Similarity {
     * (decimal-exact moments over the ROUNDED projections, so both
     * engines aggregate identical inputs) — the "how many components
     * do I keep" table. Reuses [[pcaProject]]'s exact output; one
-    * narrow projection pass + a k-row aggregate.
+    * narrow projection pass + a PcaComponents-row aggregate. Throws
+    * what [[pcaProject]] throws.
     */
-  def pcaVariance(embeddings: DataFrame, nComponents: Int = 4,
-      powerIters: Int = 200, nProbes: Int = 10): DataFrame = {
-    val proj = pcaProject(embeddings, nComponents, powerIters, nProbes)
-    val perComp = (1 to nComponents).map { k =>
+  def pcaVariance(embeddings: DataFrame): DataFrame = {
+    val proj = pcaProject(embeddings)
+    val perComp = (1 to PcaComponents).map { k =>
       proj.select(lit(k.toLong).as("component"), col(s"pc$k").as("y"))
     }.reduce(_ unionAll _)
     perComp.groupBy(col("component"))
@@ -1096,8 +1097,8 @@ object Similarity {
     * stats are exact min/max and the code arithmetic is fixed-order
     * IEEE double ops, identical in DuckDB.
     */
-  def sq8Codes(embeddings: DataFrame, nProbes: Int = 10): DataFrame = {
-    val c = corpus(embeddings, nProbes)
+  def sq8Codes(embeddings: DataFrame): DataFrame = {
+    val c = corpus(embeddings)
     c.crossJoin(broadcast(sq8StatsRow(c)))
       .withColumn("codes", expr(s"transform(cv, (x, i) -> $sq8CodeLambda)"))
       .select(col("vec_id"),
@@ -1121,15 +1122,15 @@ object Similarity {
     * spec's property). Probes stay full-precision and broadcast —
     * asymmetric search, the standard SQ trade.
     */
-  def annSq8TopK(embeddings: DataFrame, nProbes: Int = 10, k: Int = 5): DataFrame = {
-    val c = corpus(embeddings, nProbes)
+  def annSq8TopK(embeddings: DataFrame): DataFrame = {
+    val c = corpus(embeddings)
     val dq = c.crossJoin(broadcast(sq8StatsRow(c)))
       .withColumn("dqv", expr("transform(cv, (x, i) -> " +
         s"lo_arr[i] + (CAST(($sq8CodeLambda) AS DOUBLE) * (hi_arr[i] - lo_arr[i])) / 255.0)"))
       .select(col("vec_id"), col("dqv"))
     rankTopK(
-      dq.crossJoin(broadcast(probes(embeddings, nProbes)))
-        .withColumn("cos", VectorOps.cosine(col("pv"), col("dqv"))), k)
+      dq.crossJoin(broadcast(probes(embeddings)))
+        .withColumn("cos", VectorOps.cosine(col("pv"), col("dqv"))), TopK)
   }
 
   /** Drift signal for the SQ8 codec, paralleling the IVF drift stats:
@@ -1141,12 +1142,12 @@ object Similarity {
     * here. Tiny query: stats broadcast, new-vector explode is
     * |new|·dim rows, output is one row per dimension.
     */
-  def sq8DriftStats(embeddings: DataFrame, nProbes: Int = 10): DataFrame = {
-    val stats = corpus(embeddings, nProbes)
+  def sq8DriftStats(embeddings: DataFrame): DataFrame = {
+    val stats = corpus(embeddings)
       .select(posexplode(col("cv")).as(Seq("dim", "x")))
       .groupBy(col("dim"))
       .agg(min(col("x")).as("lo"), max(col("x")).as("hi"))
-    probes(embeddings, nProbes)
+    probes(embeddings)
       .select(posexplode(col("pv")).as(Seq("dim", "x")))
       .join(broadcast(stats), Seq("dim"))
       .groupBy(col("dim"))
@@ -1161,71 +1162,78 @@ object Similarity {
   /** IVF routing over the SQ8-compressed corpus: the corpus is stored
     * ONLY as int8 codes (assignment itself runs on the dequantized
     * reconstruction — a stored compressed index has nothing else to
-    * assign), probes route to their nProbeClusters nearest coarse
+    * assign), probes route to their IvfProbeClusters nearest coarse
     * centroids at full precision, and the pruned lists score as
     * dequantized vectors. The two compressions multiply: ~(probed/
     * total) of the corpus is read, at 1 byte/dim — IVF-PQ's shape
     * with a byte-per-dim codec instead of 4 bits/subspace, the
     * standard middle point of the FAISS compression ladder. Shares
     * the cached IVF model (and its oracle literals) with
-    * [[annIvfTopK]]; the SQ8 range stats re-derive in SQL.
+    * [[annIvfTopK]]; the SQ8 range stats re-derive in SQL. An empty
+    * corpus throws [[ivfTrain]]'s "empty corpus" error while the
+    * DataFrame is built.
     */
-  def annIvfSq8TopK(embeddings: DataFrame, nProbes: Int = 10, k: Int = 5,
-      nClusters: Int = 16, nProbeClusters: Int = 4, iters: Int = 3): DataFrame = {
+  def annIvfSq8TopK(embeddings: DataFrame): DataFrame =
+    ivfSq8Search(embeddings, IvfProbeClusters)
+
+  /** [[annIvfSq8TopK]] probing `nProbeClusters` lists. The one
+    * parameter left open: probing all IvfClusters lists must reproduce
+    * the flat [[annSq8TopK]] scan exactly, which the spec checks.
+    */
+  private[graft] def ivfSq8Search(embeddings: DataFrame, nProbeClusters: Int): DataFrame = {
     val spark = embeddings.sparkSession
     import spark.implicits._
-    val c = corpus(embeddings, nProbes)
-    val centroids = ivfTrain(c, nClusters, iters)
+    val c = corpus(embeddings)
+    val centroids = ivfTrain(c)
     val cDF = broadcast(spark.createDataset(centroids).toDF())
     val dq = c.crossJoin(broadcast(sq8StatsRow(c)))
       .withColumn("cv", expr("transform(cv, (x, i) -> " +
         s"lo_arr[i] + (CAST(($sq8CodeLambda) AS DOUBLE) * (hi_arr[i] - lo_arr[i])) / 255.0)"))
       .select(col("vec_id"), col("cv"))
     val assigned = assignClusters(dq, cDF)
-    val pc = probeClusters(probes(embeddings, nProbes), cDF, nProbeClusters)
+    val pc = probeClusters(probes(embeddings), cDF, nProbeClusters)
     rankTopK(
       assigned.join(broadcast(pc), Seq("cluster_id"))
-        .withColumn("cos", VectorOps.cosine(col("pv"), col("cv"))), k)
+        .withColumn("cos", VectorOps.cosine(col("pv"), col("cv"))), TopK)
   }
 
   /** Hybrid retrieval: reciprocal-rank fusion (RRF, Cormack et al.'s
-    * 1/(kRrf+rank) rule) of a lexical arm ([[TextOps.bm25TopK]], the
-    * keyword queries) and a semantic arm (exact cosine over the
+    * 1/(RrfOffset+rank) rule) of a lexical arm ([[TextOps.bm25TopK]],
+    * the keyword queries) and a semantic arm (exact cosine over the
     * embedding probes that share those query ids). The arms never see
-    * each other — each produces its own top-armK ranking, and only the
-    * two ~|queries|·armK rank tables meet in a full-outer join, so the
-    * fusion step is constant-sized no matter how large the corpus
-    * grew. A document found by both arms outranks any single-arm
+    * each other — each produces its own top-RrfArmK ranking, and only
+    * the two ~|queries|·RrfArmK rank tables meet in a full-outer join,
+    * so the fusion step is constant-sized no matter how large the
+    * corpus grew. A document found by both arms outranks any single-arm
     * document of comparable rank; per-arm ranks are carried through
     * (0 = not retrieved by that arm) so the output explains itself.
     * Contributions sum as DECIMAL(38,15) — exact, associative, and
     * re-derivable in the SQL oracle.
     */
   def hybridRrf(documents: DataFrame, embeddings: DataFrame,
-      queries: Seq[(Int, String)] = TextOps.defaultBm25Queries,
-      nProbes: Int = 10, armK: Int = 20, k: Int = 10, kRrf: Int = 60): DataFrame = {
+      queries: Seq[(Int, String)] = TextOps.defaultBm25Queries): DataFrame = {
     val qIds = queries.map(_._1).distinct.map(_.toLong)
-    val lex = TextOps.bm25TopK(documents, queries, k = armK)
+    val lex = TextOps.bm25TopK(documents, queries, k = RrfArmK)
       .select(col("query_id").cast("long").as("query_id"), col("doc_id"),
         col("rank").as("lex_rank"))
     val sem = rankTopK(
-      corpus(embeddings, nProbes)
-        .crossJoin(broadcast(probes(embeddings, nProbes)
+      corpus(embeddings)
+        .crossJoin(broadcast(probes(embeddings)
           .filter(col("probe_id").isin(qIds: _*))))
-        .withColumn("cos", VectorOps.cosine(col("pv"), col("cv"))), armK)
+        .withColumn("cos", VectorOps.cosine(col("pv"), col("cv"))), RrfArmK)
       .select(col("probe_id").cast("long").as("query_id"),
         col("vec_id").as("doc_id"), col("rnk").as("sem_rank"))
-    // 1/(kRrf+rank) as double (identical IEEE division in DuckDB),
+    // 1/(RrfOffset+rank) as double (identical IEEE division in DuckDB),
     // then the decimal cast so the two-term sum is order-independent
     def contrib(r: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-      coalesce((lit(1.0) / (lit(kRrf) + r)).cast("decimal(38,15)"),
+      coalesce((lit(1.0) / (lit(RrfOffset) + r)).cast("decimal(38,15)"),
         lit(0).cast("decimal(38,15)"))
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("rrf_exact").desc, col("doc_id"))
     lex.join(sem, Seq("query_id", "doc_id"), "full_outer")
       .withColumn("rrf_exact", contrib(col("lex_rank")) + contrib(col("sem_rank")))
       .withColumn("rrf_rank", row_number().over(w).cast("long"))
-      .filter(col("rrf_rank") <= k)
+      .filter(col("rrf_rank") <= RrfTopK)
       .select(col("query_id"), col("rrf_rank"), col("doc_id"),
         round(col("rrf_exact").cast("double"), 9).as("rrf_score"),
         coalesce(col("lex_rank"), lit(0L)).as("lex_rank"),
@@ -1233,18 +1241,18 @@ object Similarity {
       .orderBy(col("query_id"), col("rrf_rank"))
   }
 
-  /** k-NN majority-label classification of the probes: the k nearest
-    * corpus vectors vote; ties break toward the smaller label.
+  /** k-NN majority-label classification of the probes: the KnnVoters
+    * nearest corpus vectors vote; ties break toward the smaller label.
     */
-  def knnVote(embeddings: DataFrame, nProbes: Int = 10, k: Int = 10): DataFrame = {
-    val scored = corpus(embeddings, nProbes)
-      .crossJoin(broadcast(probes(embeddings, nProbes)))
+  def knnVote(embeddings: DataFrame): DataFrame = {
+    val scored = corpus(embeddings)
+      .crossJoin(broadcast(probes(embeddings)))
       .withColumn("cos", VectorOps.cosine(col("pv"), col("cv")))
     val w = Window.partitionBy(col("probe_id"))
       .orderBy(col("cos").desc, col("vec_id"))
     val votes = scored
       .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
+      .filter(col("rnk") <= KnnVoters)
       .groupBy(col("probe_id"), col("label"))
       .agg(count(lit(1)).as("n_votes"))
     val wv = Window.partitionBy(col("probe_id"))

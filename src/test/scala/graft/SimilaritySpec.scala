@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.Similarity
@@ -12,11 +13,11 @@ class SimilaritySpec extends AnyFunSuite {
   private lazy val emb = Tables(spark, TestSpark.sfDir).embeddings
 
   test("brute-force top-k returns k ranked neighbors per probe, cos descending") {
-    val rows = Similarity.bruteTopK(emb, nProbes = 5, k = 3).collect()
-    assert(rows.length == 15)
+    val rows = Similarity.bruteTopK(emb).collect()
+    assert(rows.length == 50) // 10 probes × top 5
     rows.groupBy(_.getLong(0)).foreach { case (_, g) =>
       val byRank = g.sortBy(_.getLong(1))
-      assert(byRank.map(_.getLong(1)).toSeq == Seq(1L, 2L, 3L))
+      assert(byRank.map(_.getLong(1)).toSeq == Seq(1L, 2L, 3L, 4L, 5L))
       val cosines = byRank.map(_.getDouble(3))
       assert(cosines.zip(cosines.tail).forall { case (a, b) => a >= b })
     }
@@ -27,7 +28,7 @@ class SimilaritySpec extends AnyFunSuite {
     val far = (0 until 30).map(j =>
       (100L + j, Array.tabulate(64)(i => math.cos(i * (j + 2)).toFloat).toSeq, 1))
     val df = ((0L, v, 0) +: (50L, v, 0) +: far).toDF("vec_id", "embedding", "label")
-    val top = Similarity.bruteTopK(df, nProbes = 1, k = 1).collect().head
+    val top = Similarity.bruteTopK(df).collect().head
     assert(top.getLong(2) == 50L)
     assert(top.getDouble(3) > 0.999999)
   }
@@ -48,24 +49,29 @@ class SimilaritySpec extends AnyFunSuite {
       (j.toLong, Array.tabulate(dim)(i =>
         a * u(i) + b * sec(i) + 0.05 + 0.01 * math.sin(i * 7.77 + j * 1.3)))
     }.toArray
-    val m = Similarity.pcaFit(sample, nComponents = 3, powerIters = 200)
+    val m = Similarity.pcaFit(sample)
     def dot(a: Array[Double], b: Array[Double]) =
       a.zip(b).map { case (x, y) => x * y }.sum
     // top axis aligns with the planted direction (sign-fixed, so
     // compare |cos|); axes pairwise orthogonal and unit-norm
     assert(math.abs(dot(m.axes(0), u)) > 0.99)
-    for (k <- 0 until 3) assert(math.abs(dot(m.axes(k), m.axes(k)) - 1.0) < 1e-9)
-    for (a <- 0 until 3; b <- a + 1 until 3)
+    assert(m.axes.length == 4)
+    for (k <- 0 until 4) assert(math.abs(dot(m.axes(k), m.axes(k)) - 1.0) < 1e-9)
+    for (a <- 0 until 4; b <- a + 1 until 4)
       assert(math.abs(dot(m.axes(a), m.axes(b))) < 1e-6)
     // determinism: an independent fit is bit-identical
-    val m2 = Similarity.pcaFit(sample, nComponents = 3, powerIters = 200)
+    val m2 = Similarity.pcaFit(sample)
     assert(m.axes.flatten.toSeq == m2.axes.flatten.toSeq &&
       m.mean.toSeq == m2.mean.toSeq)
   }
 
   test("cluster topics label separated embedding groups with their own vocabulary") {
     // two well-separated directions; docs of each group share a
-    // vocabulary the other group never uses
+    // vocabulary the other group never uses. Lloyd starts from the 16
+    // lowest vec_ids (10..25): the five distinct jittered group-A
+    // vectors (j = id % 5) each keep their own centroid — duplicates
+    // tie to the smaller cluster id — and group B gathers around the
+    // one B seed (id 25), so six clusters are occupied
     def vec(base: Double, j: Int) =
       Array.tabulate(64)(i => (math.sin(i * base) + 0.01 * j).toFloat).toSeq
     val aIds = (10L to 24L); val bIds = (25L to 39L)
@@ -75,15 +81,14 @@ class SimilaritySpec extends AnyFunSuite {
       bIds.map(id => (id, "delta epsilon zeta delta"))
     val out = Similarity.clusterTopics(
       docRows.toDF("doc_id", "text"),
-      embRows.toDF("vec_id", "embedding", "label"),
-      kTerms = 3, nProbes = 10, nClusters = 2, iters = 5).collect()
+      embRows.toDF("vec_id", "embedding", "label")).collect()
       .map(r => (r.getLong(0), r.getString(2)))
     val byCluster = out.groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
-    assert(byCluster.size == 2)
+    assert(byCluster.size == 6)
     val vocabA = Set("alpha", "beta", "gamma")
     val vocabB = Set("delta", "epsilon", "zeta")
     val sets = byCluster.values.toSeq
-    assert(sets.exists(_.subsetOf(vocabA)) && sets.exists(_.subsetOf(vocabB)))
+    assert(sets.count(_.subsetOf(vocabA)) == 5 && sets.count(_.subsetOf(vocabB)) == 1)
   }
 
   test("pca variance is non-increasing across components on unit-scale data") {
@@ -97,10 +102,9 @@ class SimilaritySpec extends AnyFunSuite {
       (100L + j, raw.map(x => (x / nrm).toFloat).toSeq, 0)
     }
     val df = rows.toDF("vec_id", "embedding", "label")
-    val out = Similarity.pcaVariance(df, nComponents = 3, powerIters = 80,
-      nProbes = 10).collect()
+    val out = Similarity.pcaVariance(df).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getDouble(3)))
-    assert(out.map(_._1).toSeq == Seq(1L, 2L, 3L))
+    assert(out.map(_._1).toSeq == Seq(1L, 2L, 3L, 4L))
     assert(out.forall(_._2 == 60L))
     // the model centers with the UNIT-NORMALIZED sample's mean, so
     // raw-scale projections need not be exactly zero-mean — the
@@ -135,17 +139,16 @@ class SimilaritySpec extends AnyFunSuite {
       (100L + j, Array.tabulate(64)(i => (math.sin(i * 0.31 + j) * 2).toFloat).toSeq, 0)
     }
     val df = vecs.toDF("vec_id", "embedding", "label")
-    val out2 = Similarity.pcaProject(df, nComponents = 2, powerIters = 50,
-      nProbes = 10).collect()
+    val out2 = Similarity.pcaProject(df).collect()
     assert(out2.length == 40)
+    assert(out2.forall(_.length == 5)) // vec_id + pc1..pc4
     val m = Similarity.pcaTrain(
       df.select($"vec_id", org.apache.spark.sql.functions.expr(
-        "transform(embedding, x -> cast(x as double))").as("cv")),
-      nComponents = 2, powerIters = 50)
+        "transform(embedding, x -> cast(x as double))").as("cv")))
     val byId = vecs.map { case (id, v, _) => id -> v.map(_.toDouble).toArray }.toMap
     out2.foreach { r =>
       val v = byId(r.getLong(0))
-      for (k <- 0 until 2) {
+      for (k <- 0 until 4) {
         val y = v.zip(m.axes(k)).map { case (x, w) => x * w }.sum -
           Similarity.pcaBias(m, k)
         assert(math.abs(r.getDouble(1 + k) - y) < 1e-6)
@@ -154,9 +157,9 @@ class SimilaritySpec extends AnyFunSuite {
   }
 
   test("LSH ANN candidates are a subset of correct cosine ordering (recall check)") {
-    val brute = Similarity.bruteTopK(emb, nProbes = 10, k = 5).collect()
+    val brute = Similarity.bruteTopK(emb).collect()
       .map(r => (r.getLong(0), r.getLong(2))).toSet
-    val lsh = Similarity.annLshTopK(emb, nProbes = 10, k = 5).collect()
+    val lsh = Similarity.annLshTopK(emb).collect()
       .map(r => (r.getLong(0), r.getLong(2)))
     // LSH trades recall for never scanning the full corpus; what it does
     // return must be genuine corpus vectors ranked by true cosine.
@@ -174,7 +177,7 @@ class SimilaritySpec extends AnyFunSuite {
       ((1 to 6).map(j => (10L + j, near(j), 4)) ++
         (1 to 6).map(j => (20L + j, far(j + 2), 7)))
     val df = rows.toDF("vec_id", "embedding", "label")
-    val out = Similarity.knnVote(df, nProbes = 1, k = 6).collect().head
+    val out = Similarity.knnVote(df).collect().head
     assert(out.getInt(1) == 4)
   }
 
@@ -186,16 +189,15 @@ class SimilaritySpec extends AnyFunSuite {
     // both argmax to the same centroid, so the copy is always probed
     val df = ((0L, v, 0) +: (50L, v, 0) +: corpus)
       .toDF("vec_id", "embedding", "label")
-    val top = Similarity.annIvfTopK(df, nProbes = 1, k = 1,
-      nClusters = 8, nProbeClusters = 2, iters = 2).collect().head
+    val top = Similarity.annIvfTopK(df).collect().head
     assert(top.getLong(2) == 50L)
     assert(top.getDouble(3) > 0.999999)
   }
 
   test("IVF ANN results are true cosines, deduped, ranked; recall reported") {
-    val brute = Similarity.bruteTopK(emb, nProbes = 10, k = 5).collect()
+    val brute = Similarity.bruteTopK(emb).collect()
       .map(r => (r.getLong(0), r.getLong(2))).toSet
-    val ivf = Similarity.annIvfTopK(emb, nProbes = 10, k = 5).collect()
+    val ivf = Similarity.annIvfTopK(emb).collect()
       .map(r => (r.getLong(0), r.getLong(2)))
     assert(ivf.distinct.length == ivf.length)
     assert(ivf.nonEmpty)
@@ -211,16 +213,15 @@ class SimilaritySpec extends AnyFunSuite {
     // ranking, then exact re-rank pins it at rank 1
     val df = ((0L, v, 0) +: (50L, v, 0) +: corpus)
       .toDF("vec_id", "embedding", "label")
-    val top = Similarity.annPqTopK(df, nProbes = 1, k = 1,
-      nSub = 8, kCodes = 8, iters = 2, rerank = 8).collect().head
+    val top = Similarity.annPqTopK(df).collect().head
     assert(top.getLong(2) == 50L)
     assert(top.getDouble(3) > 0.999999)
   }
 
   test("PQ ANN results are true cosines, deduped, ranked; recall reported") {
-    val brute = Similarity.bruteTopK(emb, nProbes = 10, k = 5).collect()
+    val brute = Similarity.bruteTopK(emb).collect()
       .map(r => (r.getLong(0), r.getLong(2))).toSet
-    val pq = Similarity.annPqTopK(emb, nProbes = 10, k = 5).collect()
+    val pq = Similarity.annPqTopK(emb).collect()
       .map(r => (r.getLong(0), r.getLong(2)))
     assert(pq.distinct.length == pq.length)
     assert(pq.nonEmpty)
@@ -233,17 +234,15 @@ class SimilaritySpec extends AnyFunSuite {
       (100L + j, Array.tabulate(64)(i => math.cos(i * (j + 2) * 0.31).toFloat).toSeq, 1))
     val df = ((0L, v, 0) +: (50L, v, 0) +: corpus)
       .toDF("vec_id", "embedding", "label")
-    val top = Similarity.annIvfPqTopK(df, nProbes = 1, k = 1,
-      nClusters = 8, nProbeClusters = 2, ivfIters = 2,
-      nSub = 8, kCodes = 8, pqIters = 2, rerank = 8).collect().head
+    val top = Similarity.annIvfPqTopK(df).collect().head
     assert(top.getLong(2) == 50L)
     assert(top.getDouble(3) > 0.999999)
   }
 
   test("IVF-PQ results are true cosines, deduped, ranked; recall reported") {
-    val brute = Similarity.bruteTopK(emb, nProbes = 10, k = 5).collect()
+    val brute = Similarity.bruteTopK(emb).collect()
       .map(r => (r.getLong(0), r.getLong(2))).toSet
-    val ivfpq = Similarity.annIvfPqTopK(emb, nProbes = 10, k = 5).collect()
+    val ivfpq = Similarity.annIvfPqTopK(emb).collect()
       .map(r => (r.getLong(0), r.getLong(2)))
     assert(ivfpq.distinct.length == ivfpq.length)
     assert(ivfpq.nonEmpty)
@@ -256,18 +255,16 @@ class SimilaritySpec extends AnyFunSuite {
       (100L + j, Array.tabulate(64)(i => math.cos(i * (j + 2) * 0.31).toFloat).toSeq, 1))
     val df = ((0L, v, 0) +: (50L, v, 0) +: corpus)
       .toDF("vec_id", "embedding", "label")
-    val top = Similarity.annIvfPqResTopK(df, nProbes = 1, k = 1,
-      nClusters = 8, nProbeClusters = 2, ivfIters = 2,
-      nSub = 8, kCodes = 8, pqIters = 2, rerank = 8).collect().head
+    val top = Similarity.annIvfPqResTopK(df).collect().head
     assert(top.getLong(2) == 50L)
     assert(top.getDouble(3) > 0.999999)
     // on the shared fixture, residual coding should not lose recall
     // vs quantizing the raw unit vectors (same routing, finer codes)
-    val brute = Similarity.bruteTopK(emb, nProbes = 10, k = 5).collect()
+    val brute = Similarity.bruteTopK(emb).collect()
       .map(r => (r.getLong(0), r.getLong(2))).toSet
-    val plain = Similarity.annIvfPqTopK(emb, nProbes = 10, k = 5).collect()
+    val plain = Similarity.annIvfPqTopK(emb).collect()
       .map(r => (r.getLong(0), r.getLong(2))).count(brute.contains)
-    val res = Similarity.annIvfPqResTopK(emb, nProbes = 10, k = 5).collect()
+    val res = Similarity.annIvfPqResTopK(emb).collect()
       .map(r => (r.getLong(0), r.getLong(2))).count(brute.contains)
     info(s"IVF-PQ recall plain=$plain residual=$res / ${brute.size}")
     assert(res >= plain - 2) // same ballpark guaranteed; typically higher
@@ -292,12 +289,13 @@ class SimilaritySpec extends AnyFunSuite {
   }
 
   test("range search returns exactly the pairs with cosine above tau") {
+    // tau = 0.25: the near copy (cos ≈ 1) is in, the antipode (cos = -1) out
     val v = Array.tabulate(64)(i => math.sin(i * 0.7 + 1).toFloat).toSeq
     val near = v.map(x => (x * 1.01f + 0.001f))         // cos ≈ 1
     val anti = v.map(x => -x)                            // cos = -1
     val df = Seq((0L, v, 0), (10L, near, 0), (11L, anti, 0))
       .toDF("vec_id", "embedding", "label")
-    val got = Similarity.rangeSearch(df, nProbes = 1, tau = 0.9).collect()
+    val got = Similarity.rangeSearch(df).collect()
     assert(got.map(_.getLong(1)).toSeq == Seq(10L))
     assert(got.head.getDouble(2) > 0.99)
   }
@@ -320,8 +318,8 @@ class SimilaritySpec extends AnyFunSuite {
     val c = emb.filter($"vec_id" >= 10)
       .select($"vec_id",
         org.apache.spark.sql.functions.expr("transform(embedding, x -> cast(x as double))").as("cv"))
-    val a = Similarity.ivfTrain(c, nClusters = 4, iters = 2)
-    val b = Similarity.ivfTrain(c, nClusters = 4, iters = 2)
+    val a = Similarity.ivfTrain(c)
+    val b = Similarity.ivfTrain(c)
     assert(a == b)
     a.foreach { cen =>
       val norm = math.sqrt(cen.centroid.map(x => x * x).sum)
@@ -382,7 +380,7 @@ class SimilaritySpec extends AnyFunSuite {
       .toDF("vec_id", "embedding", "label")
     // probe 0 equals corpus vector 10: after SQ8 the pair must still
     // score at cos ≈ 1 (error ≤ 64 cells of (hi−lo)/255/2 each)
-    val top = Similarity.annSq8TopK(df, nProbes = 1, k = 1).collect().head
+    val top = Similarity.annSq8TopK(df).collect().head
     assert(top.getLong(2) == 10L)
     assert(top.getDouble(3) > 0.9999)
   }
@@ -396,7 +394,7 @@ class SimilaritySpec extends AnyFunSuite {
     val inRange = (0L, Array.tabulate(64)(i => math.sin(i * 11.0).toFloat).toSeq, 0)
     val outRange = (1L, Array.fill(64)(9.0f).toSeq, 0)
     val df = (inRange +: outRange +: corpus).toDF("vec_id", "embedding", "label")
-    val drift = Similarity.sq8DriftStats(df, nProbes = 2).collect()
+    val drift = Similarity.sq8DriftStats(df).collect()
       .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2), r.getLong(3))).toMap
     assert(drift.size == 64)
     drift.values.foreach { case (n, lo, hi) =>
@@ -407,7 +405,7 @@ class SimilaritySpec extends AnyFunSuite {
   }
 
   test("IVF over SQ8 codes: probing every list equals the full compressed-corpus search") {
-    val all = Similarity.annIvfSq8TopK(emb, nProbeClusters = 16).collect()
+    val all = Similarity.ivfSq8Search(emb, nProbeClusters = 16).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSeq
     val flat = Similarity.annSq8TopK(emb).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSeq
@@ -428,8 +426,7 @@ class SimilaritySpec extends AnyFunSuite {
     val emb1 = ((0L, v, 0) +: (10L until 40L).map(j =>
       (j, Array.tabulate(64)(i => math.cos(i * (j + 2.0)).toFloat).toSeq, 1)) :+
       (30L, v, 0)).toDF("vec_id", "embedding", "label")
-    val out = Similarity.hybridRrf(docs, emb1, queries = Seq(0 -> "zebra"),
-      nProbes = 1).collect()
+    val out = Similarity.hybridRrf(docs, emb1, queries = Seq(0 -> "zebra")).collect()
     val top = out.minBy(_.getLong(1))
     assert(top.getLong(2) == 30L) // doc 30: lexical rank 1 AND semantic rank 1
     assert(top.getLong(4) == 1L && top.getLong(5) == 1L)
@@ -456,6 +453,11 @@ class SimilaritySpec extends AnyFunSuite {
     assert(Similarity.sq8Codes(noVecs).collect().isEmpty)
     assert(Similarity.annSq8TopK(noVecs).collect().isEmpty)
     assert(Similarity.sq8DriftStats(noVecs).collect().isEmpty)
+    assert(Similarity.bruteTopK(noVecs).collect().isEmpty)
+    assert(Similarity.annLshTopK(noVecs).collect().isEmpty)
+    assert(Similarity.rangeSearch(noVecs).collect().isEmpty)
+    assert(Similarity.knnVote(noVecs).collect().isEmpty)
+    assert(Similarity.recallAtK(noVecs).collect().isEmpty)
     val noDocs = Seq.empty[(Long, String, String)].toDF("doc_id", "text", "source")
     assert(Similarity.hybridRrf(noDocs, noVecs).collect().isEmpty)
     // one-sided emptiness: a lexical-only corpus still fuses
@@ -483,13 +485,83 @@ class SimilaritySpec extends AnyFunSuite {
   }
 
   test("trained models are cached across queries: a repeated ANN query trains nothing") {
-    Similarity.annIvfTopK(emb).collect() // ensure the default IVF model exists
-    Similarity.annPqTopK(emb).collect() // ensure the default PQ codebook exists
+    Similarity.annIvfTopK(emb).collect() // ensure the IVF model exists
+    Similarity.annPqTopK(emb).collect() // ensure the PQ codebook exists
     val before = Similarity.trainingsRun.get
-    Similarity.annIvfTopK(emb, k = 3).collect() // different query params, same model
-    Similarity.annPqTopK(emb, k = 3, rerank = 10).collect()
+    Similarity.annIvfTopK(emb).collect()
+    Similarity.annPqTopK(emb).collect()
     Similarity.annIvfPqTopK(emb).collect() // composes the two already-trained models
     assert(Similarity.trainingsRun.get == before,
-      "rerunning ANN queries with identical training params must hit the model cache")
+      "rerunning ANN queries on the same corpus must hit the model cache")
+  }
+
+  /** n 16-dim vectors with ids from `firstId`, a distinct direction
+    * per id (`phase` separates corpora); the second frequency keeps
+    * the centered sample above rank 4, so PCA has four real axes.
+    */
+  private def smoothVecs(firstId: Long, n: Int, phase: Double): Seq[(Long, Seq[Float], Int)] =
+    (0 until n).map(j => (firstId + j, Array.tabulate(16)(i =>
+      (math.sin(i * 0.37 + j * 0.9 + phase) + 0.3 * math.sin(i * 7.77 + j * 1.3) + 0.1)
+        .toFloat).toSeq, j % 3))
+
+  test("a second trained corpus makes every recorded model ambiguous: no oracle literals") {
+    // each corpus trains IVF + residual PQ, PQ and PCA; after two
+    // distinct corpora no accessor may pick one model for the oracle
+    for (phase <- Seq(0.0, 1.7)) {
+      val df = (smoothVecs(0L, 3, phase) ++ smoothVecs(10L, 40, phase))
+        .toDF("vec_id", "embedding", "label")
+      Similarity.annIvfPqResTopK(df).collect()
+      Similarity.annPqTopK(df).collect()
+      Similarity.pcaProject(df).collect()
+    }
+    assert(Similarity.lastIvfModel.isEmpty)
+    assert(Similarity.lastPqModel.isEmpty)
+    assert(Similarity.lastResPqModel.isEmpty)
+    assert(Similarity.lastPcaModel.isEmpty)
+  }
+
+  test("trained ANN operators on degenerate corpora: empty throws, one vector answers") {
+    val docsFor = (ids: Seq[Long]) => ids.map(id => (id, s"term$id shared", "web"))
+      .toDF("doc_id", "text", "source")
+    // every operator that trains a model, as its SparkEntry query calls it
+    val trained: Seq[(String, DataFrame => DataFrame)] = Seq(
+      "ann_ivf_topk" -> (e => Similarity.annIvfTopK(e)),
+      "ann_ivf_sq8_topk" -> (e => Similarity.annIvfSq8TopK(e)),
+      "emb_pq_codes" -> (e => Similarity.pqCodes(e)),
+      "ann_pq_topk" -> (e => Similarity.annPqTopK(e)),
+      "ann_ivfpq_topk" -> (e => Similarity.annIvfPqTopK(e)),
+      "ann_ivfpq_res_topk" -> (e => Similarity.annIvfPqResTopK(e)),
+      "emb_pca_project" -> (e => Similarity.pcaProject(e)),
+      "emb_pca_var" -> (e => Similarity.pcaVariance(e)),
+      "txt_topics" -> (e => Similarity.clusterTopics(docsFor(10L to 12L), e)))
+    val probes = smoothVecs(0L, 3, 0.4)
+    val empties = Seq(
+      "empty table" -> Seq.empty[(Long, Seq[Float], Int)],
+      "probes only" -> smoothVecs(0L, 10, 0.4),
+      "all-zero corpus" -> (probes ++ (10L to 14L).map(id => (id, Seq.fill(16)(0f), 0))))
+    // an empty corpus (zero-norm vectors are dropped) has nothing to
+    // train on: the trainer's require fires while the frame is built
+    for ((input, rows) <- empties; (query, op) <- trained) {
+      val e = intercept[IllegalArgumentException](op(rows.toDF("vec_id", "embedding", "label")))
+      assert(e.getMessage.contains("empty corpus"), s"$query on $input")
+    }
+    // one corpus vector: fewer than the 16 IVF lists and 16 PQ codes —
+    // the searches return it for every probe at its true cosine
+    val one = (probes :+ smoothVecs(10L, 1, 2.2).head).toDF("vec_id", "embedding", "label")
+    val exact = Similarity.bruteTopK(one).collect().map(_.toSeq).toSeq
+    assert(exact.map(r => (r(0), r(1), r(2))) ==
+      Seq((0L, 1L, 10L), (1L, 1L, 10L), (2L, 1L, 10L)))
+    for ((query, op) <- trained.filter(t => t._1.startsWith("ann_")))
+      assert(op(one).collect().map(_.toSeq).toSeq == exact, query)
+    assert(Similarity.pqCodes(one).collect().map(r => (r.getLong(0), r.getLong(1))).toSeq ==
+      Seq((10L, 0L)))
+    val topics = Similarity.clusterTopics(docsFor(Seq(10L)), one).collect()
+      .map(r => (r.getLong(0), r.getString(2))).toSet
+    assert(topics == Set((0L, "term10"), (0L, "shared")))
+    // a single vector has zero covariance: PCA has no axis to find
+    for ((query, op) <- trained.filter(_._1.startsWith("emb_pca"))) {
+      val e = intercept[IllegalArgumentException](op(one))
+      assert(e.getMessage.contains("power iteration collapsed at component 0"), query)
+    }
   }
 }

@@ -511,12 +511,12 @@ class StreamingSpec extends AnyFunSuite {
     val rows = (0 until 30).map(j =>
       (100L + j, Array.tabulate(16)(i => (math.sin(i * 0.4 + j) + 0.02 * j).toFloat).toSeq, 0))
     val df = rows.toDF("vec_id", "embedding", "label")
-    val batch = graft.operators.Similarity.pcaProject(df, nComponents = 2,
-      powerIters = 60, nProbes = 10).collect()
-      .map(r => r.getLong(0) -> (r.getDouble(1), r.getDouble(2))).toMap
+    // vec_id + the four components, bit for bit
+    def pcs(r: org.apache.spark.sql.Row) = r.getLong(0) -> (1 to 4).map(r.getDouble)
+    val batch = graft.operators.Similarity.pcaProject(df).collect().map(pcs).toMap
+    assert(batch.size == 30 && batch.values.forall(_.length == 4))
     val m = graft.operators.Similarity.pcaTrain(
-      df.selectExpr("vec_id", "transform(embedding, x -> cast(x as double)) AS cv"),
-      nComponents = 2, powerIters = 60)
+      df.selectExpr("vec_id", "transform(embedding, x -> cast(x as double)) AS cv"))
     val in = MemoryStream[(Long, Seq[Float], Int)]
     val q = graft.streaming.DocPipelineJobs
       .pcaStream(in.toDF().toDF("vec_id", "embedding", "label"), m)
@@ -525,8 +525,7 @@ class StreamingSpec extends AnyFunSuite {
     try {
       in.addData(rows: _*)
       q.processAllAvailable()
-      val live = spark.table("pca_live").collect()
-        .map(r => r.getLong(0) -> (r.getDouble(1), r.getDouble(2))).toMap
+      val live = spark.table("pca_live").collect().map(pcs).toMap
       assert(live == batch)
     } finally q.stop()
   }
