@@ -345,11 +345,126 @@ object SparkEntry {
       .map { case ((a, b), i) => s"($i, $a, $b)" }
       .mkString(", ")
 
-  /** The first n LSH hyperplanes as DuckDB VALUES rows of (pid,
-    * 64-double list literal). Double.toString round-trips and
-    * DuckDB's parser is correctly rounded, so the oracle's planes are
-    * bit-identical to [[graft.functions.VectorOps]]'s.
+  /** The word-3-gram shingle CTEs over relation `src` (doc_id,
+    * text): `toks` splits the text, `tri(doc_id, g)` holds each
+    * document's distinct shingles; documents under three words have
+    * none. ONE definition for every oracle that shingles — the
+    * Jaccard, containment, contamination, Bloom and MinHash rows.
     */
+  private def shingleCtes(src: String): String =
+    s"""toks AS (
+      |  SELECT doc_id, string_split(text, ' ') AS w FROM $src
+      |  WHERE len(string_split(text, ' ')) >= 3),
+      |tri AS (
+      |  SELECT DISTINCT doc_id, w[i] || ' ' || w[i+1] || ' ' || w[i+2] AS g
+      |  FROM toks, UNNEST(generate_series(1, len(w) - 2)) AS t(i))""".stripMargin
+
+  /** Per-doc shingle counts `sizes` and the shingle-sharing pair
+    * counts `pairs(doc1, doc2, inter)` over `tri`.
+    */
+  private val PairCountCtes =
+    """sizes AS (SELECT doc_id, COUNT(*) AS s FROM tri GROUP BY doc_id),
+      |pairs AS (
+      |  SELECT a.doc_id AS doc1, b.doc_id AS doc2, COUNT(*) AS inter
+      |  FROM tri a JOIN tri b ON a.g = b.g AND a.doc_id < b.doc_id
+      |  GROUP BY 1, 2)""".stripMargin
+
+  /** The Jaccard cut on `pairs` joined to `sizes` s1/s2, at
+    * [[Dedup.JaccardTauNum]] / [[Dedup.TauDenom]].
+    */
+  private val JaccardCutSql =
+    s"inter * ${Dedup.TauDenom} >= (s1.s + s2.s - inter) * ${Dedup.JaccardTauNum}"
+
+  /** The exact n-gram Jaccard contract: every dd_* row whose operator
+    * emits (doc1, doc2, inter, s1, s2) at the Jaccard cut, whichever
+    * candidate plan it runs.
+    */
+  private def jaccardPairsSql: String =
+    "WITH " + shingleCtes("documents") + ",\n" + PairCountCtes + "\n" +
+      s"""|SELECT doc1, doc2, inter, s1.s AS s1, s2.s AS s2
+        |FROM pairs
+        |JOIN sizes s1 ON doc1 = s1.doc_id
+        |JOIN sizes s2 ON doc2 = s2.doc_id
+        |WHERE $JaccardCutSql
+        |ORDER BY doc1, doc2""".stripMargin
+
+  /** The exact containment contract over relation `src`, after the
+    * `head` of the WITH clause (`"WITH "`, or a `corpus` CTE that
+    * `src` names): every containment row, whichever candidate
+    * generator it runs, at [[Dedup.ContainmentTauNum]].
+    */
+  private def containmentPairsSql(head: String, src: String): String =
+    head + shingleCtes(src) + ",\n" + PairCountCtes + "\n" +
+      s"""|SELECT doc1, doc2, inter, s1.s AS s1, s2.s AS s2,
+        |  ROUND(CAST(inter AS DOUBLE) / LEAST(s1.s, s2.s), 6) AS containment,
+        |  ROUND(CAST(inter AS DOUBLE) / (s1.s + s2.s - inter), 6) AS jaccard
+        |FROM pairs
+        |JOIN sizes s1 ON doc1 = s1.doc_id
+        |JOIN sizes s2 ON doc2 = s2.doc_id
+        |WHERE inter * ${Dedup.TauDenom} >= LEAST(s1.s, s2.s) * ${Dedup.ContainmentTauNum}
+        |ORDER BY doc1, doc2""".stripMargin
+
+  /** The components of the exact Jaccard pair graph, `comp(v,
+    * component)` over its vertices by a recursive reachability CTE —
+    * shared by dd_cluster_cc, dd_canonicalize and dd_soft_dedup.
+    */
+  private val JaccardComponentCtes =
+    "WITH RECURSIVE " + shingleCtes("documents") + ",\n" +
+      s"""|sizes AS (SELECT doc_id, COUNT(*) AS s FROM tri GROUP BY doc_id),
+        |pr AS (
+        |  SELECT doc1, doc2 FROM (
+        |    SELECT a.doc_id AS doc1, b.doc_id AS doc2, COUNT(*) AS inter
+        |    FROM tri a JOIN tri b ON a.g = b.g AND a.doc_id < b.doc_id
+        |    GROUP BY 1, 2) p
+        |  JOIN sizes s1 ON doc1 = s1.doc_id
+        |  JOIN sizes s2 ON doc2 = s2.doc_id
+        |  WHERE $JaccardCutSql),
+        |e AS (SELECT doc1 AS a, doc2 AS b FROM pr
+        |      UNION SELECT doc2, doc1 FROM pr),
+        |reach(v, r) AS (
+        |  SELECT a, a FROM e
+        |  UNION
+        |  SELECT e.b, reach.r FROM reach JOIN e ON e.a = reach.v),
+        |comp AS (SELECT v, MIN(r) AS component FROM reach GROUP BY v)""".stripMargin
+
+  /** The SimHash signature chain `words → sigs(doc_id, sim)` —
+    * salted-token 62-bit fold, 64 signed bit votes — shared by
+    * dd_simhash and the three mm_phash_pairs rows.
+    */
+  private val SimhashCtes =
+    """WITH words AS (
+      |  SELECT doc_id, 'xq' || w AS w FROM (
+      |    SELECT doc_id, UNNEST(string_split(text, ' ')) AS w FROM documents) t),
+      |wc AS (SELECT doc_id, <<CODES:w>> AS cps FROM words),
+      |h AS (SELECT doc_id, <<HASH62:cps>> AS h FROM wc),
+      |bits AS (
+      |  SELECT doc_id, j, SUM(((h >> j) & 1) * 2 - 1) AS s
+      |  FROM h CROSS JOIN (SELECT UNNEST(generate_series(0, 63)) AS j) js
+      |  GROUP BY doc_id, j),
+      |sigs AS (
+      |  SELECT doc_id,
+      |    CAST(SUM(CASE WHEN s > 0 THEN (1::BIGINT << j) ELSE 0 END) AS BIGINT) AS sim
+      |  FROM bits GROUP BY doc_id)""".stripMargin
+      .replace("<<CODES:w>>", charCodesSql("w"))
+      .replace("<<HASH62:cps>>", hash62Sql("cps"))
+
+  /** The band-free brute-force Hamming pairs over [[SimhashCtes]]:
+    * ALL signature pairs, filtered on popcount alone at
+    * [[Multimodal.HammingMaxDist]].
+    */
+  private def phashBruteForceSql: String =
+    SimhashCtes + "\n" +
+      s"""|SELECT s1.doc_id AS doc_a, s2.doc_id AS doc_b,
+        |  CAST(bit_count(xor(s1.sim, s2.sim)) AS BIGINT) AS dist
+        |FROM sigs s1 JOIN sigs s2 ON s1.doc_id < s2.doc_id
+        |WHERE bit_count(xor(s1.sim, s2.sim)) <= ${Multimodal.HammingMaxDist}
+        |ORDER BY doc_a, doc_b""".stripMargin
+
+  /** The quality cut of `TextOps.cleanScored` over (n_words, n_stop). */
+  private val CleanCutSql =
+    s"n_words >= ${TextOps.CleanMinWords} AND " +
+      s"n_stop * 1000 <= n_words * ${TextOps.CleanMaxStopPerMille}"
+
   /** The MinHash signature/banding CTE chain (toks → … → cand) —
     * ONE definition shared by the dd_minhash_lsh and
     * dd_minhash_est_eval oracles so the derivation cannot drift
@@ -357,13 +472,8 @@ object SparkEntry {
     * substitute <<PERMS>>/<<HASH31:*>>.
     */
   private val MinhashCtes =
-    """WITH toks AS (
-        |  SELECT doc_id, string_split(text, ' ') AS w FROM documents
-        |  WHERE len(string_split(text, ' ')) >= 3),
-        |tri AS (
-        |  SELECT DISTINCT doc_id, w[i] || ' ' || w[i+1] || ' ' || w[i+2] AS g
-        |  FROM toks, UNNEST(generate_series(1, len(w) - 2)) AS t(i)),
-        |h AS (
+    "WITH " + shingleCtes("documents") + ",\n" +
+      s"""|h AS (
         |  SELECT doc_id, <<HASH31:g>> AS h
         |  FROM tri),
         |perms AS (SELECT * FROM (VALUES <<PERMS>>) v(i, a, b)),
@@ -374,12 +484,25 @@ object SparkEntry {
         |bands AS (
         |  SELECT doc_id, b,
         |    <<HASH31:band>> AS band_hash
-        |  FROM mh CROSS JOIN (SELECT UNNEST(generate_series(0, 15)) AS b) bs),
+        |  FROM mh CROSS JOIN (SELECT UNNEST(generate_series(0, ${Dedup.MinhashBands - 1})) AS b) bs),
         |cand AS (
         |  SELECT DISTINCT b1.doc_id AS doc1, b2.doc_id AS doc2
         |  FROM bands b1 JOIN bands b2 ON b1.b = b2.b AND b1.band_hash = b2.band_hash
         |  WHERE b1.doc_id < b2.doc_id)""".stripMargin
 
+  /** One band's hash: the fold over its [[Dedup.MinhashRows]]
+    * signature values, for <<HASH31:band>>.
+    */
+  private val MinhashBandHashSql = {
+    val r = Dedup.MinhashRows
+    foldSql(s"mh[b * $r + 1 : b * $r + $r]", 2147483647L)
+  }
+
+  /** The first n LSH hyperplanes as DuckDB VALUES rows of (pid,
+    * 64-double list literal). Double.toString round-trips and
+    * DuckDB's parser is correctly rounded, so the oracle's planes are
+    * bit-identical to [[graft.functions.VectorOps]]'s.
+    */
   private def planeValues(n: Int): String =
     graft.functions.VectorOps.planeRows.take(n).zipWithIndex
       .map { case (p, i) => s"($i, [${p.mkString(", ")}])" }
@@ -404,14 +527,14 @@ object SparkEntry {
     * vector view `v`; callers append the verification SELECT.
     */
   private def embedCandCtes(tau: Double): String =
-    """v AS (
+    s"""v AS (
       |  SELECT vec_id, embedding::DOUBLE[] AS vd FROM embeddings),
       |planes AS (SELECT * FROM (VALUES <<PLANES>>) pl(pid, p)),
       |sigs AS (
-      |  SELECT vec_id, (pid // 12)::BIGINT * 4294967296
+      |  SELECT vec_id, (pid // ${Dedup.EmbedSmallBits})::BIGINT * 4294967296
       |    + CAST(SUM(CASE WHEN list_dot_product(vd, p) > 0
-      |        THEN (1::BIGINT << (pid % 12)) ELSE 0 END) AS BIGINT) AS bucket
-      |  FROM v CROSS JOIN planes GROUP BY vec_id, pid // 12),
+      |        THEN (1::BIGINT << (pid % ${Dedup.EmbedSmallBits})) ELSE 0 END) AS BIGINT) AS bucket
+      |  FROM v CROSS JOIN planes GROUP BY vec_id, pid // ${Dedup.EmbedSmallBits}),
       |cand AS (
       |  SELECT DISTINCT s1.vec_id AS id1, s2.vec_id AS id2
       |  FROM sigs s1 JOIN sigs s2 ON s1.bucket = s2.bucket
@@ -430,7 +553,7 @@ object SparkEntry {
       |  WHERE bit_count(xor(a.ws[1], b.ws[1])) + bit_count(xor(a.ws[2], b.ws[2]))
       |    + bit_count(xor(a.ws[3], b.ws[3])) + bit_count(xor(a.ws[4], b.ws[4]))
       |    <= <<SKCUT>>)""".stripMargin
-      .replace("<<PLANES>>", planeValues(96))
+      .replace("<<PLANES>>", planeValues(Dedup.EmbedSmallTables * Dedup.EmbedSmallBits))
       .replace("<<SKPLANES>>", sketchPlaneValues)
       .replace("<<SKCUT>>", Dedup.sketchMismatchCut(tau).toString)
 
@@ -1278,7 +1401,7 @@ object SparkEntry {
         |ORDER BY tf DESC, word
         |LIMIT 100""".stripMargin,
     "dd_clean_pipeline" ->
-      """WITH n AS (
+      s"""WITH n AS (
         |  SELECT doc_id,
         |    regexp_replace(trim(lower(text)), ' +', ' ', 'g') AS norm_text
         |  FROM documents),
@@ -1291,14 +1414,14 @@ object SparkEntry {
         |SELECT MIN(doc_id) AS doc_id, md5(norm_text) AS h,
         |  COUNT(*) AS n_dups, MIN(n_words) AS n_words
         |FROM f
-        |WHERE n_words >= 5 AND n_stop * 1000 <= n_words * 500
+        |WHERE $CleanCutSql
         |GROUP BY md5(norm_text)
         |ORDER BY doc_id""".stripMargin,
     // the composed curation pipeline: every CTE is the corresponding
     // stage oracle (clean/score from dd_clean_pipeline, canonical via
     // the h window, budget window from samp_token_budget) chained
     "pipe_curate" ->
-      """WITH n AS (
+      s"""WITH n AS (
         |  SELECT doc_id, source,
         |    regexp_replace(trim(lower(text)), ' +', ' ', 'g') AS norm_text
         |  FROM documents),
@@ -1310,7 +1433,7 @@ object SparkEntry {
         |  FROM n),
         |sc AS (
         |  SELECT * FROM f
-        |  WHERE n_words >= 5 AND n_stop * 1000 <= n_words * 500),
+        |  WHERE $CleanCutSql),
         |canon AS (
         |  SELECT doc_id, source, h, n_words, n_stop,
         |    ROW_NUMBER() OVER (PARTITION BY h ORDER BY doc_id) AS rn,
@@ -1333,7 +1456,7 @@ object SparkEntry {
         |FROM cum
         |ORDER BY doc_id""".stripMargin,
     "dd_incremental" ->
-      """WITH n AS (
+      s"""WITH n AS (
         |  SELECT doc_id,
         |    regexp_replace(trim(lower(text)), ' +', ' ', 'g') AS norm_text
         |  FROM documents),
@@ -1345,12 +1468,12 @@ object SparkEntry {
         |  FROM n),
         |sc AS (
         |  SELECT * FROM f
-        |  WHERE n_words >= 5 AND n_stop * 1000 <= n_words * 500),
-        |old AS (SELECT DISTINCT h FROM sc WHERE doc_id < 250)
+        |  WHERE $CleanCutSql),
+        |old AS (SELECT DISTINCT h FROM sc WHERE doc_id < ${Dedup.SeenSplitId})
         |SELECT MIN(doc_id) AS doc_id, h, COUNT(*) AS n_batch_dups,
         |  MIN(n_words) AS n_words
         |FROM sc
-        |WHERE doc_id >= 250 AND h NOT IN (SELECT h FROM old)
+        |WHERE doc_id >= ${Dedup.SeenSplitId} AND h NOT IN (SELECT h FROM old)
         |GROUP BY h
         |ORDER BY doc_id""".stripMargin,
     "dd_exact" ->
@@ -1358,239 +1481,71 @@ object SparkEntry {
         |FROM documents
         |GROUP BY md5(text)
         |ORDER BY h""".stripMargin,
-    "dd_ngram_jaccard" ->
-      """WITH toks AS (
-        |  SELECT doc_id, string_split(text, ' ') AS w FROM documents
-        |  WHERE len(string_split(text, ' ')) >= 3),
-        |tri AS (
-        |  SELECT DISTINCT doc_id, w[i] || ' ' || w[i+1] || ' ' || w[i+2] AS g
-        |  FROM toks, UNNEST(generate_series(1, len(w) - 2)) AS t(i)),
-        |sizes AS (SELECT doc_id, COUNT(*) AS s FROM tri GROUP BY doc_id),
-        |pairs AS (
-        |  SELECT a.doc_id AS doc1, b.doc_id AS doc2, COUNT(*) AS inter
-        |  FROM tri a JOIN tri b ON a.g = b.g AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2)
-        |SELECT doc1, doc2, inter, s1.s AS s1, s2.s AS s2
-        |FROM pairs
-        |JOIN sizes s1 ON doc1 = s1.doc_id
-        |JOIN sizes s2 ON doc2 = s2.doc_id
-        |WHERE inter * 100 >= (s1.s + s2.s - inter) * 50
-        |ORDER BY doc1, doc2""".stripMargin,
+    "dd_ngram_jaccard" -> jaccardPairsSql,
     // near-superset pairs: same shingle derivation, containment cut
     // (min-size denominator) instead of the union denominator
-    "dd_containment" ->
-      """WITH toks AS (
-        |  SELECT doc_id, string_split(text, ' ') AS w FROM documents
-        |  WHERE len(string_split(text, ' ')) >= 3),
-        |tri AS (
-        |  SELECT DISTINCT doc_id, w[i] || ' ' || w[i+1] || ' ' || w[i+2] AS g
-        |  FROM toks, UNNEST(generate_series(1, len(w) - 2)) AS t(i)),
-        |sizes AS (SELECT doc_id, COUNT(*) AS s FROM tri GROUP BY doc_id),
-        |pairs AS (
-        |  SELECT a.doc_id AS doc1, b.doc_id AS doc2, COUNT(*) AS inter
-        |  FROM tri a JOIN tri b ON a.g = b.g AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2)
-        |SELECT doc1, doc2, inter, s1.s AS s1, s2.s AS s2,
-        |  ROUND(CAST(inter AS DOUBLE) / LEAST(s1.s, s2.s), 6) AS containment,
-        |  ROUND(CAST(inter AS DOUBLE) / (s1.s + s2.s - inter), 6) AS jaccard
-        |FROM pairs
-        |JOIN sizes s1 ON doc1 = s1.doc_id
-        |JOIN sizes s2 ON doc2 = s2.doc_id
-        |WHERE inter * 100 >= LEAST(s1.s, s2.s) * 80
-        |ORDER BY doc1, doc2""".stripMargin,
+    "dd_containment" -> containmentPairsSql("WITH ", "documents"),
     // the prefix-filtered candidate generator is LOSSLESS for the
     // containment cut (pigeonhole over the smaller doc's rarest
     // shingles), so its exact-SQL contract is identical to
     // dd_containment's — same oracle, different (scalable) plan
-    "dd_containment_lsh" ->
-      """WITH toks AS (
-        |  SELECT doc_id, string_split(text, ' ') AS w FROM documents
-        |  WHERE len(string_split(text, ' ')) >= 3),
-        |tri AS (
-        |  SELECT DISTINCT doc_id, w[i] || ' ' || w[i+1] || ' ' || w[i+2] AS g
-        |  FROM toks, UNNEST(generate_series(1, len(w) - 2)) AS t(i)),
-        |sizes AS (SELECT doc_id, COUNT(*) AS s FROM tri GROUP BY doc_id),
-        |pairs AS (
-        |  SELECT a.doc_id AS doc1, b.doc_id AS doc2, COUNT(*) AS inter
-        |  FROM tri a JOIN tri b ON a.g = b.g AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2)
-        |SELECT doc1, doc2, inter, s1.s AS s1, s2.s AS s2,
-        |  ROUND(CAST(inter AS DOUBLE) / LEAST(s1.s, s2.s), 6) AS containment,
-        |  ROUND(CAST(inter AS DOUBLE) / (s1.s + s2.s - inter), 6) AS jaccard
-        |FROM pairs
-        |JOIN sizes s1 ON doc1 = s1.doc_id
-        |JOIN sizes s2 ON doc2 = s2.doc_id
-        |WHERE inter * 100 >= LEAST(s1.s, s2.s) * 80
-        |ORDER BY doc1, doc2""".stripMargin,
+    "dd_containment_lsh" -> containmentPairsSql("WITH ", "documents"),
     // the containment dispatcher: whichever candidate generator the
     // density probe picks (rarest-prefix lossless or banded-MinHash),
     // verification is exact and on this corpus the result set equals
     // the exact contract — same oracle as dd_containment
-    "dd_containment_auto" ->
-      """WITH toks AS (
-        |  SELECT doc_id, string_split(text, ' ') AS w FROM documents
-        |  WHERE len(string_split(text, ' ')) >= 3),
-        |tri AS (
-        |  SELECT DISTINCT doc_id, w[i] || ' ' || w[i+1] || ' ' || w[i+2] AS g
-        |  FROM toks, UNNEST(generate_series(1, len(w) - 2)) AS t(i)),
-        |sizes AS (SELECT doc_id, COUNT(*) AS s FROM tri GROUP BY doc_id),
-        |pairs AS (
-        |  SELECT a.doc_id AS doc1, b.doc_id AS doc2, COUNT(*) AS inter
-        |  FROM tri a JOIN tri b ON a.g = b.g AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2)
-        |SELECT doc1, doc2, inter, s1.s AS s1, s2.s AS s2,
-        |  ROUND(CAST(inter AS DOUBLE) / LEAST(s1.s, s2.s), 6) AS containment,
-        |  ROUND(CAST(inter AS DOUBLE) / (s1.s + s2.s - inter), 6) AS jaccard
-        |FROM pairs
-        |JOIN sizes s1 ON doc1 = s1.doc_id
-        |JOIN sizes s2 ON doc2 = s2.doc_id
-        |WHERE inter * 100 >= LEAST(s1.s, s2.s) * 80
-        |ORDER BY doc1, doc2""".stripMargin,
+    "dd_containment_auto" -> containmentPairsSql("WITH ", "documents"),
     // the size-stratified banded generator: per size-class-gap arms
     // band for the gap-adjusted Jaccard threshold, every candidate
     // exactly verified — on this corpus (true containment pairs all
     // within gap ≤ 5 and J ≥ 0.89, where the gap-0 arm's recall is
     // 1 − 10⁻¹⁶) the result set equals the full exact contract
-    "dd_containment_strat" ->
-      """WITH toks AS (
-        |  SELECT doc_id, string_split(text, ' ') AS w FROM documents
-        |  WHERE len(string_split(text, ' ')) >= 3),
-        |tri AS (
-        |  SELECT DISTINCT doc_id, w[i] || ' ' || w[i+1] || ' ' || w[i+2] AS g
-        |  FROM toks, UNNEST(generate_series(1, len(w) - 2)) AS t(i)),
-        |sizes AS (SELECT doc_id, COUNT(*) AS s FROM tri GROUP BY doc_id),
-        |pairs AS (
-        |  SELECT a.doc_id AS doc1, b.doc_id AS doc2, COUNT(*) AS inter
-        |  FROM tri a JOIN tri b ON a.g = b.g AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2)
-        |SELECT doc1, doc2, inter, s1.s AS s1, s2.s AS s2,
-        |  ROUND(CAST(inter AS DOUBLE) / LEAST(s1.s, s2.s), 6) AS containment,
-        |  ROUND(CAST(inter AS DOUBLE) / (s1.s + s2.s - inter), 6) AS jaccard
-        |FROM pairs
-        |JOIN sizes s1 ON doc1 = s1.doc_id
-        |JOIN sizes s2 ON doc2 = s2.doc_id
-        |WHERE inter * 100 >= LEAST(s1.s, s2.s) * 80
-        |ORDER BY doc1, doc2""".stripMargin,
+    "dd_containment_strat" -> containmentPairsSql("WITH ", "documents"),
     // planted-pair twin: same exact-containment contract over the
     // corpus plus one verbatim copy of doc 0 — the (0, 9e11) pair is
     // a J = 1 gap-0 containment pair the stratified generator finds
     // with probability exactly 1, so a hash match here certifies a
     // FOUND planted pair, not a vacuous empty-set equality
-    "dd_containment_strat_planted" ->
+    "dd_containment_strat_planted" -> containmentPairsSql(
       """WITH corpus AS (
         |  SELECT doc_id, text FROM documents
         |  UNION ALL
         |  SELECT doc_id + 900000000000 AS doc_id, text FROM documents
         |  WHERE doc_id = 0),
-        |toks AS (
-        |  SELECT doc_id, string_split(text, ' ') AS w FROM corpus
-        |  WHERE len(string_split(text, ' ')) >= 3),
-        |tri AS (
-        |  SELECT DISTINCT doc_id, w[i] || ' ' || w[i+1] || ' ' || w[i+2] AS g
-        |  FROM toks, UNNEST(generate_series(1, len(w) - 2)) AS t(i)),
-        |sizes AS (SELECT doc_id, COUNT(*) AS s FROM tri GROUP BY doc_id),
-        |pairs AS (
-        |  SELECT a.doc_id AS doc1, b.doc_id AS doc2, COUNT(*) AS inter
-        |  FROM tri a JOIN tri b ON a.g = b.g AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2)
-        |SELECT doc1, doc2, inter, s1.s AS s1, s2.s AS s2,
-        |  ROUND(CAST(inter AS DOUBLE) / LEAST(s1.s, s2.s), 6) AS containment,
-        |  ROUND(CAST(inter AS DOUBLE) / (s1.s + s2.s - inter), 6) AS jaccard
-        |FROM pairs
-        |JOIN sizes s1 ON doc1 = s1.doc_id
-        |JOIN sizes s2 ON doc2 = s2.doc_id
-        |WHERE inter * 100 >= LEAST(s1.s, s2.s) * 80
-        |ORDER BY doc1, doc2""".stripMargin,
+        |""".stripMargin, "corpus"),
     // budget-knob twin: the same exact-containment contract over the
     // corpus plus one planted gap-1 embedded doc (doc 0 ++ suffixed
     // copy — 2S+2 shingles vs S, one size class up, C = 1); the
     // operator runs with candBudgetPerDoc = 16, so a hash match
     // certifies a FOUND gap-1 pair through the budget knob's path
-    "dd_containment_strat_budget" ->
+    "dd_containment_strat_budget" -> containmentPairsSql(
       """WITH corpus AS (
         |  SELECT doc_id, text FROM documents
         |  UNION ALL
         |  SELECT doc_id + 900000000000 AS doc_id,
         |    text || ' ' || regexp_replace(text, '(\S+)', '\1zq', 'g') AS text
         |  FROM documents WHERE doc_id = 0),
-        |toks AS (
-        |  SELECT doc_id, string_split(text, ' ') AS w FROM corpus
-        |  WHERE len(string_split(text, ' ')) >= 3),
-        |tri AS (
-        |  SELECT DISTINCT doc_id, w[i] || ' ' || w[i+1] || ' ' || w[i+2] AS g
-        |  FROM toks, UNNEST(generate_series(1, len(w) - 2)) AS t(i)),
-        |sizes AS (SELECT doc_id, COUNT(*) AS s FROM tri GROUP BY doc_id),
-        |pairs AS (
-        |  SELECT a.doc_id AS doc1, b.doc_id AS doc2, COUNT(*) AS inter
-        |  FROM tri a JOIN tri b ON a.g = b.g AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2)
-        |SELECT doc1, doc2, inter, s1.s AS s1, s2.s AS s2,
-        |  ROUND(CAST(inter AS DOUBLE) / LEAST(s1.s, s2.s), 6) AS containment,
-        |  ROUND(CAST(inter AS DOUBLE) / (s1.s + s2.s - inter), 6) AS jaccard
-        |FROM pairs
-        |JOIN sizes s1 ON doc1 = s1.doc_id
-        |JOIN sizes s2 ON doc2 = s2.doc_id
-        |WHERE inter * 100 >= LEAST(s1.s, s2.s) * 80
-        |ORDER BY doc1, doc2""".stripMargin,
+        |""".stripMargin, "corpus"),
     // the LSH-verified dense-regime path: candidates are banded
     // MinHash buckets, but every candidate is verified with an exact
     // intersection count, so against THIS corpus (true pairs ≥ 0.89
     // Jaccard, where banded recall is 1 − 4·10⁻⁷) the result set is
     // the full exact contract — the oracle asserts exactly that
-    "dd_jaccard_lsh" ->
-      """WITH toks AS (
-        |  SELECT doc_id, string_split(text, ' ') AS w FROM documents
-        |  WHERE len(string_split(text, ' ')) >= 3),
-        |tri AS (
-        |  SELECT DISTINCT doc_id, w[i] || ' ' || w[i+1] || ' ' || w[i+2] AS g
-        |  FROM toks, UNNEST(generate_series(1, len(w) - 2)) AS t(i)),
-        |sizes AS (SELECT doc_id, COUNT(*) AS s FROM tri GROUP BY doc_id),
-        |pairs AS (
-        |  SELECT a.doc_id AS doc1, b.doc_id AS doc2, COUNT(*) AS inter
-        |  FROM tri a JOIN tri b ON a.g = b.g AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2)
-        |SELECT doc1, doc2, inter, s1.s AS s1, s2.s AS s2
-        |FROM pairs
-        |JOIN sizes s1 ON doc1 = s1.doc_id
-        |JOIN sizes s2 ON doc2 = s2.doc_id
-        |WHERE inter * 100 >= (s1.s + s2.s - inter) * 50
-        |ORDER BY doc1, doc2""".stripMargin,
+    "dd_jaccard_lsh" -> jaccardPairsSql,
     // the adaptive dispatcher must match the same exact-Jaccard
     // contract whichever physical strategy its vocabulary probe picks
-    "dd_jaccard_adaptive" ->
-      """WITH toks AS (
-        |  SELECT doc_id, string_split(text, ' ') AS w FROM documents
-        |  WHERE len(string_split(text, ' ')) >= 3),
-        |tri AS (
-        |  SELECT DISTINCT doc_id, w[i] || ' ' || w[i+1] || ' ' || w[i+2] AS g
-        |  FROM toks, UNNEST(generate_series(1, len(w) - 2)) AS t(i)),
-        |sizes AS (SELECT doc_id, COUNT(*) AS s FROM tri GROUP BY doc_id),
-        |pairs AS (
-        |  SELECT a.doc_id AS doc1, b.doc_id AS doc2, COUNT(*) AS inter
-        |  FROM tri a JOIN tri b ON a.g = b.g AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2)
-        |SELECT doc1, doc2, inter, s1.s AS s1, s2.s AS s2
-        |FROM pairs
-        |JOIN sizes s1 ON doc1 = s1.doc_id
-        |JOIN sizes s2 ON doc2 = s2.doc_id
-        |WHERE inter * 100 >= (s1.s + s2.s - inter) * 50
-        |ORDER BY doc1, doc2""".stripMargin,
+    "dd_jaccard_adaptive" -> jaccardPairsSql,
     "dd_contamination" ->
-      """WITH toks AS (
-        |  SELECT doc_id, string_split(text, ' ') AS w FROM documents
-        |  WHERE len(string_split(text, ' ')) >= 3),
-        |tri AS (
-        |  SELECT DISTINCT doc_id, w[i] || ' ' || w[i+1] || ' ' || w[i+2] AS g
-        |  FROM toks, UNNEST(generate_series(1, len(w) - 2)) AS t(i)),
-        |ev AS (SELECT doc_id AS eval_id, g FROM tri WHERE doc_id < 20),
+      ("WITH " + shingleCtes("documents") + ",\n" +
+        s"""|ev AS (SELECT doc_id AS eval_id, g FROM tri WHERE doc_id < ${Dedup.ContaminationEvalIds}),
         |es AS (SELECT eval_id, COUNT(*) AS s_eval FROM ev GROUP BY eval_id),
-        |tr AS (SELECT doc_id AS train_id, g FROM tri WHERE doc_id >= 20)
+        |tr AS (SELECT doc_id AS train_id, g FROM tri WHERE doc_id >= ${Dedup.ContaminationEvalIds})
         |SELECT eval_id, train_id, inter, s_eval FROM (
         |  SELECT train_id, eval_id, COUNT(*) AS inter
         |  FROM tr JOIN ev USING (g) GROUP BY 1, 2) x
         |JOIN es USING (eval_id)
-        |WHERE inter * 100 >= s_eval * 50
-        |ORDER BY eval_id, train_id""".stripMargin,
+        |WHERE inter * ${Dedup.TauDenom} >= s_eval * ${Dedup.ContaminationTauNum}
+        |ORDER BY eval_id, train_id""".stripMargin),
     "dd_dup_spans" ->
       ("""WITH toks AS (
         |  SELECT doc_id, string_split(text, ' ') AS w FROM documents),
@@ -1616,57 +1571,15 @@ object SparkEntry {
         .replace("<<CODES:gstr>>", charCodesSql("gstr"))
         .replace("<<HASH62:cps>>", hash62Sql("cps"))),
     "dd_cluster_cc" ->
-      """WITH RECURSIVE toks AS (
-        |  SELECT doc_id, string_split(text, ' ') AS w FROM documents
-        |  WHERE len(string_split(text, ' ')) >= 3),
-        |tri AS (
-        |  SELECT DISTINCT doc_id, w[i] || ' ' || w[i+1] || ' ' || w[i+2] AS g
-        |  FROM toks, UNNEST(generate_series(1, len(w) - 2)) AS t(i)),
-        |sizes AS (SELECT doc_id, COUNT(*) AS s FROM tri GROUP BY doc_id),
-        |pr AS (
-        |  SELECT doc1, doc2 FROM (
-        |    SELECT a.doc_id AS doc1, b.doc_id AS doc2, COUNT(*) AS inter
-        |    FROM tri a JOIN tri b ON a.g = b.g AND a.doc_id < b.doc_id
-        |    GROUP BY 1, 2) p
-        |  JOIN sizes s1 ON doc1 = s1.doc_id
-        |  JOIN sizes s2 ON doc2 = s2.doc_id
-        |  WHERE inter * 100 >= (s1.s + s2.s - inter) * 50),
-        |e AS (SELECT doc1 AS a, doc2 AS b FROM pr
-        |      UNION SELECT doc2, doc1 FROM pr),
-        |reach(v, r) AS (
-        |  SELECT a, a FROM e
-        |  UNION
-        |  SELECT e.b, reach.r FROM reach JOIN e ON e.a = reach.v),
-        |comp AS (SELECT v, MIN(r) AS component FROM reach GROUP BY v)
-        |SELECT d.doc_id, COALESCE(c.component, d.doc_id) AS component,
+      (JaccardComponentCtes + "\n" +
+      """|SELECT d.doc_id, COALESCE(c.component, d.doc_id) AS component,
         |  CAST(CASE WHEN COALESCE(c.component, d.doc_id) = d.doc_id
         |       THEN 1 ELSE 0 END AS BIGINT) AS is_canonical
         |FROM documents d LEFT JOIN comp c ON d.doc_id = c.v
-        |ORDER BY d.doc_id""".stripMargin,
+        |ORDER BY d.doc_id""".stripMargin),
     "dd_canonicalize" ->
-      """WITH RECURSIVE toks AS (
-        |  SELECT doc_id, string_split(text, ' ') AS w FROM documents
-        |  WHERE len(string_split(text, ' ')) >= 3),
-        |tri AS (
-        |  SELECT DISTINCT doc_id, w[i] || ' ' || w[i+1] || ' ' || w[i+2] AS g
-        |  FROM toks, UNNEST(generate_series(1, len(w) - 2)) AS t(i)),
-        |sizes AS (SELECT doc_id, COUNT(*) AS s FROM tri GROUP BY doc_id),
-        |pr AS (
-        |  SELECT doc1, doc2 FROM (
-        |    SELECT a.doc_id AS doc1, b.doc_id AS doc2, COUNT(*) AS inter
-        |    FROM tri a JOIN tri b ON a.g = b.g AND a.doc_id < b.doc_id
-        |    GROUP BY 1, 2) p
-        |  JOIN sizes s1 ON doc1 = s1.doc_id
-        |  JOIN sizes s2 ON doc2 = s2.doc_id
-        |  WHERE inter * 100 >= (s1.s + s2.s - inter) * 50),
-        |e AS (SELECT doc1 AS a, doc2 AS b FROM pr
-        |      UNION SELECT doc2, doc1 FROM pr),
-        |reach(v, r) AS (
-        |  SELECT a, a FROM e
-        |  UNION
-        |  SELECT e.b, reach.r FROM reach JOIN e ON e.a = reach.v),
-        |comp AS (SELECT v, MIN(r) AS component FROM reach GROUP BY v),
-        |alldocs AS (
+      (JaccardComponentCtes + ",\n" +
+      """|alldocs AS (
         |  SELECT d.doc_id, COALESCE(c.component, d.doc_id) AS component, d.n_chars
         |  FROM documents d LEFT JOIN comp c ON d.doc_id = c.v),
         |ranked AS (
@@ -1678,33 +1591,12 @@ object SparkEntry {
         |SELECT doc_id, component, n_members,
         |  CAST(CASE WHEN rnk = 1 THEN 1 ELSE 0 END AS BIGINT) AS keep
         |FROM ranked
-        |ORDER BY doc_id""".stripMargin,
+        |ORDER BY doc_id""".stripMargin),
     // soft dedup: same component derivation as dd_cluster_cc, then
     // weight = 1/|cluster| so each cluster sums to one unit of loss
     "dd_soft_dedup" ->
-      """WITH RECURSIVE toks AS (
-        |  SELECT doc_id, string_split(text, ' ') AS w FROM documents
-        |  WHERE len(string_split(text, ' ')) >= 3),
-        |tri AS (
-        |  SELECT DISTINCT doc_id, w[i] || ' ' || w[i+1] || ' ' || w[i+2] AS g
-        |  FROM toks, UNNEST(generate_series(1, len(w) - 2)) AS t(i)),
-        |sizes AS (SELECT doc_id, COUNT(*) AS s FROM tri GROUP BY doc_id),
-        |pr AS (
-        |  SELECT doc1, doc2 FROM (
-        |    SELECT a.doc_id AS doc1, b.doc_id AS doc2, COUNT(*) AS inter
-        |    FROM tri a JOIN tri b ON a.g = b.g AND a.doc_id < b.doc_id
-        |    GROUP BY 1, 2) p
-        |  JOIN sizes s1 ON doc1 = s1.doc_id
-        |  JOIN sizes s2 ON doc2 = s2.doc_id
-        |  WHERE inter * 100 >= (s1.s + s2.s - inter) * 50),
-        |e AS (SELECT doc1 AS a, doc2 AS b FROM pr
-        |      UNION SELECT doc2, doc1 FROM pr),
-        |reach(v, r) AS (
-        |  SELECT a, a FROM e
-        |  UNION
-        |  SELECT e.b, reach.r FROM reach JOIN e ON e.a = reach.v),
-        |comp AS (SELECT v, MIN(r) AS component FROM reach GROUP BY v),
-        |lab AS (
+      (JaccardComponentCtes + ",\n" +
+      """|lab AS (
         |  SELECT d.doc_id, COALESCE(c.component, d.doc_id) AS component
         |  FROM documents d LEFT JOIN comp c ON d.doc_id = c.v)
         |SELECT doc_id, component,
@@ -1712,7 +1604,7 @@ object SparkEntry {
         |  ROUND(CAST(1.0 AS DOUBLE)
         |    / COUNT(*) OVER (PARTITION BY component), 6) AS weight
         |FROM lab
-        |ORDER BY doc_id""".stripMargin,
+        |ORDER BY doc_id""".stripMargin),
     "txt_pii_redact" ->
       """WITH wp AS (
         |  SELECT doc_id,
@@ -1879,7 +1771,7 @@ object SparkEntry {
         |  CASE WHEN lang = 'en' THEN '28' ELSE '50' END
         |ORDER BY doc_id""".stripMargin,
     "samp_corpus_report" ->
-      """WITH n AS (
+      s"""WITH n AS (
         |  SELECT doc_id, source,
         |    regexp_replace(trim(lower(text)), ' +', ' ', 'g') AS norm_text
         |  FROM documents),
@@ -1893,7 +1785,7 @@ object SparkEntry {
         |  SELECT MIN(doc_id) AS doc_id, MIN_BY(source, doc_id) AS source,
         |    MIN(n_words) AS n_words
         |  FROM f
-        |  WHERE n_words >= 5 AND n_stop * 1000 <= n_words * 500
+        |  WHERE $CleanCutSql
         |  GROUP BY md5(norm_text))
         |SELECT
         |  CASE WHEN substring(md5(CAST(doc_id AS VARCHAR)), 1, 2) < 'cc' THEN 'train'
@@ -2318,52 +2210,35 @@ object SparkEntry {
         |FROM canon GROUP BY url_canon
         |ORDER BY url_canon""".stripMargin,
     "dd_bloom" ->
-      ("""WITH toks AS (
-        |  SELECT doc_id, string_split(text, ' ') AS w FROM documents
-        |  WHERE len(string_split(text, ' ')) >= 3),
-        |tri AS (
-        |  SELECT DISTINCT doc_id, w[i] || ' ' || w[i+1] || ' ' || w[i+2] AS g
-        |  FROM toks, UNNEST(generate_series(1, len(w) - 2)) AS t(i)),
-        |h AS (
+      ("WITH " + shingleCtes("documents") + ",\n" +
+        s"""|h AS (
         |  SELECT doc_id, g, <<HASH31:g>> AS h
         |  FROM tri),
         |perms AS (SELECT * FROM (VALUES <<PERMS>>) v(i, a, b)),
         |pos AS (
-        |  SELECT doc_id, g, ((a * h + b) % 2147483647) % 131072 AS pos
+        |  SELECT doc_id, g, ((a * h + b) % 2147483647) % ${Dedup.BloomBits} AS pos
         |  FROM h CROSS JOIN perms),
         |fw AS (
         |  SELECT pos // 32 AS widx,
         |    bit_or(1::BIGINT << CAST(pos % 32 AS INT)) AS bits
-        |  FROM pos WHERE doc_id < 250 GROUP BY pos // 32),
+        |  FROM pos WHERE doc_id < ${Dedup.SeenSplitId} GROUP BY pos // 32),
         |probe AS (
         |  SELECT p.doc_id, p.g,
         |    CASE WHEN ((COALESCE(fw.bits, 0) >> CAST(p.pos % 32 AS INT)) & 1) = 1
         |         THEN 1 ELSE 0 END AS hit
         |  FROM pos p LEFT JOIN fw ON (p.pos // 32) = fw.widx
-        |  WHERE p.doc_id >= 250),
+        |  WHERE p.doc_id >= ${Dedup.SeenSplitId}),
         |per_shingle AS (
         |  SELECT doc_id, g, MIN(hit) AS all_set FROM probe GROUP BY doc_id, g)
         |SELECT doc_id, COUNT(*) AS n_shingles,
         |  CAST(SUM(all_set) AS BIGINT) AS n_maybe_seen
         |FROM per_shingle GROUP BY doc_id
         |ORDER BY doc_id""".stripMargin
-        .replace("<<PERMS>>", minhashPermValues(4))
+        .replace("<<PERMS>>", minhashPermValues(Dedup.BloomHashes))
         .replace("<<HASH31:g>>", hash31Sql(charCodesSql("g")))),
     "dd_simhash" ->
-      ("""WITH words AS (
-        |  SELECT doc_id, 'xq' || w AS w FROM (
-        |    SELECT doc_id, UNNEST(string_split(text, ' ')) AS w FROM documents) t),
-        |wc AS (SELECT doc_id, <<CODES:w>> AS cps FROM words),
-        |h AS (SELECT doc_id, <<HASH62:cps>> AS h FROM wc),
-        |bits AS (
-        |  SELECT doc_id, j, SUM(((h >> j) & 1) * 2 - 1) AS s
-        |  FROM h CROSS JOIN (SELECT UNNEST(generate_series(0, 63)) AS j) js
-        |  GROUP BY doc_id, j),
-        |sigs AS (
-        |  SELECT doc_id,
-        |    CAST(SUM(CASE WHEN s > 0 THEN (1::BIGINT << j) ELSE 0 END) AS BIGINT) AS sim
-        |  FROM bits GROUP BY doc_id),
-        |chunks AS (
+      (SimhashCtes + ",\n" +
+        s"""|chunks AS (
         |  SELECT doc_id, sim, c AS chunk_idx, (sim >> (c * 16)) & 65535 AS chunk
         |  FROM sigs CROSS JOIN (SELECT UNNEST(generate_series(0, 3)) AS c) cs)
         |SELECT DISTINCT c1.doc_id AS doc1, c2.doc_id AS doc2,
@@ -2371,100 +2246,38 @@ object SparkEntry {
         |FROM chunks c1
         |JOIN chunks c2 ON c1.chunk_idx = c2.chunk_idx AND c1.chunk = c2.chunk
         |WHERE c1.doc_id < c2.doc_id
-        |  AND bit_count(xor(c1.sim, c2.sim)) <= 3
-        |ORDER BY doc1, doc2""".stripMargin
-        .replace("<<CODES:w>>", charCodesSql("w"))
-        .replace("<<HASH62:cps>>", hash62Sql("cps"))),
+        |  AND bit_count(xor(c1.sim, c2.sim)) <= ${Multimodal.HammingMaxDist}
+        |ORDER BY doc1, doc2""".stripMargin),
     // the banded pairer vs a band-free brute-force twin: DuckDB joins
     // ALL signature pairs and filters on popcount alone, so a hash
     // match here proves the 4×16-bit pigeonhole banding loses nothing
     // at maxDist 3 (and the min-dedup across band collisions is exact)
-    "mm_phash_pairs" ->
-      ("""WITH words AS (
-        |  SELECT doc_id, 'xq' || w AS w FROM (
-        |    SELECT doc_id, UNNEST(string_split(text, ' ')) AS w FROM documents) t),
-        |wc AS (SELECT doc_id, <<CODES:w>> AS cps FROM words),
-        |h AS (SELECT doc_id, <<HASH62:cps>> AS h FROM wc),
-        |bits AS (
-        |  SELECT doc_id, j, SUM(((h >> j) & 1) * 2 - 1) AS s
-        |  FROM h CROSS JOIN (SELECT UNNEST(generate_series(0, 63)) AS j) js
-        |  GROUP BY doc_id, j),
-        |sigs AS (
-        |  SELECT doc_id,
-        |    CAST(SUM(CASE WHEN s > 0 THEN (1::BIGINT << j) ELSE 0 END) AS BIGINT) AS sim
-        |  FROM bits GROUP BY doc_id)
-        |SELECT s1.doc_id AS doc_a, s2.doc_id AS doc_b,
-        |  CAST(bit_count(xor(s1.sim, s2.sim)) AS BIGINT) AS dist
-        |FROM sigs s1 JOIN sigs s2 ON s1.doc_id < s2.doc_id
-        |WHERE bit_count(xor(s1.sim, s2.sim)) <= 3
-        |ORDER BY doc_a, doc_b""".stripMargin
-        .replace("<<CODES:w>>", charCodesSql("w"))
-        .replace("<<HASH62:cps>>", hash62Sql("cps"))),
+    "mm_phash_pairs" -> phashBruteForceSql,
     // the multi-index generator must produce the IDENTICAL pair set —
     // same band-free brute-force oracle, so a hash match proves the
     // 2×32-block + radius-1-ball pigeonhole loses nothing at maxDist 3
-    "mm_phash_pairs_mih" ->
-      ("""WITH words AS (
-        |  SELECT doc_id, 'xq' || w AS w FROM (
-        |    SELECT doc_id, UNNEST(string_split(text, ' ')) AS w FROM documents) t),
-        |wc AS (SELECT doc_id, <<CODES:w>> AS cps FROM words),
-        |h AS (SELECT doc_id, <<HASH62:cps>> AS h FROM wc),
-        |bits AS (
-        |  SELECT doc_id, j, SUM(((h >> j) & 1) * 2 - 1) AS s
-        |  FROM h CROSS JOIN (SELECT UNNEST(generate_series(0, 63)) AS j) js
-        |  GROUP BY doc_id, j),
-        |sigs AS (
-        |  SELECT doc_id,
-        |    CAST(SUM(CASE WHEN s > 0 THEN (1::BIGINT << j) ELSE 0 END) AS BIGINT) AS sim
-        |  FROM bits GROUP BY doc_id)
-        |SELECT s1.doc_id AS doc_a, s2.doc_id AS doc_b,
-        |  CAST(bit_count(xor(s1.sim, s2.sim)) AS BIGINT) AS dist
-        |FROM sigs s1 JOIN sigs s2 ON s1.doc_id < s2.doc_id
-        |WHERE bit_count(xor(s1.sim, s2.sim)) <= 3
-        |ORDER BY doc_a, doc_b""".stripMargin
-        .replace("<<CODES:w>>", charCodesSql("w"))
-        .replace("<<HASH62:cps>>", hash62Sql("cps"))),
+    "mm_phash_pairs_mih" -> phashBruteForceSql,
     // the adaptive dispatcher must match the same brute-force pair
     // set whichever generator its occupancy probe picks
-    "mm_phash_pairs_auto" ->
-      ("""WITH words AS (
-        |  SELECT doc_id, 'xq' || w AS w FROM (
-        |    SELECT doc_id, UNNEST(string_split(text, ' ')) AS w FROM documents) t),
-        |wc AS (SELECT doc_id, <<CODES:w>> AS cps FROM words),
-        |h AS (SELECT doc_id, <<HASH62:cps>> AS h FROM wc),
-        |bits AS (
-        |  SELECT doc_id, j, SUM(((h >> j) & 1) * 2 - 1) AS s
-        |  FROM h CROSS JOIN (SELECT UNNEST(generate_series(0, 63)) AS j) js
-        |  GROUP BY doc_id, j),
-        |sigs AS (
-        |  SELECT doc_id,
-        |    CAST(SUM(CASE WHEN s > 0 THEN (1::BIGINT << j) ELSE 0 END) AS BIGINT) AS sim
-        |  FROM bits GROUP BY doc_id)
-        |SELECT s1.doc_id AS doc_a, s2.doc_id AS doc_b,
-        |  CAST(bit_count(xor(s1.sim, s2.sim)) AS BIGINT) AS dist
-        |FROM sigs s1 JOIN sigs s2 ON s1.doc_id < s2.doc_id
-        |WHERE bit_count(xor(s1.sim, s2.sim)) <= 3
-        |ORDER BY doc_a, doc_b""".stripMargin
-        .replace("<<CODES:w>>", charCodesSql("w"))
-        .replace("<<HASH62:cps>>", hash62Sql("cps"))),
+    "mm_phash_pairs_auto" -> phashBruteForceSql,
     "dd_minhash_lsh" ->
-      ((MinhashCtes + "\n" + """|SELECT doc1, doc2, est_jaccard FROM (
+      ((MinhashCtes + "\n" + s"""|SELECT doc1, doc2, est_jaccard FROM (
         |  SELECT doc1, doc2,
         |    CAST(len(list_filter(m1.mh, (x, i) -> x = m2.mh[i])) AS DOUBLE) / 128.0
         |      AS est_jaccard
         |  FROM cand
         |  JOIN mh m1 ON cand.doc1 = m1.doc_id
         |  JOIN mh m2 ON cand.doc2 = m2.doc_id) t
-        |WHERE est_jaccard >= 0.2
+        |WHERE est_jaccard >= ${Dedup.MinhashMinEst}
         |ORDER BY doc1, doc2""".stripMargin)
         .replace("<<PERMS>>", minhashPermValues())
         .replace("<<HASH31:g>>", hash31Sql(charCodesSql("g")))
-        .replace("<<HASH31:band>>", foldSql("mh[b * 8 + 1 : b * 8 + 8]", 2147483647L))),
+        .replace("<<HASH31:band>>", MinhashBandHashSql)),
     // the accuracy harness: same signature/banding derivation, plus
     // exact shingle Jaccard verified on the candidate pairs only;
     // the est >= 0.2 cut applies UNROUNDED (mirrors the operator)
     "dd_minhash_est_eval" ->
-      ((MinhashCtes + ",\n" + """|est AS (
+      ((MinhashCtes + ",\n" + s"""|est AS (
         |  SELECT doc1, doc2, est_jaccard FROM (
         |    SELECT doc1, doc2,
         |      CAST(len(list_filter(m1.mh, (x, i) -> x = m2.mh[i])) AS DOUBLE) / 128.0
@@ -2472,7 +2285,7 @@ object SparkEntry {
         |    FROM cand
         |    JOIN mh m1 ON cand.doc1 = m1.doc_id
         |    JOIN mh m2 ON cand.doc2 = m2.doc_id) t
-        |  WHERE est_jaccard >= 0.2),
+        |  WHERE est_jaccard >= ${Dedup.MinhashMinEst}),
         |sizes AS (SELECT doc_id, COUNT(*) AS s FROM tri GROUP BY doc_id),
         |inters AS (
         |  SELECT e.doc1, e.doc2, COUNT(*) AS inter
@@ -2493,8 +2306,8 @@ object SparkEntry {
         |ORDER BY e.doc1, e.doc2""".stripMargin)
         .replace("<<PERMS>>", minhashPermValues())
         .replace("<<HASH31:g>>", hash31Sql(charCodesSql("g")))
-        .replace("<<HASH31:band>>", foldSql("mh[b * 8 + 1 : b * 8 + 8]", 2147483647L))),
-    "dd_embed_neardup" -> embedNearDupSql(0.95),
+        .replace("<<HASH31:band>>", MinhashBandHashSql)),
+    "dd_embed_neardup" -> embedNearDupSql(Dedup.EmbedNearDupTau),
     // the non-vacuous twin: τ low enough that this corpus's closest
     // bucket-collided pairs (max cosine ≈ 0.51 at sf0.01) actually
     // survive — the candidate/sketch/verify pipeline gets a driver
@@ -2505,8 +2318,8 @@ object SparkEntry {
     // sketch pre-filter, both modeled), then the recursive-CTE
     // component labeling over ALL vec_ids
     "dd_semantic_canon" ->
-      ("WITH RECURSIVE " + embedCandCtes(0.95) + ",\n" +
-      """|pr AS (
+      ("WITH RECURSIVE " + embedCandCtes(Dedup.EmbedNearDupTau) + ",\n" +
+      s"""|pr AS (
         |  SELECT id1, id2 FROM (
         |    SELECT id1, id2, list_dot_product(v1.vd, v2.vd) /
         |      (sqrt(list_dot_product(v1.vd, v1.vd))
@@ -2514,7 +2327,7 @@ object SparkEntry {
         |    FROM fcand
         |    JOIN v v1 ON fcand.id1 = v1.vec_id
         |    JOIN v v2 ON fcand.id2 = v2.vec_id) t
-        |  WHERE cos >= 0.95),
+        |  WHERE cos >= ${Dedup.EmbedNearDupTau}),
         |e AS (SELECT id1 AS a, id2 AS b FROM pr
         |      UNION SELECT id2, id1 FROM pr),
         |reach(x, r) AS (

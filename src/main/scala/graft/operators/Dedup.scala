@@ -26,10 +26,74 @@ import graft.functions.VectorOps
   * its blocks are freed by the ContextCleaner once the caller drops
   * the reference. At 100 TB the equivalent move is materializing the
   * signature table to storage and reading it back per branch.
+  *
+  * Degenerate inputs (DedupSpec runs every operator on each): an empty
+  * table gives an empty result. A NULL text, like one under three
+  * words, has no shingles and no signature, so the shingle, signature
+  * and pair operators skip its row; [[exact]] groups NULL texts under
+  * one NULL hash, and the per-document outputs ([[dupSpans]],
+  * [[urlDedup]], [[connectedComponents]], [[canonicalize]],
+  * [[softDedupWeights]]) keep one row for it. A corpus of identical
+  * copies pairs every two documents, except through
+  * [[containmentStratified]] — and [[containmentAuto]], which sends
+  * such a dense corpus there: the copies read as background
+  * similarity, every arm drops, the result is empty and the drop is
+  * logged. [[containmentPairsLsh]] is the lossless path.
   */
 object Dedup {
 
   private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
+
+  // The family's thresholds, one value each. The batch operators, their
+  // `DocPipelineJobs` twins and the DuckDB oracles in `SparkEntry` all
+  // read these, so a twin's output and its oracle cannot drift from the
+  // batch query.
+
+  /** Denominator of every integer threshold below: τ = num / TauDenom,
+    * compared as `inter · TauDenom ≥ size · num` — exact in both
+    * engines.
+    */
+  private[graft] val TauDenom = 100
+  /** Jaccard cut, τ = 0.5. */
+  private[graft] val JaccardTauNum = 50
+  /** Containment cut, τ = 0.8. */
+  private[graft] val ContainmentTauNum = 80
+  /** Contamination cut, τ = 0.5 of the eval doc's shingles. */
+  private[graft] val ContaminationTauNum = 50
+  /** [[contamination]]'s eval set: `doc_id < ContaminationEvalIds`. */
+  private[graft] val ContaminationEvalIds = 20L
+  /** The seen/new split of [[incrementalDedup]] (the stored index) and
+    * [[bloomShingleFilter]] (the filter's shard): `doc_id < SeenSplitId`
+    * is already seen, the rest is new.
+    */
+  private[graft] val SeenSplitId = 250L
+  /** Bloom filter geometry: bits (a power of two, so positions are a
+    * plain modulus) and hash positions per shingle (taken from the
+    * MinHash permutation family).
+    */
+  private[graft] val BloomBits = 131072
+  private[graft] val BloomHashes = 4
+  /** MinHash LSH: bands × rows over the 128-value signature, and the
+    * estimated-Jaccard floor a candidate must reach.
+    */
+  private[graft] val MinhashBands = 16
+  private[graft] val MinhashRows = 8
+  private[graft] val MinhashMinEst = 0.2
+  /** [[jaccardLshVerified]]'s banding: rows × bands. */
+  private val VerifiedRows = 6
+  private val VerifiedBands = 21
+  /** [[containmentStratified]]'s geometry: the widest size-class gap
+    * provisioned and the band cap per arm.
+    */
+  private val StratMaxGap = 5
+  private val StratBandBudget = 64
+  /** τ of [[embedNearDup]] and its stream twin. */
+  private[graft] val EmbedNearDupTau = 0.95
+  /** [[embedLshParams]]'s geometry up to 48 k vectors: tables × bits. */
+  private[graft] val EmbedSmallTables = 8
+  private[graft] val EmbedSmallBits = 12
+  /** Rounds [[distributedCC]] runs before it gives up. */
+  private val CcMaxRounds = 50
 
   /** Distinct 3-word shingles per document (docs shorter than 3 words
     * drop out, mirroring the SQL oracle's generate_series emptiness).
@@ -60,7 +124,7 @@ object Dedup {
     * shape: a NEW batch of documents dedups against the hash index of
     * everything already accepted, then within itself, and only the
     * survivors ship. Here the "stored index" derives from the
-    * previous crawl's rows (doc_id < splitId); in production it is a
+    * previous crawl's rows (doc_id < [[SeenSplitId]]); in production it is a
     * parquet hash table maintained by exactly this query's output.
     * The index side is corpus-sized, so the anti-join shuffles BOTH
     * sides on the uniform content hash (never broadcast — that is
@@ -70,13 +134,11 @@ object Dedup {
     * [[graft.operators.TextOps.cleanScored]] prefix, so incremental
     * and full-rebuild pipelines cannot drift.
     */
-  def incrementalDedup(documents: DataFrame, splitId: Long = 250,
-      minWords: Int = 5, maxStopRatio: Double = 0.5): DataFrame = {
-    val scored = graft.operators.TextOps.cleanScored(
-      documents, minWords, maxStopRatio)
-    val storedIndex = scored.filter(col("doc_id") < splitId)
+  def incrementalDedup(documents: DataFrame): DataFrame = {
+    val scored = graft.operators.TextOps.cleanScored(documents)
+    val storedIndex = scored.filter(col("doc_id") < SeenSplitId)
       .select(col("h")).distinct()
-    scored.filter(col("doc_id") >= splitId)
+    scored.filter(col("doc_id") >= SeenSplitId)
       .join(storedIndex, Seq("h"), "left_anti")
       .groupBy(col("h"))
       .agg(min(col("doc_id")).as("doc_id"),
@@ -102,7 +164,7 @@ object Dedup {
     * See [[ngramJaccardPrefix]] for the PPJoin variant and PLANS.md
     * for when each wins.
     */
-  def ngramJaccard(documents: DataFrame, tauNum: Int = 50, tauDenom: Int = 100): DataFrame =
+  def ngramJaccard(documents: DataFrame): DataFrame =
     // the self-join keys on the 62-bit shingle fingerprint, not the
     // string: fixed 8-byte shuffle keys instead of ~20-byte strings,
     // and long-vs-long probes in the join hash table. Distinct
@@ -116,7 +178,7 @@ object Dedup {
     Caching.materialized { held =>
       val tri = held(shingleFps(documents))
       val sizes = tri.groupBy(col("doc_id")).agg(count(lit(1)).as("s"))
-      jaccardVerify(joinSizes(shingleCountJoin(tri), sizes), tauNum, tauDenom)
+      jaccardVerify(joinSizes(shingleCountJoin(tri), sizes))
     }
 
   /** The count-join's candidate body over a fingerprint table
@@ -151,8 +213,7 @@ object Dedup {
     * vocabularies where hauling the per-doc shingle arrays through the
     * candidate join costs more than the count-join saves.
     */
-  def ngramJaccardPrefix(documents: DataFrame, tauNum: Int = 50,
-      tauDenom: Int = 100): DataFrame = Caching.materialized { held =>
+  def ngramJaccardPrefix(documents: DataFrame): DataFrame = Caching.materialized { held =>
     val tri = shingles(documents)
     // canonical order = global document frequency ascending (tie: text):
     // prefixes then hold each doc's *rarest* shingles, so prefix-join
@@ -164,7 +225,7 @@ object Dedup {
       .agg(expr("transform(sort_array(collect_list(struct(df, g))), x -> x.g)").as("garr"),
         count(lit(1)).as("s"))
       .withColumn("prefix_len",
-        col("s") - expr(s"(s * $tauNum + $tauDenom - 1) div $tauDenom") + 1))
+        col("s") - expr(s"(s * $JaccardTauNum + $TauDenom - 1) div $TauDenom") + 1))
     val prefixes = docSets
       .select(col("doc_id"),
         explode(slice(col("garr"), lit(1), col("prefix_len").cast("int"))).as("g"))
@@ -179,7 +240,7 @@ object Dedup {
       .join(docSets.select(col("doc_id").as("doc2"),
         col("garr").as("garr2"), col("s").as("s2")), Seq("doc2"))
       .withColumn("inter", size(array_intersect(col("garr1"), col("garr2"))).cast("long"))
-      .filter(col("inter") * tauDenom >= (col("s1") + col("s2") - col("inter")) * tauNum)
+      .filter(col("inter") * TauDenom >= (col("s1") + col("s2") - col("inter")) * JaccardTauNum)
       .select(col("doc1"), col("doc2"), col("inter"), col("s1"), col("s2"))
       .orderBy(col("doc1"), col("doc2"))
   }
@@ -313,8 +374,7 @@ object Dedup {
     * [[softDedupWeights]], `dd_cluster_cc`) built on this operator
     * inherit the contract picked here.
     */
-  def ngramJaccardAdaptive(documents: DataFrame, tauNum: Int = 50,
-      tauDenom: Int = 100): DataFrame = {
+  def ngramJaccardAdaptive(documents: DataFrame): DataFrame = {
     // the probe aggregates the (sampled) shingling scan directly — no
     // persist: the LSH regime no longer reads the exploded table at
     // all (round 13 — the whole verified path runs off per-row
@@ -326,7 +386,7 @@ object Dedup {
     // aggregate are deterministic in h.
     jaccardStrategy(documents) match {
       case "prefix" =>
-        ngramJaccardPrefix(documents, tauNum, tauDenom)
+        ngramJaccardPrefix(documents)
       case "lsh" =>
         log.warn("ngramJaccardAdaptive: dense-vocabulary corpus — dispatching to " +
           "banded-MinHash candidates with EXACT verification (jaccardLshVerified). " +
@@ -334,8 +394,8 @@ object Dedup {
           "0.7 -> 93%, 0.8 -> 99.8%): pairs sitting near a low threshold can be " +
           "missed. Call ngramJaccard or ngramJaccardPrefix for the exact contract " +
           "and its quadratic dense-corpus cost.")
-        jaccardLshVerified(documents, tauNum, tauDenom)
-      case _ => ngramJaccard(documents, tauNum, tauDenom)
+        jaccardLshVerified(documents)
+      case _ => ngramJaccard(documents)
     }
   }
 
@@ -349,15 +409,16 @@ object Dedup {
     * true generated corpus: the exact paths went 9–12× wall for 10×
     * data while this path holds ~3× (see SCALING.md round-7).
     *
-    * Candidates come from banded MinHash buckets (`bands`×`rows` over
-    * the 128-value signature, deterministic seeded permutations);
+    * Candidates come from banded MinHash buckets ([[VerifiedBands]] ×
+    * [[VerifiedRows]] over the 128-value signature, deterministic
+    * seeded permutations);
     * every candidate is verified with an EXACT sorted-merge
     * intersection count over the shingle fingerprints, so no false
     * positive survives and reported (inter, s1, s2) are exact — the
     * output schema and threshold arithmetic are [[ngramJaccard]]'s.
     * What is probabilistic is candidate RECALL: a pair at Jaccard J
-    * is bucketed with probability 1 − (1 − J^rows)^bands; at the
-    * default (6, 21): J=0.6 → 52%, 0.7 → 93%, 0.8 → 99.8%,
+    * is bucketed with probability 1 − (1 − J^rows)^bands; at
+    * (6, 21): J=0.6 → 52%, 0.7 → 93%, 0.8 → 99.8%,
     * 0.9 → 99.99998%. The regime is therefore right for the bimodal
     * similarity structure dedup corpora actually have (this corpus:
     * true pairs ≥ 0.89, random pairs ≤ 0.15, nothing between —
@@ -369,15 +430,13 @@ object Dedup {
     * p ≈ bands·J^rows ≈ 2·10⁻⁵, so spurious candidates stay a tiny
     * multiple of corpus size through 100× growth.
     */
-  def jaccardLshVerified(documents: DataFrame, tauNum: Int = 50,
-      tauDenom: Int = 100, rows: Int = 6, bands: Int = 21): DataFrame =
+  def jaccardLshVerified(documents: DataFrame): DataFrame =
     // inter carries exactly one row per candidate pair (inner joins
     // against the full doc universe; oversized pairs re-enter via the
     // fallback union), so joining cands back would be an identity
     // join shuffling the candidate set once more for nothing
     candVerifiedOnDocs(docSignatures(documents),
-      sigs => (bandedCandidatesOnDocs(sigs, rows, bands), anyOversized(sigs)))(
-      jaccardVerify(_, tauNum, tauDenom))
+      sigs => (bandedCandidatesOnDocs(sigs), anyOversized(sigs)))(jaccardVerify)
 
   /** The generator-agnostic body of the verified paths: holds the
     * per-doc table `perDoc`, which MUST carry (doc_id, s, hs) — the
@@ -453,13 +512,11 @@ object Dedup {
     * ([[docSignatures]]) — the candidate generator of the dense-regime
     * Jaccard path.
     */
-  private def bandedCandidatesOnDocs(sigs: DataFrame, rows: Int,
-      bands: Int): DataFrame = {
-    require(rows * bands <= 128, s"rows*bands=${rows * bands} exceeds the 128 signatures")
+  private def bandedCandidatesOnDocs(sigs: DataFrame): DataFrame = {
     val bucketed = {
       import org.apache.spark.sql.graftinternal.ColumnBridge.{column, expression}
       sigs.select(col("doc_id"), posexplode(column(
-        graft.expressions.BandHashes(expression(col("mh")), rows, bands))))
+        graft.expressions.BandHashes(expression(col("mh")), VerifiedRows, VerifiedBands))))
         .toDF("doc_id", "band_idx", "band_hash")
     }
     bucketed.select(col("doc_id").as("doc1"), col("band_idx"), col("band_hash"))
@@ -488,11 +545,10 @@ object Dedup {
     * than symmetric bands. The exact pair contract here is what that
     * candidate generator gets verified against.
     */
-  def containmentPairs(documents: DataFrame, tauNum: Int = 80,
-      tauDenom: Int = 100): DataFrame = Caching.materialized { held =>
+  def containmentPairs(documents: DataFrame): DataFrame = Caching.materialized { held =>
     val tri = held(shingleFps(documents))
     val sizes = tri.groupBy(col("doc_id")).agg(count(lit(1)).as("s"))
-    containmentVerify(joinSizes(shingleCountJoin(tri), sizes), tauNum, tauDenom)
+    containmentVerify(joinSizes(shingleCountJoin(tri), sizes))
   }
 
   /** Attaches both sides' sizes `sizes` (doc_id, s) to (doc1, doc2,
@@ -510,9 +566,9 @@ object Dedup {
     * integer-arithmetic threshold and emits the
     * (doc1, doc2, inter, s1, s2) contract.
     */
-  private def jaccardVerify(pairs: DataFrame, tauNum: Int, tauDenom: Int): DataFrame =
+  private def jaccardVerify(pairs: DataFrame): DataFrame =
     pairs
-      .filter(col("inter") * tauDenom >= (col("s1") + col("s2") - col("inter")) * tauNum)
+      .filter(col("inter") * TauDenom >= (col("s1") + col("s2") - col("inter")) * JaccardTauNum)
       .select(col("doc1"), col("doc2"), col("inter"), col("s1"), col("s2"))
       .orderBy(col("doc1"), col("doc2"))
 
@@ -520,10 +576,10 @@ object Dedup {
     * takes (doc1, doc2, inter, s1, s2) pairs, applies the
     * integer-arithmetic threshold and emits the scored-pair contract.
     */
-  private def containmentVerify(pairs: DataFrame, tauNum: Int, tauDenom: Int): DataFrame =
+  private def containmentVerify(pairs: DataFrame): DataFrame =
     pairs
       // integer threshold arithmetic — no float compare in the cut
-      .filter(col("inter") * tauDenom >= least(col("s1"), col("s2")) * tauNum)
+      .filter(col("inter") * TauDenom >= least(col("s1"), col("s2")) * ContainmentTauNum)
       .select(col("doc1"), col("doc2"), col("inter"), col("s1"), col("s2"),
         round(col("inter").cast("double") / least(col("s1"), col("s2")).cast("double"), 6)
           .as("containment"),
@@ -574,8 +630,7 @@ object Dedup {
     * asymmetric-duplication corpora where banding's Jaccard-shaped
     * recall is unacceptable).
     */
-  def containmentPairsLsh(documents: DataFrame, tauNum: Int = 80,
-      tauDenom: Int = 100): DataFrame = Caching.materialized { held =>
+  def containmentPairsLsh(documents: DataFrame): DataFrame = Caching.materialized { held =>
     val tri = shingleFps(documents)
     // document frequency attached by a WINDOW over the shingle key —
     // not groupBy(h) + self-join: the window makes tri single-consumer
@@ -598,7 +653,8 @@ object Dedup {
       .agg(expr("transform(sort_array(collect_list(struct(df, h))), x -> x.h)").as("harr"),
         count(lit(1)).as("s"))
       .withColumn("prefix_len",
-        (col("s") - expr(s"(s * $tauNum + ${tauDenom - 1}) div $tauDenom") + 1).cast("int")))
+        (col("s") - expr(s"(s * $ContainmentTauNum + ${TauDenom - 1}) div $TauDenom") + 1)
+          .cast("int")))
     // probes: each doc bets it is the smaller side and emits only its
     // prefix_len rarest shingles; index: the full shingle table,
     // re-exploded narrowly from the same persisted doc sets (no second
@@ -639,7 +695,7 @@ object Dedup {
     // isNull probe) stays — its cost measured nil here (9.9 s with vs
     // 10.5 s without), unlike the per-row-cache paths where the
     // probed fast path ships (candVerifiedOnDocs).
-    containmentVerify(pairIntersectionsOnArrays(held, cands, docArr), tauNum, tauDenom)
+    containmentVerify(pairIntersectionsOnArrays(held, cands, docArr, mayHaveOversized = true))
   }
 
   /** DEFAULT per-doc candidate budget for the stratified generator
@@ -843,24 +899,21 @@ object Dedup {
     * cache's first materialization, same precedent as
     * [[jaccardStrategy]].
     *
-    * Honest limits, logged at construction: pairs more than `maxGap`
-    * classes apart are not provisioned (the lossless
+    * Honest limits, logged at construction: pairs more than
+    * [[StratMaxGap]] classes apart are not provisioned (the lossless
     * [[containmentPairsLsh]] remains the exact path), and an arm the
     * background guard drops or degrades says so with its provisioned
     * recall.
     */
   private def stratifiedCandidatesOnDocs(sigs: DataFrame,
-      tauNum: Int, tauDenom: Int, maxGap: Int, bandBudget: Int,
       candBudgetPerDoc: Long): (DataFrame, Boolean) = {
     import org.apache.spark.sql.graftinternal.ColumnBridge.{column, expression}
-    require(maxGap >= 0 && bandBudget >= 1 && bandBudget <= 128,
-      s"maxGap=$maxGap, bandBudget=$bandBudget out of range")
     require(candBudgetPerDoc >= 1,
       s"candBudgetPerDoc must be >= 1, got $candBudgetPerDoc")
     val probe = corpusProbe(sigs)
     import probe.{hist, jBg, nDocs, pairsAtGap}
-    val tau = tauNum.toDouble / tauDenom
-    val picked = stratifiedArms(tau, maxGap, bandBudget, jBg, pairsAtGap,
+    val tau = ContainmentTauNum.toDouble / TauDenom
+    val picked = stratifiedArms(tau, StratMaxGap, StratBandBudget, jBg, pairsAtGap,
       candBudgetPerDoc.toDouble * math.max(nDocs, 1L))
     val dropped = picked.collect { case Left(g) => g }
       .filter(g => pairsAtGap(g) > 0) // a gap with no class pair is a non-event
@@ -941,13 +994,10 @@ object Dedup {
     * at ≥ 95% per arm unless the corpus's measured background
     * similarity forces a logged degradation.
     */
-  def containmentStratified(documents: DataFrame, tauNum: Int = 80,
-      tauDenom: Int = 100, maxGap: Int = 5, bandBudget: Int = 64,
+  def containmentStratified(documents: DataFrame,
       candBudgetPerDoc: Long = StratifiedCandBudgetPerDoc): DataFrame =
     candVerifiedOnDocs(stratifiedPerDoc(documents),
-      stratifiedCandidatesOnDocs(_, tauNum, tauDenom, maxGap, bandBudget,
-        candBudgetPerDoc))(
-      containmentVerify(_, tauNum, tauDenom))
+      stratifiedCandidatesOnDocs(_, candBudgetPerDoc))(containmentVerify)
 
   /** [[docSignatures]] plus each document's size class
     * `cls` = ⌊log₂ s⌋ — the per-doc table [[containmentStratified]]
@@ -971,7 +1021,7 @@ object Dedup {
     * stratified generator provisions candidate recall PER size-class
     * gap against the gap-adjusted threshold — the embedded-document
     * pairs the earlier fixed symmetric banding provably missed are
-    * now covered up to its `maxGap` (64× size ratio by default) —
+    * now covered up to [[StratMaxGap]] classes (a 64× size ratio) —
     * but pairs beyond that gap, and gap arms the measured background
     * similarity forces it to drop (each drop logged with the
     * geometry), remain probabilistic holes. The warning names them
@@ -980,8 +1030,7 @@ object Dedup {
     * Θ(Σ df²) on a dense vocabulary (19.6× wall for 10× data
     * measured at sf1).
     */
-  def containmentAuto(documents: DataFrame, tauNum: Int = 80,
-      tauDenom: Int = 100): DataFrame = {
+  def containmentAuto(documents: DataFrame): DataFrame = {
     // persist-free probe over the (sampled) shingling scan — neither
     // downstream regime reads an exploded fingerprint table any more
     // (round 13: the stratified path runs off per-row expressions,
@@ -992,15 +1041,15 @@ object Dedup {
         "size-stratified banded candidates with EXACT verification " +
         "(containmentStratified). Per size-class-gap arms band for the " +
         "gap-adjusted Jaccard threshold, so candidate recall is " +
-        "containment-shaped within the provisioned gap range (default ≤ 5 " +
+        s"containment-shaped within the provisioned gap range (≤ $StratMaxGap " +
         "classes, ≤ 64× size ratio); pairs beyond it, or at gaps the " +
         "background guard drops (logged), can be missed — on corpus-scale " +
         "density only the gap-0 arm survives, i.e. embedded documents in " +
         "≥2× larger hosts are NOT provisioned (SURVEY §2.3, 'Dense-" +
         "containment posture'). Call containmentPairsLsh for the lossless " +
         "rarest-prefix generator and its quadratic dense-corpus cost.")
-      containmentStratified(documents, tauNum, tauDenom)
-    } else containmentPairsLsh(documents, tauNum, tauDenom)
+      containmentStratified(documents)
+    } else containmentPairsLsh(documents)
   }
 
   /** Shingle count of each doc's fingerprint ARRAY above which a pair
@@ -1040,7 +1089,7 @@ object Dedup {
     * the caller's `held`.
     */
   private def pairIntersectionsOnArrays(held: Caching.Held, cands: DataFrame,
-      docArr: DataFrame, mayHaveOversized: Boolean = true): DataFrame = {
+      docArr: DataFrame, mayHaveOversized: Boolean): DataFrame = {
     import org.apache.spark.sql.graftinternal.ColumnBridge.{column, expression}
     // one (doc_id, hs, s) lookup per pair side: the sizes ride along
     // with the arrays, so the verifiers join nothing further
@@ -1091,31 +1140,32 @@ object Dedup {
 
   /** Benchmark-contamination check: which training documents contain
     * an eval document's content? Asymmetric shingle containment —
-    * |shingles(train) ∩ shingles(eval)| / |shingles(eval)| ≥ τ — the
-    * directional cousin of Jaccard (a train doc that *embeds* a whole
-    * eval doc scores 1.0 regardless of its own length). Eval sets are
+    * |shingles(train) ∩ shingles(eval)| / |shingles(eval)| ≥ τ
+    * ([[ContaminationTauNum]]) — the directional cousin of Jaccard (a
+    * train doc that *embeds* a whole eval doc scores 1.0 regardless of
+    * its own length). The eval docs are `doc_id <`
+    * [[ContaminationEvalIds]], the rest is training data. Eval sets are
     * small by nature, so the eval shingle table is **broadcast**: the
     * train corpus streams through one broadcast join + one
     * (train, eval)-keyed count — no corpus self-join, no shuffle of
     * the corpus at 100 TB. Integer threshold arithmetic ⇒ exact SQL
     * oracle.
     */
-  def contamination(documents: DataFrame, nEval: Long = 20,
-      tauNum: Int = 50, tauDenom: Int = 100): DataFrame = {
+  def contamination(documents: DataFrame): DataFrame = {
     // same fused 62-bit fingerprint keys as [[ngramJaccard]]: the
     // broadcast dictionary and every probe are fixed 8-byte longs
     val tri = shingleFps(documents)
-    val evalTri = tri.filter(col("doc_id") < nEval)
+    val evalTri = tri.filter(col("doc_id") < ContaminationEvalIds)
       .select(col("doc_id").as("eval_id"), col("h"))
     val evalSizes = evalTri.groupBy(col("eval_id")).agg(count(lit(1)).as("s_eval"))
-    val trainTri = tri.filter(col("doc_id") >= nEval)
+    val trainTri = tri.filter(col("doc_id") >= ContaminationEvalIds)
       .select(col("doc_id").as("train_id"), col("h"))
     trainTri
       .join(broadcast(evalTri), Seq("h"))
       .groupBy(col("train_id"), col("eval_id"))
       .agg(count(lit(1)).as("inter"))
       .join(broadcast(evalSizes), Seq("eval_id"))
-      .filter(col("inter") * tauDenom >= col("s_eval") * tauNum)
+      .filter(col("inter") * TauDenom >= col("s_eval") * ContaminationTauNum)
       .select(col("eval_id"), col("train_id"), col("inter"), col("s_eval"))
       .orderBy(col("eval_id"), col("train_id"))
   }
@@ -1183,26 +1233,27 @@ object Dedup {
         array((0 until 128).map(i => col(s"m$i")): _*).as("mh"))
   }
 
-  /** MinHash + LSH near-dup candidates: 16 bands × 8 rows. The only
+  /** MinHash + LSH near-dup candidates: [[MinhashBands]] bands ×
+    * [[MinhashRows]] rows, pairs kept at an estimate of at least
+    * [[MinhashMinEst]]. The only
     * shuffles are (band, band-hash) bucketing and the per-pair
     * signature lookups — candidate pairs ≪ n². Estimated Jaccard =
     * matching signature fraction.
     */
-  def minhashLsh(documents: DataFrame,
-      minEst: Double = 0.2): DataFrame = Caching.materialized { held =>
+  def minhashLsh(documents: DataFrame): DataFrame = Caching.materialized { held =>
     // signatures feed three plan branches (bucketing + both pair-join
     // sides); persist = the batch analog of materializing a signature
     // table, which is what a 100 TB run would do on storage
     val sigs = held(minhashSignatures(documents))
     // band hash = the same 31-bit-prime polynomial fold the shingle
-    // hash uses, over the band's 8 signature values — SQL-replicable,
+    // hash uses, over the band's signature values — SQL-replicable,
     // unlike hash(slice(...)); codegen'd ([[BandHashes]] — the
     // interpreted transform+aggregate fold twin measured material at
     // corpus scale, not noise)
     val bucketed = {
       import org.apache.spark.sql.graftinternal.ColumnBridge.{column, expression}
       sigs.select(col("doc_id"), posexplode(column(
-        graft.expressions.BandHashes(expression(col("mh")), 8, 16))))
+        graft.expressions.BandHashes(expression(col("mh")), MinhashRows, MinhashBands))))
         .toDF("doc_id", "band_idx", "band_hash")
     }
     val pairs = bucketed.select(col("doc_id").as("doc1"), col("band_idx"), col("band_hash"))
@@ -1222,7 +1273,7 @@ object Dedup {
           expression(col("mh1")), expression(col("mh2"))))
           .cast("double") / 128.0
       })
-      .filter(col("est_jaccard") >= minEst)
+      .filter(col("est_jaccard") >= MinhashMinEst)
       .select(col("doc1"), col("doc2"), col("est_jaccard"))
       .orderBy(col("doc1"), col("doc2"))
   }
@@ -1236,9 +1287,9 @@ object Dedup {
     * contract: candidates ≪ n²); intersections come from the same
     * fused shingle-fingerprint scan the exact operators use.
     */
-  def minhashEstEval(documents: DataFrame, minEst: Double = 0.2): DataFrame = {
+  def minhashEstEval(documents: DataFrame): DataFrame = {
     import org.apache.spark.sql.graftinternal.ColumnBridge.{column, expression}
-    val cands = minhashLsh(documents, minEst)
+    val cands = minhashLsh(documents)
     Caching.materialized { held =>
       // per-doc sorted fingerprint arrays from the per-row expression —
       // ONE narrow columnar cache serves sizes, both verification join
@@ -1324,34 +1375,32 @@ object Dedup {
   }
 
   /** Bloom-filter shingle membership: the cross-shard dedup
-    * pre-filter. The "seen" shard (doc_id < nSeen) builds an mBits
-    * Bloom filter over its shingles — k positions per shingle from
-    * the MinHash permutation family over the same 31-bit base hash,
-    * OR-ed into 32-bit words by a (word-index-keyed, ≤ mBits/32-row)
-    * bit_or aggregate. Each later doc then counts how many of its
+    * pre-filter. The "seen" shard (doc_id < [[SeenSplitId]]) builds a
+    * [[BloomBits]]-bit Bloom filter over its shingles —
+    * [[BloomHashes]] positions per shingle from the MinHash
+    * permutation family over the same 31-bit base hash, OR-ed into
+    * 32-bit words by a (word-index-keyed, ≤ BloomBits/32-row) bit_or
+    * aggregate. Each later doc then counts how many of its
     * shingles the filter claims were seen: `n_maybe_seen / n_shingles`
     * is the overlap score a 100 TB pipeline uses to route docs to
     * full verification instead of joining whole shards — the filter
     * is KB-sized state that broadcasts, the probe is a narrow map +
     * one broadcast join, and nothing n² ever materializes. Pure
     * integer arithmetic end-to-end ⇒ exact SQL oracle (the oracle
-    * interpolates the same k permutation constants).
+    * interpolates the same permutation constants).
     */
-  def bloomShingleFilter(documents: DataFrame, nSeen: Long = 250,
-      mBits: Int = 131072, k: Int = 4): DataFrame = {
-    require(Integer.bitCount(mBits) == 1, "mBits must be a power of two")
-    require(k <= graft.expressions.MinhashTextSignature.NumPerms, "not enough perms")
+  def bloomShingleFilter(documents: DataFrame): DataFrame = {
     val perms = graft.expressions.MinhashTextSignature.permA
-      .zip(graft.expressions.MinhashTextSignature.permB).take(k)
+      .zip(graft.expressions.MinhashTextSignature.permB).take(BloomHashes)
     // fused shingling; position hashing uses the fingerprint's 31-bit
     // top half (= the oracle's single-prime fold), the distinct-
     // shingle identity stays the full 62-bit fingerprint
     val h = shingleFps(documents)
       .select(col("doc_id"), col("h").as("fp"), shiftright(col("h"), 32).as("h"))
     def positions = array(perms.map { case (a, b) =>
-      pmod(pmod(lit(a) * col("h") + lit(b), lit(MinhashPrime)), lit(mBits.toLong))
+      pmod(pmod(lit(a) * col("h") + lit(b), lit(MinhashPrime)), lit(BloomBits.toLong))
     }: _*)
-    val filterWords = h.filter(col("doc_id") < nSeen)
+    val filterWords = h.filter(col("doc_id") < SeenSplitId)
       .select(explode(positions).as("pos"))
       // 32-bit words: shifts stay < 32, which every engine's checked
       // left-shift accepts (a 64-bit word needs 1 << 63 = overflow)
@@ -1359,7 +1408,7 @@ object Dedup {
         pmod(col("pos"), lit(32)).cast("int").as("bit"))
       .groupBy(col("widx"))
       .agg(expr("bit_or(shiftleft(CAST(1 AS BIGINT), bit))").as("bits"))
-    val probeBits = h.filter(col("doc_id") >= nSeen)
+    val probeBits = h.filter(col("doc_id") >= SeenSplitId)
       .select(col("doc_id"), col("fp"), explode(positions).as("pos"))
       .select(col("doc_id"), col("fp"),
         expr("pos div 32").as("widx"),
@@ -1369,12 +1418,22 @@ object Dedup {
         expr("CAST(shiftright(coalesce(bits, CAST(0 AS BIGINT)), bit) & 1 AS BIGINT)").as("hit"))
     probeBits
       .groupBy(col("doc_id"), col("fp"))
-      .agg(min(col("hit")).as("all_bits_set")) // every one of the k bits
+      .agg(min(col("hit")).as("all_bits_set")) // every one of the BloomHashes bits
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_shingles"),
         sum(col("all_bits_set")).as("n_maybe_seen"))
       .orderBy(col("doc_id"))
   }
+
+  /** Below this edge count the pair graph collects to the driver and
+    * labels resolve with one union-find pass — near-dup pair graphs
+    * are tiny next to the corpus (thresholded candidates), so the
+    * common case pays one collect instead of diameter-many iterative
+    * jobs. Above it, the distributed min-label loop below handles
+    * graphs that cannot fit a driver (the same adaptive small-side
+    * reasoning as a broadcast-join threshold).
+    */
+  private val MaxDriverEdges = 1 << 20
 
   /** Connected components over a near-dup pair graph → duplicate
     * *clusters*: every doc labeled with the smallest doc_id reachable
@@ -1393,18 +1452,15 @@ object Dedup {
     * compose with [[ngramJaccard]], [[minhashLsh]], [[simhashNearDup]]
     * or [[embedNearDup]] output.
     */
-  /** Below this edge count the pair graph collects to the driver and
-    * labels resolve with one union-find pass — near-dup pair graphs
-    * are tiny next to the corpus (thresholded candidates), so the
-    * common case pays one collect instead of diameter-many iterative
-    * jobs. Above it, the distributed min-label loop below handles
-    * graphs that cannot fit a driver (the same adaptive small-side
-    * reasoning as a broadcast-join threshold).
-    */
-  private val MaxDriverEdges = 1 << 20
+  def connectedComponents(documents: DataFrame, pairs: DataFrame): DataFrame =
+    connectedComponentsCapped(documents, pairs, MaxDriverEdges)
 
-  def connectedComponents(documents: DataFrame, pairs: DataFrame,
-      maxIters: Int = 50, maxDriverEdges: Int = MaxDriverEdges): DataFrame = {
+  /** [[connectedComponents]] with the driver-path edge cap
+    * `maxDriverEdges` open: above it the distributed loop runs, so a
+    * cap of 0 forces that path on any graph.
+    */
+  private[graft] def connectedComponentsCapped(documents: DataFrame, pairs: DataFrame,
+      maxDriverEdges: Int): DataFrame = {
     // persisted BEFORE the size probe: the candidate pipeline behind
     // `pairs` (LSH banding, jaccard verification, …) is often the
     // expensive part, and without this the above-cap path would
@@ -1435,7 +1491,7 @@ object Dedup {
         import spark.implicits._
         val labels = vertices.map(v => (v, find(v))).toSeq.toDF("doc_id", "comp")
         attachLabels(documents, labels)
-      } else distributedCC(documents, p, maxIters)
+      } else distributedCC(documents, p)
     } finally p.unpersist(blocking = false)
   }
 
@@ -1450,8 +1506,7 @@ object Dedup {
     * MapReduce (Rastogi et al., "Finding Connected Components in
     * Map-Reduce in Logarithmic Rounds").
     */
-  private def distributedCC(documents: DataFrame, p: DataFrame,
-      maxIters: Int): DataFrame = {
+  private def distributedCC(documents: DataFrame, p: DataFrame): DataFrame = {
     val e = p.select(col("doc1").as("src"), col("doc2").as("dst"))
     val edges = e.union(e.select(col("dst").as("src"), col("src").as("dst")))
       .distinct().persist()
@@ -1476,7 +1531,7 @@ object Dedup {
       var converged = labels.head(1).isEmpty // no pairs ⇒ nothing to propagate
       var prevTotal = if (converged) java.math.BigDecimal.ZERO else labelTotal(labels)
       var iter = 0
-      while (!converged && iter < maxIters) {
+      while (!converged && iter < CcMaxRounds) {
         iter += 1
         // push each node's current label to its neighbors, take the min
         val pushed = edges
@@ -1505,8 +1560,8 @@ object Dedup {
       // a silent partial result would diverge from the transitive-
       // closure contract (and the oracle) — fail loudly instead
       if (!converged) throw new IllegalStateException(
-        s"connectedComponents did not converge in $maxIters rounds; " +
-          "the pair graph has a chain longer than 2^maxIters — raise it")
+        s"connectedComponents did not converge in $CcMaxRounds rounds " +
+          "(Dedup.CcMaxRounds): the pair graph has a chain longer than 2^CcMaxRounds")
     } finally edges.unpersist(blocking = false)
     attachLabels(documents, labels)
   }
@@ -1624,12 +1679,13 @@ object Dedup {
           .reduce(_ + _).as("sim"))
   }
 
-  /** SimHash hamming near-dup pairs (≤ maxDist) through the shared
+  /** SimHash hamming near-dup pairs (≤ [[Multimodal.HammingMaxDist]])
+    * through the shared
     * adaptive Hamming pairer ([[Multimodal.phashPairsAuto]]): a
     * bucket-occupancy probe picks 4×16-bit banding (4 probe rows/doc,
     * wins when signatures spread) or 2×32-bit multi-index hashing
     * (flat probe cost, wins when they cluster). Both are
-    * pigeonhole-exact at maxDist ≤ 3, so the dispatch is a pure cost
+    * pigeonhole-exact at distance ≤ 3, so the dispatch is a pure cost
     * decision and the brute-force oracle is unchanged.
     *
     * The round-7 sf10 audit forced this: the old fixed 4×16 chunk
@@ -1640,17 +1696,14 @@ object Dedup {
     * buckets and its dedup is an inline filter — no aggregate ever
     * sees candidates.
     */
-  def simhashNearDup(documents: DataFrame, maxDist: Int = 3): DataFrame = {
-    require(maxDist <= 3, "pigeonhole pairing only guarantees recall for maxDist <= 3")
+  def simhashNearDup(documents: DataFrame): DataFrame =
     Multimodal.phashPairsAuto(
-        simhashSignatures(documents).select(col("doc_id"), col("sim").as("phash")),
-        maxDist)
+        simhashSignatures(documents).select(col("doc_id"), col("sim").as("phash")))
       // narrow rename only: the pairers end in their own
       // (doc_a, doc_b) orderBy, so a second corpus-pair-sized sort
       // here would be pure overhead
       .select(col("doc_a").as("doc1"), col("doc_b").as("doc2"),
         col("dist").as("hamming"))
-  }
 
   /** Embedding-cosine near-dup pairs ≥ tau via multi-table
     * random-hyperplane LSH; exact cosine verified only within bucket
@@ -1673,7 +1726,7 @@ object Dedup {
     * corpus count comes from one construction-time `count()` — the
     * q24 eager-detection precedent, documented there.
     */
-  def embedNearDup(embeddings: DataFrame, tau: Double = 0.95): DataFrame = {
+  def embedNearDup(embeddings: DataFrame, tau: Double = EmbedNearDupTau): DataFrame = {
     // the geometry count runs on the INPUT frame, not the persisted
     // vector frame: on a file-backed corpus Catalyst prunes every
     // column out of a count() (footer row counts — metadata cost),
@@ -1713,9 +1766,9 @@ object Dedup {
     * verification sketch).
     */
   private[graft] def embedLshParams(n: Long): (Int, Int) =
-    if (n <= (12L << 12)) (8, 12)
+    if (n <= (12L << 12)) (EmbedSmallTables, EmbedSmallBits)
     else {
-      val pBit = 1.0 - math.acos(0.95) / math.Pi
+      val pBit = 1.0 - math.acos(EmbedNearDupTau) / math.Pi
       def tablesFor(bits: Int): Int = math.max(16, math.ceil(
         math.log(0.08) / math.log1p(-math.pow(pBit, bits))).toInt)
       val want = math.max(13, math.ceil(math.log(n / 3.0) / math.log(2.0)).toInt)
@@ -1808,8 +1861,8 @@ object Dedup {
   }
 
   /** Span-level duplication: for each document, how many of its tokens
-    * sit inside a word 3-gram that also appears in ≥ `minDocs` − 1
-    * other documents — the bounded stand-in for suffix-array substring
+    * sit inside a word 3-gram that also appears in at least one other
+    * document — the bounded stand-in for suffix-array substring
     * dedup (spans shared across documents are memorization fuel even
     * when whole-doc similarity is low). Reported as an exact covered
     * token count + integer percentage, so a span-trim stage can cut on
@@ -1824,8 +1877,8 @@ object Dedup {
     * keys shuffle, and the oracle reproduces the fold exactly in SQL
     * (a cross-doc collision would need ~2³¹ distinct grams).
     */
-  def dupSpans(documents: DataFrame, minDocs: Int = 2): DataFrame =
-    Caching.materialized(dupSpansPlan(_, documents, minDocs))
+  def dupSpans(documents: DataFrame): DataFrame =
+    Caching.materialized(dupSpansPlan(_, documents))
 
   /** The un-materialized plan behind [[dupSpans]], holding its gram
     * frame through `held` — exists so PlanPinSpec can assert the
@@ -1833,8 +1886,7 @@ object Dedup {
     * checkpoint collapses it to a LogicalRDD scan, where any shuffle
     * count is vacuously zero).
     */
-  private[graft] def dupSpansPlan(held: Caching.Held, documents: DataFrame,
-      minDocs: Int = 2): DataFrame = {
+  private[graft] def dupSpansPlan(held: Caching.Held, documents: DataFrame): DataFrame = {
     val base = documents.select(col("doc_id"), split(col("text"), " ").as("w"))
       .withColumn("n", size(col("w")).cast("long"))
     // pos is 1-based; Spark arrays index 0-based, so gram i spans
@@ -1848,21 +1900,11 @@ object Dedup {
           "struct(i as pos, concat_ws(' ', w[i-1], w[i], w[i+1]) as g))")).as("e"))
       .select(col("doc_id"), col("e.pos").as("pos"), tokenHash62(col("e.g")).as("g")))
     // "appears in ≥2 docs" = min(doc_id) ≠ max(doc_id): one plain
-    // min/max aggregate instead of an expand-based count_distinct.
-    // ONLY valid at exactly 2 — any other threshold (incl. the
-    // degenerate ≤1, where every gram qualifies) takes the distinct
-    // count
-    val dup =
-      if (minDocs == 2)
-        grams.groupBy(col("g"))
-          .agg(min(col("doc_id")).as("d0"), max(col("doc_id")).as("d1"))
-          .filter(col("d0") =!= col("d1"))
-          .select(col("g"))
-      else
-        grams.groupBy(col("g"))
-          .agg(count_distinct(col("doc_id")).as("nd"))
-          .filter(col("nd") >= minDocs)
-          .select(col("g"))
+    // min/max aggregate instead of an expand-based count_distinct
+    val dup = grams.groupBy(col("g"))
+      .agg(min(col("doc_id")).as("d0"), max(col("doc_id")).as("d1"))
+      .filter(col("d0") =!= col("d1"))
+      .select(col("g"))
     // Covered-token count per doc WITHOUT materializing covered
     // positions: |∪ᵢ [posᵢ, posᵢ+2]| over a doc's sorted distinct dup
     // positions is 3 + Σ min(3, gap) — the interval-union identity,

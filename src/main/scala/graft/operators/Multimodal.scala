@@ -640,16 +640,23 @@ object Multimodal {
     }.toDF("doc_id", "format", "phash")
   }
 
-  /** Near-duplicate image pairs by dHash Hamming distance ≤ maxDist,
-    * found the scale-correct way: 4×16-bit banding (the same
+  /** Hamming distance at or below which two 64-bit hashes are a
+    * near-duplicate pair — the cut of [[phashPairs]], [[phashPairsMih]],
+    * [[phashPairsAuto]], `Dedup.simhashNearDup` and the phash stream
+    * gate. Both candidate generators are pigeonhole-exact only up to
+    * 3: ≤ 3 differing bits leave one of four 16-bit bands, or one of
+    * two 32-bit blocks within one bit, untouched.
+    */
+  private[graft] val HammingMaxDist = 3
+
+  /** Near-duplicate image pairs by dHash Hamming distance ≤
+    * [[HammingMaxDist]], found the scale-correct way: 4×16-bit banding (the same
     * pigeonhole as SimHash text dedup — ≤3 differing bits leave ≥1
     * band untouched, so recall is exact), candidate pairs only within
     * a band bucket, popcount verification on candidates only. Only
     * (band, key) pairs shuffle; no all-pairs join ever forms.
     */
-  def phashPairs(hashes: DataFrame, maxDist: Int = 3): DataFrame = {
-    require(maxDist >= 0 && maxDist <= 3,
-      s"4x16-bit banding guarantees recall only for maxDist <= 3, got $maxDist")
+  def phashPairs(hashes: DataFrame): DataFrame = {
     val banded = hashes.select(col("doc_id"), col("phash"),
       explode(sequence(lit(0), lit(3))).as("band"))
       .withColumn("key", expr("shiftright(phash, band * 16) & 65535"))
@@ -674,14 +681,14 @@ object Multimodal {
     }.reduce(_ || _)
     a.join(b, Seq("band", "key"))
       .filter(col("doc_a") < col("doc_b"))
-      .filter(expr(s"bit_count(pa ^ pb) <= $maxDist"))
+      .filter(expr(s"bit_count(pa ^ pb) <= $HammingMaxDist"))
       .filter(!earlierBandMatches)
       .select(col("doc_a"), col("doc_b"),
         expr("bit_count(pa ^ pb)").cast("long").as("dist"))
       .orderBy(col("doc_a"), col("doc_b"))
   }
 
-  /** Near-duplicate pairs by Hamming distance ≤ maxDist via
+  /** Near-duplicate pairs by Hamming distance ≤ [[HammingMaxDist]] via
     * MULTI-INDEX HASHING (cf. Norouzi, Punjani, Fleet, "Fast Search
     * in Hamming Space with Multi-Index Hashing", CVPR'12) — the
     * alternative candidate generator to [[phashPairs]]'s 4×16-bit
@@ -703,9 +710,7 @@ object Multimodal {
     * first qualifying block, on the single ball variant that matches
     * — no aggregate ever sees candidates.
     */
-  def phashPairsMih(hashes: DataFrame, maxDist: Int = 3): DataFrame = {
-    require(maxDist >= 0 && maxDist <= 3,
-      s"2x32-bit multi-index + radius-1 ball guarantees recall only for maxDist <= 3, got $maxDist")
+  def phashPairsMih(hashes: DataFrame): DataFrame = {
     val idx = hashes.select(col("doc_id").as("doc_b"), col("phash").as("pb"),
         explode(sequence(lit(0), lit(1))).as("blk"))
       .withColumn("key", expr("shiftright(pb, blk * 32) & 4294967295"))
@@ -731,7 +736,7 @@ object Multimodal {
     // MIH exchange at sf100")
     probes.join(idx, Seq("blk", "key"))
       .filter(col("doc_a") < col("doc_b"))
-      .filter(expr(s"bit_count(pa ^ pb) <= $maxDist"))
+      .filter(expr(s"bit_count(pa ^ pb) <= $HammingMaxDist"))
       // first qualifying block (guaranteed to exist by pigeonhole):
       // emit there only — with the exact-match index, each pair hits a
       // block through exactly ONE ball variant, so this is a full dedup
@@ -793,7 +798,7 @@ object Multimodal {
     * probe rows/doc, wins on uncorrelated corpora) or
     * [[phashPairsMih]] (multi-index — flat probe cost, wins as
     * signature clustering compounds). Both are pigeonhole-exact at
-    * maxDist ≤ 3 and produce identical pairs (same brute-force
+    * [[HammingMaxDist]] and produce identical pairs (same brute-force
     * oracle), so the switch is a pure cost decision.
     *
     * Epilogue (round 8 — the r7 audit measured the old persist +
@@ -811,13 +816,9 @@ object Multimodal {
     * than its own best arm wherever the front-end costs more than
     * one 16-byte-row materialization (measured: see SCALING.md).
     */
-  def phashPairsAuto(hashes: DataFrame, maxDist: Int = 3): DataFrame = {
-    // validate BEFORE the checkpoint job, which runs at construction
-    require(maxDist >= 0 && maxDist <= 3,
-      s"pigeonhole pairing guarantees recall only for 0 <= maxDist <= 3, got $maxDist")
+  def phashPairsAuto(hashes: DataFrame): DataFrame = {
     val h = graft.operators.Caching.materialize(hashes)
-    if (phashStrategy(h) == "mih") phashPairsMih(h, maxDist)
-    else phashPairs(h, maxDist)
+    if (phashStrategy(h) == "mih") phashPairsMih(h) else phashPairs(h)
   }
 
   /** The rows-only `mm_meta` query: binary length + typed metadata,

@@ -210,10 +210,9 @@ object Sampling {
     * dedup shuffle, one tiny rollup; every stage composes the
     * already-verified operators rather than re-implementing them.
     */
-  def corpusReport(documents: DataFrame, minWords: Int = 5,
-      maxStopRatio: Double = 0.5, trainHex: String = "cc",
+  def corpusReport(documents: DataFrame, trainHex: String = "cc",
       valHex: String = "e6"): DataFrame = {
-    val kept = graft.operators.TextOps.cleanScored(documents, minWords, maxStopRatio)
+    val kept = graft.operators.TextOps.cleanScored(documents)
       .groupBy(col("h"))
       .agg(min(col("doc_id")).as("doc_id"),
         expr("min_by(source, doc_id)").as("source"),

@@ -289,7 +289,9 @@ object Similarity {
 
   /** IVF coarse quantizer: deterministic spherical k-means trained on
     * a bounded [[sampleUnitVecs]] sample, Lloyd run in memory on the
-    * driver (init = the sample's lowest-vec_id vectors; assignment =
+    * driver (init = the sample's IvfClusters lowest-vec_id DISTINCT
+    * vectors, so a corpus with fewer distinct vectors trains fewer
+    * lists and no list starts as a copy of another; assignment =
     * argmax dot with smaller-cluster_id tie-break; fixed iteration
     * order ⇒ bit-deterministic across runs and partitionings). The
     * centroid table is the *model* — k·dim doubles broadcast like any
@@ -324,6 +326,13 @@ object Similarity {
   private def ivfTrainOnSample(ts: TrainSample): Seq[Centroid] =
     ivfCache.computeIfAbsent(ts.fp, _ => ivfLloyd(ts.vecs))
 
+  /** The first `k` pairwise-distinct vectors of `vecs`, copied, in
+    * order — the Lloyd seeds. A repeated seed would tie with its twin
+    * on every assignment, lose to the smaller id and stay empty.
+    */
+  private def distinctSeeds(vecs: Array[Array[Double]], k: Int): Array[Array[Double]] =
+    vecs.iterator.distinctBy(_.toSeq).take(k).map(_.clone()).toArray
+
   private def ivfLloyd(samplePairs: Array[(Long, Array[Double])]): Seq[Centroid] = {
     trainingsRun.incrementAndGet()
     val sample = samplePairs.map(_._2)
@@ -334,8 +343,7 @@ object Similarity {
       while (i < dim) { s += a(i) * b(i); i += 1 }
       s
     }
-    var centroids: Array[Array[Double]] =
-      sample.take(IvfClusters).map(_.clone())
+    var centroids: Array[Array[Double]] = distinctSeeds(sample, IvfClusters)
     for (_ <- 1 to IvfIters) {
       val sums = Array.fill(centroids.length)(new Array[Double](dim))
       val counts = new Array[Long](centroids.length)
@@ -421,10 +429,11 @@ object Similarity {
   /** Train PQ codebooks: the unit-normalized vector splits into
     * PqSubspaces contiguous subspaces, each L2-quantized to PqCodes
     * centroids. Like [[ivfTrain]], Lloyd runs in memory on a bounded
-    * [[sampleUnitVecs]] sample (init = the sample's lowest-vec_id
-    * subvectors; assignment = the same argmax(sub·c − ‖c‖²/2) with
-    * smaller-code tie-break as [[assignCodes]]; fixed iteration order
-    * ⇒ deterministic). The codebook is the model — PqSubspaces ×
+    * [[sampleUnitVecs]] sample (init = each subspace's PqCodes
+    * lowest-vec_id DISTINCT subvectors, so a subspace with fewer
+    * distinct subvectors trains fewer codes; assignment = the same
+    * argmax(sub·c − ‖c‖²/2) with smaller-code tie-break as
+    * [[assignCodes]]; fixed iteration order ⇒ deterministic). The codebook is the model — PqSubspaces ×
     * PqCodes × subDim doubles broadcast everywhere; encoding and the
     * ADC scan — the data-sized steps — stay distributed plans.
     */
@@ -471,13 +480,14 @@ object Similarity {
     val subs: Array[Array[Array[Double]]] = sample.map { case (_, v) =>
       Array.tabulate(nSub)(s => java.util.Arrays.copyOfRange(v, s * subDim, (s + 1) * subDim))
     }
-    // init = the PqCodes lowest vec_ids in the sample (sample is
-    // vec_id-sorted), code id = rank within that set
+    // init = per subspace, the PqCodes lowest-vec_id distinct
+    // subvectors (sample is vec_id-sorted), code id = rank within
+    // that set
     var codebook: Array[Array[Array[Double]]] =
-      Array.tabulate(nSub)(s => subs.take(PqCodes).map(_(s).clone()))
+      Array.tabulate(nSub)(s => distinctSeeds(subs.map(_(s)), PqCodes))
     for (_ <- 1 to PqIters) {
-      val sums = Array.fill(nSub, PqCodes)(new Array[Double](subDim))
-      val counts = Array.fill(nSub)(new Array[Long](PqCodes))
+      val sums = codebook.map(_.map(_ => new Array[Double](subDim)))
+      val counts = codebook.map(cb => new Array[Long](cb.length))
       subs.foreach { vsubs =>
         var s = 0
         while (s < nSub) {

@@ -414,12 +414,10 @@ object TextOps {
     * stopword definitions as [[quality]], via the shared helpers) →
     * exact-dedup keep-canonical (the [[Dedup.exact]] shape over the
     * normalized text). Composition stays one scan + one dedup shuffle.
-    * The ratio threshold compares as scaled-by-1000 integers — exact
-    * in both engines, and per-mille precision on the parameter.
+    * The cut is [[CleanMinWords]] and [[CleanMaxStopPerMille]].
     */
-  def cleanPipeline(documents: DataFrame, minWords: Int = 5,
-      maxStopRatio: Double = 0.5): DataFrame =
-    cleanScored(documents, minWords, maxStopRatio)
+  def cleanPipeline(documents: DataFrame): DataFrame =
+    cleanScored(documents)
       .groupBy(col("h"))
       .agg(min(col("doc_id")).as("doc_id"),
         count(lit(1)).as("n_dups"),
@@ -444,10 +442,9 @@ object TextOps {
     * (`samp_token_budget`'s shape). Fully integer/round-6 arithmetic
     * ⇒ exact CTE-chained SQL oracle.
     */
-  def curatePipeline(documents: DataFrame, perSourceBudget: Long = 5000,
-      minWords: Int = 5, maxStopRatio: Double = 0.5): DataFrame = {
+  def curatePipeline(documents: DataFrame, perSourceBudget: Long = 5000): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val scored = cleanScored(documents, minWords, maxStopRatio)
+    val scored = cleanScored(documents)
     val canon = scored
       .withColumn("rn", row_number().over(
         Window.partitionBy(col("h")).orderBy(col("doc_id"))))
@@ -469,21 +466,28 @@ object TextOps {
       .orderBy(col("doc_id"))
   }
 
+  /** The quality cut of [[cleanScored]]: a document needs at least
+    * CleanMinWords words and at most CleanMaxStopPerMille stopwords
+    * per thousand words (a stop ratio of 0.5), compared as integers —
+    * exact in both engines.
+    */
+  private[graft] val CleanMinWords = 5
+  private[graft] val CleanMaxStopPerMille = 500
+
   /** The stateless prefix of [[cleanPipeline]] — normalize, word/stop
     * counts, quality cut, content hash — shared verbatim by the batch
     * pipeline and the streaming twin
     * ([[graft.streaming.DocPipelineJobs]]) so the two cannot diverge.
     * Narrow maps only: safe on both a scan and an unbounded stream.
     */
-  private[graft] def cleanScored(documents: DataFrame, minWords: Int,
-      maxStopRatio: Double): DataFrame =
+  private[graft] def cleanScored(documents: DataFrame): DataFrame =
     documents
       .withColumn("norm_text",
         regexp_replace(trim(lower(col("text"))), " +", " "))
       .withColumn("n_words", wordCount("norm_text"))
       .withColumn("n_stop", stopCount("norm_text"))
-      .filter(col("n_words") >= minWords &&
-        col("n_stop") * 1000 <= col("n_words") * math.round(maxStopRatio * 1000).toInt)
+      .filter(col("n_words") >= CleanMinWords &&
+        col("n_stop") * 1000 <= col("n_words") * CleanMaxStopPerMille)
       .withColumn("h", md5(col("norm_text")))
 
   /** PII detection + redaction: emails / phone numbers / IPv4

@@ -24,10 +24,9 @@ object DocPipelineJobs {
     * at ingest speed and keeps whatever extra columns the feed
     * carries (e.g. an ingest timestamp for downstream watermarking).
     */
-  def cleanStream(stream: DataFrame, minWords: Int = 5,
-      maxStopRatio: Double = 0.5): DataFrame = {
+  def cleanStream(stream: DataFrame): DataFrame = {
     import org.apache.spark.sql.graftinternal.ColumnBridge.{column, expression}
-    TextOps.cleanScored(stream, minWords, maxStopRatio)
+    TextOps.cleanScored(stream)
       .withColumn("fp",
         column(graft.expressions.RollingFingerprint(expression(col("norm_text")))))
       .drop("norm_text", "n_stop")
@@ -43,10 +42,9 @@ object DocPipelineJobs {
     * replays, mirroring the reference's in-memory consumer
     * bookkeeping).
     */
-  def dedupCleanStream(stream: DataFrame, minWords: Int = 5,
-      maxStopRatio: Double = 0.5,
+  def dedupCleanStream(stream: DataFrame,
       dedupTtl: Option[(String, String)] = None): DataFrame = {
-    val cleaned = cleanStream(stream, minWords, maxStopRatio)
+    val cleaned = cleanStream(stream)
     dedupTtl match {
       case Some((tsCol, delay)) =>
         cleaned.withWatermark(tsCol, delay).dropDuplicatesWithinWatermark("h")
@@ -109,8 +107,7 @@ object DocPipelineJobs {
     * restarts the stream, which is exactly the incremental-crawl cycle
     * this operator models.
     */
-  def incrementalGateStream(stream: DataFrame, storedIndex: DataFrame,
-      minWords: Int = 5, maxStopRatio: Double = 0.5): DataFrame = {
+  def incrementalGateStream(stream: DataFrame, storedIndex: DataFrame): DataFrame = {
     // the static side of a stream-static join is RE-PLANNED every
     // micro-batch, so an un-materialized distinct here would
     // re-shuffle the whole corpus-sized index per batch. Eagerly
@@ -124,7 +121,7 @@ object DocPipelineJobs {
     // cached-block scan either way, and a restart rebuilds it from
     // the index parquet. A stored hash index is usually distinct
     // already, but the contract here can't assume every caller's is.
-    val fresh = TextOps.cleanScored(stream, minWords, maxStopRatio)
+    val fresh = TextOps.cleanScored(stream)
       .join(graft.operators.Caching.materialize(
         storedIndex.select(col("h")).distinct()), Seq("h"), "left_anti")
     fresh.dropDuplicates("h").select(col("doc_id"), col("h"), col("n_words"))
@@ -156,13 +153,11 @@ object DocPipelineJobs {
     * of one (doc, known) pair collapse by keeping only the first
     * colliding band — a pure expression over the two hashes in the
     * row, not a stateful dedup. Emits one row per flagged pair
-    * (doc_id, known_id, phash, dist ≤ maxDist); recall is exact for
-    * distance ≤ 3 by the SimHash pigeonhole, same as batch.
+    * (doc_id, known_id, phash, dist ≤ `Multimodal.HammingMaxDist`);
+    * recall is exact there by the SimHash pigeonhole, same as batch.
     */
   def phashGateStream(stream: org.apache.spark.sql.Dataset[graft.operators.MMRecord],
-      knownHashes: DataFrame, maxDist: Int = 3): DataFrame = {
-    require(maxDist >= 0 && maxDist <= 3,
-      s"4x16-bit banding guarantees recall only for maxDist <= 3, got $maxDist")
+      knownHashes: DataFrame): DataFrame = {
     implicit val spark: org.apache.spark.sql.SparkSession = stream.sparkSession
     val hashed = graft.operators.Multimodal.imagePhash(stream)
     val sBanded = hashed.select(col("doc_id"), col("phash"),
@@ -174,7 +169,7 @@ object DocPipelineJobs {
       .withColumn("key", expr("shiftright(known_phash, band * 16) & 65535")))
     sBanded.join(kBanded, Seq("band", "key"))
       .withColumn("dist", expr("bit_count(phash ^ known_phash)").cast("long"))
-      .filter(col("dist") <= maxDist)
+      .filter(col("dist") <= graft.operators.Multimodal.HammingMaxDist)
       .withColumn("first_band", expr("filter(sequence(0, 3), b -> " +
         "(shiftright(phash, b * 16) & 65535) = (shiftright(known_phash, b * 16) & 65535))[0]"))
       .filter(col("band") === col("first_band"))
@@ -187,16 +182,18 @@ object DocPipelineJobs {
     * a stateless per-row map (same fused shingles, same permutation
     * family as the batch `Dedup.minhashSignatures` — a streaming
     * groupBy would be stateful; per-row evaluation of the same math
-    * is not), then its 16 band folds probe a STATIC signature table
+    * is not), then its band folds probe a STATIC signature table
     * through a broadcast stream-static join, and candidates verify by
     * positional match count exactly like the batch operator.
     * Documents too short to shingle emit nothing — identical to their
     * absence from the batch signature table. No state store; recall
-    * follows the same 16×8 banding probability as batch LSH.
+    * follows the same banding probability as batch LSH — the gate reads
+    * the batch operator's `Dedup.MinhashBands`, `Dedup.MinhashRows` and
+    * `Dedup.MinhashMinEst`.
     */
-  def minhashGateStream(stream: DataFrame, knownSigs: DataFrame,
-      minEst: Double = 0.2): DataFrame = {
+  def minhashGateStream(stream: DataFrame, knownSigs: DataFrame): DataFrame = {
     import org.apache.spark.sql.graftinternal.ColumnBridge.{column, expression}
+    import graft.operators.Dedup.{MinhashBands, MinhashMinEst, MinhashRows}
     // per-arrival signature via the same fused per-row expression the
     // batch signature table uses (MinhashTextSignature — stateless,
     // codegen'd, no typed flatMap deserialization); short docs NULL
@@ -209,7 +206,7 @@ object DocPipelineJobs {
       .filter(col("mh").isNotNull)
     def banded(df: DataFrame): DataFrame =
       df.select(col("doc_id"), col("mh"), posexplode(column(
-        graft.expressions.BandHashes(expression(col("mh")), 8, 16))))
+        graft.expressions.BandHashes(expression(col("mh")), MinhashRows, MinhashBands))))
         .toDF("doc_id", "mh", "band_idx", "band_hash")
     val sBanded = banded(sigd)
     val kBanded = broadcast(banded(knownSigs)
@@ -223,22 +220,24 @@ object DocPipelineJobs {
     sBanded.join(kBanded, Seq("band_idx", "band_hash"))
       .filter(col("doc_id") =!= col("known_id"))
       .withColumn("est_jaccard", est)
-      .filter(col("est_jaccard") >= minEst)
+      .filter(col("est_jaccard") >= MinhashMinEst)
       // collapse multi-band hits with the first colliding band — a
       // pure expression over the two signatures, no stateful dedup
       .withColumn("first_band", expr(
-        "filter(sequence(0, 15), b -> " +
-          "aggregate(slice(mh, b * 8 + 1, 8), 0L, (acc, x) -> pmod(acc * 1000003 + x, 2147483647)) = " +
-          "aggregate(slice(known_mh, b * 8 + 1, 8), 0L, (acc, x) -> pmod(acc * 1000003 + x, 2147483647)))[0]"))
+        s"filter(sequence(0, ${MinhashBands - 1}), b -> " +
+          s"aggregate(slice(mh, b * $MinhashRows + 1, $MinhashRows), 0L, " +
+          "(acc, x) -> pmod(acc * 1000003 + x, 2147483647)) = " +
+          s"aggregate(slice(known_mh, b * $MinhashRows + 1, $MinhashRows), 0L, " +
+          "(acc, x) -> pmod(acc * 1000003 + x, 2147483647)))[0]"))
       .filter(col("band_idx") === col("first_band"))
       .select(col("doc_id"), col("known_id"), round(col("est_jaccard"), 6).as("est_jaccard"))
   }
 
   /** Live embedding near-dup gate: the vector twin of
     * [[minhashGateStream]] — "is this arriving embedding within
-    * cosine ≥ tau of the corpus we already indexed?" (the ingest-time
-    * companion to `Dedup.embedNearDup`, e.g. admitting only
-    * semantically-novel documents). Each arrival's multi-table
+    * cosine ≥ `Dedup.EmbedNearDupTau` of the corpus we already
+    * indexed?" (the ingest-time companion to `Dedup.embedNearDup`,
+    * e.g. admitting only semantically-novel documents). Each arrival's multi-table
     * hyperplane bucket keys compute in the SAME codegen'd expression
     * as batch (`VectorOps.lshTableKeys`, same plane family — keys are
     * table-tagged, so equal keys means same table AND same signature),
@@ -247,21 +246,22 @@ object DocPipelineJobs {
     * multi-table hits of one (arrival, known) pair collapse by
     * keeping only the first colliding table — a pure expression over
     * the two key arrays in the row, not a stateful dedup. No state
-    * store; recall follows the same 8×12 multi-table collision
-    * probability as the batch operator.
+    * store; recall follows the same multi-table collision probability
+    * as the batch operator at its small-corpus geometry
+    * (`Dedup.EmbedSmallTables` × `Dedup.EmbedSmallBits`).
     */
-  def embedGateStream(stream: DataFrame, knownVecs: DataFrame,
-      tau: Double = 0.95, nTables: Int = 8, bitsPerTable: Int = 12): DataFrame = {
+  def embedGateStream(stream: DataFrame, knownVecs: DataFrame): DataFrame = {
     import graft.functions.VectorOps
+    import graft.operators.Dedup.{EmbedNearDupTau, EmbedSmallBits, EmbedSmallTables}
     val s = stream.select(col("vec_id"),
         VectorOps.toDoubleArray(col("embedding")).as("vd"))
-      .withColumn("keys", VectorOps.lshTableKeys(col("vd"), nTables, bitsPerTable))
+      .withColumn("keys", VectorOps.lshTableKeys(col("vd"), EmbedSmallTables, EmbedSmallBits))
       .select(col("vec_id"), col("vd"), col("keys"),
         explode(col("keys")).as("bucket"))
     val k = broadcast(knownVecs.select(col("vec_id").as("known_id"),
         VectorOps.toDoubleArray(col("embedding")).as("known_vd"))
       .withColumn("known_keys",
-        VectorOps.lshTableKeys(col("known_vd"), nTables, bitsPerTable))
+        VectorOps.lshTableKeys(col("known_vd"), EmbedSmallTables, EmbedSmallBits))
       .select(col("known_id"), col("known_vd"), col("known_keys"),
         explode(col("known_keys")).as("bucket")))
     s.join(k, Seq("bucket"))
@@ -271,7 +271,7 @@ object DocPipelineJobs {
         expr("filter(keys, (x, i) -> x = known_keys[i])[0]"))
       .filter(col("bucket") === col("first_bucket"))
       .withColumn("cos", VectorOps.cosine(col("vd"), col("known_vd")))
-      .filter(col("cos") >= tau)
+      .filter(col("cos") >= EmbedNearDupTau)
       .select(col("vec_id"), col("known_id"), round(col("cos"), 6).as("cos"))
   }
 
@@ -279,8 +279,9 @@ object DocPipelineJobs {
     * `Dedup.contamination` — "does this arriving training document
     * contain an eval document's content?". Asymmetric shingle
     * containment, |shingles(train) ∩ shingles(eval)| / |shingles(eval)|
-    * ≥ τ, so a train doc that embeds a whole eval doc flags at 1.0
-    * regardless of its own length.
+    * ≥ τ (the batch operator's `Dedup.ContaminationTauNum`), so a
+    * train doc that embeds a whole eval doc flags at 1.0 regardless of
+    * its own length.
     *
     * Stateless by construction: each arrival's distinct shingle
     * fingerprints compute in the same per-row codegen'd scan the
@@ -300,9 +301,9 @@ object DocPipelineJobs {
     * docs too short to shingle are dropped from the index (the batch
     * inner join can never emit them).
     */
-  def contaminationGateStream(stream: DataFrame, evalDocs: DataFrame,
-      tauNum: Int = 50, tauDenom: Int = 100): DataFrame = {
+  def contaminationGateStream(stream: DataFrame, evalDocs: DataFrame): DataFrame = {
     import org.apache.spark.sql.graftinternal.ColumnBridge.{column, expression}
+    import graft.operators.Dedup.{ContaminationTauNum, TauDenom}
     def fps(c: org.apache.spark.sql.Column) =
       column(graft.expressions.ShingleFingerprints(expression(c)))
     val evalArr = broadcast(evalDocs
@@ -317,7 +318,7 @@ object DocPipelineJobs {
       .crossJoin(evalArr) // broadcast NLJ over the tiny eval index
       .withColumn("inter", column(graft.expressions.SortedIntersectCount(
         expression(col("ths")), expression(col("ehs")))).cast("long"))
-      .filter(col("inter") * tauDenom >= col("s_eval") * tauNum)
+      .filter(col("inter") * TauDenom >= col("s_eval") * ContaminationTauNum)
       .select(col("eval_id"), col("train_id"), col("inter"), col("s_eval"))
   }
 
@@ -390,8 +391,9 @@ object DocPipelineJobs {
   }
 
   /** Live Bloom-filter membership per shard: the streaming twin of
-    * `Dedup.bloomShingleFilter`'s verdict side. State per `source`
-    * shard is ONE fixed mBits-bit array (O(m), never grows with the
+    * `Dedup.bloomShingleFilter`'s verdict side, with its geometry
+    * (`Dedup.BloomBits`, `Dedup.BloomHashes`). State per `source`
+    * shard is ONE fixed BloomBits-bit array (O(m), never grows with the
     * stream — the point of a Bloom filter vs `dropDuplicates`'
     * per-key state store). Verdicts match the batch operator
     * shingle-for-shingle: each doc's distinct 3-word-shingle
@@ -406,13 +408,11 @@ object DocPipelineJobs {
     * forever — only safe while the shard universe is bounded; nothing
     * evicts it yet (ROADMAP D3 adds eviction).
     */
-  def bloomStream(stream: DataFrame, mBits: Int = 131072, k: Int = 4): DataFrame = {
+  def bloomStream(stream: DataFrame): DataFrame = {
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    require(Integer.bitCount(mBits) == 1 && mBits >= 64,
-      "mBits must be a power of two >= 64")
-    require(k <= graft.expressions.MinhashTextSignature.NumPerms, "not enough perms")
+    import graft.operators.Dedup.{BloomBits, BloomHashes}
     val perms = graft.expressions.MinhashTextSignature.permA
-      .zip(graft.expressions.MinhashTextSignature.permB).take(k)
+      .zip(graft.expressions.MinhashTextSignature.permB).take(BloomHashes)
     val prime = graft.expressions.MinhashTextSignature.Prime
     val spark = stream.sparkSession
     import spark.implicits._
@@ -425,7 +425,7 @@ object DocPipelineJobs {
       .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout())(
         (source: String, rows: Iterator[(String, Long, String)],
             state: GroupState[Array[Long]]) => {
-          val bits = state.getOption.getOrElse(new Array[Long](mBits / 64))
+          val bits = state.getOption.getOrElse(new Array[Long](BloomBits / 64))
           val out = rows.map { case (_, docId, text) =>
             val fps = graft.expressions.ShingleFingerprints
               .compute(if (text == null) "" else text).toLongArray()
@@ -435,7 +435,7 @@ object DocPipelineJobs {
               val h = fp >>> 32 // 31-bit top half, = batch shiftright(h, 32)
               var allSet = true
               perms.foreach { case (a, b) =>
-                val pos = (Math.floorMod(a * h + b, prime) % mBits).toInt
+                val pos = (Math.floorMod(a * h + b, prime) % BloomBits).toInt
                 if ((bits(pos >> 6) & (1L << (pos & 63))) == 0L) allSet = false
               }
               if (allSet) nMaybe += 1
@@ -444,7 +444,7 @@ object DocPipelineJobs {
             fps.foreach { fp =>
               val h = fp >>> 32
               perms.foreach { case (a, b) =>
-                val pos = (Math.floorMod(a * h + b, prime) % mBits).toInt
+                val pos = (Math.floorMod(a * h + b, prime) % BloomBits).toInt
                 bits(pos >> 6) |= 1L << (pos & 63)
               }
             }

@@ -59,16 +59,16 @@ class DedupSpec extends AnyFunSuite {
       251L -> distinct2, 252L -> distinct2, // batch-internal pair → one survives
       253L -> nearDup, // near-dup of indexed base, but EXACT dedup: survives
       254L -> "too short") // fails the quality cut → never reaches dedup
-    val out = Dedup.incrementalDedup(d, splitId = 250).collect()
+    val out = Dedup.incrementalDedup(d).collect()
       .map(r => (r.getLong(0), r.getLong(2)))
     assert(out.toSeq == Seq((251L, 2L), (253L, 1L)))
     // rebuild equivalence: survivors ∪ index hashes = full-pipeline hashes
     val full = graft.operators.TextOps.cleanPipeline(d.filter($"doc_id" =!= 254L))
       .collect().map(_.getString(1)).toSet
-    val surv = Dedup.incrementalDedup(d, splitId = 250).collect()
+    val surv = Dedup.incrementalDedup(d).collect()
       .map(_.getString(1)).toSet
     val indexed = graft.operators.TextOps.cleanPipeline(
-      d.filter($"doc_id" < 250L)).collect().map(_.getString(1)).toSet
+      d.filter($"doc_id" < Dedup.SeenSplitId)).collect().map(_.getString(1)).toSet
     assert(surv.union(indexed) == full)
     assert(surv.intersect(indexed).isEmpty)
   }
@@ -127,12 +127,11 @@ class DedupSpec extends AnyFunSuite {
       7L -> (base + " " + distinct1 + " " + distinct2))
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(_.toSeq).toSeq
-    // exact-equality parity at two thresholds: the generator may only
-    // change the candidate plan, never the verified pair set or scores
-    assert(rows(Dedup.containmentPairsLsh(corpus)) ==
-      rows(Dedup.containmentPairs(corpus)))
-    assert(rows(Dedup.containmentPairsLsh(corpus, tauNum = 30)) ==
-      rows(Dedup.containmentPairs(corpus, tauNum = 30)))
+    // exact-equality parity: the generator may only change the
+    // candidate plan, never the verified pair set or scores
+    val exact = rows(Dedup.containmentPairs(corpus))
+    assert(exact.nonEmpty, "fixture degenerate: no containment pair")
+    assert(rows(Dedup.containmentPairsLsh(corpus)) == exact)
   }
 
   test("mega-document guard: a 100k-shingle doc takes the explode fallback, identical output") {
@@ -202,16 +201,22 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("containment threshold cuts pairs below tau") {
-    // ~half of distinct1's shingles shared → containment ≈ 0.5 < 0.8 cut
-    val halfOverlap = {
-      val w = distinct1.split(" ")
-      w.take(w.length / 2 + 1).mkString(" ") + " " + distinct2
-    }
-    val out = Dedup.containmentPairs(docs(1L -> distinct1, 2L -> halfOverlap)).collect()
-    assert(out.isEmpty)
-    val loose = Dedup.containmentPairs(
-      docs(1L -> distinct1, 2L -> halfOverlap), tauNum = 30).collect()
-    assert(loose.map(r => (r.getLong(0), r.getLong(1))).toSeq == Seq((1L, 2L)))
+    // distinct1 has 13 distinct words, so 11 shingles; each other doc
+    // keeps a prefix of it and appends unrelated text. Kept shingles of
+    // the 11: 5 (≈ 0.45), 8 (≈ 0.73) and 9 (≈ 0.82) — only the last
+    // reaches the 0.8 cut.
+    val w = distinct1.split(" ")
+    def prefixPlus(nWords: Int, tail: String) = w.take(nWords).mkString(" ") + " " + tail
+    val gardening =
+      "entirely unrelated prose about gardening tips and seasonal vegetable rotation schedules"
+    val corpus = docs(1L -> distinct1,
+      2L -> prefixPlus(7, distinct2),
+      3L -> prefixPlus(10, gardening),
+      4L -> prefixPlus(11, base))
+    val out = Dedup.containmentPairs(corpus).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(5)))
+    assert(out.map(t => (t._1, t._2)).toSeq == Seq((1L, 4L)))
+    assert(out.head._3 == 9L && out.head._4 == 0.818182)
   }
 
   test("PPJoin prefix variant computes exactly the same pairs as the count-join") {
@@ -219,10 +224,9 @@ class DedupSpec extends AnyFunSuite {
       5L -> (distinct1 + " " + distinct2), 6L -> (base + " extra words here"))
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-    assert(rows(Dedup.ngramJaccard(corpus, 20, 100)) ==
-      rows(Dedup.ngramJaccardPrefix(corpus, 20, 100)))
-    assert(rows(Dedup.ngramJaccard(corpus, 50, 100)) ==
-      rows(Dedup.ngramJaccardPrefix(corpus, 50, 100)))
+    val exact = rows(Dedup.ngramJaccard(corpus))
+    assert(exact.nonEmpty, "fixture degenerate: no Jaccard pair")
+    assert(rows(Dedup.ngramJaccardPrefix(corpus)) == exact)
   }
 
   test("minhash LSH surfaces the planted near-dup with high estimated jaccard") {
@@ -288,14 +292,15 @@ class DedupSpec extends AnyFunSuite {
   test("bloom filter flags every shingle of a previously-seen text, none of a novel one") {
     val seen = (0L until 6L).map(i =>
       (i, s"alpha bravo charlie delta echo foxtrot golf item$i hotel india"))
-    val corpus = (seen :+ (10L -> seen(1)._2) :+
-      (11L -> "totally different words never appearing anywhere in that other shard"))
+    // doc_id < Dedup.SeenSplitId is the seen shard; 250 and 251 probe it
+    val corpus = (seen :+ (250L -> seen(1)._2) :+
+      (251L -> "totally different words never appearing anywhere in that other shard"))
       .toDF("doc_id", "text")
-    val out = Dedup.bloomShingleFilter(corpus, nSeen = 6).collect()
+    val out = Dedup.bloomShingleFilter(corpus).collect()
     val m = out.map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
-    assert(m(10L)._1 == m(10L)._2, "exact copy of a seen doc: no false negatives")
-    assert(m(11L)._2 == 0L, "novel text should not hit (FP odds ~1e-12 at this fill)")
-    assert(!m.contains(0L), "the seen shard itself is not probed")
+    assert(m(250L)._1 == m(250L)._2, "exact copy of a seen doc: no false negatives")
+    assert(m(251L)._2 == 0L, "novel text should not hit (FP odds ~1e-12 at this fill)")
+    assert(m.keySet == Set(250L, 251L), "the seen shard itself is not probed")
   }
 
   test("embedding near-dup finds planted almost-identical vectors via LSH buckets") {
@@ -322,10 +327,10 @@ class DedupSpec extends AnyFunSuite {
 
   test("connected components converges on a long chain (diameter > 2 rounds)") {
     // path 10-11-12-...-19: min label must traverse the whole chain;
-    // maxDriverEdges = 0 forces the DISTRIBUTED min-label loop
+    // an edge cap of 0 forces the DISTRIBUTED min-label loop
     val docsDf = (10L to 19L).map(i => (i, s"doc $i")).toDF("doc_id", "text")
     val pairs = (10L until 19L).map(i => (i, i + 1)).toDF("doc1", "doc2")
-    val got = Dedup.connectedComponents(docsDf, pairs, maxDriverEdges = 0).collect()
+    val got = Dedup.connectedComponentsCapped(docsDf, pairs, maxDriverEdges = 0).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert((10L to 19L).forall(got(_) == 10L))
   }
@@ -362,6 +367,78 @@ class DedupSpec extends AnyFunSuite {
       (5L, 5L, 2L, 0.5), (6L, 5L, 2L, 0.5)))
     got.groupBy(_._2).foreach { case (_, g) =>
       assert(math.abs(g.map(_._4).sum - 1.0) < 1e-5) }
+  }
+
+  test("every Dedup operator and phashPairs* give a declared result on degenerate inputs") {
+    import org.apache.spark.sql.functions.{coalesce, col, length, lit}
+    import graft.operators.Multimodal
+    // 13 words, 11 distinct shingles, passes the clean filter
+    val text = "the quick brown fox jumps over the lazy dog while the cat sleeps"
+    def docsOf(rows: Seq[(Long, String)]) = rows.toDF("doc_id", "text")
+      .withColumn("n_chars", coalesce(length(col("text")).cast("long"), lit(0L)))
+    // 300 copies: ids 0..249 are the seen shard and 20..299 the train
+    // side, so both halves of every id split are populated
+    val inputs = Seq(
+      "empty" -> docsOf(Seq.empty),
+      "one row" -> docsOf(Seq(0L -> text)),
+      "all-null text" -> docsOf((0L until 3L).map(i => i -> (null: String))),
+      "300 identical" -> docsOf((0L until 300L).map(i => i -> text)))
+    val vec = Array.tabulate(64)(i => math.sin(i + 1.0).toFloat).toSeq
+    def embOf(rows: Seq[(Long, Seq[Float])]) = rows.toDF("vec_id", "embedding")
+    val embInputs = Seq(
+      embOf(Seq.empty), embOf(Seq(0L -> vec)),
+      embOf((0L until 3L).map(i => i -> (null: Seq[Float]))),
+      embOf((0L until 300L).map(i => i -> vec)))
+    def hashes(d: DataFrame) =
+      Dedup.simhashSignatures(d).select(col("doc_id"), col("sim").as("phash"))
+    val allPairs = 300L * 299 / 2
+    // per input (empty, one row, all-null text, 300 identical): the
+    // result's row count, or the strategy the probe picks
+    val cases: Seq[(String, DataFrame => Any, Seq[Any])] = Seq(
+      ("shingles", d => Dedup.shingles(d), Seq(0L, 11L, 0L, 3300L)),
+      ("incrementalDedup", d => Dedup.incrementalDedup(d), Seq(0L, 0L, 0L, 0L)),
+      ("exact", d => Dedup.exact(d), Seq(0L, 1L, 1L, 1L)),
+      ("ngramJaccard", d => Dedup.ngramJaccard(d), Seq(0L, 0L, 0L, allPairs)),
+      ("ngramJaccardPrefix", d => Dedup.ngramJaccardPrefix(d), Seq(0L, 0L, 0L, allPairs)),
+      ("jaccardStrategy", d => Dedup.jaccardStrategy(d), Seq("count", "prefix", "count", "lsh")),
+      ("ngramJaccardAdaptive", d => Dedup.ngramJaccardAdaptive(d), Seq(0L, 0L, 0L, allPairs)),
+      ("jaccardLshVerified", d => Dedup.jaccardLshVerified(d), Seq(0L, 0L, 0L, allPairs)),
+      ("containmentPairs", d => Dedup.containmentPairs(d), Seq(0L, 0L, 0L, allPairs)),
+      ("containmentPairsLsh", d => Dedup.containmentPairsLsh(d), Seq(0L, 0L, 0L, allPairs)),
+      // copies read as background similarity 1: every stratified arm
+      // drops (logged below) and no candidate is emitted
+      ("containmentStratified", d => Dedup.containmentStratified(d), Seq(0L, 0L, 0L, 0L)),
+      ("containmentAuto", d => Dedup.containmentAuto(d), Seq(0L, 0L, 0L, 0L)),
+      ("contamination", d => Dedup.contamination(d), Seq(0L, 0L, 0L, 20L * 280)),
+      ("minhashSignatures", d => Dedup.minhashSignatures(d), Seq(0L, 1L, 0L, 300L)),
+      ("minhashLsh", d => Dedup.minhashLsh(d), Seq(0L, 0L, 0L, allPairs)),
+      ("minhashEstEval", d => Dedup.minhashEstEval(d), Seq(0L, 0L, 0L, allPairs)),
+      ("urlDedup", d => Dedup.urlDedup(d), Seq(0L, 1L, 3L, 50L)),
+      ("bloomShingleFilter", d => Dedup.bloomShingleFilter(d), Seq(0L, 0L, 0L, 50L)),
+      ("connectedComponents",
+        d => Dedup.connectedComponents(d, Dedup.ngramJaccard(d)), Seq(0L, 1L, 3L, 300L)),
+      ("canonicalize", d => Dedup.canonicalize(d, Dedup.ngramJaccard(d)), Seq(0L, 1L, 3L, 300L)),
+      ("softDedupWeights",
+        d => Dedup.softDedupWeights(d, Dedup.ngramJaccard(d)), Seq(0L, 1L, 3L, 300L)),
+      ("simhashSignatures", d => Dedup.simhashSignatures(d), Seq(0L, 1L, 0L, 300L)),
+      ("simhashNearDup", d => Dedup.simhashNearDup(d), Seq(0L, 0L, 0L, allPairs)),
+      ("dupSpans", d => Dedup.dupSpans(d), Seq(0L, 1L, 3L, 300L)),
+      ("phashPairs", d => Multimodal.phashPairs(hashes(d)), Seq(0L, 0L, 0L, allPairs)),
+      ("phashPairsMih", d => Multimodal.phashPairsMih(hashes(d)), Seq(0L, 0L, 0L, allPairs)),
+      ("phashPairsAuto", d => Multimodal.phashPairsAuto(hashes(d)), Seq(0L, 0L, 0L, allPairs)))
+    def outcome(run: => Any): Any = try run match {
+      case df: DataFrame => df.count()
+      case other => other
+    } catch { case e: Throwable => s"${e.getClass.getSimpleName}: ${e.getMessage}" }
+    val (got, log) = dedupLog(cases.flatMap { case (name, op, want) =>
+      inputs.map(_._2).zip(want).zip(inputs.map(_._1)).map { case ((d, w), input) =>
+        (name, input, w, outcome(op(d))) }
+    } ++ embInputs.zip(Seq(0L, 0L, 0L, allPairs)).zip(inputs.map(_._1)).map {
+      case ((e, w), input) => ("embedNearDup", input, w, outcome(Dedup.embedNearDup(e))) })
+    assert(log.count(_.contains("ALL arms dropped")) == 2, log.mkString("\n"))
+    val wrong = got.filter { case (_, _, w, g) => w != g }
+    assert(wrong.isEmpty, wrong.map { case (n, i, w, g) => s"$n on $i: want $w, got $g" }
+      .mkString("\n", "\n", ""))
   }
 
   test("workflow latency and minhash eval are total on empty input") {
@@ -408,13 +485,13 @@ class DedupSpec extends AnyFunSuite {
 
   test("distributed CC resolves a path graph far longer than the round budget") {
     // a 300-edge path is the adversarial case for plain neighbor-min
-    // propagation (needs 300 rounds > maxIters=50); the pointer-jump
+    // propagation (needs 300 rounds > Dedup's 50-round budget); the pointer-jump
     // shortcut must close it in ~log2(300) rounds. Both paths must
     // also agree exactly.
     val n = 300L
     val docsDf = (0L to n).map(i => (i, s"doc $i")).toDF("doc_id", "text")
     val pairs = (0L until n).map(i => (i, i + 1)).toDF("doc1", "doc2")
-    val dist = Dedup.connectedComponents(docsDf, pairs, maxDriverEdges = 0)
+    val dist = Dedup.connectedComponentsCapped(docsDf, pairs, maxDriverEdges = 0)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
     assert(dist.forall(_._2 == 0L))
     val driver = Dedup.connectedComponents(docsDf, pairs)
@@ -429,7 +506,7 @@ class DedupSpec extends AnyFunSuite {
       .filter { case (a, b) => a != b }
       .map { case (a, b) => (math.min(a, b), math.max(a, b)) }.distinct
     val pairs = edges.toDF("doc1", "doc2")
-    def run(cap: Int) = Dedup.connectedComponents(docsDf, pairs, maxDriverEdges = cap)
+    def run(cap: Int) = Dedup.connectedComponentsCapped(docsDf, pairs, maxDriverEdges = cap)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
     assert(run(1 << 20) == run(0))
   }
@@ -477,10 +554,8 @@ class DedupSpec extends AnyFunSuite {
     def rows(df: DataFrame) = df.collect().map(_.toSeq).toSeq
     val exact = rows(Dedup.ngramJaccard(corpus))
     assert(exact.map(r => (r(0), r(1))) == Seq((1L, 2L), (3L, 4L)))
-    assert(rows(Dedup.jaccardLshVerified(corpus)) == exact)
     // verification is exact: scores carried through unchanged too
-    assert(rows(Dedup.jaccardLshVerified(corpus, tauNum = 30)) ==
-      rows(Dedup.ngramJaccard(corpus, tauNum = 30)))
+    assert(rows(Dedup.jaccardLshVerified(corpus)) == exact)
   }
 
   test("containment auto finds the embedded doc on a long-tail corpus") {
@@ -543,17 +618,18 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("contamination flags the train doc that embeds an eval doc, not unrelated docs") {
-    // eval doc 1 is wholly contained in train doc 10 (tail appended);
-    // train doc 11 shares nothing
+    // eval doc 1 (doc_id < Dedup.ContaminationEvalIds) is wholly
+    // contained in train doc 20 (tail appended); train doc 21 shares
+    // nothing
     val docsDf = Seq(
       (1L, base),
-      (10L, base + " " + distinct1),
-      (11L, distinct2)).toDF("doc_id", "text")
-    val got = Dedup.contamination(docsDf, nEval = 5)
+      (20L, base + " " + distinct1),
+      (21L, distinct2)).toDF("doc_id", "text")
+    val got = Dedup.contamination(docsDf)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    assert(got == Seq((1L, 10L)))
+    assert(got == Seq((1L, 20L)))
     // full containment: inter == s_eval for that pair
-    val row = Dedup.contamination(docsDf, nEval = 5).collect().head
+    val row = Dedup.contamination(docsDf).collect().head
     assert(row.getLong(2) == row.getLong(3))
   }
 
@@ -744,23 +820,6 @@ class DedupSpec extends AnyFunSuite {
     assert(got(4L) == (8L, 6L, 75L))
     assert(got(5L) == (7L, 6L, 85L))
     assert(got(6L) == (3L, 3L, 100L))
-  }
-
-  test("dup spans minDocs=3 keeps only grams shared by three docs") {
-    // "e1 e2 e3" is in three docs; "f1 f2 f3" in two → only the
-    // first qualifies at minDocs=3 (the count_distinct branch feeds
-    // the same interval-union coverage pass)
-    val d = docs(
-      (1L, "e1 e2 e3 f1 f2 f3"),
-      (2L, "e1 e2 e3 zz"),
-      (3L, "qq e1 e2 e3"),
-      (4L, "f1 f2 f3 ww"))
-    val got = Dedup.dupSpans(d, minDocs = 3).collect()
-      .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2), r.getLong(3))).toMap
-    assert(got(1L) == (6L, 3L, 50L)) // only tokens 1-3
-    assert(got(2L) == (4L, 3L, 75L))
-    assert(got(3L) == (4L, 3L, 75L))
-    assert(got(4L) == (4L, 0L, 0L)) // pair-shared gram doesn't qualify
   }
 
   test("text expressions are registered as SQL functions by the extension") {

@@ -65,30 +65,62 @@ class SimilaritySpec extends AnyFunSuite {
       m.mean.toSeq == m2.mean.toSeq)
   }
 
+  /** Two well-separated directions, each in five jittered variants
+    * (j = id % 5) held three times over: 30 corpus vectors (ids
+    * 10..39), 10 distinct. Group A is ids 10..24, group B 25..39.
+    */
+  private def groupVec(base: Double, j: Int) =
+    Array.tabulate(64)(i => (math.sin(i * base) + 0.01 * j).toFloat).toSeq
+  private val groupA = 10L to 24L
+  private val groupB = 25L to 39L
+  private def groupRows = groupA.map(id => (id, groupVec(0.3, (id % 5).toInt), 0)) ++
+    groupB.map(id => (id, groupVec(2.1, (id % 5).toInt), 1))
+
   test("cluster topics label separated embedding groups with their own vocabulary") {
-    // two well-separated directions; docs of each group share a
-    // vocabulary the other group never uses. Lloyd starts from the 16
-    // lowest vec_ids (10..25): the five distinct jittered group-A
-    // vectors (j = id % 5) each keep their own centroid — duplicates
-    // tie to the smaller cluster id — and group B gathers around the
-    // one B seed (id 25), so six clusters are occupied
-    def vec(base: Double, j: Int) =
-      Array.tabulate(64)(i => (math.sin(i * base) + 0.01 * j).toFloat).toSeq
-    val aIds = (10L to 24L); val bIds = (25L to 39L)
-    val embRows = aIds.map(id => (id, vec(0.3, (id % 5).toInt), 0)) ++
-      bIds.map(id => (id, vec(2.1, (id % 5).toInt), 1))
-    val docRows = aIds.map(id => (id, "alpha beta gamma alpha")) ++
-      bIds.map(id => (id, "delta epsilon zeta delta"))
+    // docs of each group share a vocabulary the other group never
+    // uses. Lloyd seeds the 10 distinct vectors, one list each (the
+    // copies join their seed), so ten clusters are occupied: five
+    // labelled only with A's vocabulary and five only with B's
+    val docRows = groupA.map(id => (id, "alpha beta gamma alpha")) ++
+      groupB.map(id => (id, "delta epsilon zeta delta"))
     val out = Similarity.clusterTopics(
       docRows.toDF("doc_id", "text"),
-      embRows.toDF("vec_id", "embedding", "label")).collect()
+      groupRows.toDF("vec_id", "embedding", "label")).collect()
       .map(r => (r.getLong(0), r.getString(2)))
     val byCluster = out.groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
-    assert(byCluster.size == 6)
+    assert(byCluster.size == 10)
     val vocabA = Set("alpha", "beta", "gamma")
     val vocabB = Set("delta", "epsilon", "zeta")
     val sets = byCluster.values.toSeq
-    assert(sets.count(_.subsetOf(vocabA)) == 5 && sets.count(_.subsetOf(vocabB)) == 1)
+    assert(sets.count(_.subsetOf(vocabA)) == 5 && sets.count(_.subsetOf(vocabB)) == 5)
+  }
+
+  test("Lloyd seeds distinct vectors: every IVF list and PQ code has a member") {
+    // a seed repeated from a lower vec_id ties with its twin on every
+    // assignment and loses to the smaller id, so it would stay an
+    // empty list; distinct seeding trains one list per distinct
+    // vector when there are fewer than 16
+    val probes = (0L until 10L).map(id =>
+      (id, groupVec(if (id < 5) 0.3 else 2.1, (id % 5).toInt + 7), 0))
+    val emb = (probes ++ groupRows).toDF("vec_id", "embedding", "label")
+    val cv = emb.filter($"vec_id" >= 10).select($"vec_id",
+      org.apache.spark.sql.functions.expr("transform(embedding, x -> cast(x as double))").as("cv"))
+    val lists = Similarity.ivfTrain(cv)
+    assert(lists.map(_.cluster_id) == (0 until 10))
+    def dot(a: Seq[Float], b: Seq[Double]) = a.zip(b).map { case (x, y) => x * y }.sum
+    val members = groupRows.map { case (_, v, _) =>
+      lists.maxBy(c => (dot(v, c.centroid), -c.cluster_id)).cluster_id }.toSet
+    assert(members == (0 until 10).toSet, "a trained list has no member")
+    // PQ: per subspace, the codes in use are exactly the trained ones
+    val codes = Similarity.pqCodes(emb).collect().map(_.getLong(1))
+    assert(codes.length == 30)
+    (0 until 8).foreach { s =>
+      assert(codes.map(c => (c >> (4 * s)) & 15L).toSet == (0L until 10L).toSet, s"subspace $s")
+    }
+    // ten lists and 16 probed: the routed search is the flat scan
+    val all = Similarity.ivfSq8Search(emb, nProbeClusters = 16).collect().map(_.toSeq).toSeq
+    val flat = Similarity.annSq8TopK(emb).collect().map(_.toSeq).toSeq
+    assert(all.nonEmpty && all == flat)
   }
 
   test("pca variance is non-increasing across components on unit-scale data") {

@@ -246,7 +246,7 @@ class StreamBatchParitySpec extends AnyFunSuite {
   test("contamination gate twin: live flags over the driver's documents equal the batch pairs") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val nEval = 20L
+    val nEval = graft.operators.Dedup.ContaminationEvalIds
     val documents = graft.sources.Tables(spark, TestSpark.sfDir).documents
     val docRows = documents.select($"doc_id", $"text").as[(Long, String)]
       .collect().sortBy(_._1).toSeq
@@ -274,7 +274,7 @@ class StreamBatchParitySpec extends AnyFunSuite {
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
     } finally q.stop()
     val batch = graft.operators.Dedup
-      .contamination((evalRows ++ arrivals).toDF("doc_id", "text"), nEval)
+      .contamination((evalRows ++ arrivals).toDF("doc_id", "text"))
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
     assert(live == batch, "live gate and batch operator disagree on the same corpus")
@@ -286,7 +286,7 @@ class StreamBatchParitySpec extends AnyFunSuite {
   test("incremental gate twin: survivors equal the batch crawl-over-crawl dedup") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val splitId = 250L
+    val splitId = graft.operators.Dedup.SeenSplitId
     val documents = graft.sources.Tables(spark, TestSpark.sfDir).documents
     val docRows = documents.select($"doc_id", $"text").as[(Long, String)]
       .collect().sortBy(_._1).toSeq
@@ -301,7 +301,7 @@ class StreamBatchParitySpec extends AnyFunSuite {
     // the stored index, derived exactly as the batch operator derives
     // it (shared cleanScored prefix over the previous crawl)
     val indexDf = graft.operators.TextOps
-      .cleanScored(docRows.filter(_._1 < splitId).toDF("doc_id", "text"), 5, 0.5)
+      .cleanScored(docRows.filter(_._1 < splitId).toDF("doc_id", "text"))
       .select("h").distinct()
     val in = MemoryStream[(Long, String)]
     val q = graft.streaming.DocPipelineJobs
@@ -317,7 +317,7 @@ class StreamBatchParitySpec extends AnyFunSuite {
     } finally q.stop()
     val batch = graft.operators.Dedup
       .incrementalDedup((docRows.filter(_._1 < splitId) ++ arrivals)
-        .toDF("doc_id", "text"), splitId)
+        .toDF("doc_id", "text"))
       .collect().map(r => (r.getString(1), r.getLong(3))).toSet
     // survivors are compared by CONTENT (h, n_words): the batch keeps
     // the min-doc_id canonical, the stream the first seen — the

@@ -629,19 +629,22 @@ class StreamingSpec extends AnyFunSuite {
   test("streaming bloom verdicts match the batch bloomShingleFilter") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    // docs 0..2 build the filter; 3..5 probe it. Probe docs share
-    // shingles only with SEEN docs (not each other), so the stream's
-    // accumulating filter and the batch's fixed nSeen filter hold the
-    // same bits when each probe's verdict is computed.
+    // docs 0..2 build the filter (below Dedup.SeenSplitId); 250..252
+    // probe it. Probe docs share shingles only with SEEN docs (not
+    // each other), so the stream's accumulating filter and the batch's
+    // fixed seen-shard filter hold the same bits when each probe's
+    // verdict is computed.
     val docs = Seq(
       0L -> "spark engines shuffle partitions across executors tonight",
       1L -> "broadcast small dimension tables for colocated joins",
       2L -> "watermarks bound the state of streaming aggregations",
-      3L -> "spark engines shuffle partitions across executors tonight", // = doc 0
-      4L -> "broadcast small dimension tables then repartition everything late", // prefix of 1
-      5L -> "completely novel content appears in this document here")
+      250L -> "spark engines shuffle partitions across executors tonight", // = doc 0
+      251L -> "broadcast small dimension tables then repartition everything late", // prefix of 1
+      252L -> "completely novel content appears in this document here")
+    assert(docs.take(3).forall(_._1 < graft.operators.Dedup.SeenSplitId) &&
+      docs.drop(3).forall(_._1 >= graft.operators.Dedup.SeenSplitId))
     val batch = graft.operators.Dedup
-      .bloomShingleFilter(docs.toDF("doc_id", "text"), nSeen = 3)
+      .bloomShingleFilter(docs.toDF("doc_id", "text"))
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
     val in = MemoryStream[(Long, String, String)]
     val q = graft.streaming.DocPipelineJobs
@@ -656,8 +659,10 @@ class StreamingSpec extends AnyFunSuite {
       val streamed = spark.table("bloom_parity").collect()
         .map(r => r.getLong(1) -> (r.getLong(2), r.getLong(3))).toMap
       assert(docs.drop(3).map(_._1).forall(id => streamed(id) == batch(id)))
-      assert(batch(3L)._1 == batch(3L)._2) // full repeat: every shingle seen
-      assert(batch(5L)._2 == 0L)           // novel doc: nothing seen
+      assert(batch.keySet == Set(250L, 251L, 252L)) // only the new docs are probed
+      assert(batch(250L)._1 == batch(250L)._2) // full repeat: every shingle seen
+      assert(batch(251L)._2 > 0L && batch(251L)._2 < batch(251L)._1) // shared prefix only
+      assert(batch(252L)._2 == 0L)             // novel doc: nothing seen
     } finally q.stop()
   }
 
